@@ -129,7 +129,8 @@ object ArrayMath {
     * larger (no boxing, no per-row OpenHashSet). STRING elements: one
     * open-addressing hash table over the smaller array, probed by the
     * larger — the sorted probe is object-based there and measured slower
-    * than even the array_intersect algebra (tools/JaccardVerifyAB). Null
+    * than even the array_intersect algebra (interleaved A/B recorded in
+    * OPTIMIZATION_r06.md, "Verify-join per-pair work"). Null
     * elements count as one shared value when present in BOTH
     * (array_intersect's semantics). Duplicate elements are caller
     * contract-violations (as they are for the size algebra this replaces,
@@ -167,50 +168,15 @@ object ArrayMath {
     hits.toDouble / (na + nb - hits)
   }
 
-  /** Comparator-sorted probe for string sets — NOT dispatched by
-    * [[JaccardSetsExpr]] (the hash probe below won the interleaved A/B,
-    * tools/JaccardVerifyAB); kept as the A/B's reference strategy and as
-    * the structural twin of [[jaccardLongSets]].
-    */
-  def jaccardStringSets(a: ArrayData, b: ArrayData): Double = {
-    val (na, nb) = (a.numElements(), b.numElements())
-    val (s, g) = if (na <= nb) (a, b) else (b, a)
-    val ns = s.numElements()
-    val ng = g.numElements()
-    val sv = new Array[UTF8String](ns)
-    var sNull = false
-    var m = 0
-    var i = 0
-    while (i < ns) {
-      if (s.isNullAt(i)) sNull = true
-      else { sv(m) = s.getUTF8String(i); m += 1 }
-      i += 1
-    }
-    java.util.Arrays.sort(sv, 0, m,
-      (x: UTF8String, y: UTF8String) => x.compareTo(y))
-    var hits = 0
-    i = 0
-    var gNull = false
-    while (i < ng) {
-      if (g.isNullAt(i)) gNull = true
-      else if (java.util.Arrays.binarySearch(
-          sv.asInstanceOf[Array[AnyRef]], 0, m, g.getUTF8String(i),
-          null) >= 0)
-        hits += 1
-      i += 1
-    }
-    if (sNull && gNull) hits += 1
-    hits.toDouble / (na + nb - hits)
-  }
-
-  /** Hash-probe twin of [[jaccardStringSets]]: identical hits count and
-    * null semantics, but membership via one open-addressing table built
-    * over the smaller array (O(n+m) murmur hashes) instead of the
-    * comparator sort + per-element binary search (O((n+m)·log n) boxed
+  /** String twin of [[jaccardLongSets]]: identical hits count and null
+    * semantics, but membership via one open-addressing table built over
+    * the smaller array (O(n+m) murmur hashes) instead of a comparator
+    * sort + per-element binary search (O((n+m)·log n) boxed
     * UTF8String.compareTo calls). For LONG elements the primitive
     * sort+binsearch wins (no boxing anywhere); for STRING elements both
     * strategies are object-based and the hash probe is the faster one —
-    * measured on the sf0.1 verify stage in tools/JaccardVerifyAB.
+    * measured on the sf0.1 verify stage (OPTIMIZATION_r06.md,
+    * "Verify-join per-pair work").
     * Duplicate elements collapse in the table exactly as they collide in
     * array_intersect (caller contract is distinct sets either way).
     */
@@ -324,7 +290,7 @@ case class JaccardSetsExpr(left: Expression, right: Expression)
     // longs: primitive clone+sort+binsearch (no boxing anywhere).
     // strings: open-addressing hash probe — the comparator-sorted probe
     // lost to BOTH the hash probe and the old array_intersect algebra on
-    // the sf0.1 verify stage (tools/JaccardVerifyAB, interleaved:
+    // the sf0.1 verify stage (OPTIMIZATION_r06.md, interleaved:
     // algebra 0.61-0.64 s, sorted-probe 0.68-0.74 s, hash 0.39-0.43 s).
     val fn =
       if (elemType == LongType) "jaccardLongSets" else "jaccardStringSetsHash"

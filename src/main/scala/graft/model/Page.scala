@@ -88,21 +88,6 @@ final case class Thresholds(
 
 object Thresholds {
   val default: Thresholds = Thresholds()
-
-  /** JQL conjunctive production thresholds (reference `run.sh:4-6`) — used
-    * by the F2-parity analytics query, not by the page pipeline.
-    */
-  val jqlGemma: Double = 3.568359375
-  val jqlMistral: Double = 2.5546875
-  val jqlLlama: Double = 2.99609375
-  /** Defaults (≈91st pct) from `ro_vs_eng/filter_jql.py:62-64`. */
-  val jqlGemmaDefault: Double = 3.46484375
-  val jqlMistralDefault: Double = 2.439453125
-  val jqlLlamaDefault: Double = 2.8125
-  /** Binary keep semantics of the reference: int_score >= 3
-    * (`small_model_inference/results.ipynb` cell 5).
-    */
-  val minIntScoreKeep: Int = 3
 }
 
 /** Closed label taxonomies from `small_model_inference/taxonomy.py:1-86`. */
@@ -132,8 +117,6 @@ object Taxonomy {
     "Post-universitar")
 
   val topicToId: Map[String, Int] = topics.zipWithIndex.toMap
-  val formatToId: Map[String, Int] = formats.zipWithIndex.toMap
-  val ageGroupToId: Map[String, Int] = ageGroups.zipWithIndex.toMap
 
   /** Adult-content topic label (`full_dataset_analysis/adult.py:8`). */
   val adultTopic: String = "Conținut pentru adulți"

@@ -20,12 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  final case class MediaMeta(
-      mime: String,
-      n_bytes: Long,
-      payload_hash: Long
-  )
-
   /** Magic-byte MIME sniffing as pure columns (real logic, codegen). */
   def sniffMime(bin: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val hexPrefix = hex(substring(bin, 1, 8))

@@ -7,13 +7,13 @@ import org.apache.spark.util.LongAccumulator
 import graft.model.{AnnotatedPage, Page, Thresholds}
 import graft.stages.{HeuristicsScalar, LangIdModel, PerplexityModel, ScrubScalar}
 
-/** Row shape entering the batched scorer (matched by name in `.as[...]`).
-  * Heuristics, scrub and scoring all happen in ONE `mapPartitions` pass:
-  * the Column equivalents exist ([[graft.stages.Heuristics]],
-  * [[graft.stages.Scrub]], cross-validated by parity specs) but Catalyst
-  * higher-order functions are CodegenFallback (interpreted, one re-tokenize
-  * per metric) and every regexp expression re-materializes the UTF8String —
-  * the fused scalar pass touches the text a minimal number of times.
+/** Row shape entering the fused scorer (matched by name in `.as[...]`):
+  * the pruned page columns plus the derived `crawl_snapshot`. Scrub,
+  * heuristics, langid, perplexity and the keep decision all run per row
+  * in ONE `mapPartitions` pass. The Column twins ([[graft.stages.Heuristics]],
+  * [[graft.stages.Scrub]]) are parity references only: as Catalyst
+  * expressions they re-tokenize per metric and re-materialize the
+  * UTF8String per regexp, so the scalar pass reads the text fewer times.
   */
 final case class PipeRow(
     url: String,
@@ -45,10 +45,10 @@ final class PipelineMetrics(spark: SparkSession) extends Serializable {
   * + Gopher/C4 heuristics (N3) + PII/toxicity scrub (N4) + keep/drop (N5)
   * over Common-Crawl-style pages.
   *
-  * Physical shape (see SURVEY.md §4.3): one shuffle-free
-  * WholeStageCodegen span (heuristics + scrub, pure expressions) feeding one
-  * batched `mapPartitions` (langid + perplexity fused — a single pass, one
-  * broadcast deref per partition), then the only shuffle: a salted
+  * Physical shape (PLANS.md, flagship-pipeline section): the column-pruned
+  * scan and snapshot projection feed one fused `mapPartitions` scorer
+  * (scrub + heuristics + langid + perplexity + decide per row, one
+  * broadcast deref per partition), then the only shuffle: the salted
   * repartition before the partitioned write (skewed-host handling).
   */
 object QualityPipeline {
@@ -98,28 +98,26 @@ object QualityPipeline {
     projected.mapPartitions { iter =>
       val w = bLangW.value // one deref per partition
       val lm = bLm.value
-      iter.grouped(64).flatMap { batch =>
-        batch.map { r =>
-          val s = ScrubScalar(r.text) // compiled-regex scrub, guarded
-          val h = HeuristicsScalar.compute(r.text) // one pass, all 5 metrics
-          val (pred, conf) = LangIdModel.predict(r.text, w)
-          val ronConf = if (pred == "ron") conf else 1.0 - conf
-          val ppl = lm.perplexity(r.text)
-          val keep = decide(th, pred, ronConf, ppl, h.docLenWords,
-            h.meanWordLen, h.symbolWordRatio, h.stopwordFrac,
-            h.dupLineFrac, s.nSlurs)
-          metrics.foreach { m =>
-            m.docsIn.add(1)
-            if (keep) m.docsKept.add(1)
-            if (s.nEmails + s.nPhones + s.nCnps > 0) m.docsPii.add(1)
-            if (s.nSlurs > 0) m.docsToxic.add(1)
-          }
-          AnnotatedPage(r.url, r.warc_ts, r.crawl_snapshot, r.lang,
-            pred, ronConf, ppl, h.docLenWords, h.meanWordLen,
-            h.symbolWordRatio, h.stopwordFrac, h.dupLineFrac,
-            s.scrubbed, s.nEmails, s.nPhones, s.nCnps, s.nSlurs,
-            keep)
+      iter.map { r =>
+        val s = ScrubScalar(r.text) // compiled-regex scrub, guarded
+        val h = HeuristicsScalar.compute(r.text) // one pass, all 5 metrics
+        val (pred, conf) = LangIdModel.predict(r.text, w)
+        val ronConf = if (pred == "ron") conf else 1.0 - conf
+        val ppl = lm.perplexity(r.text)
+        val keep = decide(th, pred, ronConf, ppl, h.docLenWords,
+          h.meanWordLen, h.symbolWordRatio, h.stopwordFrac,
+          h.dupLineFrac, s.nSlurs)
+        metrics.foreach { m =>
+          m.docsIn.add(1)
+          if (keep) m.docsKept.add(1)
+          if (s.nEmails + s.nPhones + s.nCnps > 0) m.docsPii.add(1)
+          if (s.nSlurs > 0) m.docsToxic.add(1)
         }
+        AnnotatedPage(r.url, r.warc_ts, r.crawl_snapshot, r.lang,
+          pred, ronConf, ppl, h.docLenWords, h.meanWordLen,
+          h.symbolWordRatio, h.stopwordFrac, h.dupLineFrac,
+          s.scrubbed, s.nEmails, s.nPhones, s.nCnps, s.nSlurs,
+          keep)
       }
     }
   }
@@ -140,13 +138,7 @@ object QualityPipeline {
       .parquet(outPath)
   }
 
-  /** annotate + keep-only + write, end-to-end. */
-  def run(pages: Dataset[Page], outPath: String,
-      th: Thresholds = Thresholds.default,
-      metrics: Option[PipelineMetrics] = None,
-      keepOnly: Boolean = false, saltBuckets: Int = 32): Unit = {
-    val annotated = annotate(pages, th, metrics)
-    val out = if (keepOnly) annotated.filter(_.keep) else annotated
-    writeAnnotated(out, outPath, saltBuckets)
-  }
+  /** annotate + salted snapshot-partitioned write, end-to-end. */
+  def run(pages: Dataset[Page], outPath: String): Unit =
+    writeAnnotated(annotate(pages), outPath)
 }

@@ -10,7 +10,7 @@ import graft.synth.{Corpus, Det}
   * positive; English/Hungarian markers negative) — no training run, no I/O,
   * identical on every JVM (FIXTURES.md §5). It is broadcast by the pipeline
   * (flat Float array, ~1 MiB at 2^18 buckets) and dereferenced once per
-  * partition inside the batched `mapPartitions` scorer.
+  * partition inside the fused `mapPartitions` scorer.
   *
   * Reference dataflow analogue: upstream fastText `language_score`/
   * `top_langs` consumption (`fineweb/fineweb2_download.py:21-23`) and the

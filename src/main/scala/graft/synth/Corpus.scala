@@ -87,6 +87,4 @@ object Corpus {
   val backoffLogProb: Float = math.log(0.2 / V).toFloat
   /** Out-of-vocabulary log-prob (harsh — non-Romanian text scores high ppl). */
   val oovLogProb: Float = math.log(1e-6).toFloat
-
-  val wordToId: Map[String, Int] = roVocab.zipWithIndex.toMap
 }

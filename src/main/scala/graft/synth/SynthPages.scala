@@ -46,13 +46,6 @@ object SynthPages {
     // 2024-10-01, 2025-01-15, 2025-04-01, 2025-06-15 (UTC midnights)
     Array(1727740800L, 1736899200L, 1743465600L, 1749945600L)
 
-  def snapshotOf(ts: Timestamp): String = {
-    val s = ts.getTime / 1000L
-    var i = snapshots.length - 1
-    while (i > 0 && s < snapshotEpochSec(i)) i -= 1
-    snapshots(i)
-  }
-
   // --- CNP (Romanian personal numeric code) --------------------------------
   private val cnpWeights = "279146358279".map(_ - '0').toArray
   def cnpChecksum(d12: String): Int = {

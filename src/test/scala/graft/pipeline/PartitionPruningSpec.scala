@@ -59,4 +59,28 @@ class PartitionPruningSpec extends AnyFunSuite {
     assert(prunedFiles <= totalFiles / 2 + 1,
       s"pruning too weak: $prunedFiles of $totalFiles")
   }
+
+  test("run writes annotate's rows, each under its own snapshot directory") {
+    val dir = Files.createTempDirectory("graft_run").toString
+    val pages = SynthPages.pages(spark, 400L)
+    QualityPipeline.run(pages, dir)
+
+    val expected = QualityPipeline.annotate(pages).collect()
+      .map(a => a.url -> ((a.keep, a.scrubbed_text, a.crawl_snapshot))).toMap
+    val written = spark.read.parquet(dir)
+      .select(col("url"), col("keep"), col("scrubbed_text"),
+        col("_metadata.file_path"))
+      .collect()
+    assert(written.length == expected.size)
+    assert(written.map(r => r.getString(0) -> ((r.getBoolean(1),
+      r.getString(2)))).toMap ==
+      expected.map { case (url, (keep, text, _)) => url -> ((keep, text)) })
+    val misplaced = written.filterNot { r =>
+      r.getString(3).contains(
+        s"/crawl_snapshot=${expected(r.getString(0))._3}/")
+    }
+    assert(misplaced.length == 0,
+      s"${misplaced.length} rows outside their snapshot dir, e.g. " +
+        misplaced.headOption.map(_.getString(3)))
+  }
 }
