@@ -132,38 +132,6 @@ object Materialize {
       keys: org.apache.spark.sql.Column*): DataFrame =
     partitioned(df.repartition(keys: _*).sortWithinPartitions(keys: _*))
 
-  /** Runs `body` with the context checkpoint directory temporarily set to
-    * `dir` (no-op when `dir` is None), restoring the PREVIOUS value — set or
-    * unset — afterwards. The checkpoint dir is GLOBAL mutable state on the
-    * SparkContext shared by every session in the JVM; an operator that sets
-    * it for its own reliable checkpoints must not silently redirect later
-    * [[reliable]] calls into its directory. Restoration writes the saved
-    * raw value back through the generated `checkpointDir_$eq` setter:
-    * `setCheckpointDir` is not usable for this — it NPEs on null (the unset
-    * case) and mints a fresh UUID subdirectory under any non-null path, so
-    * "restore" through it would never reproduce the prior state. Files
-    * already checkpointed by `body` stay valid — only FUTURE checkpoints
-    * re-route.
-    */
-  def withCheckpointDir[T](spark: org.apache.spark.sql.SparkSession,
-      dir: Option[String])(body: => T): T = {
-    val sc = spark.sparkContext
-    dir match {
-      case None => body
-      case Some(d) =>
-        val prev = sc.getCheckpointDir
-        sc.setCheckpointDir(d)
-        try body
-        finally {
-          val setter = sc.getClass.getMethods
-            .find(_.getName == "checkpointDir_$eq")
-            .getOrElse(throw new IllegalStateException(
-              "SparkContext.checkpointDir setter not found"))
-          setter.invoke(sc, prev)
-        }
-    }
-  }
-
   /** Reliable-store materialization. Persists BEFORE checkpointing:
     * `Dataset.checkpoint`'s eager count and the ReliableCheckpointRDD
     * file-write are two jobs, and without the persist the second would
@@ -171,7 +139,7 @@ object Materialize {
     * accumulators in it. The cache is released as soon as the checkpoint
     * files exist.
     */
-  def reliable[T](ds: org.apache.spark.sql.Dataset[T])
+  private def reliable[T](ds: org.apache.spark.sql.Dataset[T])
       : org.apache.spark.sql.Dataset[T] = {
     val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
     val c = p.checkpoint(eager = true)

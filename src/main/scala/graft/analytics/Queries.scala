@@ -843,36 +843,34 @@ object Queries {
       .orderBy("query_id", "rk")
   }
 
-  // --- similarity 3: embedding near-dup pairs (rows-only; planted dups) ----
-  register("q_ann_near_dups", null) { (s, dir) =>
+  /** The embeddings table (as array<double>) plus a planted exact copy of
+    * every 9th vector under id + 1,000,000 — the near-dup input shared by
+    * both embedding near-dup queries.
+    */
+  private def plantedEmbeddings(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
       // array<float> → array<double> via the codegen'd array Cast (the
       // per-element transform(...) HOF lambda it replaces is
       // CodegenFallback; values are the identical float→double widening)
       .withColumn("embedding", col("embedding").cast("array<double>"))
-    val planted = emb.select("vec_id", "embedding").unionByName(
+    emb.select("vec_id", "embedding").unionByName(
       emb.filter(col("vec_id") % 9 === 0)
         .withColumn("vec_id", col("vec_id") + 1000000L)
         .select("vec_id", "embedding"))
-    graft.dedup.Dedup.embeddingNearDups(planted, "vec_id", "embedding",
-      minCosine = 0.999).orderBy("id_a", "id_b")
+  }
+
+  // --- similarity 3: embedding near-dup pairs (rows-only; planted dups) ----
+  register("q_ann_near_dups", null) { (s, dir) =>
+    graft.dedup.Dedup.embeddingNearDups(plantedEmbeddings(s, dir), "vec_id",
+      "embedding", minCosine = 0.999).orderBy("id_a", "id_b")
   }
 
   // --- similarity 3b: banded embedding near-dup (the recall dial — 4 sign
   //     bands of 12 planes; candidates on ANY band agreement, one exact
   //     verify join; rows-only, superset-of-single-band spec-pinned) -------
   register("q_ann_near_dups_banded", null) { (s, dir) =>
-    val emb = t(s, dir, "embeddings")
-      // array<float> → array<double> via the codegen'd array Cast (the
-      // per-element transform(...) HOF lambda it replaces is
-      // CodegenFallback; values are the identical float→double widening)
-      .withColumn("embedding", col("embedding").cast("array<double>"))
-    val planted = emb.select("vec_id", "embedding").unionByName(
-      emb.filter(col("vec_id") % 9 === 0)
-        .withColumn("vec_id", col("vec_id") + 1000000L)
-        .select("vec_id", "embedding"))
-    graft.dedup.Dedup.embeddingNearDups(planted, "vec_id", "embedding",
-      minCosine = 0.999, bands = 4).orderBy("id_a", "id_b")
+    graft.dedup.Dedup.embeddingNearDups(plantedEmbeddings(s, dir), "vec_id",
+      "embedding", minCosine = 0.999, bands = 4).orderBy("id_a", "id_b")
   }
 
   // --- text analysis: per-doc quality metrics (C4-ish, oracle-checked) -----

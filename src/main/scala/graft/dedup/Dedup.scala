@@ -168,62 +168,106 @@ object Dedup {
     * materialized sigs.
     */
   private def pairsFromSized(sigs: DataFrame, sized: DataFrame,
-      minJaccard: Double, bucketCap: Int): DataFrame = {
+      minJaccard: Double, bucketCap: Int): DataFrame =
+    // verification: exact Jaccard over shingle SETS of the candidates only
+    // (one intersection per pair; union size derived)
+    verifyJoin(cappedCandidates(sized, "band_key", sigs, "minhash", bucketCap),
+      sigs.select(col("id"), array_distinct(col("shingles")).as("sh")),
+      Nil, "sh", graft.functions.ArrayMath.jaccard_sets, "jaccard",
+      minJaccard)
+
+  /** Distinct `(id_a < id_b)` candidates from a sized bucket frame (`id`,
+    * `key`, `bsz`, `bmin` — see [[withBucketStats]]): buckets within
+    * `bucketCap` pair all-pairs through a self-join on `key`; each bucket
+    * over the cap emits a STAR to its min-id member plus a CHAIN of its
+    * members in (`orderCol`, id) order, with `orderCol` joined back from
+    * `orderFrom` (one row per id) for the capped rows only — identical and
+    * near-identical signatures sort adjacent, so duplicate runs stay
+    * connected even if the star edge to the representative fails
+    * verification (mixed-content mega bucket). `distinct` collapses
+    * multi-band hits. The one capped-bucket pairing shared by the minhash
+    * and banded-embedding operators.
+    */
+  private def cappedCandidates(sized: DataFrame, key: String,
+      orderFrom: DataFrame, orderCol: String, bucketCap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val smallSide = sized.filter(col("bsz") <= bucketCap)
-      .select("id", "band_key")
+      .select("id", key)
     val allPairs = smallSide.as("x").join(smallSide.as("y").hint("merge"),
-        col("x.band_key") === col("y.band_key") && col("x.id") < col("y.id"))
+        col(s"x.$key") === col(s"y.$key") && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
     val big = sized.filter(col("bsz") > bucketCap)
     val starPairs = big.filter(col("id") =!= col("bmin"))
       .select(col("bmin").as("id_a"), col("id").as("id_b"))
-    // chain in signature order: identical/near-identical signatures sort
-    // adjacent, so duplicate runs stay connected even if the star edge to
-    // the representative fails verification (mixed-content mega bucket)
-    val wOrd = Window.partitionBy("band_key")
-      .orderBy(col("minhash"), col("id"))
+    val wOrd = Window.partitionBy(key).orderBy(col(orderCol), col("id"))
     val chainPairs = big
-      .join(sigs.select(col("id"), col("minhash")).hint("merge"), "id")
+      .join(orderFrom.select(col("id"), col(orderCol)).hint("merge"), "id")
       .withColumn("prev", lag("id", 1).over(wOrd))
       .filter(col("prev").isNotNull)
       .select(least(col("prev"), col("id")).as("id_a"),
         greatest(col("prev"), col("id")).as("id_b"))
-
-    // distinct collapses multi-band hits
-    val pairs = allPairs.unionByName(starPairs).unionByName(chainPairs)
-      .distinct()
-
-    // verification: exact Jaccard over shingle SETS of the candidates only
-    // (one intersection per pair; union size derived)
-    val sets = sigs.select(col("id"), array_distinct(col("shingles")).as("sh"))
-      .hint("merge")
-    pairs
-      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      // r6: native one-pass set jaccard (sorted-probe) — bit-identical to
-      // the size(array_intersect)/(|A|+|B|-i) algebra it replaces
-      // (integer counts; JaccardParitySpec), no per-pair hash-set build
-      .withColumn("jaccard",
-        graft.functions.ArrayMath.jaccard_sets(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    allPairs.unionByName(starPairs).unionByName(chainPairs).distinct()
   }
+
+  /** Exact verification of candidate pairs: joins `side` (one row per
+    * `keys :+ id`, merge-hinted — see the object doc) back onto `pairs`
+    * twice, on `keys :+ id_a` then `keys :+ id_b`, scores the two
+    * `valueCol` copies (`<valueCol>_a`, `<valueCol>_b`) with `score`, keeps
+    * `score >= minScore` and returns `keys, id_a, id_b, round(score, 6)` with
+    * the score named `name`. The one verify join of every set/vector
+    * operator here.
+    *
+    * PRECONDITION for `jaccard_sets` scoring: both sets are non-empty.
+    * Two empty sets score NaN (0/0), and Spark orders NaN above every
+    * double, so a NaN score would PASS `>= minScore`. Every jaccard caller
+    * filters `size > 0` when it builds `side`.
+    */
+  private def verifyJoin(pairs: DataFrame, side: DataFrame,
+      keys: Seq[String], valueCol: String, score: (Column, Column) => Column,
+      name: String, minScore: Double): DataFrame = {
+    val hinted = side.hint("merge")
+    def copy(suffix: String): DataFrame =
+      hinted.withColumnRenamed("id", s"id_$suffix")
+        .withColumnRenamed(valueCol, s"${valueCol}_$suffix")
+    pairs
+      .join(copy("a"), keys :+ "id_a")
+      .join(copy("b"), keys :+ "id_b")
+      .withColumn(name, score(col(s"${valueCol}_a"), col(s"${valueCol}_b")))
+      .filter(col(name) >= minScore)
+      .select((keys ++ Seq("id_a", "id_b")).map(col) :+
+        round(col(name), 6).as(name): _*)
+  }
+
+  /** Adds the bucket's size `bsz` and min id `bmin` over a window on
+    * `keys` — the per-bucket stats every capped pairing and the census
+    * read.
+    */
+  private def withBucketStats(df: DataFrame, keys: String*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(keys.map(col): _*)
+    df.withColumn("bsz", count(lit(1)).over(w))
+      .withColumn("bmin", min("id").over(w))
+  }
+
+  /** Size-ratio pruning (similarity-join standard): J(A,B) ≤ min/max of the
+    * set sizes, so J ≥ t requires min ≥ t·max — evaluated in the join
+    * condition before the expensive intersection. 1e-9 slack: binary-float
+    * products of integer sizes can misround above the exact boundary, and
+    * |B| = t·|A| exactly must survive.
+    */
+  private def sizeRatioOk(a: Column, b: Column, t: Double): Column =
+    a.cast("double") >= lit(t) * b - 1e-9 &&
+      b.cast("double") >= lit(t) * a - 1e-9
 
   /** One row per (id, band_key) with the bucket's size and min id — the
     * operator's ONE shuffle on band_key, materialized partition-preserving
     * by the callers so the census and every pairing branch read the same
     * frame without re-exchanging it.
     */
-  private def sizedBands(sigs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val banded = sigs.select(col("id"),
-      explode(array((0 until Bands).map(bandKey): _*)).as("band_key"))
-    val w = Window.partitionBy("band_key")
-    banded
-      .withColumn("bsz", count(lit(1)).over(w))
-      .withColumn("bmin", min("id").over(w))
-  }
+  private def sizedBands(sigs: DataFrame): DataFrame =
+    withBucketStats(sigs.select(col("id"),
+      explode(array((0 until Bands).map(bandKey): _*)).as("band_key")),
+      "band_key")
 
   /** Truncation telemetry for a capped [[minhashNearDups]] run: one row of
     * `(n_buckets, capped_buckets, skipped_pairs)` where `skipped_pairs` is
@@ -338,16 +382,8 @@ object Dedup {
         .select(col("id"), array_distinct(
           shingle_hashes(normTokens(col("__text")), shingleN)).as("sh"))
         .filter(size(col("sh")) > 0))
-      .hint("merge")
-    hits
-      .join(sets.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sets.withColumnRenamed("id", "id_b")
-        .withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("jaccard",
-        graft.functions.ArrayMath.jaccard_sets(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    verifyJoin(hits, sets, Nil, "sh", graft.functions.ArrayMath.jaccard_sets,
+      "jaccard", minJaccard)
   }
 
   // ---- SimHash ----------------------------------------------------------
@@ -436,8 +472,7 @@ object Dedup {
       else shiftright(col("sim"), offsets(b))
         .bitwiseAND(lit((1L << width) - 1))
     }
-    val w = Window.partitionBy("band", "bits")
-    graft.analytics.Materialize.partitioned(
+    graft.analytics.Materialize.partitioned(withBucketStats(
       df.select(col(idCol).as("id"),
           simhash64(normTokens(col(textCol))).as("sim"))
         .select(col("id"), col("sim"),
@@ -445,10 +480,10 @@ object Dedup {
             struct(lit(b).as("band"), bandBits(b).as("bits"))
           ): _*)).as("bk"))
         .select(col("id"), col("sim"), col("bk.band"), col("bk.bits"))
-        .repartition(col("band"), col("bits"))
-        .withColumn("bsz", count(lit(1)).over(w))
-        .withColumn("bmin", min("id").over(w))
-        .withColumn("bsim", min_by(col("sim"), col("id")).over(w)))
+        .repartition(col("band"), col("bits")),
+      "band", "bits")
+      .withColumn("bsim", min_by(col("sim"), col("id"))
+        .over(Window.partitionBy("band", "bits"))))
   }
 
   private def simhashPairsFromBanded(banded: DataFrame, maxHamming: Int,
@@ -518,15 +553,7 @@ object Dedup {
     val sets = mergedShingleSets(df, idCol, textCol, groupCol, shingleN,
         assumeUniqueIds)
       .transform(graft.analytics.Materialize.apply)
-    // size-ratio pruning (similarity-join standard): J(A,B) ≤ min/max of the
-    // set sizes, so J ≥ t requires min ≥ t·max — evaluated in the join
-    // condition before the expensive intersection. 1e-9 slack: binary-float
-    // products of integer sizes can misround above the exact boundary
-    val sizeOk =
-      size(col("x.sh")).cast("double") >=
-        lit(minJaccard) * size(col("y.sh")) - 1e-9 &&
-      size(col("y.sh")).cast("double") >=
-        lit(minJaccard) * size(col("x.sh")) - 1e-9
+    val sizeOk = sizeRatioOk(size(col("x.sh")), size(col("y.sh")), minJaccard)
     // |A∪B| = |A| + |B| − |A∩B| for distinct sets: one intersection, no
     // union — the native sorted-probe jaccard (r6) computes it in one pass
     sets.as("x").join(sets.as("y").hint("merge"),
@@ -654,10 +681,7 @@ object Dedup {
       sets.select(col("grp"), col("id"), col("sz"),
         posexplode(col("prefix")).as(Seq("pos", "tok"))),
       col("grp"), col("tok"))
-    // same slack on the size-ratio bound: |B| = t·|A| exactly must survive
-    val sizeOk =
-      col("x.sz").cast("double") >= lit(minJaccard) * col("y.sz") - 1e-9 &&
-      col("y.sz").cast("double") >= lit(minJaccard) * col("x.sz") - 1e-9
+    val sizeOk = sizeRatioOk(col("x.sz"), col("y.sz"), minJaccard)
     // PPJoin POSITIONAL filter (r6, lossless): for a shared token at
     // 0-based positions (pA, pB), overlap(a, b) ≤ (shared strictly before
     // it) + 1 + (tokens strictly after it in the shorter remainder)
@@ -684,17 +708,8 @@ object Dedup {
         col("y.id").as("id_b"))
       .distinct()
     // verify joins on (grp, id): ids may repeat across groups
-    val verify = sets.select(col("grp"), col("id"), col("sh")).hint("merge")
-    cand
-      .join(verify.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("sh", "sh_a"), Seq("grp", "id_a"))
-      .join(verify.withColumnRenamed("id", "id_b")
-        .withColumnRenamed("sh", "sh_b"), Seq("grp", "id_b"))
-      .withColumn("jaccard",
-        graft.functions.ArrayMath.jaccard_sets(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("grp"), col("id_a"), col("id_b"),
-        round(col("jaccard"), 6).as("jaccard"))
+    verifyJoin(cand, sets.select(col("grp"), col("id"), col("sh")), Seq("grp"),
+      "sh", graft.functions.ArrayMath.jaccard_sets, "jaccard", minJaccard)
   }
 
   /** Scale path for [[jaccardWithinGroup]] when groups are NOT bounded
@@ -726,9 +741,7 @@ object Dedup {
       sigs.select(col("grp"), col("id"), size(col("sh")).as("ssz"),
         explode(array((0 until Bands).map(bandKey): _*)).as("band_key")),
       col("grp"), col("band_key"))
-    val sizeOk =
-      col("x.ssz").cast("double") >= lit(minJaccard) * col("y.ssz") - 1e-9 &&
-      col("y.ssz").cast("double") >= lit(minJaccard) * col("x.ssz") - 1e-9
+    val sizeOk = sizeRatioOk(col("x.ssz"), col("y.ssz"), minJaccard)
     val pairs = banded.as("x").join(banded.as("y").hint("merge"),
         col("x.grp") === col("y.grp") &&
           col("x.band_key") === col("y.band_key") &&
@@ -737,17 +750,9 @@ object Dedup {
         col("y.id").as("id_b"))
       .distinct()
     // verify joins on (grp, id): ids may repeat across groups
-    val sets = sigs.select(col("grp"), col("id"), col("sh")).hint("merge")
-    pairs
-      .join(sets.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("sh", "sh_a"), Seq("grp", "id_a"))
-      .join(sets.withColumnRenamed("id", "id_b")
-        .withColumnRenamed("sh", "sh_b"), Seq("grp", "id_b"))
-      .withColumn("jaccard",
-        graft.functions.ArrayMath.jaccard_sets(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("grp"), col("id_a"), col("id_b"),
-        round(col("jaccard"), 6).as("jaccard"))
+    verifyJoin(pairs, sigs.select(col("grp"), col("id"), col("sh")),
+      Seq("grp"), "sh", graft.functions.ArrayMath.jaccard_sets, "jaccard",
+      minJaccard)
   }
 
   // ---- duplicate-cluster formation ----------------------------------------
@@ -764,8 +769,8 @@ object Dedup {
     * distances — convergence in O(log component-diameter) iterations, so a
     * chain of 10^6 drifting duplicates resolves within ~20 rounds where
     * plain propagation would need 10^6. Lineage is cut with an eager
-    * localCheckpoint per iteration (the plan does not grow with the
-    * iteration count); superseded per-iteration checkpoints become
+    * [[graft.analytics.Materialize]] per iteration (the plan does not grow
+    * with the iteration count); superseded per-iteration checkpoints become
     * unreachable on reassignment and Spark's ContextCleaner unpersists
     * their blocks on GC, bounding resident copies.
     *
@@ -773,21 +778,21 @@ object Dedup {
     * if `maxIter` is hit while labels are still moving.
     */
   def dupClusters(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 25,
-      checkpointDir: Option[String] = None): DataFrame =
-    dupClustersWithStats(pairs, idA, idB, maxIter, checkpointDir)._1
+      idB: String = "id_b", maxIter: Int = 25): DataFrame =
+    dupClustersWithStats(pairs, idA, idB, maxIter)._1
 
   /** [[dupClusters]] returning also the number of propagate+jump iterations
     * it took to converge — the O(log diameter) bound made assertable
     * (DedupSpec pins a 10^4-node chain to ≲ 2·log₂ n iterations).
     *
-    * `checkpointDir`: when set, per-iteration lineage cuts use RELIABLE
-    * checkpoints in that directory instead of executor-memory
-    * `localCheckpoint` — at 100-TB scale the labels don't fit (and must
-    * survive) executor memory. When None, the cuts follow the global
-    * [[graft.analytics.Materialize]] policy: in-memory by default, or the
-    * session's reliable checkpoint store if
-    * `spark.graft.checkpoint.reliable=true`.
+    * Per-iteration lineage cuts follow the [[graft.analytics.Materialize]]
+    * policy: in-memory `localCheckpoint` by default, or RELIABLE
+    * checkpoints in the context's checkpoint directory under
+    * `spark.graft.checkpoint.reliable=true` — at 100-TB scale the labels
+    * don't fit (and must survive) executor memory. Reliable mode persists
+    * before checkpointing, so the eager count and the file-write jobs
+    * share one computation (a recompute would double every accumulator
+    * bump, reading the changed-count ~2×).
     *
     * The per-iteration changed-label count is folded into the SAME job that
     * materializes the iteration's checkpoint (a LongAccumulator bumped by the
@@ -795,27 +800,12 @@ object Dedup {
     * the fixpoint nothing increments, so convergence detection stays exact.
     */
   def dupClustersWithStats(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 25,
-      checkpointDir: Option[String] = None): (DataFrame, Int) =
-    graft.analytics.Materialize.withCheckpointDir(
-        pairs.sparkSession, checkpointDir) {
-      dupClustersLoop(pairs, idA, idB, maxIter, checkpointDir)
-    }
-
-  private def dupClustersLoop(pairs: DataFrame, idA: String,
-      idB: String, maxIter: Int,
-      checkpointDir: Option[String]): (DataFrame, Int) = {
+      idB: String = "id_b", maxIter: Int = 25): (DataFrame, Int) = {
+    import graft.analytics.Materialize
     val spark = pairs.sparkSession
-    // Reliable mode persists before checkpointing so the eager count and
-    // the file-write jobs share one computation — see Materialize.reliable
-    // (a recompute here would also double every accumulator bump, reading
-    // the changed-count ~2×).
-    def cp(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) graft.analytics.Materialize.reliable(df)
-      else graft.analytics.Materialize(df)
-    val bi = cp(pairs.select(col(idA).as("src"), col(idB).as("dst"))
+    val bi = Materialize(pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionByName(pairs.select(col(idB).as("src"), col(idA).as("dst"))))
-    var labels = cp(bi.select(col("src").as("id")).distinct()
+    var labels = Materialize(bi.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     var changed = 1L
     var it = 0
@@ -824,10 +814,11 @@ object Dedup {
       val nbr = bi.join(labels.withColumnRenamed("id", "src").hint("merge"),
           "src")
         .groupBy(col("dst").as("id")).agg(min("label").as("nbr_label"))
-      val propagated = cp(labels.join(nbr.hint("merge"), Seq("id"), "left")
-        .select(col("id"), col("label").as("old_label"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("mid_label"))) // materialize once: feeds both join sides
+      val propagated = Materialize(
+        labels.join(nbr.hint("merge"), Seq("id"), "left")
+          .select(col("id"), col("label").as("old_label"),
+            least(col("label"), coalesce(col("nbr_label"), col("label")))
+              .as("mid_label"))) // materialize once: feeds both join sides
       // (2) pointer jump: label := label(label). Every label IS a node id
       // (labels start as ids and only ever take other nodes' labels) and
       // label(x) ≤ x, so the inner self-join is total and monotone.
@@ -836,11 +827,11 @@ object Dedup {
       val acc = spark.sparkContext.longAccumulator(s"dupClusters.changed.$it")
       val touch = udf { chg: Boolean => if (chg) acc.add(1L); chg }
         .asNondeterministic() // never elide/dedup the accumulator bump
-      val updated = cp(propagated.join(parents.hint("merge"),
+      val updated = Materialize(propagated.join(parents.hint("merge"),
           propagated("mid_label") === parents("pid"))
         .select(col("id"), col("plabel").as("new_label"),
           touch(col("plabel") < col("old_label")).as("__chg")))
-      changed = acc.value // the cp() above already ran the counting job
+      changed = acc.value // Materialize above already ran the counting job
       labels = updated.select(col("id"), col("new_label").as("label"))
       it += 1
     }
@@ -963,56 +954,25 @@ object Dedup {
     */
   private def sizedEmbBands(sigs: DataFrame, bands: Int,
       planes: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val mask = (1L << planes) - 1L
-    val banded = sigs.select(col("id"),
+    withBucketStats(sigs.select(col("id"),
       explode(array((0 until bands).map(b =>
         shiftright(col("full"), b * planes).bitwiseAND(lit(mask))
-          .bitwiseOR(lit(b.toLong << planes))): _*)).as("bucket"))
-    val w = Window.partitionBy("bucket")
-    banded
-      .withColumn("bsz", count(lit(1)).over(w))
-      .withColumn("bmin", min("id").over(w))
+          .bitwiseOR(lit(b.toLong << planes))): _*)).as("bucket")),
+      "bucket")
   }
 
   /** Banded pairing over a MATERIALIZED [[sizedEmbBands]] frame — the
-    * [[pairsFromSized]] shape for embeddings: small-bucket self-join, mega
-    * star, and mega chain (in (emb, id) order, vectors joined back for
-    * capped rows only) produce DISTINCT candidate ids, then ONE exact
-    * cosine verify join prices the work at the deduped candidate count
-    * rather than once per band hit.
+    * [[pairsFromSized]] shape for embeddings: [[cappedCandidates]] (capped
+    * buckets chained in (emb, id) order) yields DISTINCT candidate ids,
+    * then ONE exact cosine verify join prices the work at the deduped
+    * candidate count rather than once per band hit.
     */
   private def embPairsFromSizedBands(sigs: DataFrame, sized: DataFrame,
-      minCosine: Double, bucketCap: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val smallSide = sized.filter(col("bsz") <= bucketCap)
-      .select("id", "bucket")
-    val allPairs = smallSide.as("x").join(smallSide.as("y").hint("merge"),
-        col("x.bucket") === col("y.bucket") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-    val big = sized.filter(col("bsz") > bucketCap)
-    val starPairs = big.filter(col("id") =!= col("bmin"))
-      .select(col("bmin").as("id_a"), col("id").as("id_b"))
-    val wOrd = Window.partitionBy("bucket").orderBy(col("emb"), col("id"))
-    val chainPairs = big
-      .join(sigs.select(col("id"), col("emb")).hint("merge"), "id")
-      .withColumn("prev", lag("id", 1).over(wOrd))
-      .filter(col("prev").isNotNull)
-      .select(least(col("prev"), col("id")).as("id_a"),
-        greatest(col("prev"), col("id")).as("id_b"))
-    val pairs = allPairs.unionByName(starPairs).unionByName(chainPairs)
-      .distinct()
-    val embs = sigs.select(col("id"), col("emb")).hint("merge")
-    pairs
-      .join(embs.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("emb", "emb_a"), "id_a")
-      .join(embs.withColumnRenamed("id", "id_b")
-        .withColumnRenamed("emb", "emb_b"), "id_b")
-      .withColumn("cosine",
-        graft.similarity.Ann.cosine(col("emb_a"), col("emb_b")))
-      .filter(col("cosine") >= minCosine)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
-  }
+      minCosine: Double, bucketCap: Int): DataFrame =
+    verifyJoin(cappedCandidates(sized, "bucket", sigs, "emb", bucketCap),
+      sigs.select(col("id"), col("emb")), Nil, "emb",
+      graft.similarity.Ann.cosine, "cosine", minCosine)
 
   /** One row per vector with its sign bucket, the bucket's size and min
     * id — materialized once, partitioned+sorted on the bucket key: the
@@ -1025,15 +985,12 @@ object Dedup {
     */
   private def embBucketed(df: DataFrame, idCol: String, embCol: String,
       planes: Int, dim: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val sign = graft.similarity.Ann.hyperplaneBucket(col(embCol), planes, dim)
-    val w = Window.partitionBy("bucket")
-    graft.analytics.Materialize.partitioned(
+    graft.analytics.Materialize.partitioned(withBucketStats(
       df.select(col(idCol).as("id"), col(embCol).as("emb"),
           sign.as("bucket"))
-        .repartition(col("bucket"))
-        .withColumn("bsz", count(lit(1)).over(w))
-        .withColumn("bmin", min("id").over(w)))
+        .repartition(col("bucket")),
+      "bucket"))
   }
 
   private def embPairsFromBucketed(withB: DataFrame, minCosine: Double,

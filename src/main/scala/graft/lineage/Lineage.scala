@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{Page, Thresholds}
+import graft.model.Page
 import graft.pipeline.QualityPipeline
 
 /** C1/C5 — partition-granular checkpoint/resume with a lineage table.
@@ -69,9 +69,7 @@ object ResumableRunner {
       runId: String,
       numChunks: Int = 16,
       waveSize: Int = 4,
-      th: Thresholds = Thresholds.default,
-      failAfterWaves: Option[Int] = None,
-      metrics: Option[graft.pipeline.PipelineMetrics] = None): Seq[Int] = {
+      failAfterWaves: Option[Int] = None): Seq[Int] = {
     val spark = pages.sparkSession
     val store = new LineageStore(spark, lineageDir)
 
@@ -97,7 +95,7 @@ object ResumableRunner {
       val wavePages = pages.filter(chunkId.isin(wave: _*))
       // idempotent per-chunk overwrite: re-running a chunk replaces exactly
       // its own partition directories, never duplicates
-      QualityPipeline.annotate(wavePages, th, metrics)
+      QualityPipeline.annotate(wavePages)
         .withColumn("chunk_id", chunkId)
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")

@@ -82,8 +82,10 @@ object DedupScale {
     // ~50k docs per partition keeps each sort buffer modest and AQE
     // coalesces the small stages back down
     val shufflePartitions = math.max(64L, nDocs / 50000L)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -146,9 +148,13 @@ object DedupScale {
 
     // ---- connected components (reliable checkpoint dir) ------------------
     phase("dup_clusters_reliable") {
-      val (labels0, iters) = Dedup.dupClustersWithStats(pairs,
-        maxIter = 30, checkpointDir = Some(s"$base/cc_ckpt"))
-      val labels = labels0
+      // reliable mode for this phase only: the labels checkpoint to
+      // cc_ckpt, every other phase keeps the in-memory default
+      sc.setCheckpointDir(s"$base/cc_ckpt")
+      spark.conf.set(graft.analytics.Materialize.ReliableConfKey, "true")
+      val (labels, iters) =
+        try Dedup.dupClustersWithStats(pairs, maxIter = 30)
+        finally spark.conf.unset(graft.analytics.Materialize.ReliableConfKey)
       val nComponents = labels.select("cluster_id").distinct().count()
       // recovery vs planted: a planted cluster (≥2 members) is INTACT iff
       // every member carries one shared label (absent members = LSH miss)
@@ -685,7 +691,7 @@ object DedupScale {
     val out: Seq[(String, Any)] = Seq(
       "generated_by" -> "graft.tools.DedupScale",
       "docs" -> nDocs,
-      "cores" -> 32,
+      "cores" -> cpus,
       "heap" -> (Runtime.getRuntime.maxMemory / (1 << 20) + "MB"),
       "phases" -> phases.toSeq)
     val json = renderJson(out)

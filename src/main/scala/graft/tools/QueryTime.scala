@@ -15,8 +15,9 @@ object QueryTime {
     val draws = if (args.length > 1) args(1).toInt else 3
     val names = if (args.length > 2) args.drop(2).toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
-    // same width knob and default as graft.Bench, so timings compare 1:1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // same width knob as graft.Bench; unset, the host's core count
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -114,14 +114,14 @@ class MaterializeSpec extends AnyFunSuite {
       "AQE flag leaked false after non-LIFO overlapping scopes")
   }
 
-  test("SparkContext still generates the checkpointDir_$eq setter " +
-      "withCheckpointDir restores through (Spark-upgrade guard: a rename " +
-      "must fail CI here, not a 20-minute scale run at its restore point)") {
+  test("SparkContext still generates the checkpointDir_$eq setter the " +
+      "no-checkpoint-dir test clears the dir through (Spark-upgrade guard: " +
+      "a rename fails here by name, not as a bare None.get there)") {
     val sc = spark.sparkContext
     val setter = sc.getClass.getMethods.find(_.getName == "checkpointDir_$eq")
     assert(setter.isDefined,
-      "SparkContext.checkpointDir_$eq disappeared — update " +
-        "Materialize.withCheckpointDir's restore seam for this Spark version")
+      "SparkContext.checkpointDir_$eq disappeared — update how \"reliable " +
+        "conf without a checkpoint dir fails loudly\" clears the dir")
     assert(setter.get.getParameterTypes.toSeq == Seq(classOf[Option[_]]),
       s"checkpointDir setter signature changed: ${setter.get}")
   }

@@ -579,10 +579,16 @@ class DedupSpec extends AnyFunSuite {
       .toString
     val pairs = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val reliable = Dedup.dupClusters(pairs, checkpointDir = Some(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val local = Dedup.dupClusters(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // reliable mode is the Materialize policy: the conf plus the context's
+    // checkpoint dir
+    spark.sparkContext.setCheckpointDir(dir)
+    spark.conf.set(graft.analytics.Materialize.ReliableConfKey, "true")
+    val reliable =
+      try Dedup.dupClusters(pairs)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      finally spark.conf.unset(graft.analytics.Materialize.ReliableConfKey)
     assert(reliable == local)
     assert(reliable == Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L))
@@ -749,50 +755,51 @@ class DedupSpec extends AnyFunSuite {
       "reported skips must dominate the true unexamined count")
   }
 
-  test("dupClusters(checkpointDir) restores the context-global checkpoint " +
-      "dir — later Materialize.reliable calls don't land in dedup's dir") {
+  test("empty and whitespace-only texts never reach a verify join: no NaN " +
+      "score, no empty-text id in any shingle-set operator's output") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    val dirA = java.nio.file.Files.createTempDirectory("graft-prior-ckpt")
-      .toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft-dedup-ckpt")
-      .toString
-    graft.analytics.Materialize.withCheckpointDir(spark, Some(dirA)) {
-      val prior = sc.getCheckpointDir // the UUID'd path under dirA
-      assert(prior.exists(_.contains(dirA)))
-      val pairs = Seq((2L, 1L), (2L, 3L)).toDF("id_a", "id_b")
-      val cl = Dedup.dupClusters(pairs, checkpointDir = Some(dirB))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(cl == Set(1L -> 1L, 2L -> 1L, 3L -> 1L))
-      // the global dir is back to the PRIOR value, not left at dirB
-      assert(sc.getCheckpointDir == prior,
-        s"checkpoint dir leaked: ${sc.getCheckpointDir} ≠ $prior")
-      // and a reliable materialization now writes under dirA, not dirB
-      val before = deepFileCount(new java.io.File(dirB))
-      spark.conf.set(graft.analytics.Materialize.ReliableConfKey, "true")
-      try graft.analytics.Materialize(Seq((1L, "x")).toDF("id", "t")).count()
-      finally spark.conf.unset(graft.analytics.Materialize.ReliableConfKey)
-      assert(deepFileCount(new java.io.File(dirB)) == before,
-        "post-dedup reliable checkpoint landed in dedup's directory")
+    val base = "unu doi trei patru cinci șase șapte opt nouă zece " * 5
+    val empties = Set(10L, 11L, 12L, 13L)
+    val df = docs(1L -> base, 2L -> base, 3L -> base.replace("cinci", "x"),
+        10L -> "", 11L -> "", 12L -> "   ", 13L -> "\n\t  \n")
+      .withColumn("grp", lit("g"))
+    // (id_a, id_b, score) of every output row; the score is the last column
+    def rows(out: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      out.select("id_a", "id_b", out.columns.last).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // candidate pairs naming empty-text ids: two empty sets would score NaN,
+    // which passes any `>=` threshold
+    val cands = Seq((1L, 2L), (1L, 10L), (10L, 11L), (11L, 12L), (12L, 13L))
+      .toDF("id_a", "id_b")
+    val outs = Seq(
+      "minhashNearDups" -> Dedup.minhashNearDups(df, "doc_id", "text",
+        minJaccard = 0.5),
+      "reverifyPairs" -> Dedup.reverifyPairs(cands, df, "doc_id", "text",
+        minJaccard = 0.5),
+      "jaccardWithinGroup" -> Dedup.jaccardWithinGroup(df, "doc_id", "text",
+        "grp", minJaccard = 0.5),
+      "jaccardWithinGroupLsh" -> Dedup.jaccardWithinGroupLsh(df, "doc_id",
+        "text", "grp", minJaccard = 0.5))
+    for ((name, out) <- outs) {
+      val got = rows(out)
+      assert(got.contains((1L, 2L, 1.0)), s"$name lost the real pair: $got")
+      assert(!got.exists(_._3.isNaN), s"$name emitted a NaN score: $got")
+      assert(!got.exists(p => empties(p._1) || empties(p._2)),
+        s"$name emitted an empty-text id: $got")
     }
-    // an unset prior dir is restored to unset (None), not left pointing at
-    // the dedup dir — exercised with the raw setter since the suite-shared
-    // context may carry a dir from earlier tests
-    val saved = sc.getCheckpointDir
-    val setter = sc.getClass.getMethods
-      .find(_.getName == "checkpointDir_$eq").get
-    setter.invoke(sc, None)
-    try {
-      val pairs = Seq((5L, 6L)).toDF("id_a", "id_b")
-      Dedup.dupClusters(pairs, checkpointDir = Some(dirB)).count()
-      assert(sc.getCheckpointDir.isEmpty,
-        "previously-unset checkpoint dir must be restored to unset")
-    } finally setter.invoke(sc, saved)
+    // jaccardPrefixJoin's token contract is `split(text, ' ')`, shared with
+    // its DuckDB oracle (`string_split`): "" and "   " are the one-token set
+    // {""}, never an empty set, so they score 1.0 with each other (never
+    // NaN) and pair with no document that has words
+    val prefix = rows(Dedup.jaccardPrefixJoin(df, "doc_id", "text", "grp",
+      minJaccard = 0.5))
+    assert(prefix.contains((1L, 2L, 1.0)),
+      s"prefix lost the real pair: $prefix")
+    assert(!prefix.exists(_._3.isNaN), s"prefix emitted a NaN score: $prefix")
+    assert(prefix.filter(p => empties(p._1) || empties(p._2)) ==
+      Set((10L, 11L, 1.0), (10L, 12L, 1.0), (11L, 12L, 1.0)),
+      s"prefix empty-text rows: $prefix")
   }
-
-  private def deepFileCount(p: java.io.File): Int =
-    if (p.isFile) 1
-    else Option(p.listFiles).map(_.map(deepFileCount).sum).getOrElse(0)
 
   test("reverifyPairs: exact re-verification keeps true near-dups with the " +
       "minhashNearDups jaccard and drops junk candidate pairs") {

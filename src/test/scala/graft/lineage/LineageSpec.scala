@@ -2,9 +2,13 @@ package graft.lineage
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.model.Page
 import graft.synth.SynthPages
 
 /** C1 resume semantics (FIXTURES.md `resume` family): kill after K waves,
@@ -44,12 +48,23 @@ class LineageSpec extends AnyFunSuite {
     assert(rows.map(_.docs_in).sum == 1200L)
 
     // final output byte-equals the uninterrupted golden run
-    import org.apache.spark.sql.functions.col
     val out = spark.read.parquet(s"$base/out").drop("chunk_id")
       .orderBy(col("url")).collect()
     val golden = spark.read.parquet(s"$base/golden").drop("chunk_id")
       .orderBy(col("url")).collect()
     assert(out.length == 1200 && out.sameElements(golden))
+  }
+
+  /** `pages` whose `text` passes through a deterministic identity UDF that
+    * bumps `seen` once per row it evaluates. Deterministic, so the wave's
+    * chunk filter (on `url`) pushes below it: `seen` counts exactly the
+    * rows a wave reads and scores.
+    */
+  private def counted(pages: Dataset[Page], seen: LongAccumulator)
+      : Dataset[Page] = {
+    import spark.implicits._
+    val touch = udf { t: String => seen.add(1L); t }
+    pages.withColumn("text", touch(col("text"))).as[Page]
   }
 
   test("each wave scores ONLY its own chunks (no per-wave full-corpus rescan)") {
@@ -59,11 +74,11 @@ class LineageSpec extends AnyFunSuite {
 
     // full run over 4 waves: every doc must be scored exactly once in total —
     // the old shape (annotate before the chunk filter) scored nDocs × waves
-    val m1 = new graft.pipeline.PipelineMetrics(spark)
-    ResumableRunner.run(pages, s"$base/out", s"$base/lin", "scan1",
-      numChunks = 8, waveSize = 2, metrics = Some(m1))
-    assert(m1.docsIn.value == nDocs,
-      s"scored ${m1.docsIn.value} docs across waves, expected $nDocs (one pass)")
+    val seen1 = spark.sparkContext.longAccumulator("lineage.seen1")
+    ResumableRunner.run(counted(pages, seen1), s"$base/out", s"$base/lin",
+      "scan1", numChunks = 8, waveSize = 2)
+    assert(seen1.value == nDocs,
+      s"scored ${seen1.value} docs across waves, expected $nDocs (one pass)")
 
     // resume after 1 completed wave: only the REMAINING chunks' docs are
     // scored, not the whole corpus again
@@ -75,11 +90,11 @@ class LineageSpec extends AnyFunSuite {
     val store = new LineageStore(spark, s"$base2/lin")
     val doneDocs = store.all().collect()
       .filter(_.run_id == "scan2").map(_.docs_in).sum
-    val m2 = new graft.pipeline.PipelineMetrics(spark)
-    ResumableRunner.run(pages, s"$base2/out", s"$base2/lin", "scan2",
-      numChunks = 8, waveSize = 2, metrics = Some(m2))
-    assert(m2.docsIn.value == nDocs - doneDocs,
-      s"resume scored ${m2.docsIn.value}, expected ${nDocs - doneDocs}")
+    val seen2 = spark.sparkContext.longAccumulator("lineage.seen2")
+    ResumableRunner.run(counted(pages, seen2), s"$base2/out", s"$base2/lin",
+      "scan2", numChunks = 8, waveSize = 2)
+    assert(seen2.value == nDocs - doneDocs,
+      s"resume scored ${seen2.value}, expected ${nDocs - doneDocs}")
   }
 
   test("metrics in lineage match the pipeline decisions") {
