@@ -80,7 +80,7 @@ object QualityPipeline {
       val w = bLangW.value // one deref per partition
       val lm = bLm.value
       iter.map { r =>
-        val s = ScrubScalar(r.text) // compiled-regex scrub, guarded
+        val s = ScrubScalar(r.text) // anchored linear-time scrub
         val h = HeuristicsScalar.compute(r.text) // one pass, all 5 metrics
         val (pred, conf) = LangIdModel.predict(r.text, w)
         val ronConf = if (pred == "ron") conf else 1.0 - conf

@@ -5,8 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.synth.Corpus
 
-/** N4 — PII/toxicity scrub: compiled-regex chains (native `regexp_replace` /
-  * `regexp_count`, codegen) + the checksum-validating CNP expression.
+/** N4 — PII/toxicity scrub: the regex strings below are the SPEC of the scrub.
+  * The production path is the anchored linear-time scanner [[ScrubScalar]]
+  * inside the fused scorer; the Column chain here (native `regexp_replace` /
+  * `regexp_count` + the checksum-validating CNP expression) has no production
+  * caller and stays as the parity oracle (ScrubParitySpec), as does the
+  * test-scope `ScrubRegexRef` (ScrubPropertySpec).
   *
   * Reference analogue: adult-content isolation (`full_dataset_analysis/
   * adult.py:8,19` on the taxonomy class at `small_model_inference/
@@ -22,8 +26,8 @@ object Scrub {
   val PhoneToken = "<PHONE>"
   val SlurToken = "<SLUR>"
 
-  /** Conservative email shape; `(?<![\w.+-])`/lookahead keep it anchored so
-    * already-scrubbed text can't partially re-match.
+  /** Conservative email shape: a local-part run, `@`, dot-separated domain
+    * labels and an ASCII-letter TLD of at least two letters.
     */
   val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9-]+(\\.[A-Za-z0-9-]+)*\\.[A-Za-z]{2,}"
 
@@ -49,7 +53,17 @@ object Scrub {
           phoneRe, PhoneToken),
         slurRe, SlurToken))
 
-  /** Appends pii counts (measured on the ORIGINAL text) + `scrubbed_text`. */
+  /** Appends pii counts (measured on the ORIGINAL text) + `scrubbed_text`.
+    *
+    * Bounds: Spark's `regexp_*` run `java.util.regex`, so this inherits both
+    * of its exposures on `emailRe`. Time is quadratic in a local-part run
+    * that reaches no valid domain (a 10 KB base64-like token before `@x`
+    * costs about a second on JDK 17). The `(\.[A-Za-z0-9-]+)*` group
+    * recurses once per domain label, so one `a@b.b.…` token of a few
+    * thousand labels (3,000 on a default JDK 17 thread stack) throws
+    * `StackOverflowError` and fails the task. Keep it off production paths;
+    * [[ScrubScalar]] has neither exposure.
+    */
   def withScrub(df: DataFrame, textCol: String = "text"): DataFrame = {
     val t = col(textCol)
     df.withColumns(Map(

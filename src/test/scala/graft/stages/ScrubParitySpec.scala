@@ -28,7 +28,12 @@ class ScrubParitySpec extends AnyFunSuite {
   test("uppercase slur and edge strings agree") {
     import spark.implicits._
     val cases = Seq("PROSTULE!", "prostULE", "u l e", "", "@", "07",
-      "a@b.ro 0722123456 " + SynthPages.makeCnp(42L, 3L, valid = true))
+      "a@b.ro 0722123456 " + SynthPages.makeCnp(42L, 3L, valid = true),
+      // counted on the original text, replaced in sequence: the phone and the
+      // slur inside an email are counted, and only <EMAIL> is emitted
+      "0722123456@x.ro", "a@prostule.ro",
+      SynthPages.makeCnp(42L, 5L, valid = true) + "@x.ro",
+      "a@b.ro0722123456", "+40 722 123 4567@x.ro", "a@x.ro0b@y.ro")
     val colRows = Scrub.withScrub(cases.toDF("text"))
       .select("scrubbed_text", "n_emails", "n_phones", "n_cnps", "n_slurs")
       .collect()

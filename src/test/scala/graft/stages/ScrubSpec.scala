@@ -93,6 +93,16 @@ class ScrubSpec extends AnyFunSuite {
     assert(once.sameElements(twice))
   }
 
+  test("scalar scrub on 10k and 100k domain labels: no stack overflow, one email only on a letter TLD") {
+    Seq(10000, 100000).foreach { labels =>
+      val chain = "a@" + "b." * labels
+      val bad = ScrubScalar(chain + "c1")
+      assert(bad.nEmails == 0 && bad.scrubbed == chain + "c1", s"$labels labels + c1")
+      val good = ScrubScalar(chain + "ro")
+      assert(good.nEmails == 1 && good.scrubbed == Scrub.EmailToken, s"$labels labels + ro")
+    }
+  }
+
   test("CNP checksum helper agrees with the published algorithm") {
     // known-structure check: checksum digit recomputed independently
     val d12 = "1800101221144".take(12)
