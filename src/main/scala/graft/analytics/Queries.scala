@@ -796,6 +796,14 @@ object Queries {
       .orderBy("doc_id")
   }
 
+  /** The embeddings table with `embedding` as array<double>: the codegen'd
+    * array Cast (the per-element transform(...) HOF lambda it replaces is
+    * CodegenFallback; values are the identical float→double widening).
+    */
+  private def embeddings(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings")
+      .withColumn("embedding", col("embedding").cast("array<double>"))
+
   // --- similarity 1: brute-force cosine top-k (exact baseline) -------------
   register("q_ann_cosine_topk",
     """SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -807,11 +815,7 @@ object Queries {
       |FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
       |WHERE q.vec_id < 5
       |QUALIFY rk <= 3 ORDER BY query_id, rk""".stripMargin) { (s, dir) =>
-    val emb = t(s, dir, "embeddings")
-      // array<float> → array<double> via the codegen'd array Cast (the
-      // per-element transform(...) HOF lambda it replaces is
-      // CodegenFallback; values are the identical float→double widening)
-      .withColumn("embedding", col("embedding").cast("array<double>"))
+    val emb = embeddings(s, dir)
     graft.similarity.Ann.bruteForceTopK(
       emb.filter(col("vec_id") < 5), emb, "vec_id", "vec_id", "embedding", 3)
       .orderBy("query_id", "rk")
@@ -819,11 +823,7 @@ object Queries {
 
   // --- similarity 2: LSH-bucketed ANN (scale path; rows-only) --------------
   register("q_ann_lsh_topk", null) { (s, dir) =>
-    val emb = t(s, dir, "embeddings")
-      // array<float> → array<double> via the codegen'd array Cast (the
-      // per-element transform(...) HOF lambda it replaces is
-      // CodegenFallback; values are the identical float→double widening)
-      .withColumn("embedding", col("embedding").cast("array<double>"))
+    val emb = embeddings(s, dir)
     graft.similarity.Ann.lshTopK(emb.filter(col("vec_id") < 50), emb,
       "vec_id", "vec_id", "embedding", 3, planes = 6).orderBy("query_id", "rk")
   }
@@ -831,11 +831,7 @@ object Queries {
   // --- similarity 2b: IVF-bucketed ANN (the inverted-file scale path;
   //     deterministic sample-trained coarse quantizer; rows-only) ----------
   register("q_ann_ivf_topk", null) { (s, dir) =>
-    val emb = t(s, dir, "embeddings")
-      // array<float> → array<double> via the codegen'd array Cast (the
-      // per-element transform(...) HOF lambda it replaces is
-      // CodegenFallback; values are the identical float→double widening)
-      .withColumn("embedding", col("embedding").cast("array<double>"))
+    val emb = embeddings(s, dir)
     val cents = graft.similarity.Ann.trainIvfCentroids(
       emb, "vec_id", "embedding", nlist = 8)
     graft.similarity.Ann.ivfTopK(emb.filter(col("vec_id") < 50), emb,
@@ -848,11 +844,7 @@ object Queries {
     * both embedding near-dup queries.
     */
   private def plantedEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-      // array<float> → array<double> via the codegen'd array Cast (the
-      // per-element transform(...) HOF lambda it replaces is
-      // CodegenFallback; values are the identical float→double widening)
-      .withColumn("embedding", col("embedding").cast("array<double>"))
+    val emb = embeddings(s, dir)
     emb.select("vec_id", "embedding").unionByName(
       emb.filter(col("vec_id") % 9 === 0)
         .withColumn("vec_id", col("vec_id") + 1000000L)

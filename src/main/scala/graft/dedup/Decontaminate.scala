@@ -27,16 +27,14 @@ import graft.functions.TextFunctions.shingle_hashes
   * Scale shape (the 100-TB asymmetry this operator is built around): the
   * EVAL side is small by construction — benchmarks are thousands of
   * examples, so their distinct gram set is a dimension table — while the
-  * corpus side is the 100-TB frame. With `broadcastBench = true` (default)
+  * corpus side is the 100-TB frame. The eval grams are always broadcast, so
   * the corpus grams NEVER shuffle: the gram join is a map-side
   * BroadcastHashJoin, only HIT rows survive into the per-doc aggregate
   * (partial map-side combine ⇒ the one exchange moves ≤ one row per
-  * contaminated doc), and the corpus text is scanned exactly once. With
-  * `broadcastBench = false` (an eval side too big to broadcast) both gram
-  * frames shuffle on the gram hash into a sort-merge join — the honest
-  * fallback, priced like one exact-dedup pass. Either way no join here may
-  * broadcast the corpus-scale side: the flag/anti joins are merge-hinted
-  * per the [[Dedup]] join-strategy rule and pinned in DecontaminateSpec.
+  * contaminated doc), and the corpus text is scanned exactly once. No other
+  * join here may broadcast: the flagged-id anti join is merge-hinted per
+  * the [[Dedup]] join-strategy rule, and both are pinned in
+  * DecontaminateSpec.
   */
 object Decontaminate {
 
@@ -59,11 +57,9 @@ object Decontaminate {
     * corpus-sized, so downstream joins against it stay cheap.
     */
   def gramHits(docs: DataFrame, bench: DataFrame, idCol: String,
-      textCol: String, n: Int = 13,
-      broadcastBench: Boolean = true): DataFrame = {
+      textCol: String, n: Int = 13): DataFrame = {
     require(n >= 1, s"n = $n must be >= 1")
-    val bg0 = benchGrams(bench, textCol, n)
-    val bg = if (broadcastBench) broadcast(bg0) else bg0.hint("merge")
+    val bg = broadcast(benchGrams(bench, textCol, n))
     docs
       .select(col(idCol).as("id"), grams(col(textCol), n).as("gs"))
       .filter(size(col("gs")) > 0)
@@ -85,10 +81,9 @@ object Decontaminate {
     * corpus), so the anti join is merge-hinted — never broadcast.
     */
   def decontaminate(docs: DataFrame, bench: DataFrame, idCol: String,
-      textCol: String, n: Int = 13, minHits: Int = 1,
-      broadcastBench: Boolean = true): DataFrame = {
+      textCol: String, n: Int = 13, minHits: Int = 1): DataFrame = {
     require(minHits >= 1, s"minHits = $minHits must be >= 1")
-    val flagged = gramHits(docs, bench, idCol, textCol, n, broadcastBench)
+    val flagged = gramHits(docs, bench, idCol, textCol, n)
       .filter(col("n_hit_grams") >= minHits)
       .select(col("id"))
     docs.join(flagged.hint("merge"), docs(idCol) === flagged("id"),
@@ -96,7 +91,7 @@ object Decontaminate {
   }
 
   /** The eval set's distinct gram hashes, driver-collected and sorted —
-    * the explicit form of the `broadcastBench = true` assumption (eval
+    * the explicit form of the broadcast-eval-grams assumption (eval
     * suites are thousands of examples; the 5M-doc scale run's eval frame
     * was 398k grams ≈ 3 MB). Build once, reuse across corpus slices AND
     * streams.
@@ -114,10 +109,10 @@ object Decontaminate {
 
   /** Corpus (batch OR streaming) with contaminated rows removed, judged
     * against a pre-collected eval-gram array — semantics ≡ [[decontaminate]]
-    * with `broadcastBench = true` (spec-pinned), but expressed as a pure
-    * per-row filter: at 10^12 docs the corpus never shuffles at all, and
-    * on a stream each micro-batch filters independently (exactly-once
-    * under checkpointing, no watermark needed).
+    * (spec-pinned), but expressed as a pure per-row filter: at 10^12 docs
+    * the corpus never shuffles at all, and on a stream each micro-batch
+    * filters independently (exactly-once under checkpointing, no watermark
+    * needed).
     */
   def decontaminateAgainst(docs: DataFrame, sortedGrams: Array[Long],
       textCol: String, n: Int = 13, minHits: Int = 1): DataFrame = {

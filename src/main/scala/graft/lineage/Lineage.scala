@@ -1,7 +1,6 @@
 package graft.lineage
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +36,7 @@ final class LineageStore(spark: SparkSession, path: String) {
   import spark.implicits._
 
   def completedChunks(runId: String): Set[Int] = {
-    if (!Files.exists(Paths.get(path))) return Set.empty
+    if (!ResumableRunner.exists(spark, path)) return Set.empty
     spark.read.parquet(path)
       .filter(col("run_id") === runId && col("status") === "done")
       .select("chunk_id").as[Int].collect().toSet
@@ -56,6 +55,14 @@ final class LineageStore(spark: SparkSession, path: String) {
 final class SimulatedFailure(msg: String) extends RuntimeException(msg)
 
 object ResumableRunner {
+  /** Whether `path` (a plain path or any Hadoop URI: `file:`, `hdfs://`, …)
+    * exists, asked of its own Hadoop `FileSystem`.
+    */
+  private[lineage] def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
+
   /** Runs the quality pipeline chunk-wave by chunk-wave with lineage
     * checkpointing. Returns the chunk ids processed in THIS invocation.
     *
@@ -105,10 +112,8 @@ object ResumableRunner {
       // (reading the whole output tree would be O(waves²) I/O over a run);
       // basePath keeps the chunk_id partition column in scope. An empty
       // chunk writes no directory — skip missing paths.
-      val fs = new org.apache.hadoop.fs.Path(outDir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
       val wavePaths = wave.map(c => s"$outDir/chunk_id=$c")
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+        .filter(exists(spark, _))
       val counts =
         if (wavePaths.isEmpty) Map.empty[Int, (Long, Long)]
         else spark.read.option("basePath", outDir).parquet(wavePaths: _*)

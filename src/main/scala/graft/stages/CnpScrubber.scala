@@ -1,9 +1,9 @@
 package graft.stages
 
-import org.apache.spark.sql.Column
+import scala.collection.mutable.ArrayBuilder
+
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -11,63 +11,60 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * A regex alone cannot express the CNP checksum (weights 279146358279 mod
   * 11), and the FIXTURES spec requires invalid-checksum 13-digit lookalikes
-  * to pass through byte-identical. This is therefore a native Catalyst
-  * `Expression` pair with real `doGenCode` (a static-call, so the stage stays
-  * inside whole-stage codegen), O(n) over the string — cheaper than a regex
-  * candidate scan + UDF validation at 100 TB.
+  * to pass through byte-identical. One digit-run scan ([[spans]]) finds the
+  * CNPs for both [[count]] and [[scrub]]; the SQL functions `scrub_cnp` /
+  * `count_cnp` are a native Catalyst `Expression` pair with real `doGenCode`
+  * (a static call, so the stage stays inside whole-stage codegen), O(n)
+  * over the string — cheaper than a regex candidate scan + UDF validation
+  * at 100 TB.
   */
 object CnpScrubber {
   private val weights: Array[Int] = "279146358279".map(_ - '0').toArray
   final val Token = "<CNP>"
 
-  /** True iff s[from, from+13) is a checksum-valid CNP with lead digit 1-8. */
+  /** True iff s[from, from+13) is 13 ASCII digits, lead digit 1-8, with a
+    * valid checksum.
+    */
   def isValidCnp(s: CharSequence, from: Int): Boolean = {
     val lead = s.charAt(from)
     if (lead < '1' || lead > '8') return false
     var sum = 0
     var i = 0
-    while (i < 12) { sum += (s.charAt(from + i) - '0') * weights(i); i += 1 }
+    while (i < 12) {
+      val d = s.charAt(from + i) - '0'
+      if (d < 0 || d > 9) return false
+      sum += d * weights(i)
+      i += 1
+    }
     val r = sum % 11
     val ck = if (r == 10) 1 else r
     s.charAt(from + 12) - '0' == ck
   }
 
-  /** Scan for maximal digit runs; a run of exactly 13 digits that validates
-    * is replaced by [[Token]]; everything else is copied byte-identically.
+  /** CNP spans of `s` as start/end pairs, in text order: the maximal runs of
+    * `Character.isDigit` chars that are exactly 13 long and pass
+    * [[isValidCnp]].
     */
-  def scrub(s: String): String = {
+  def spans(s: String): Array[Int] = {
+    val sp = new ArrayBuilder.ofInt
     val n = s.length
     var i = 0
-    var sb: java.lang.StringBuilder = null
-    var copied = 0
     while (i < n) {
       if (Character.isDigit(s.charAt(i))) {
         val start = i
         while (i < n && Character.isDigit(s.charAt(i))) i += 1
-        if (i - start == 13 && isValidCnp(s, start)) {
-          if (sb == null) sb = new java.lang.StringBuilder(n)
-          sb.append(s, copied, start).append(Token)
-          copied = i
-        }
+        if (i - start == 13 && isValidCnp(s, start)) sp.addOne(start).addOne(i)
       } else i += 1
     }
-    if (sb == null) s
-    else { sb.append(s, copied, n); sb.toString }
+    sp.result()
   }
 
-  def count(s: String): Int = {
-    val n = s.length
-    var i = 0
-    var c = 0
-    while (i < n) {
-      if (Character.isDigit(s.charAt(i))) {
-        val start = i
-        while (i < n && Character.isDigit(s.charAt(i))) i += 1
-        if (i - start == 13 && isValidCnp(s, start)) c += 1
-      } else i += 1
-    }
-    c
-  }
+  /** `s` with every CNP replaced by [[Token]]; everything else is copied
+    * byte-identically.
+    */
+  def scrub(s: String): String = ScrubScalar.replace(s, spans(s), Token)
+
+  def count(s: String): Int = spans(s).length / 2
 
   // UTF8String entry points for codegen (static calls keep codegen whole).
   def scrubU(s: UTF8String): UTF8String = {
@@ -76,9 +73,6 @@ object CnpScrubber {
     if (out eq str) s else UTF8String.fromString(out)
   }
   def countU(s: UTF8String): Int = count(s.toString)
-
-  def scrub_cnp(c: Column): Column = ColumnShim.column(CnpScrubExpr(ColumnShim.expr(c)))
-  def count_cnp(c: Column): Column = ColumnShim.column(CnpCountExpr(ColumnShim.expr(c)))
 }
 
 case class CnpScrubExpr(child: Expression) extends UnaryExpression {

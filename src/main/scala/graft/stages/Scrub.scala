@@ -1,16 +1,12 @@
 package graft.stages
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
 import graft.synth.Corpus
 
 /** N4 — PII/toxicity scrub: the regex strings below are the SPEC of the scrub.
-  * The production path is the anchored linear-time scanner [[ScrubScalar]]
-  * inside the fused scorer; the Column chain here (native `regexp_replace` /
-  * `regexp_count` + the checksum-validating CNP expression) has no production
-  * caller and stays as the parity oracle (ScrubParitySpec), as does the
-  * test-scope `ScrubRegexRef` (ScrubPropertySpec).
+  * The production engine is the anchored linear-time scanner [[ScrubScalar]]
+  * inside the fused scorer (CNPs: [[CnpScrubber]]); the test-scope regex
+  * reference `ScrubRegexRef` runs these strings with `java.util.regex` as
+  * the oracle of ScrubParitySpec and ScrubPropertySpec.
   *
   * Reference analogue: adult-content isolation (`full_dataset_analysis/
   * adult.py:8,19` on the taxonomy class at `small_model_inference/
@@ -39,39 +35,4 @@ object Scrub {
 
   val slurRe: String =
     "(?iu)\\b(" + Corpus.toxicLexicon.mkString("|") + ")\\b"
-
-  def countEmails(t: Column): Column = regexp_count(t, lit(emailRe)).cast("int")
-  def countPhones(t: Column): Column = regexp_count(t, lit(phoneRe)).cast("int")
-  def countSlurs(t: Column): Column = regexp_count(t, lit(slurRe)).cast("int")
-  def countCnps(t: Column): Column = CnpScrubber.count_cnp(t)
-
-  def scrubText(t: Column): Column =
-    CnpScrubber.scrub_cnp(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(t, emailRe, EmailToken),
-          phoneRe, PhoneToken),
-        slurRe, SlurToken))
-
-  /** Appends pii counts (measured on the ORIGINAL text) + `scrubbed_text`.
-    *
-    * Bounds: Spark's `regexp_*` run `java.util.regex`, so this inherits both
-    * of its exposures on `emailRe`. Time is quadratic in a local-part run
-    * that reaches no valid domain (a 10 KB base64-like token before `@x`
-    * costs about a second on JDK 17). The `(\.[A-Za-z0-9-]+)*` group
-    * recurses once per domain label, so one `a@b.b.…` token of a few
-    * thousand labels (3,000 on a default JDK 17 thread stack) throws
-    * `StackOverflowError` and fails the task. Keep it off production paths;
-    * [[ScrubScalar]] has neither exposure.
-    */
-  def withScrub(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    df.withColumns(Map(
-      "n_emails" -> countEmails(t),
-      "n_phones" -> countPhones(t),
-      "n_cnps" -> countCnps(t),
-      "n_slurs" -> countSlurs(t),
-      "scrubbed_text" -> scrubText(t)
-    ))
-  }
 }

@@ -8,8 +8,8 @@ import graft.synth.Corpus
 
 /** Scalar engine for the N4 scrub, used inside the fused `mapPartitions`
   * scorer: an anchored scanner whose time is linear in the document length.
-  * Same semantics as the Column version ([[Scrub]]; cross-validated in
-  * ScrubParitySpec, and against the regex strings themselves in
+  * Same semantics as the [[Scrub]] regex strings run with `java.util.regex`
+  * (the test-scope `ScrubRegexRef`; cross-validated in ScrubParitySpec and
   * ScrubPropertySpec): counts measured on the ORIGINAL text, replacements
   * applied sequentially email → phone → slur → CNP.
   *
@@ -23,7 +23,7 @@ import graft.synth.Corpus
   *    `lookingAt` on a bounded region at each anchor (`07`/`+40`; an `ule`
   *    hit), with transparent bounds so the lookarounds and `\b` still see
   *    the text around the region;
-  *  - CNPs are [[CnpScrubber]]'s single pass over digit runs.
+  *  - CNPs are [[CnpScrubber.spans]], one pass over digit runs.
   * A stage whose input is still the original text replaces the spans found
   * for counting; otherwise it scans its own input again.
   */
@@ -55,7 +55,7 @@ object ScrubScalar {
   /** `s` with each `[start, end)` of `spans` (start/end pairs of
     * non-overlapping matches, in text order) replaced by `token`.
     */
-  private def replace(s: String, spans: Array[Int], token: String): String =
+  private[stages] def replace(s: String, spans: Array[Int], token: String): String =
     if (spans.isEmpty) s
     else {
       val sb = new java.lang.StringBuilder(s.length + spans.length / 2 * token.length)
@@ -186,14 +186,15 @@ object ScrubScalar {
     val emails = emailSpans(text)
     val phones = phoneSpans(text)
     val slurs = slurSpans(text)
-    val nCnps = CnpScrubber.count(text)
+    val cnps = CnpScrubber.spans(text)
     var out = replace(text, emails, Scrub.EmailToken)
     out = replace(out, if (out eq text) phones else phoneSpans(out), Scrub.PhoneToken)
     out = replace(out, if (out eq text) slurs else slurSpans(out), Scrub.SlurToken)
     // replacements never leave a valid 13-digit run the original lacked (the
     // regex oracle in ScrubPropertySpec always runs this pass), so a text
     // without a CNP skips it
-    if (nCnps > 0) out = CnpScrubber.scrub(out)
-    Result(out, emails.length / 2, phones.length / 2, nCnps, slurs.length / 2)
+    if (cnps.nonEmpty)
+      out = replace(out, if (out eq text) cnps else CnpScrubber.spans(out), CnpScrubber.Token)
+    Result(out, emails.length / 2, phones.length / 2, cnps.length / 2, slurs.length / 2)
   }
 }

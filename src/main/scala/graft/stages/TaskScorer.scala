@@ -65,69 +65,36 @@ object TaskScorer extends Serializable {
     "format" -> Taxonomy.formats,
     "age_group" -> Taxonomy.ageGroups)
 
-  /** reg: regression-head weights; tasks(t)(c): class-c weights of task t.
-    * Total ≈ (1 + 24 + 24 + 6) × 2^14 floats ≈ 3.6 MB — broadcast once.
-    *
-    * `flatT` is the r6 hot-path layout: the same weights BUCKET-major
-    * (row b = [reg(b), t0c0(b) … t2c5(b)], 55 floats). [[scoreDoc]]'s old
-    * head-major loops read 55 scattered 64 KiB arrays at one bucket index
-    * per gram — a cache miss per head per gram; the transposed row is a
-    * couple of cache lines read once per gram. @transient lazy: broadcast
-    * ships only reg/tasks, each executor JVM rebuilds the copy once. Per-
-    * accumulator addition order is unchanged (gram order per head), so
-    * every score/prob is bit-identical (TaskScorerSpec + the committed
-    * golden pin it).
+  /** Heads per bucket row: the regression head, then each task's classes in
+    * [[Tasks]] order — 1 + 24 + 24 + 6 = 55.
     */
-  final class Weights private[TaskScorer] (
-      val reg: Array[Float],
-      val tasks: Array[Array[Array[Float]]])
-    extends Serializable {
-    @transient private[TaskScorer] lazy val width: Int =
-      1 + tasks.map(_.length).sum
-    @transient private[TaskScorer] lazy val flatT: Array[Float] = {
-      val nb = reg.length
-      val w = width
-      val out = new Array[Float](nb * w)
-      var b = 0
-      while (b < nb) {
-        var p = b * w
-        out(p) = reg(b)
-        p += 1
-        var t = 0
-        while (t < tasks.length) {
-          val cls = tasks(t)
-          var c = 0
-          while (c < cls.length) { out(p) = cls(c)(b); p += 1; c += 1 }
-          t += 1
-        }
-        b += 1
-      }
-      out
-    }
-  }
+  private val Width = 1 + Tasks.map(_._2.length).sum
 
-  /** Deterministic quantized weight vector for one head. */
-  private def headWeights(salt: Long): Array[Float] = {
-    val w = new Array[Float](NumBuckets)
-    var b = 0
-    while (b < NumBuckets) {
-      val h = Det.mix64(salt ^ (b.toLong * 0x9e3779b97f4a7c15L))
-      val raw = (((h & 0xffffL) - 32768L).toFloat / 32768.0f) / 8.0f
-      w(b) = math.round(raw * 256.0f) / 256.0f // quantize: JVM-invariant
-      b += 1
-    }
-    w
+  /** The heads' weights in one BUCKET-major array: entry `b * Width + h` is
+    * head h's weight at bucket b. [[scoreDoc]] reads one row of `Width`
+    * floats (a couple of cache lines) per gram instead of one scattered
+    * 64 KiB array per head. 2^14 × 55 floats ≈ 3.6 MB — broadcast once.
+    */
+  final class Weights private[TaskScorer] (private[TaskScorer] val rows: Array[Float])
+    extends Serializable
+
+  /** Deterministic quantized weight of one head at bucket `b`. */
+  private def headWeight(salt: Long, b: Int): Float = {
+    val h = Det.mix64(salt ^ (b.toLong * 0x9e3779b97f4a7c15L))
+    val raw = (((h & 0xffffL) - 32768L).toFloat / 32768.0f) / 8.0f
+    math.round(raw * 256.0f) / 256.0f // quantize: JVM-invariant
   }
 
   /** The committed weight tensors. Built once per JVM, broadcast by users. */
   lazy val default: Weights = {
-    val reg = headWeights(0x5ecde7a11dL)
-    val tasks = Tasks.zipWithIndex.map { case ((_, labels), t) =>
-      labels.indices
-        .map(c => headWeights((t + 1).toLong * 1000003L + c.toLong * 7919L))
-        .toArray
-    }.toArray
-    new Weights(reg, tasks)
+    val salts = 0x5ecde7a11dL +: (for {
+      ((_, labels), t) <- Tasks.zipWithIndex
+      c <- labels.indices
+    } yield (t + 1).toLong * 1000003L + c.toLong * 7919L)
+    val rows = new Array[Float](NumBuckets * Width)
+    for ((salt, h) <- salts.zipWithIndex; b <- 0 until NumBuckets)
+      rows(b * Width + h) = headWeight(salt, b)
+    new Weights(rows)
   }
 
   /** Hashed n-gram bucket stream — the shared [[Grams]] tokenization (one
@@ -173,20 +140,17 @@ object TaskScorer extends Serializable {
   def scoreDoc(text: String, w: Weights): DocScores = {
     val bs = gramBuckets(text)
     val n = bs.length
-    // ONE gram pass over the bucket-major weight rows: every head's
-    // accumulator still receives its additions in gram order (double +=
-    // the identical widened float), so all 55 sums — and every score and
-    // prob derived from them — are bit-identical to the old head-major
-    // 55-passes-over-the-gram-list loop, at ~a cache line per gram
-    // instead of 55 scattered reads
-    val width = w.width
-    val flat = w.flatT
-    val acc = new Array[Double](width)
+    // ONE gram pass over the bucket-major weight rows; every head's
+    // accumulator receives its additions in gram order (double += the
+    // widened float), so every score and prob is bit-identical to a
+    // head-by-head sum
+    val rows = w.rows
+    val acc = new Array[Double](Width)
     var i = 0
     while (i < n) {
-      val base = bs(i) * width
+      val base = bs(i) * Width
       var k = 0
-      while (k < width) { acc(k) += flat(base + k); k += 1 }
+      while (k < Width) { acc(k) += rows(base + k); k += 1 }
       i += 1
     }
     val regMean = if (n == 0) 0.0 else acc(0) / n
@@ -194,16 +158,16 @@ object TaskScorer extends Serializable {
     // annotation scores (`training/all_tasks_bert.py:347-348`)
     val score = 5.0 / (1.0 + math.exp(-RegGain * regMean))
     var off = 1
-    val taskProbs = w.tasks.map { classes =>
-      val logits = new Array[Double](classes.length)
+    val taskProbs = Tasks.map { case (_, labels) =>
+      val logits = new Array[Double](labels.length)
       var c = 0
-      while (c < classes.length) {
+      while (c < labels.length) {
         logits(c) = if (n == 0) 0.0 else ClsGain * acc(off + c) / n
         c += 1
       }
-      off += classes.length
+      off += labels.length
       softmax(logits)
-    }
+    }.toArray
     DocScores(score, score.toInt, taskProbs)
   }
 

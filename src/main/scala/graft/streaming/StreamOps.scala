@@ -42,8 +42,7 @@ object StreamOps {
     * explicit) and every micro-batch filters statelessly against them —
     * no join, no shuffle, no state store, no watermark; exactly-once under
     * checkpointing because a row's fate depends only on its own text.
-    * Semantics ≡ the batch operator at `broadcastBench = true`
-    * (spec-pinned batch-vs-stream).
+    * Semantics ≡ the batch operator (spec-pinned batch-vs-stream).
     */
   def decontaminateStream(pages: DataFrame, bench: DataFrame,
       textCol: String, n: Int = 13, minHits: Int = 1): DataFrame =

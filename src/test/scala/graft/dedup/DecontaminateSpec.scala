@@ -75,15 +75,6 @@ class DecontaminateSpec extends AnyFunSuite {
     assert(survivors3 == Seq(2L, 3L, 4L, 5L))
   }
 
-  test("merge-join fallback (broadcastBench = false) is output-identical") {
-    val b = Decontaminate.gramHits(corpus, bench, "doc_id", "text", n = 3)
-      .orderBy("id").collect().toSeq
-    val m = Decontaminate.gramHits(corpus, bench, "doc_id", "text", n = 3,
-        broadcastBench = false)
-      .orderBy("id").collect().toSeq
-    assert(b == m)
-  }
-
   test("empty eval set: no hits, decontaminate is the identity") {
     val empty = df()
     assert(Decontaminate.gramHits(corpus, empty, "doc_id", "text", n = 3)
@@ -111,12 +102,6 @@ class DecontaminateSpec extends AnyFunSuite {
       assert(!p.contains("BroadcastHashJoin LeftAnti") &&
         !p.contains("BroadcastNestedLoopJoin"),
         s"flagged-id anti join must not broadcast:\n$p")
-    }
-    // merge fallback: NO broadcast anywhere
-    for (p <- plans(Decontaminate.decontaminate(
-        corpus, bench, "doc_id", "text", n = 3, broadcastBench = false))) {
-      assert(!p.contains("BroadcastExchange"),
-        s"broadcastBench = false must not broadcast:\n$p")
     }
   }
 

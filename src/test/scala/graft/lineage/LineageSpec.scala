@@ -24,35 +24,41 @@ class LineageSpec extends AnyFunSuite {
     // single uninterrupted run = golden output
     ResumableRunner.run(pages, s"$base/golden", s"$base/lin_golden", "golden",
       numChunks = 8, waveSize = 2)
-
-    // killed run: fails after 1 wave (2 of 8 chunks)
-    intercept[SimulatedFailure] {
-      ResumableRunner.run(pages, s"$base/out", s"$base/lin", "run1",
-        numChunks = 8, waveSize = 2, failAfterWaves = Some(1))
-    }
-    val store = new LineageStore(spark, s"$base/lin")
-    val afterKill = store.completedChunks("run1")
-    assert(afterKill.size == 2, s"expected 2 completed chunks, got $afterKill")
-
-    // resume: must process exactly the remaining 6, never the completed 2
-    val resumed = ResumableRunner.run(pages, s"$base/out", s"$base/lin", "run1",
-      numChunks = 8, waveSize = 2)
-    assert(resumed.size == 6)
-    assert(resumed.toSet.intersect(afterKill).isEmpty, "chunk double-processed")
-    assert(store.completedChunks("run1") == (0 until 8).toSet)
-
-    // lineage rows: one per chunk, no duplicates
-    val rows = store.all().collect().filter(_.run_id == "run1")
-    assert(rows.length == 8)
-    assert(rows.map(_.chunk_id).distinct.length == 8)
-    assert(rows.map(_.docs_in).sum == 1200L)
-
-    // final output byte-equals the uninterrupted golden run
-    val out = spark.read.parquet(s"$base/out").drop("chunk_id")
-      .orderBy(col("url")).collect()
     val golden = spark.read.parquet(s"$base/golden").drop("chunk_id")
       .orderBy(col("url")).collect()
-    assert(out.length == 1200 && out.sameElements(golden))
+
+    // the lineage store as a plain path and as a Hadoop URI
+    Seq("path" -> s"$base/lin",
+      "uri" -> new java.io.File(s"$base/lin_uri").toURI.toString).foreach {
+      case (form, lin) =>
+        val out = s"$base/out_$form"
+        // killed run: fails after 1 wave (2 of 8 chunks)
+        intercept[SimulatedFailure] {
+          ResumableRunner.run(pages, out, lin, "run1",
+            numChunks = 8, waveSize = 2, failAfterWaves = Some(1))
+        }
+        val store = new LineageStore(spark, lin)
+        val afterKill = store.completedChunks("run1")
+        assert(afterKill.size == 2, s"$form: expected 2 completed chunks, got $afterKill")
+
+        // resume: must process exactly the remaining 6, never the completed 2
+        val resumed = ResumableRunner.run(pages, out, lin, "run1",
+          numChunks = 8, waveSize = 2)
+        assert(resumed.size == 6, s"$form: resumed $resumed")
+        assert(resumed.toSet.intersect(afterKill).isEmpty, s"$form: chunk double-processed")
+        assert(store.completedChunks("run1") == (0 until 8).toSet, form)
+
+        // lineage rows: one per chunk, no duplicates
+        val rows = store.all().collect().filter(_.run_id == "run1")
+        assert(rows.length == 8, form)
+        assert(rows.map(_.chunk_id).distinct.length == 8, form)
+        assert(rows.map(_.docs_in).sum == 1200L, form)
+
+        // final output byte-equals the uninterrupted golden run
+        val got = spark.read.parquet(out).drop("chunk_id")
+          .orderBy(col("url")).collect()
+        assert(got.length == 1200 && got.sameElements(golden), form)
+    }
   }
 
   /** `pages` whose `text` passes through a deterministic identity UDF that

@@ -8,6 +8,9 @@ import graft.TestSpark
 class HeuristicsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** The five metrics of the Column twin, asserted equal to the production
+    * scalar engine's.
+    */
   private def metrics(text: String): (Int, Double, Double, Double, Double) = {
     import spark.implicits._
     val df = Seq(text).toDF("text")
@@ -15,7 +18,11 @@ class HeuristicsSpec extends AnyFunSuite {
       .select("doc_len_words", "mean_word_len", "symbol_word_ratio",
         "stopword_frac", "dup_line_frac")
       .head()
-    (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))
+    val col = (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))
+    val m = HeuristicsScalar.compute(text)
+    assert(col == ((m.docLenWords, m.meanWordLen, m.symbolWordRatio,
+      m.stopwordFrac, m.dupLineFrac)), s"scalar differs on ${text.replace("\n", "\\n")}")
+    col
   }
 
   test("doc_len_words and mean_word_len on a hand-computed doc") {

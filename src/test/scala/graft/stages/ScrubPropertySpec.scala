@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.synth.{Corpus, SynthPages}
 
-/** Regex reference for [[ScrubScalar]]: the `Scrub` regex strings run over
-  * the whole document with `java.util.regex`, three count loops and three
+/** Regex reference for [[ScrubScalar]] (the oracle of ScrubParitySpec and
+  * ScrubPropertySpec): the `Scrub` regex strings run over the whole
+  * document with `java.util.regex`, three count loops and three
   * `replaceAll` passes, then [[CnpScrubber]]. It is quadratic on long
   * local-part runs and overflows the stack on long domain-label chains, so
   * it is only fed inputs below those limits.
