@@ -104,9 +104,9 @@ object Dedup {
     *
     * The cap is OPT-IN (default `Int.MaxValue` = exact all-pairs in every
     * bucket): trading recall for boundedness is a deployment decision, not a
-    * default. When a cap is set, pair it with [[minhashBucketCensus]] /
-    * [[minhashNearDupsWithStats]] so the truncation is OBSERVED, not assumed
-    * absent — a 100-TB operator can't read scaladoc at runtime.
+    * default. When a cap is set, run it as [[minhashNearDupsWithStats]] so
+    * the truncation is OBSERVED, not assumed absent — a 100-TB operator
+    * can't read scaladoc at runtime.
     *
     * UNCAPPED-DEFAULT exposure (shared by the simhash and embedding twins):
     * the pairing self-join roots at the checkpointed pre-partitioned banded
@@ -135,8 +135,8 @@ object Dedup {
         buildSigs(df, idCol, textCol, shingleN)),
       minJaccard, bucketCap)
 
-  /** `(id, shingles, minhash)` signature frame shared by the pairing and
-    * the census (empty shingle sets dropped — they can't near-dup).
+  /** `(id, shingles, minhash)` signature frame the pairing and the census
+    * read (empty shingle sets dropped — they can't near-dup).
     */
   private def buildSigs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int): DataFrame =
@@ -269,26 +269,19 @@ object Dedup {
       explode(array((0 until Bands).map(bandKey): _*)).as("band_key")),
       "band_key")
 
-  /** Truncation telemetry for a capped [[minhashNearDups]] run: one row of
-    * `(n_buckets, capped_buckets, skipped_pairs)` where `skipped_pairs` is
-    * the per-bucket `C(s,2) − max(s−1, 2s−4)` — a true UPPER bound on the
-    * candidate pairs the star+chain expansion does not examine (and hence
-    * on lost NEAR-dup pairs; exact dups still connect through the chain).
-    * The star emits s−1 edges and the chain s−1, but they overlap on the
-    * chain edges incident to the bucket representative `bmin` (one if bmin
-    * sorts to a chain end, two if interior), so the DISTINCT examined pairs
-    * can be as few as max(s−1, 2s−4) — subtracting the naive 2(s−1) would
-    * understate the skips by up to 2 per capped bucket and break the bound.
-    * Zero capped buckets ⇒ the capped run was exhaustive and its recall
-    * caveat is vacuous.
+  /** Truncation telemetry for a capped pairing over a sized bucket frame:
+    * one row of `(n_buckets, capped_buckets, skipped_pairs)` where
+    * `skipped_pairs` is the per-bucket `C(s,2) − max(s−1, 2s−4)` — a true
+    * UPPER bound on the candidate pairs the star+chain expansion does not
+    * examine (and hence on lost NEAR-dup pairs; exact dups still connect
+    * through the chain). The star emits s−1 edges and the chain s−1, but
+    * they overlap on the chain edges incident to the bucket representative
+    * `bmin` (one if bmin sorts to a chain end, two if interior), so the
+    * DISTINCT examined pairs can be as few as max(s−1, 2s−4) — subtracting
+    * the naive 2(s−1) would understate the skips by up to 2 per capped
+    * bucket and break the bound. Zero capped buckets ⇒ the capped run was
+    * exhaustive and its recall caveat is vacuous.
     */
-  def minhashBucketCensus(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, bucketCap: Int = Int.MaxValue): DataFrame =
-    censusFromSigs(buildSigs(df, idCol, textCol, shingleN), bucketCap)
-
-  private def censusFromSigs(sigs: DataFrame, bucketCap: Int): DataFrame =
-    censusFromSized(sizedBands(sigs.select("id", "minhash")), bucketCap)
-
   private def censusFromSized(sized: DataFrame, bucketCap: Int): DataFrame = {
     // `id === bmin` picks exactly one census row per bucket. Per-bucket
     // skipped pairs are clamped at 0: a just-over-cap bucket of size 2–3
@@ -313,7 +306,9 @@ object Dedup {
           .cast("long").as("skipped_pairs"))
   }
 
-  /** Totals from [[minhashBucketCensus]]. */
+  /** Totals from [[censusFromSized]], as returned by the
+    * `*NearDupsWithStats` operators.
+    */
   final case class BucketStats(nBuckets: Long, cappedBuckets: Long,
     skippedPairs: Long)
 
@@ -514,62 +509,12 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  // ---- n-gram Jaccard (direct, bounded scope) -----------------------------
-  /** DUPLICATE-ID CONTRACT shared by all three jaccard entry points
-    * ([[jaccardPrefixJoin]], [[jaccardWithinGroup]],
-    * [[jaccardWithinGroupLsh]]): rows sharing (grp, id) merge to their
-    * shingle/token-set UNION before any pairing, so every entry point
-    * computes the same per-(grp, id) sets and their verified outputs agree
-    * on duplicate-id inputs (one output row per pair, never one per input-
-    * row combination). The guard costs one map-side-combined aggregate
-    * exchange; callers that OWN the uniqueness contract (e.g. output of
-    * [[exactDedup]], or a table with a unique key) skip it with
-    * `assumeUniqueIds = true` — under which duplicate-id inputs are
-    * undefined behavior (ghost rows, inflated sizes), exactly like any
-    * violated uniqueness contract.
-    */
-  private def mergedShingleSets(df: DataFrame, idCol: String,
-      textCol: String, groupCol: String, shingleN: Int,
-      assumeUniqueIds: Boolean): DataFrame = {
-    val perRow = df.select(col(groupCol).as("grp"), col(idCol).as("id"),
-      array_distinct(shingle_hashes(normTokens(col(textCol)), shingleN))
-        .as("sh"))
-    val merged =
-      if (assumeUniqueIds) perRow
-      else perRow.groupBy("grp", "id")
-        .agg(array_distinct(flatten(collect_list(col("sh")))).as("sh"))
-    merged.filter(size(col("sh")) > 0)
-  }
-
-  /** Exact pairwise word-n-gram Jaccard within a grouping column (e.g. a
-    * pre-bucket like source/host). The group bounds the quadratic work.
-    * Duplicate-id handling per [[mergedShingleSets]]'s shared contract.
-    */
-  def jaccardWithinGroup(df: DataFrame, idCol: String, textCol: String,
-      groupCol: String, minJaccard: Double, shingleN: Int = 3,
-      assumeUniqueIds: Boolean = false): DataFrame = {
-    // materialized once: both sides of the self-join would otherwise
-    // re-tokenize + shingle every document (the same 2× the siblings fix)
-    val sets = mergedShingleSets(df, idCol, textCol, groupCol, shingleN,
-        assumeUniqueIds)
-      .transform(graft.analytics.Materialize.apply)
-    val sizeOk = sizeRatioOk(size(col("x.sh")), size(col("y.sh")), minJaccard)
-    // |A∪B| = |A| + |B| − |A∩B| for distinct sets: one intersection, no
-    // union — the native sorted-probe jaccard (r6) computes it in one pass
-    sets.as("x").join(sets.as("y").hint("merge"),
-        col("x.grp") === col("y.grp") && col("x.id") < col("y.id") && sizeOk)
-      .withColumn("jaccard",
-        graft.functions.ArrayMath.jaccard_sets(col("x.sh"), col("y.sh")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("x.grp").as("grp"), col("x.id").as("id_a"),
-        col("y.id").as("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
+  // ---- n-gram Jaccard ------------------------------------------------------
   /** Exact Jaccard similarity join via PREFIX FILTERING (PPJoin-style):
     * candidate pairs come from an equi-join on (group, prefix-token)
     * instead of a group-quadratic theta-join, so cost is driven by token
     * co-occurrence, not group size — with EXACT results (prefix filtering
-    * is lossless, unlike the LSH variant below).
+    * is lossless).
     *
     * Soundness: order every set by one total order (token hash, tie-broken
     * by the token — a deterministic proxy for the classic rare-first
@@ -579,8 +524,8 @@ object Dedup {
     * |X| − ⌈t·|X|⌉ + 1 = ⌊(1−t)·|X|⌋ + 1 tokens under any common order
     * (Chaudhuri/Xiao prefix-filter lemma) — so the token join produces a
     * candidate superset; exact verification then keeps exactly J ≥ t.
-    */
-  /** Token order for the prefix filter. Correctness needs ANY one total
+    *
+    * Token order for the prefix filter. Correctness needs ANY one total
     * order shared by all sets (the prefix-filter lemma); cost does not:
     * prefixes drawn under a RARE-FIRST order contain the corpus's rare
     * tokens, so the (grp, token) candidate join fans out on tokens few
@@ -594,14 +539,19 @@ object Dedup {
     * order is the 100-TB choice, since stopword-led prefixes otherwise
     * create quadratic hot keys in the candidate join. DedupSpec pins that
     * both orders produce the identical verified pair set.
-    */
-  /** @param assumeUniqueIds caller contract that (groupCol, idCol) is
+    *
+    * DUPLICATE-ID CONTRACT: rows sharing (grp, id) merge to their token-set
+    * UNION before any pairing, so both token orders compute the same
+    * per-(grp, id) sets and one output row per pair, never one per
+    * input-row combination.
+    *
+    * @param assumeUniqueIds caller contract that (groupCol, idCol) is
     *   unique — skips the duplicate-id merge aggregate (one exchange of
     *   the token arrays; real money at volume when the caller has just
-    *   deduplicated). If the contract is violated, the two token orders
-    *   may disagree on duplicate-id rows (the pre-guard divergence). The
-    *   same guard + opt-out applies to ALL jaccard entry points — see
-    *   [[mergedShingleSets]] for the shared duplicate-id contract.
+    *   deduplicated, e.g. output of [[exactDedup]] or a table with a unique
+    *   key). If the contract is violated, duplicate-id inputs are undefined
+    *   behavior (ghost rows, inflated sizes, and the two token orders may
+    *   disagree), exactly like any violated uniqueness contract.
     */
   def jaccardPrefixJoin(df: DataFrame, idCol: String, textCol: String,
       groupCol: String, minJaccard: Double,
@@ -710,49 +660,6 @@ object Dedup {
     // verify joins on (grp, id): ids may repeat across groups
     verifyJoin(cand, sets.select(col("grp"), col("id"), col("sh")), Seq("grp"),
       "sh", graft.functions.ArrayMath.jaccard_sets, "jaccard", minJaccard)
-  }
-
-  /** Scale path for [[jaccardWithinGroup]] when groups are NOT bounded
-    * (a hot `source`/host group at 100 TB): candidates must share a MinHash
-    * LSH band INSIDE the group, so the quadratic blow-up is bounded by band
-    * bucket sizes instead of group sizes. Same exact-Jaccard verification;
-    * recall follows the LSH S-curve (≥ ~99.5% at J ≥ 0.9 with 8 bands × 4
-    * rows), so use the exact variant only where a group-size contract holds.
-    */
-  def jaccardWithinGroupLsh(df: DataFrame, idCol: String, textCol: String,
-      groupCol: String, minJaccard: Double, shingleN: Int = 3,
-      assumeUniqueIds: Boolean = false): DataFrame = {
-    // materialized once: feeds both sides of the band self-join and both
-    // verify joins (4× the shingle+minhash compute otherwise). The minhash
-    // is computed over the per-(grp, id) MERGED set ([[mergedShingleSets]]
-    // contract); for unique-id inputs this equals the per-row signature
-    // (min over a multiset ignores duplicates), so the unique-input output
-    // is byte-identical to the pre-guard operator.
-    val sigs = mergedShingleSets(df, idCol, textCol, groupCol, shingleN,
-        assumeUniqueIds)
-      .withColumn("minhash", minhash_signature(col("sh"), NumHashes))
-      .transform(graft.analytics.Materialize.apply)
-    // candidate keys only through the band join + distinct (the heavy
-    // shingle arrays join back per verified candidate, as in
-    // minhashNearDups); the narrow banded frame is materialized
-    // partitioned+sorted on the join keys so the self-join runs
-    // exchange-free instead of re-deriving and re-shuffling it per side
-    val banded = graft.analytics.Materialize.partitionedBy(
-      sigs.select(col("grp"), col("id"), size(col("sh")).as("ssz"),
-        explode(array((0 until Bands).map(bandKey): _*)).as("band_key")),
-      col("grp"), col("band_key"))
-    val sizeOk = sizeRatioOk(col("x.ssz"), col("y.ssz"), minJaccard)
-    val pairs = banded.as("x").join(banded.as("y").hint("merge"),
-        col("x.grp") === col("y.grp") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.id") < col("y.id") && sizeOk)
-      .select(col("x.grp").as("grp"), col("x.id").as("id_a"),
-        col("y.id").as("id_b"))
-      .distinct()
-    // verify joins on (grp, id): ids may repeat across groups
-    verifyJoin(pairs, sigs.select(col("grp"), col("id"), col("sh")),
-      Seq("grp"), "sh", graft.functions.ArrayMath.jaccard_sets, "jaccard",
-      minJaccard)
   }
 
   // ---- duplicate-cluster formation ----------------------------------------

@@ -12,8 +12,8 @@ import graft.pipeline.QualityPipeline
   * The reference's protocol is "processed ⇔ output file exists; poll & skip"
   * (`small_model_inference/small_model_inference.py:106-114`,
   * `fineweb/big_inference.py:296-309`, `shard_manager.py:19-26`). Here the
-  * protocol is a lineage table of `(run_id, chunk_id, status, metrics,
-  * completed_at_ms)` rows: on restart the input chunk manifest is
+  * protocol is a lineage table of `(run_id, chunk_id, num_chunks, status,
+  * metrics, completed_at_ms)` rows: on restart the input chunk manifest is
   * anti-joined against completed lineage rows and only the remainder runs;
   * every chunk write is an idempotent overwrite of its own partition
   * directory, so a crash mid-chunk re-runs that chunk with no duplicates.
@@ -21,11 +21,14 @@ import graft.pipeline.QualityPipeline
   * A "chunk" is the resume granule. The synthetic corpus chunks by
   * `pmod(xxhash64(url), n)`; on a real Iceberg deployment the chunk is the
   * crawl-snapshot partition (or a shard range within it) so each chunk job
-  * prunes to its own files instead of re-scanning the input.
+  * prunes to its own files instead of re-scanning the input. A chunk id
+  * names different pages under a different chunk count, so each row records
+  * the `num_chunks` it was cut under and a run resumes only under that count.
   */
 final case class LineageRecord(
     run_id: String,
     chunk_id: Int,
+    num_chunks: Int,
     status: String,
     docs_in: Long,
     docs_kept: Long,
@@ -35,11 +38,27 @@ final case class LineageRecord(
 final class LineageStore(spark: SparkSession, path: String) {
   import spark.implicits._
 
-  def completedChunks(runId: String): Set[Int] = {
-    if (!ResumableRunner.exists(spark, path)) return Set.empty
+  def completedChunks(runId: String): Set[Int] = doneChunks(runId).keySet
+
+  /** [[completedChunks]] of a run cut into `numChunks` chunks. Throws
+    * IllegalArgumentException if a done row was cut under another count:
+    * its chunk ids name other pages, and resuming on them would skip pages.
+    */
+  private[lineage] def completedChunks(runId: String,
+      numChunks: Int): Set[Int] = {
+    val done = doneChunks(runId)
+    val counts = done.values.toSet - numChunks
+    require(counts.isEmpty, s"run $runId was cut into " +
+      s"${counts.mkString("/")} chunks; it cannot resume with $numChunks")
+    done.keySet
+  }
+
+  /** chunk_id → num_chunks of `runId`'s done rows. */
+  private def doneChunks(runId: String): Map[Int, Int] = {
+    if (!ResumableRunner.exists(spark, path)) return Map.empty
     spark.read.parquet(path)
       .filter(col("run_id") === runId && col("status") === "done")
-      .select("chunk_id").as[Int].collect().toSet
+      .select("chunk_id", "num_chunks").as[(Int, Int)].collect().toMap
   }
 
   def append(records: Seq[LineageRecord]): Unit =
@@ -65,6 +84,8 @@ object ResumableRunner {
 
   /** Runs the quality pipeline chunk-wave by chunk-wave with lineage
     * checkpointing. Returns the chunk ids processed in THIS invocation.
+    * Throws IllegalArgumentException, before any wave, if `runId` already
+    * has done chunks cut under a different `numChunks`.
     *
     * @param failAfterWaves if set, throws [[SimulatedFailure]] after that
     *                       many completed waves (test hook).
@@ -83,7 +104,7 @@ object ResumableRunner {
     // anti-join of the chunk manifest against completed lineage (manifest is
     // tiny — numChunks rows — so this is a driver-side set difference; at
     // Iceberg scale the same thing is a metadata-table anti-join)
-    val done = store.completedChunks(runId)
+    val done = store.completedChunks(runId, numChunks)
     val remaining = (0 until numChunks).filterNot(done)
 
     // chunk_id is a pure function of url, so the wave filter is applied to
@@ -125,7 +146,7 @@ object ResumableRunner {
       val now = System.currentTimeMillis()
       store.append(wave.map { c =>
         val (in, kept) = counts.getOrElse(c, (0L, 0L))
-        LineageRecord(runId, c, "done", in, kept, now)
+        LineageRecord(runId, c, numChunks, "done", in, kept, now)
       })
       processed ++= wave
     }

@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.types.DateType
 
 import graft.model.{AnnotatedPage, Page, Thresholds}
 import graft.stages.{HeuristicsScalar, LangIdModel, PerplexityModel, ScrubScalar}
@@ -9,10 +12,10 @@ import graft.stages.{HeuristicsScalar, LangIdModel, PerplexityModel, ScrubScalar
 /** Row shape entering the fused scorer (matched by name in `.as[...]`):
   * the pruned page columns plus the derived `crawl_snapshot`. Scrub,
   * heuristics, langid, perplexity and the keep decision all run per row
-  * in ONE `mapPartitions` pass. The Column twins ([[graft.stages.Heuristics]],
-  * [[graft.stages.Scrub]]) are parity references only: as Catalyst
-  * expressions they re-tokenize per metric and re-materialize the
-  * UTF8String per regexp, so the scalar pass reads the text fewer times.
+  * in ONE `mapPartitions` pass. The Column twin [[graft.stages.Heuristics]]
+  * is a parity reference only: as Catalyst expressions it re-tokenizes per
+  * metric, so the scalar pass reads the text fewer times. [[graft.stages.Scrub]]
+  * holds only the regex strings that specify the scrub.
   */
 final case class PipeRow(
     url: String,
@@ -40,10 +43,16 @@ object QualityPipeline {
     * calendar year) so the pair is consistent at year boundaries: Jan 1-3
     * of week 52/53 labels into the OLD year's snapshot, late-Dec dates in
     * week 1 into the NEW year's — never a mixed `2024-53`/`2023-01` label.
+    * The week is the UTC one: an implicit timestamp → date cast would take
+    * `spark.sql.session.timeZone`, and a page fetched late on a Sunday (UTC)
+    * would then land in the next week's snapshot in any zone east of UTC.
     */
-  def snapshotCol(warcTs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def snapshotCol(warcTs: Column): Column = {
+    val day = ColumnShim.column(
+      Cast(ColumnShim.expr(warcTs), DateType, Some("UTC")))
     format_string("CC-MAIN-%d-%02d",
-      date_part(lit("YEAROFWEEK"), warcTs), weekofyear(warcTs))
+      date_part(lit("YEAROFWEEK"), day), weekofyear(day))
+  }
 
   /** Pure-scala keep decision — shared by the distributed scorer and the
     * scalar golden-label generator so decision semantics live in ONE place.

@@ -1,5 +1,7 @@
 package graft.stages
 
+import java.util.Locale
+
 import graft.synth.{Corpus, Det}
 
 /** N1 — fastText-style language-ID model: hashed character n-gram (2..4)
@@ -143,10 +145,11 @@ object LangIdModel extends Serializable {
   }
 
   /** fineweb2-style JSON string, entries prob-desc, 4 decimals:
-    * `{"ron_Latn_score": 0.9731, ...}`.
+    * `{"ron_Latn_score": 0.9731, ...}`. Formatted in `Locale.ROOT`: a
+    * default locale with a decimal comma would emit invalid JSON.
     */
   def topLangsJson(tl: Seq[(String, Double)]): String =
-    tl.map { case (l, p) => f""""${l}_score": $p%.4f""" }
+    tl.map { case (l, p) => "\"%s_score\": %.4f".formatLocal(Locale.ROOT, l, p) }
       .mkString("{", ", ", "}")
 
   def topLangsJson(text: String): String = topLangsJson(topLangs(text))

@@ -1,5 +1,7 @@
 package graft.stages
 
+import java.util.Locale
+
 import graft.synth.Corpus
 
 /** N2 — KenLM-style n-gram (bigram + unigram backoff) language model with
@@ -52,14 +54,17 @@ final class PerplexityModel(
     (bigramBits(bit >>> 6) & (1L << (bit & 63))) != 0
   }
 
-  /** Strip non-letter edges + lowercase — the LM's token normalization. */
+  /** Strip non-letter edges + lowercase — the LM's token normalization.
+    * `Locale.ROOT`: under a default locale such as tr-TR, "I" would fold to
+    * the dotless "ı" and capitalised words would fall out of vocabulary.
+    */
   def normToken(raw: String): String = {
     var a = 0
     var b = raw.length
     while (a < b && !Character.isLetter(raw.charAt(a))) a += 1
     while (b > a && !Character.isLetter(raw.charAt(b - 1))) b -= 1
-    if (a == 0 && b == raw.length) raw.toLowerCase
-    else raw.substring(a, b).toLowerCase
+    if (a == 0 && b == raw.length) raw.toLowerCase(Locale.ROOT)
+    else raw.substring(a, b).toLowerCase(Locale.ROOT)
   }
 
   /** Perplexity over whitespace tokens; empty/whitespace text gets the OOV

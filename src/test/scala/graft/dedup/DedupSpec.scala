@@ -56,10 +56,12 @@ class DedupSpec extends AnyFunSuite {
       val (sa, sb) = (shingleSet(a), shingleSet(b))
       sa.intersect(sb).size.toDouble / sa.union(sb).size
     }
-    // deterministic path (no LSH recall involved): within-group jaccard
-    val df = docs(1L -> a, 2L -> b).withColumn("grp", lit("g"))
-    val got = Dedup.jaccardWithinGroup(df, "doc_id", "text", "grp",
-      minJaccard = 0.0).select("jaccard").head().getDouble(0)
+    // deterministic path (no LSH recall involved): exact re-verification
+    // of the one candidate pair
+    import spark.implicits._
+    val got = Dedup.reverifyPairs(Seq((1L, 2L)).toDF("id_a", "id_b"),
+        docs(1L -> a, 2L -> b), "doc_id", "text", minJaccard = 0.0)
+      .select("jaccard").head().getDouble(0)
     assert(math.abs(got - expect) < 1e-6, s"got $got expect $expect")
   }
 
@@ -201,9 +203,6 @@ class DedupSpec extends AnyFunSuite {
         r.getDouble(3)))
     // exactly ONE row: (a, 1, 2, 1.0); id 1 of group b must not leak in
     assert(got.toSeq == Seq(("a", 1L, 2L, 1.0)), got.toSeq.toString)
-    val lsh = Dedup.jaccardWithinGroupLsh(df, "doc_id", "text", "grp", 0.9)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(lsh.toSeq == Seq(("a", 1L, 2L)), lsh.toSeq.toString)
   }
 
   test("simhash: identical docs hamming 0; perturbed docs near; unrelated far") {
@@ -598,30 +597,6 @@ class DedupSpec extends AnyFunSuite {
     assert(anyFile(new java.io.File(dir)), "no reliable checkpoint written")
   }
 
-  test("jaccardWithinGroupLsh agrees with exact within-group jaccard on dups") {
-    val base = "unu doi trei patru cinci șase șapte opt nouă zece " * 5
-    val near = base.replace("cinci", "chiar")
-    val other = "complet diferit text despre altceva cu totul alte cuvinte " * 5
-    val df = docs(1L -> base, 2L -> base, 3L -> near, 4L -> other)
-      .withColumn("grp", lit("g"))
-    val exact = Dedup.jaccardWithinGroup(df, "doc_id", "text", "grp",
-      minJaccard = 0.5).collect()
-      .map(r => ((r.getLong(1), r.getLong(2)), r.getDouble(3))).toMap
-    val lsh = Dedup.jaccardWithinGroupLsh(df, "doc_id", "text", "grp",
-      minJaccard = 0.5).collect()
-      .map(r => ((r.getLong(1), r.getLong(2)), r.getDouble(3))).toMap
-    // LSH candidates ⊆ exact pairs, with identical verified jaccard values
-    assert(lsh.keySet.subsetOf(exact.keySet), s"lsh=$lsh exact=$exact")
-    lsh.foreach { case (k, j) => assert(j == exact(k), s"pair $k") }
-    // the planted exact-dup pair must survive LSH bucketing
-    assert(lsh.contains((1L, 2L)))
-    // group isolation: different groups never pair even with equal text
-    val twoGrp = docs(1L -> base, 2L -> base)
-      .withColumn("grp", when(col("doc_id") === 1, "g1").otherwise("g2"))
-    assert(Dedup.jaccardWithinGroupLsh(twoGrp, "doc_id", "text", "grp",
-      minJaccard = 0.5).count() == 0)
-  }
-
   test("dupClusters: components, sizes, and multi-hop chains resolve") {
     import spark.implicits._
     // two components: a 4-chain (1-2-3-4) and a pair (10-11); plus a
@@ -689,51 +664,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("duplicate-id contract is SHARED: jaccardWithinGroup and " +
-      "jaccardWithinGroupLsh merge duplicate (grp, id) rows to the shingle " +
-      "UNION, agreeing with jaccardPrefixJoin and with the pre-merged input") {
-    import spark.implicits._
-    // id=1 split across two rows; merged it is the 20-token base set. The
-    // second row alone shares only 10 shingles with doc 2 — per-row
-    // semantics would emit ghost rows / different jaccards per combination.
-    val base = (1 to 22).map(i => s"cuvânt$i").mkString(" ")
-    val firstHalf = (1 to 11).map(i => s"cuvânt$i").mkString(" ")
-    val secondHalf = (12 to 22).map(i => s"cuvânt$i").mkString(" ")
-    val dup = Seq((1L, firstHalf), (1L, secondHalf), (2L, base))
-      .toDF("doc_id", "text").withColumn("grp", lit("g"))
-    val merged = Seq((1L, base), (2L, base))
-      .toDF("doc_id", "text").withColumn("grp", lit("g"))
-    def collectPairs(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq.sorted
-    // word-3-gram shingles of the two halves don't cover the full text's
-    // (the seam's 3-grams exist only in the merged token stream is FALSE —
-    // shingling happens per row, so the union of the halves' shingle sets
-    // is a SUBSET of the full text's). The contract is about set-union
-    // merge stability, so assert all three operators agree on the SAME
-    // merged semantics rather than pinning one jaccard constant.
-    val wg = collectPairs(Dedup.jaccardWithinGroup(dup, "doc_id", "text",
-      "grp", 0.1))
-    val lsh = collectPairs(Dedup.jaccardWithinGroupLsh(dup, "doc_id", "text",
-      "grp", 0.1))
-    assert(wg.nonEmpty, "merged duplicate rows must still pair with doc 2")
-    assert(wg.length == 1, s"one output row per pair, got $wg")
-    assert(lsh == wg, s"LSH path disagrees on duplicate-id input: $lsh vs $wg")
-    // same operators on the pre-merged-TOKEN input: shingle sets differ at
-    // the seam (per-row shingling), so compare the within-group operator
-    // against itself under unique ids — the guard must be a no-op there
-    val wgUnique = collectPairs(Dedup.jaccardWithinGroup(merged, "doc_id",
-      "text", "grp", 0.1))
-    val wgFast = collectPairs(Dedup.jaccardWithinGroup(merged, "doc_id",
-      "text", "grp", 0.1, assumeUniqueIds = true))
-    val lshFast = collectPairs(Dedup.jaccardWithinGroupLsh(merged, "doc_id",
-      "text", "grp", 0.1, assumeUniqueIds = true))
-    assert(wgFast == wgUnique, "assumeUniqueIds changes unique-input output")
-    assert(lshFast == collectPairs(Dedup.jaccardWithinGroupLsh(merged,
-      "doc_id", "text", "grp", 0.1)),
-      "LSH assumeUniqueIds changes unique-input output")
-  }
-
   test("census skipped_pairs = C(s,2) − max(s−1, 2s−4) per capped bucket " +
       "(a true upper bound on unexamined pairs)") {
     // 10 identical docs → identical signatures → each of the 8 bands is one
@@ -775,11 +705,7 @@ class DedupSpec extends AnyFunSuite {
       "minhashNearDups" -> Dedup.minhashNearDups(df, "doc_id", "text",
         minJaccard = 0.5),
       "reverifyPairs" -> Dedup.reverifyPairs(cands, df, "doc_id", "text",
-        minJaccard = 0.5),
-      "jaccardWithinGroup" -> Dedup.jaccardWithinGroup(df, "doc_id", "text",
-        "grp", minJaccard = 0.5),
-      "jaccardWithinGroupLsh" -> Dedup.jaccardWithinGroupLsh(df, "doc_id",
-        "text", "grp", minJaccard = 0.5))
+        minJaccard = 0.5))
     for ((name, out) <- outs) {
       val got = rows(out)
       assert(got.contains((1L, 2L, 1.0)), s"$name lost the real pair: $got")
@@ -855,10 +781,6 @@ class DedupSpec extends AnyFunSuite {
     noBroadcast("jaccardPrefixJoin freq")(
       Dedup.jaccardPrefixJoin(grouped, "doc_id", "text", "grp", 0.5,
         freqOrder = true))
-    noBroadcast("jaccardWithinGroup")(
-      Dedup.jaccardWithinGroup(grouped, "doc_id", "text", "grp", 0.5))
-    noBroadcast("jaccardWithinGroupLsh")(
-      Dedup.jaccardWithinGroupLsh(grouped, "doc_id", "text", "grp", 0.5))
     noBroadcast("simhashNearDups")(
       Dedup.simhashNearDups(df, "doc_id", "text"))
     noBroadcast("simhashNearDups capped")(
@@ -943,8 +865,6 @@ class DedupSpec extends AnyFunSuite {
     pin("embeddingNearDups", "bucket")(
       Dedup.embeddingNearDups(emb, "vec_id", "embedding",
         minCosine = 0.9, planes = 4, dim = 8))
-    pin("jaccardWithinGroupLsh", "band_key")(
-      Dedup.jaccardWithinGroupLsh(grouped, "doc_id", "text", "grp", 0.5))
     pin("jaccardPrefixJoin hash", "tok")(
       Dedup.jaccardPrefixJoin(grouped, "doc_id", "text", "grp", 0.5))
     pin("jaccardPrefixJoin freq", "tok")(

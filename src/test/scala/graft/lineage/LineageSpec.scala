@@ -103,6 +103,28 @@ class LineageSpec extends AnyFunSuite {
       s"resume scored ${seen2.value}, expected ${nDocs - doneDocs}")
   }
 
+  test("resuming under a different numChunks is refused before any wave") {
+    val base = Files.createTempDirectory("graft_lineage5").toString
+    val pages = SynthPages.pages(spark, 400L)
+    val (out, lin) = (s"$base/out", s"$base/lin")
+    intercept[SimulatedFailure] {
+      ResumableRunner.run(pages, out, lin, "rc", numChunks = 8, waveSize = 2,
+        failAfterWaves = Some(1))
+    }
+    // 8-way chunks 0-1 are done; 4-way chunks 2-3 would leave the pages
+    // of 8-way chunks 4-5 unwritten
+    intercept[IllegalArgumentException] {
+      ResumableRunner.run(pages, out, lin, "rc", numChunks = 4, waveSize = 2)
+    }
+    val store = new LineageStore(spark, lin)
+    assert(store.completedChunks("rc") == Set(0, 1))
+    assert(store.all().collect().filter(_.run_id == "rc")
+      .forall(_.num_chunks == 8))
+    // the original count still resumes to completion
+    ResumableRunner.run(pages, out, lin, "rc", numChunks = 8, waveSize = 2)
+    assert(store.completedChunks("rc") == (0 until 8).toSet)
+  }
+
   test("metrics in lineage match the pipeline decisions") {
     val base = Files.createTempDirectory("graft_lineage2").toString
     val pages = SynthPages.pages(spark, 600L)

@@ -13,10 +13,37 @@ import graft.synth.SynthPages
   * `crawl_snapshot` (the reference's natural partition key is the `dump`
   * snapshot name, `fineweb/fineweb2_download.py:19`); a snapshot predicate
   * on the read side must prune PARTITION DIRECTORIES — touching only the
-  * matching snapshot's files — not scan-then-filter the whole corpus.
+  * matching snapshot's files — not scan-then-filter the whole corpus. The
+  * write salts each snapshot across `saltBuckets` writers because the
+  * synthetic corpus is host-skewed (FIXTURES.md `skew` family), and the
+  * snapshot label is the same in every session time zone.
   */
 class PartitionPruningSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  test("the synthetic corpus is actually host-skewed (zipf head)") {
+    val top = SynthPages.pages(spark, 3000L).toDF()
+      .groupBy(regexp_extract(col("url"), "https://([^/]+)/", 1).as("host"))
+      .count().orderBy(col("count").desc).head()
+    assert(top.getLong(1) > 3000 / 20, s"head host only ${top.getLong(1)} rows")
+  }
+
+  test("crawl_snapshot is the UTC ISO week, whatever the session time zone") {
+    // Sunday 2024-10-06 22:30Z is ISO week 40 in UTC but already Monday
+    // (week 41) in Bucharest
+    val page = graft.model.Page("https://ro.example/a",
+      java.sql.Timestamp.from(java.time.Instant.parse("2024-10-06T22:30:00Z")),
+      Array.emptyByteArray, "text", "ro")
+    val key = "spark.sql.session.timeZone"
+    val zone = spark.conf.get(key)
+    spark.conf.set(key, "Europe/Bucharest")
+    try {
+      import spark.implicits._
+      val got = QualityPipeline.annotate(Seq(page).toDS())
+        .collect().map(_.crawl_snapshot).toSeq
+      assert(got == Seq("CC-MAIN-2024-40"))
+    } finally spark.conf.set(key, zone)
+  }
 
   test("snapshot predicate reaches PartitionFilters and reads strictly " +
       "fewer files than the full corpus") {

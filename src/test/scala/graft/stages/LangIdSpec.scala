@@ -88,4 +88,15 @@ class LangIdSpec extends AnyFunSuite {
       assert(LangIdModel.topLangs(p.text).head._1 == "eng_Latn", p.text.take(60))
     }
   }
+
+  test("top_langs JSON uses a decimal point under any JVM default locale") {
+    val tl = LangIdModel.topLangs("orice text de probă pentru structura hărții")
+    val default = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      val entry = "\"[a-z]{3}_Latn_score\": [01]\\.\\d{4}"
+      val json = LangIdModel.topLangsJson(tl)
+      assert(json.matches(s"\\{$entry(, $entry){2}\\}"), json)
+    } finally java.util.Locale.setDefault(default)
+  }
 }

@@ -34,6 +34,19 @@ class PerplexitySpec extends AnyFunSuite {
     assert(lm.wordId(lm.normToken("(Școală),")) == lm.wordId("școală"))
   }
 
+  test("case folding ignores the JVM default locale (tr-TR dotless i)") {
+    val text = SynthPages.fluentRo(42L, 13L, 80, 4)
+      .split(" ").map(_.capitalize).mkString(" ") + " Iarnă Internet"
+    val expect = lm.perplexity(text)
+    val default = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      assert(lm.wordId(lm.normToken("Iarnă")) == lm.wordId("iarnă"))
+      assert(lm.wordId("iarnă") >= 0)
+      assert(lm.perplexity(text) == expect)
+    } finally java.util.Locale.setDefault(default)
+  }
+
   test("perplexity is insensitive to token count cap ordering (deterministic)") {
     val text = SynthPages.fluentRo(42L, 12L, 500, 10)
     assert(lm.perplexity(text) == lm.perplexity(text))
