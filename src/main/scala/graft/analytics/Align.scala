@@ -71,14 +71,6 @@ object Align {
       .drop("__pid")
   }
 
-  /** The reference's positional alignment of two filtered streams: number
-    * both sides by `sortCols` and equi-join on the row number.
-    */
-  def alignByRowNumber(a: DataFrame, b: DataFrame, sortCols: Seq[Column],
-      rnCol: String = "rn"): DataFrame =
-    withGlobalRowNumber(a, sortCols, rnCol)
-      .join(withGlobalRowNumber(b, sortCols, rnCol), rnCol)
-
   /** [[withGlobalRowNumber]] computed independently WITHIN each value of
     * `tagCol`, in one pass (r6 optimization): when the sides of an
     * alignment join are filters of ONE table (the reference's

@@ -89,39 +89,4 @@ object Decontaminate {
     docs.join(flagged.hint("merge"), docs(idCol) === flagged("id"),
       "left_anti")
   }
-
-  /** The eval set's distinct gram hashes, driver-collected and sorted —
-    * the explicit form of the broadcast-eval-grams assumption (eval
-    * suites are thousands of examples; the 5M-doc scale run's eval frame
-    * was 398k grams ≈ 3 MB). Build once, reuse across corpus slices AND
-    * streams.
-    */
-  def benchGramArray(bench: DataFrame, textCol: String, n: Int = 13): Array[Long] =
-    benchGrams(bench, textCol, n).collect().map(_.getLong(0)).sorted
-
-  /** Per-row distinct-gram hit count against a collected eval-gram array —
-    * STATELESS (the set rides inside the expression, binary-searched per
-    * gram): no join, no shuffle, no state store, so the same column works
-    * on batch frames and Structured Streaming micro-batches alike.
-    */
-  def hitCountCol(textCol: Column, sortedGrams: Array[Long], n: Int = 13): Column =
-    graft.functions.LongSetOps.count_in_set(grams(textCol, n), sortedGrams)
-
-  /** Corpus (batch OR streaming) with contaminated rows removed, judged
-    * against a pre-collected eval-gram array — semantics ≡ [[decontaminate]]
-    * (spec-pinned), but expressed as a pure per-row filter: at 10^12 docs
-    * the corpus never shuffles at all, and on a stream each micro-batch
-    * filters independently (exactly-once under checkpointing, no watermark
-    * needed).
-    */
-  def decontaminateAgainst(docs: DataFrame, sortedGrams: Array[Long],
-      textCol: String, n: Int = 13, minHits: Int = 1): DataFrame = {
-    require(minHits >= 1, s"minHits = $minHits must be >= 1")
-    // null text → null hit count → coalesce to 0: a null-text doc has no
-    // grams to hit and must SURVIVE, matching the join-based operator
-    // (where it never enters gramHits); a bare `null < minHits` filter
-    // would silently delete it
-    docs.filter(
-      coalesce(hitCountCol(col(textCol), sortedGrams, n), lit(0)) < minHits)
-  }
 }

@@ -58,50 +58,6 @@ object Repetition {
     ColumnShim.column(NgramStringsExpr(ColumnShim.expr(tokens), n))
   }
 
-  /** Gopher's published repetition bounds (Rae et al. 2021, table A1): a
-    * document is dropped when ANY signal exceeds its bound.
-    */
-  val GopherTopThresholds: Map[Int, Double] =
-    Map(2 -> 0.20, 3 -> 0.18, 4 -> 0.16)
-  val GopherDupThresholds: Map[Int, Double] =
-    Map(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12, 9 -> 0.11, 10 -> 0.10)
-
-  // the ONE cross-engine tokenization contract ("\s+ split, empties
-  // dropped") lives in Heuristics.wordsCol — do not re-implement it
-  private def words(textCol: Column): Column =
-    graft.stages.Heuristics.wordsCol(textCol)
-
-  /** Appends `top{n}gram_char_frac` / `dup{n}gram_char_frac` columns for the
-    * requested window sizes — still one codegen'd pass per row, no shuffle.
-    */
-  def withRepetitionSignals(
-      df: org.apache.spark.sql.DataFrame,
-      textCol: String = "text",
-      topNs: Seq[Int] = GopherTopThresholds.keys.toSeq.sorted,
-      dupNs: Seq[Int] = GopherDupThresholds.keys.toSeq.sorted)
-      : org.apache.spark.sql.DataFrame = {
-    val w = words(org.apache.spark.sql.functions.col(textCol))
-    val cols =
-      topNs.map(n => s"top${n}gram_char_frac" -> top_ngram_char_frac(w, n)) ++
-      dupNs.map(n => s"dup${n}gram_char_frac" -> dup_ngram_char_frac(w, n))
-    df.withColumns(cols.toMap)
-  }
-
-  /** TRUE when the document passes every Gopher repetition bound — the
-    * ready-made keep predicate for a quality-filter stage.
-    */
-  def gopherRepetitionKeep(textCol: Column): Column = {
-    val w = words(textCol)
-    val checks =
-      GopherTopThresholds.toSeq.sorted.map { case (n, t) =>
-        top_ngram_char_frac(w, n) <= t
-      } ++
-      GopherDupThresholds.toSeq.sorted.map { case (n, t) =>
-        dup_ngram_char_frac(w, n) <= t
-      }
-    checks.reduce(_ && _)
-  }
-
   // ---- static helpers (called from generated code) ------------------------
 
   private def tokenStrings(arr: ArrayData): Array[String] = {

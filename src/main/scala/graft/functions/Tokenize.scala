@@ -94,11 +94,13 @@ object Tokenize {
       c == '\r'
 
   /** lower → ASCII-\s split → `(?U)\W` edge trim → drop empties, one pass.
-    * Lowercasing via `UTF8String.toLowerCase` — the same call Spark's
-    * `Lower` makes under the default UTF8_BINARY collation.
+    * Lowercasing uses `Locale.ROOT`, never the JVM default: under tr-TR the
+    * default maps `I` to dotless `ı`, and shingle hashes would follow the
+    * host. Under a default without special casing rules (not tr, az or lt)
+    * it equals Spark's `Lower`.
     */
   def normTokens(s: UTF8String): ArrayData = {
-    val str = s.toLowerCase.toString
+    val str = s.toString.toLowerCase(java.util.Locale.ROOT)
     val n = str.length
     val out = new java.util.ArrayList[Any](16)
     var i = 0

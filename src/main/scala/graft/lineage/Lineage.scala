@@ -38,27 +38,20 @@ final case class LineageRecord(
 final class LineageStore(spark: SparkSession, path: String) {
   import spark.implicits._
 
-  def completedChunks(runId: String): Set[Int] = doneChunks(runId).keySet
-
-  /** [[completedChunks]] of a run cut into `numChunks` chunks. Throws
+  /** Done chunk ids of a run cut into `numChunks` chunks. Throws
     * IllegalArgumentException if a done row was cut under another count:
     * its chunk ids name other pages, and resuming on them would skip pages.
     */
   private[lineage] def completedChunks(runId: String,
       numChunks: Int): Set[Int] = {
-    val done = doneChunks(runId)
+    if (!ResumableRunner.exists(spark, path)) return Set.empty
+    val done = spark.read.parquet(path)
+      .filter(col("run_id") === runId && col("status") === "done")
+      .select("chunk_id", "num_chunks").as[(Int, Int)].collect().toMap
     val counts = done.values.toSet - numChunks
     require(counts.isEmpty, s"run $runId was cut into " +
       s"${counts.mkString("/")} chunks; it cannot resume with $numChunks")
     done.keySet
-  }
-
-  /** chunk_id → num_chunks of `runId`'s done rows. */
-  private def doneChunks(runId: String): Map[Int, Int] = {
-    if (!ResumableRunner.exists(spark, path)) return Map.empty
-    spark.read.parquet(path)
-      .filter(col("run_id") === runId && col("status") === "done")
-      .select("chunk_id", "num_chunks").as[(Int, Int)].collect().toMap
   }
 
   def append(records: Seq[LineageRecord]): Unit =
@@ -84,8 +77,9 @@ object ResumableRunner {
 
   /** Runs the quality pipeline chunk-wave by chunk-wave with lineage
     * checkpointing. Returns the chunk ids processed in THIS invocation.
-    * Throws IllegalArgumentException, before any wave, if `runId` already
-    * has done chunks cut under a different `numChunks`.
+    * Throws IllegalArgumentException, before any wave, if `numChunks` or
+    * `waveSize` is below 1, or if `runId` already has done chunks cut under
+    * a different `numChunks`.
     *
     * @param failAfterWaves if set, throws [[SimulatedFailure]] after that
     *                       many completed waves (test hook).
@@ -98,6 +92,8 @@ object ResumableRunner {
       numChunks: Int = 16,
       waveSize: Int = 4,
       failAfterWaves: Option[Int] = None): Seq[Int] = {
+    require(numChunks >= 1 && waveSize >= 1,
+      s"numChunks = $numChunks and waveSize = $waveSize must be >= 1")
     val spark = pages.sparkSession
     val store = new LineageStore(spark, lineageDir)
 

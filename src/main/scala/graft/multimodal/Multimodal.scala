@@ -5,8 +5,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed metadata,
   * decode/feature-extract as batched `mapPartitions` (the JVM analogue of
@@ -20,23 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** Magic-byte MIME sniffing as pure columns (real logic, codegen). */
-  def sniffMime(bin: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val hexPrefix = hex(substring(bin, 1, 8))
-    when(hexPrefix.startsWith("FFD8FF"), "image/jpeg")
-      .when(hexPrefix.startsWith("89504E47"), "image/png")
-      .when(hexPrefix.startsWith("47494638"), "image/gif")
-      .when(hexPrefix.startsWith("424D"), "image/bmp")
-      .when(hexPrefix.startsWith("52494646") &&
-        hex(substring(bin, 9, 4)) === "57415645", "audio/wav") // RIFF…WAVE
-      .when(hexPrefix.startsWith("494433"), "audio/mpeg")
-      .when(hexPrefix.startsWith("1A45DFA3"), "video/webm")
-      .when(hexPrefix.startsWith("3C68746D6C") || hexPrefix.startsWith("3C21444F"),
-        "text/html")
-      .otherwise("application/octet-stream")
-  }
-
-  /** Scalar twin of [[sniffMime]] (same magic bytes, same order). */
+  /** Magic-byte MIME sniffing over the first 12 payload bytes. */
   def sniffMimeScalar(p: Array[Byte]): String = {
     @inline def at(i: Int): Int = if (i < p.length) p(i) & 0xff else -1
     if (at(0) == 0xff && at(1) == 0xd8 && at(2) == 0xff) "image/jpeg"
@@ -53,19 +36,9 @@ object Multimodal {
       "video/webm"
     else if ((p.length >= 5 && new String(p, 0, 5, "ISO-8859-1") == "<html") ||
       (p.length >= 4 && new String(p, 0, 4, "ISO-8859-1") == "<!DO"))
-      "text/html" // exactly the Column version's byte patterns — parity
+      "text/html"
     else "application/octet-stream"
   }
-
-  /** Metadata projection over a binary column — length, sniffed mime,
-    * content hash. Pure columns, no decode.
-    */
-  def withMediaMeta(df: DataFrame, binCol: String): DataFrame =
-    df.withColumns(Map(
-      "mime" -> sniffMime(col(binCol)),
-      "n_bytes" -> length(col(binCol)).cast("long"),
-      "payload_hash" -> xxhash64(col(binCol))
-    ))
 
   /** Feature layout of [[decodeImageFeatures]]:
     * [0]=width, [1]=height, [2]=channels, [3..5]=mean R,G,B (0..1),

@@ -133,18 +133,4 @@ object Heuristics {
       "dup_line_frac" -> dupLineFrac(t)
     ))
   }
-
-  /** Appends the Gopher line-shape / lexical columns (beyond the five the
-    * reference's gates consume): bullet-line, ellipsis-line and alpha-word
-    * fractions. Separate from [[withHeuristics]] so the pipeline's pinned
-    * decision schema is untouched.
-    */
-  def withLineShape(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    df.withColumns(Map(
-      "bullet_line_frac" -> bulletLineFrac(t),
-      "ellipsis_line_frac" -> ellipsisLineFrac(t),
-      "alpha_word_frac" -> alphaWordFrac(wordsCol(t))
-    ))
-  }
 }

@@ -1,80 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Structured Streaming surface.
+/** Streaming MinHash near-dup detection with bounded state.
   *
-  * The reference is incremental-batch (poll-for-next-shard, SURVEY §2.10),
-  * which maps to the lineage/resume runner — but the engine also exposes a
-  * streaming ingest path for the same page pipeline: `readStream` over a
-  * landing directory → the identical annotate stages → `writeStream` with
-  * checkpointing, plus event-time windowed aggregation with a watermark.
-  * The quality stages are pure per-row transforms, so batch and streaming
-  * share ALL scoring code (one definition of keep/drop).
+  * The reference is incremental-batch (poll-for-next-shard, SURVEY §2.10):
+  * ingest and resume run through the per-chunk lineage table of
+  * [[graft.lineage.ResumableRunner]], and every quality stage runs through
+  * [[graft.pipeline.QualityPipeline.annotate]]. What stays here is the one
+  * operator whose state bound needs Structured Streaming: [[nearDupStream]],
+  * the streaming form of [[graft.dedup.Dedup.minhashNearDups]], which the
+  * DedupScale `stream_*` phases and PlanEvidence's streaming section run.
   */
 object StreamOps {
-
-  /** Streaming variant of the quality pipeline over a parquet landing dir.
-    * Identical per-row semantics to `QualityPipeline.annotate` — the same
-    * fused scorer runs inside the micro-batch.
-    */
-  def annotateStream(spark: SparkSession, landingDir: String,
-      outDir: String, checkpointDir: String): StreamingQuery = {
-    import spark.implicits._
-    val pages = spark.readStream
-      .schema("url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING")
-      .parquet(landingDir)
-      .as[graft.model.Page]
-    graft.pipeline.QualityPipeline.annotate(pages)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-  }
-
-  /** Streaming benchmark decontamination — the streaming twin of
-    * [[graft.dedup.Decontaminate.decontaminate]]: the eval set's distinct
-    * gram hashes are collected ONCE (the broadcast-dim assumption made
-    * explicit) and every micro-batch filters statelessly against them —
-    * no join, no shuffle, no state store, no watermark; exactly-once under
-    * checkpointing because a row's fate depends only on its own text.
-    * Semantics ≡ the batch operator (spec-pinned batch-vs-stream).
-    */
-  def decontaminateStream(pages: DataFrame, bench: DataFrame,
-      textCol: String, n: Int = 13, minHits: Int = 1): DataFrame =
-    graft.dedup.Decontaminate.decontaminateAgainst(
-      pages,
-      graft.dedup.Decontaminate.benchGramArray(bench, textCol, n),
-      textCol, n, minHits)
-
-  /** Event-time windowed counts with a watermark (late data bounded by
-    * `lateness`): docs per (window, decision).
-    */
-  def windowedKeepCounts(annotated: DataFrame, windowLen: String = "1 hour",
-      lateness: String = "30 minutes"): DataFrame =
-    annotated
-      .withWatermark("warc_ts", lateness)
-      .groupBy(window(col("warc_ts"), windowLen), col("keep"))
-      .agg(count(lit(1)).as("n_docs"))
-      .select(col("window.start").as("window_start"), col("keep"),
-        col("n_docs"))
-
-  /** Streaming exact dedup on the content digest with BOUNDED state:
-    * `dropDuplicatesWithinWatermark` keeps a digest key only until the
-    * event-time watermark passes it, so state size is O(docs per lateness
-    * window), not O(corpus) — the streaming twin of
-    * [[graft.dedup.Dedup.exactDedup]]. Emits the first-seen row per digest.
-    */
-  def dedupStream(pages: DataFrame, lateness: String = "1 hour"): DataFrame =
-    pages
-      .withColumn("digest", md5(col("text")))
-      .withWatermark("warc_ts", lateness)
-      .dropDuplicatesWithinWatermark("digest")
-      .drop("digest")
 
   /** One stored signature inside a band bucket's state. */
   final case class BandedSig(band_key: Long, id: Long, sig: Array[Long],
@@ -210,59 +149,6 @@ object StreamOps {
                   state.getCurrentWatermarkMs() + 1))
             out.iterator
           }
-      }
-  }
-
-  /** Running per-host quality snapshot (docs seen / kept / mean ppl). */
-  final case class HostState(docs: Long, kept: Long, pplSum: Double)
-  final case class HostSnapshot(host: String, docs: Long, kept: Long,
-      mean_ppl: Double)
-
-  /** Total host extraction — never throws, never null: java.net.URI on
-    * well-formed URLs, plain substring parse on anything crawl data throws
-    * at it (illegal characters, scheme-less forms). A malformed URL must
-    * not be able to fail the streaming query or corrupt state keys.
-    */
-  def hostOf(url: String): String = {
-    def fallback: String = {
-      val i = url.indexOf("://")
-      val rest = if (i >= 0) url.substring(i + 3) else url
-      val end = rest.indexOf('/')
-      val h = if (end >= 0) rest.substring(0, end) else rest
-      if (h.isEmpty) "unknown" else h
-    }
-    if (url == null || url.isEmpty) "unknown"
-    else
-      try {
-        val h = new java.net.URI(url).getHost
-        if (h != null) h else fallback
-      } catch { case _: Exception => fallback }
-  }
-
-  /** Custom keyed state over the annotated stream via `mapGroupsWithState`:
-    * one [[HostState]] per host, updated each micro-batch, emitting the
-    * current [[HostSnapshot]] — the pattern for any stateful per-key
-    * tracking the built-in aggregations can't express. State is explicit
-    * and timeout-free here (hosts are long-lived); a production deployment
-    * sets `GroupStateTimeout` to expire cold hosts.
-    */
-  def hostQualityState(annotated: org.apache.spark.sql.Dataset[graft.model.AnnotatedPage])
-      : org.apache.spark.sql.Dataset[HostSnapshot] = {
-    import annotated.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    annotated
-      .groupByKey(a => hostOf(a.url))
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (host: String, rows: Iterator[graft.model.AnnotatedPage],
-         state: org.apache.spark.sql.streaming.GroupState[HostState]) =>
-          var s = state.getOption.getOrElse(HostState(0L, 0L, 0.0))
-          rows.foreach { a =>
-            s = HostState(s.docs + 1, s.kept + (if (a.keep) 1 else 0),
-              s.pplSum + a.ppl)
-          }
-          state.update(s)
-          HostSnapshot(host, s.docs, s.kept,
-            if (s.docs == 0) 0.0 else s.pplSum / s.docs)
       }
   }
 }

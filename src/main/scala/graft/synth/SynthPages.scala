@@ -1,6 +1,7 @@
 package graft.synth
 
 import java.sql.Timestamp
+import java.util.Locale
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -63,7 +64,9 @@ object SynthPages {
     val dd = 1 + Det.nextInt(seed, id, "cnp_d", 28)
     val county = 1 + Det.nextInt(seed, id, "cnp_c", 46)
     val seq = 1 + Det.nextInt(seed, id, "cnp_s", 999)
-    val d12 = f"$g%d$yy%02d$mm%02d$dd%02d$county%02d$seq%03d"
+    // Locale.ROOT: a default locale such as ar-EG prints non-ASCII digits
+    val d12 = "%d%02d%02d%02d%02d%03d"
+      .formatLocal(Locale.ROOT, g, yy, mm, dd, county, seq)
     val ck = cnpChecksum(d12)
     val ckOut = if (valid) ck else (ck + 1) % 10
     d12 + ckOut.toString
@@ -180,11 +183,12 @@ object SynthPages {
       sb.append("\ncontact: persoana").append(id % 97)
         .append("@exemplu").append(id % 13).append(".ro")
     if (r >= 8 && r < 15)
-      sb.append("\ntelefon: 07").append(f"${Det.nextInt(seed, id, "ph", 100000000)}%08d")
+      sb.append("\ntelefon: 07").append(
+        "%08d".formatLocal(Locale.ROOT, Det.nextInt(seed, id, "ph", 100000000)))
     else if (r >= 15 && r < 18)
-      sb.append("\nsunați la +40 7").append(f"${Det.nextInt(seed, id, "ph2", 100)}%02d ")
-        .append(f"${Det.nextInt(seed, id, "ph3", 1000)}%03d ")
-        .append(f"${Det.nextInt(seed, id, "ph4", 1000)}%03d")
+      sb.append("\nsunați la +40 7").append("%02d %03d %03d".formatLocal(
+        Locale.ROOT, Det.nextInt(seed, id, "ph2", 100),
+        Det.nextInt(seed, id, "ph3", 1000), Det.nextInt(seed, id, "ph4", 1000)))
     if (r >= 18 && r < 23)
       sb.append("\ncnp: ").append(makeCnp(seed, id, valid = true))
     else if (r >= 23 && r < 26)

@@ -85,18 +85,6 @@ class AlignSpec extends AnyFunSuite {
       "offsets must be the driver-computed manifest, not a re-aggregation")
   }
 
-  test("alignByRowNumber pairs two streams positionally") {
-    import spark.implicits._
-    val a = Seq((10, "a1"), (20, "a2"), (30, "a3")).toDF("k", "va")
-    val b = Seq((5, "b1"), (25, "b2"), (45, "b3"), (65, "b4")).toDF("k", "vb")
-    val out = Align.alignByRowNumber(a.select("k", "va"),
-        b.select(col("k"), col("vb")).drop("va"), Seq(col("k")))
-      .select("rn", "va", "vb").orderBy("rn").collect()
-    assert(out.length == 3) // inner join on rn: min(|a|,|b|)
-    assert(out.map(_.getString(1)).sameElements(Array("a1", "a2", "a3")))
-    assert(out.map(_.getString(2)).sameElements(Array("b1", "b2", "b3")))
-  }
-
   test("withGlobalRowNumberByTag ≡ per-tag withGlobalRowNumber (r6 one-pass)") {
     import spark.implicits._
     // 3 tags, interleaved keys, skewed tag sizes, a tag missing from some

@@ -114,42 +114,4 @@ class DecontaminateSpec extends AnyFunSuite {
         minHits = 0)
     }
   }
-
-  test("decontaminateAgainst (stateless set filter) ≡ decontaminate, and " +
-      "its plan has neither join nor exchange") {
-    val grams = Decontaminate.benchGramArray(bench, "text", n = 3)
-    for (minHits <- Seq(1, 3)) {
-      val viaJoin = Decontaminate.decontaminate(
-          corpus, bench, "doc_id", "text", n = 3, minHits = minHits)
-        .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
-      val viaSet = Decontaminate.decontaminateAgainst(
-          corpus, grams, "text", n = 3, minHits = minHits)
-        .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
-      assert(viaSet == viaJoin, s"minHits=$minHits")
-    }
-    // empty eval set → identity (binarySearch over an empty array)
-    assert(Decontaminate.decontaminateAgainst(
-      corpus, Array.empty[Long], "text", n = 3).count() == corpus.count())
-    // null text has no grams to hit and must SURVIVE, exactly like the
-    // join-based operator (where it never enters gramHits)
-    val withNull = corpus.unionByName(
-      spark.createDataFrame(
-        java.util.List.of[org.apache.spark.sql.Row](
-          org.apache.spark.sql.Row(9L, null)),
-        corpus.schema))
-    val jSurv = Decontaminate.decontaminate(
-        withNull, bench, "doc_id", "text", n = 3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val sSurv = Decontaminate.decontaminateAgainst(
-        withNull, grams, "text", n = 3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(jSurv.contains(9L) && sSurv == jSurv,
-      s"null-text doc must survive both paths: join=$jSurv set=$sSurv")
-    // scale shape: a pure filter — the set rides inside the expression
-    val plan = Decontaminate.decontaminateAgainst(corpus, grams, "text",
-        n = 3)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Join") && !plan.contains("Exchange"),
-      s"expected a join-free, shuffle-free filter plan:\n$plan")
-  }
 }

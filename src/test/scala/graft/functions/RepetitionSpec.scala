@@ -88,35 +88,6 @@ class RepetitionSpec extends AnyFunSuite {
     assert(dup == Repetition.dupNgramFrac(toks, 2))
   }
 
-  test("withRepetitionSignals appends one column per window size") {
-    import spark.implicits._
-    val out = Repetition.withRepetitionSignals(
-      Seq("a b a b c d e f g h i j").toDF("text"))
-    val expected = Seq(2, 3, 4).map(n => s"top${n}gram_char_frac") ++
-      (5 to 10).map(n => s"dup${n}gram_char_frac")
-    assert(expected.forall(out.columns.contains))
-    val row = out.select(expected.map(col): _*).head()
-    // top-2 sees the repeated [a b]; no 5-gram repeats → dup columns all 0
-    assert(row.getDouble(0) > 0.0)
-    assert((3 until expected.size).forall(i => row.getDouble(i) == 0.0))
-  }
-
-  test("gopherRepetitionKeep drops a looping doc, keeps natural text") {
-    import spark.implicits._
-    val loop = Array.fill(12)("spam mesaj repetat des").mkString(" ")
-    // thresholds assume document-length text: ~60 distinct words so no
-    // single n-gram's chars exceed the bounds by length alone
-    val natural = (0 until 60)
-      .map(i => s"cuvant$i")
-      .mkString(" ")
-    val out = Seq(("loop", loop), ("ok", natural)).toDF("id", "text")
-      .select(col("id"),
-        Repetition.gopherRepetitionKeep(col("text")).as("keep"))
-      .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-    assert(!out("loop"))
-    assert(out("ok"))
-  }
-
   test("n = 3 window arithmetic (rolling char length) is exact") {
     // "ab c d ab c z" (8 word chars): 3-grams [ab c d](u0), [c d ab](u1),
     // [d ab c](u2), [ab c z](u3) — all unique → top = 4/8; dup = 0

@@ -3,6 +3,8 @@ package graft.functions
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -62,6 +64,16 @@ class TokenizeParitySpec extends AnyFunSuite {
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(r.getSeq[String](0) == r.getSeq[String](1), s"row $i")
     }
+  }
+
+  test("norm_tokens case folding ignores the JVM default locale (tr-TR)") {
+    val default = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      val toks = Tokenize.normTokens(UTF8String.fromString("IARNĂ Iarnă"))
+      assert(toks.toSeq[UTF8String](StringType).map(_.toString) ==
+        Seq("iarnă", "iarnă"))
+    } finally java.util.Locale.setDefault(default)
   }
 
   test("null text: both tokenizers yield null") {

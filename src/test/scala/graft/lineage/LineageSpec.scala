@@ -38,7 +38,7 @@ class LineageSpec extends AnyFunSuite {
             numChunks = 8, waveSize = 2, failAfterWaves = Some(1))
         }
         val store = new LineageStore(spark, lin)
-        val afterKill = store.completedChunks("run1")
+        val afterKill = store.completedChunks("run1", 8)
         assert(afterKill.size == 2, s"$form: expected 2 completed chunks, got $afterKill")
 
         // resume: must process exactly the remaining 6, never the completed 2
@@ -46,7 +46,7 @@ class LineageSpec extends AnyFunSuite {
           numChunks = 8, waveSize = 2)
         assert(resumed.size == 6, s"$form: resumed $resumed")
         assert(resumed.toSet.intersect(afterKill).isEmpty, s"$form: chunk double-processed")
-        assert(store.completedChunks("run1") == (0 until 8).toSet, form)
+        assert(store.completedChunks("run1", 8) == (0 until 8).toSet, form)
 
         // lineage rows: one per chunk, no duplicates
         val rows = store.all().collect().filter(_.run_id == "run1")
@@ -117,12 +117,22 @@ class LineageSpec extends AnyFunSuite {
       ResumableRunner.run(pages, out, lin, "rc", numChunks = 4, waveSize = 2)
     }
     val store = new LineageStore(spark, lin)
-    assert(store.completedChunks("rc") == Set(0, 1))
+    assert(store.completedChunks("rc", 8) == Set(0, 1))
     assert(store.all().collect().filter(_.run_id == "rc")
       .forall(_.num_chunks == 8))
     // the original count still resumes to completion
     ResumableRunner.run(pages, out, lin, "rc", numChunks = 8, waveSize = 2)
-    assert(store.completedChunks("rc") == (0 until 8).toSet)
+    assert(store.completedChunks("rc", 8) == (0 until 8).toSet)
+  }
+
+  test("numChunks = 0 is refused, not reported as an empty success") {
+    val base = Files.createTempDirectory("graft_lineage6").toString
+    val pages = SynthPages.pages(spark, 10L)
+    intercept[IllegalArgumentException] {
+      ResumableRunner.run(pages, s"$base/out", s"$base/lin", "z",
+        numChunks = 0)
+    }
+    assert(!new java.io.File(s"$base/lin").exists())
   }
 
   test("metrics in lineage match the pipeline decisions") {

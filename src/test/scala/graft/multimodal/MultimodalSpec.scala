@@ -5,61 +5,37 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.synth.SynthPages
 
-/** Multimodal plumbing: mime sniffing (real), metadata columns, batched
-  * feature extraction (stub codec, real batch/schema/partitioning).
+/** Multimodal plumbing: mime sniffing (real), batched feature extraction
+  * (stub codec, real batch/schema/partitioning).
   */
 class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  import org.apache.spark.sql.functions._
 
   test("magic-byte mime sniffing classifies known prefixes") {
-    import spark.implicits._
-    val rows = Seq(
-      Array(0xff, 0xd8, 0xff, 0xe0).map(_.toByte),
-      Array(0x89, 0x50, 0x4e, 0x47).map(_.toByte),
-      "<html><body>x</body></html>".getBytes("UTF-8"),
-      Array(0x00, 0x01).map(_.toByte)
-    ).toDF("payload")
-    val mimes = Multimodal.withMediaMeta(rows, "payload")
-      .select("mime").collect().map(_.getString(0))
-    assert(mimes.sameElements(Array("image/jpeg", "image/png", "text/html",
-      "application/octet-stream")))
-  }
-
-  test("Column and scalar mime sniffers agree byte-for-byte (parity)") {
-    import spark.implicits._
-    val payloads: Seq[Array[Byte]] = Seq(
-      Array(0xff, 0xd8, 0xff, 0xe0).map(_.toByte),
-      Array(0x89, 0x50, 0x4e, 0x47).map(_.toByte),
-      Array(0x47, 0x49, 0x46, 0x38).map(_.toByte),
-      Array(0x42, 0x4d, 0x01).map(_.toByte),
-      Array(0x49, 0x44, 0x33).map(_.toByte),
-      Array(0x1a, 0x45, 0xdf, 0xa3).map(_.toByte),
+    val cases: Seq[(Array[Byte], String)] = Seq(
+      Array(0xff, 0xd8, 0xff, 0xe0).map(_.toByte) -> "image/jpeg",
+      Array(0x89, 0x50, 0x4e, 0x47).map(_.toByte) -> "image/png",
+      Array(0x47, 0x49, 0x46, 0x38).map(_.toByte) -> "image/gif",
+      Array(0x42, 0x4d, 0x01).map(_.toByte) -> "image/bmp",
+      Array(0x49, 0x44, 0x33).map(_.toByte) -> "audio/mpeg",
+      Array(0x1a, 0x45, 0xdf, 0xa3).map(_.toByte) -> "video/webm",
       // RIFF....WAVE, RIFF with wrong type tag, truncated RIFF
-      ("RIFF" + "\u0004\u0000\u0000\u0000" + "WAVEfmt ").getBytes("ISO-8859-1"),
-      ("RIFF" + "\u0004\u0000\u0000\u0000" + "AVI LIST").getBytes("ISO-8859-1"),
-      "RIFF".getBytes("ISO-8859-1"),
-      Multimodal.synthWav(7L),
-      "<html><body>x</body></html>".getBytes("UTF-8"),
-      "<HTML><body>x</body></HTML>".getBytes("UTF-8"), // case differs: octet
-      "<!DOCTYPE html><html>".getBytes("UTF-8"),
-      "<ht".getBytes("UTF-8"),
-      Array[Byte](),
-      Array(0x00, 0x01).map(_.toByte))
-    val colSide = Multimodal.withMediaMeta(payloads.toDF("payload"), "payload")
-      .select("mime").collect().map(_.getString(0))
-    val scalarSide = payloads.map(Multimodal.sniffMimeScalar)
-    assert(colSide.toSeq == scalarSide,
-      s"col=${colSide.toSeq} scalar=$scalarSide")
-  }
-
-  test("media metadata columns are exact") {
-    import spark.implicits._
-    val payload = "<html>abc</html>".getBytes("UTF-8")
-    val r = Multimodal.withMediaMeta(Seq(payload).toDF("payload"), "payload")
-      .select("n_bytes", "mime").head()
-    assert(r.getLong(0) == payload.length.toLong)
-    assert(r.getString(1) == "text/html")
+      ("RIFF" + "\u0004\u0000\u0000\u0000" + "WAVEfmt ")
+        .getBytes("ISO-8859-1") -> "audio/wav",
+      ("RIFF" + "\u0004\u0000\u0000\u0000" + "AVI LIST")
+        .getBytes("ISO-8859-1") -> "application/octet-stream",
+      "RIFF".getBytes("ISO-8859-1") -> "application/octet-stream",
+      Multimodal.synthWav(7L) -> "audio/wav",
+      "<html><body>x</body></html>".getBytes("UTF-8") -> "text/html",
+      // case differs: octet
+      "<HTML><body>x</body></HTML>".getBytes("UTF-8") ->
+        "application/octet-stream",
+      "<!DOCTYPE html><html>".getBytes("UTF-8") -> "text/html",
+      "<ht".getBytes("UTF-8") -> "application/octet-stream",
+      Array[Byte]() -> "application/octet-stream",
+      Array(0x00, 0x01).map(_.toByte) -> "application/octet-stream")
+    val got = cases.map { case (p, _) => Multimodal.sniffMimeScalar(p) }
+    assert(got == cases.map(_._2), s"got=$got")
   }
 
   test("batched feature extraction: stable schema, deterministic features") {

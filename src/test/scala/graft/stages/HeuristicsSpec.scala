@@ -60,8 +60,10 @@ class HeuristicsSpec extends AnyFunSuite {
 
   private def lineShape(text: String): (Double, Double, Double) = {
     import spark.implicits._
-    val r = Heuristics.withLineShape(Seq(text).toDF("text"))
-      .select("bullet_line_frac", "ellipsis_line_frac", "alpha_word_frac")
+    val t = org.apache.spark.sql.functions.col("text")
+    val r = Seq(text).toDF("text")
+      .select(Heuristics.bulletLineFrac(t), Heuristics.ellipsisLineFrac(t),
+        Heuristics.alphaWordFrac(Heuristics.wordsCol(t)))
       .head()
     (r.getDouble(0), r.getDouble(1), r.getDouble(2))
   }

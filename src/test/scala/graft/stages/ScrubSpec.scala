@@ -111,4 +111,24 @@ class ScrubSpec extends AnyFunSuite {
     assert(CnpScrubber.isValidCnp(d12 + expected.toString, 0))
     assert(!CnpScrubber.isValidCnp(d12 + ((expected + 1) % 10).toString, 0))
   }
+
+  test("the synthetic corpus ignores the JVM default locale (ar-EG digits)") {
+    // one page per phone format: "telefon: 07…" and "+40 7xx xxx xxx"
+    val ids = Seq("telefon: 07", "+40 7").map(m =>
+      (0L until 2000L).find(SynthPages.gen(_).text.contains(m)).get)
+    val cnp = SynthPages.makeCnp(7L, 3L, valid = true)
+    // Page holds an Array[Byte], so compare its fields by value
+    def page(id: Long) = {
+      val p = SynthPages.gen(id)
+      (p.url, p.warc_ts, p.html.toSeq, p.text, p.lang)
+    }
+    val pages = ids.map(page)
+    val default = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("ar-EG"))
+    try {
+      assert(SynthPages.makeCnp(7L, 3L, valid = true) == cnp)
+      assert(ids.map(page) == pages)
+    } finally java.util.Locale.setDefault(default)
+    assert(cnp.forall(c => c >= '0' && c <= '9'))
+  }
 }

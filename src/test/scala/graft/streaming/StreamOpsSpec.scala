@@ -5,119 +5,10 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.synth.SynthPages
 
-/** Streaming pipeline: same scoring code as batch, micro-batch execution. */
+/** Streaming MinHash near-dup: batch parity, late rows, bucket cap. */
 class StreamOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  test("streaming annotate produces the same decisions as batch") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream").toString
-    val pages = SynthPages.pages(spark, 400L)
-    pages.write.parquet(s"$base/landing")
-
-    val q = StreamOps.annotateStream(spark, s"$base/landing",
-      s"$base/out", s"$base/ckpt")
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.read.parquet(s"$base/out")
-      .select("url", "keep").as[(String, Boolean)].collect().toMap
-    val batch = graft.pipeline.QualityPipeline.annotate(pages)
-      .collect().map(a => a.url -> a.keep).toMap
-    assert(streamed.size == 400)
-    assert(streamed == batch)
-  }
-
-  test("checkpoint recovery: killed stream restarted from the same checkpoint " +
-      "≡ one uninterrupted run (exactly-once output, no dup/loss)") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_recover").toString
-    val all = SynthPages.pages(spark, 300L)
-    // first wave lands, stream processes it, then is STOPPED (the kill)
-    all.filter(_.url.hashCode % 2 == 0).write.parquet(s"$base/landing")
-    val q1 = StreamOps.annotateStream(spark, s"$base/landing",
-      s"$base/out", s"$base/ckpt")
-    q1.processAllAvailable()
-    q1.stop()
-    // second wave lands while the stream is down
-    all.filter(_.url.hashCode % 2 != 0).write.mode("append")
-      .parquet(s"$base/landing")
-    // restart from the SAME checkpointLocation — must resume, not reprocess
-    val q2 = StreamOps.annotateStream(spark, s"$base/landing",
-      s"$base/out", s"$base/ckpt")
-    q2.processAllAvailable()
-    q2.stop()
-    val recovered = spark.read.parquet(s"$base/out")
-      .select("url", "keep").as[(String, Boolean)].collect()
-    // exactly once: every url exactly once, decisions ≡ uninterrupted batch
-    assert(recovered.length == 300, s"${recovered.length} rows ≠ 300")
-    assert(recovered.map(_._1).distinct.length == 300,
-      "duplicate urls — first wave reprocessed after restart")
-    val batch = graft.pipeline.QualityPipeline.annotate(all)
-      .collect().map(a => a.url -> a.keep).toMap
-    assert(recovered.toMap == batch)
-  }
-
-  test("streaming decontamination ≡ batch decontaminate, across micro-batches") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val base = Files.createTempDirectory("graft_sdecon").toString
-    val docs = Seq(
-      1L -> "alpha beta gamma delta epsilon zeta",
-      2L -> "alpha beta gamma other words here",
-      3L -> "totally clean document nothing shared",
-      4L -> "one two three four five six",
-      5L -> "short").toDF("doc_id", "text")
-    val bench = Seq(
-      100L -> "alpha beta gamma delta epsilon",
-      101L -> "one two three four").toDF("doc_id", "text")
-    docs.repartition(3).write.parquet(s"$base/landing") // several files →
-    // maxFilesPerTrigger drives multiple micro-batches
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$base/landing")
-    val q = StreamOps.decontaminateStream(stream, bench, "text",
-        n = 3, minHits = 2)
-      .writeStream.format("memory").queryName("sdecon")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sdecon")
-      .select("doc_id").as[Long].collect().toSet
-    val batch = graft.dedup.Decontaminate.decontaminate(
-        docs, bench, "doc_id", "text", n = 3, minHits = 2)
-      .select("doc_id").as[Long].collect().toSet
-    assert(streamed == batch, s"stream $streamed vs batch $batch")
-    assert(streamed == Set(2L, 3L, 5L)) // 1 and 4 share ≥2 eval grams
-  }
-
-  test("streaming dedup keeps one row per content digest (bounded state)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val base = Files.createTempDirectory("graft_sdedup").toString
-    val pages = SynthPages.pages(spark, 200L).toDF()
-    // plant exact duplicates under different urls
-    pages.unionByName(pages.withColumn("url", concat(col("url"), lit("-dup"))))
-      .write.parquet(s"$base/landing")
-    val stream = spark.readStream
-      .schema("url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING")
-      .parquet(s"$base/landing")
-    val q = StreamOps.dedupStream(stream, "1 hour")
-      .writeStream.format("memory").queryName("sdedup")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("sdedup").select("text").as[String].collect()
-    val distinctTexts = pages.select("text").distinct().count()
-    assert(out.length.toLong == distinctTexts,
-      s"${out.length} rows vs $distinctTexts distinct texts")
-    assert(out.toSet.size == out.length, "duplicate text survived dedup")
-  }
 
   test("streaming minhash near-dup ≡ batch pair set, state carries across " +
       "micro-batches, exact dups verify at est_jaccard 1.0") {
@@ -300,69 +191,5 @@ class StreamOpsSpec extends AnyFunSuite {
     val roots = (1L to 40L).map(find).toSet
     assert(roots.size == 1,
       s"planted duplicate cluster split into ${roots.size} components")
-  }
-
-  test("mapGroupsWithState host snapshots: batch ≡ groupBy, stream accumulates") {
-    import spark.implicits._
-    val annotated = graft.pipeline.QualityPipeline
-      .annotate(SynthPages.pages(spark, 300L))
-    // batch mode: one state pass per group ≡ a plain aggregation
-    val snap = StreamOps.hostQualityState(annotated)
-      .collect().map(s => s.host -> s).toMap
-    val expect = annotated.collect()
-      .groupBy(a => new java.net.URI(a.url).getHost)
-    assert(snap.keySet == expect.keySet)
-    expect.foreach { case (h, rows) =>
-      assert(snap(h).docs == rows.length)
-      assert(snap(h).kept == rows.count(_.keep))
-      assert(math.abs(snap(h).mean_ppl - rows.map(_.ppl).sum / rows.length) < 1e-9)
-    }
-
-    // streaming: state carries across micro-batches
-    val base = Files.createTempDirectory("graft_state").toString
-    SynthPages.pages(spark, 150L).write.parquet(s"$base/landing")
-    val stream = spark.readStream
-      .schema("url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING")
-      .parquet(s"$base/landing").as[graft.model.Page]
-    val q = StreamOps.hostQualityState(
-        graft.pipeline.QualityPipeline.annotate(stream))
-      .writeStream.format("memory").queryName("hoststate")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("update").start()
-    q.processAllAvailable()
-    // second micro-batch: 150 MORE docs (ids 150..299 of the same corpus)
-    SynthPages.pages(spark, 300L).filter(_.url.split("/").last.toLong >= 150)
-      .write.mode("append").parquet(s"$base/landing")
-    q.processAllAvailable()
-    q.stop()
-    // latest snapshot per host must equal the batch totals over all 300
-    val latest = spark.table("hoststate").as[StreamOps.HostSnapshot]
-      .collect().groupBy(_.host).map { case (h, xs) => h -> xs.maxBy(_.docs) }
-    val full = graft.pipeline.QualityPipeline
-      .annotate(SynthPages.pages(spark, 300L)).collect()
-      .groupBy(a => new java.net.URI(a.url).getHost)
-    full.foreach { case (h, rows) =>
-      assert(latest(h).docs == rows.length, s"host $h")
-      assert(latest(h).kept == rows.count(_.keep), s"host $h")
-    }
-  }
-
-  test("hostOf is total: malformed and scheme-less URLs never throw") {
-    assert(StreamOps.hostOf("https://site3.example.ro/pagina/7") ==
-      "site3.example.ro")
-    assert(StreamOps.hostOf("http://ex ample.com/a") == "ex ample.com")
-    assert(StreamOps.hostOf("example.com/x") == "example.com")
-    assert(StreamOps.hostOf("") == "unknown")
-    assert(StreamOps.hostOf(null) == "unknown")
-    assert(StreamOps.hostOf("http:///nohost") == "unknown")
-  }
-
-  test("windowed keep counts with watermark aggregate by event time") {
-    val annotated = graft.pipeline.QualityPipeline
-      .annotate(SynthPages.pages(spark, 300L)).toDF()
-    val counts = StreamOps.windowedKeepCounts(annotated, "24 hours", "1 hour")
-      .collect()
-    assert(counts.map(_.getAs[Long]("n_docs")).sum == 300L)
-    assert(counts.forall(_.getAs[java.sql.Timestamp]("window_start") != null))
   }
 }
