@@ -11,31 +11,49 @@ import graft.synth.SynthPages
 class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** Payloads with the mime each must sniff as: every magic prefix, the
+    * RIFF and HTML near-misses, and the empty and too-short edge cases.
+    */
+  private val mimeCases: Seq[(Array[Byte], String)] = Seq(
+    Array(0xff, 0xd8, 0xff, 0xe0).map(_.toByte) -> "image/jpeg",
+    Array(0x89, 0x50, 0x4e, 0x47).map(_.toByte) -> "image/png",
+    Array(0x47, 0x49, 0x46, 0x38).map(_.toByte) -> "image/gif",
+    Array(0x42, 0x4d, 0x01).map(_.toByte) -> "image/bmp",
+    Array(0x49, 0x44, 0x33).map(_.toByte) -> "audio/mpeg",
+    Array(0x1a, 0x45, 0xdf, 0xa3).map(_.toByte) -> "video/webm",
+    // RIFF....WAVE, RIFF with wrong type tag, truncated RIFF
+    ("RIFF" + "\u0004\u0000\u0000\u0000" + "WAVEfmt ")
+      .getBytes("ISO-8859-1") -> "audio/wav",
+    ("RIFF" + "\u0004\u0000\u0000\u0000" + "AVI LIST")
+      .getBytes("ISO-8859-1") -> "application/octet-stream",
+    "RIFF".getBytes("ISO-8859-1") -> "application/octet-stream",
+    Multimodal.synthWav(7L) -> "audio/wav",
+    "<html><body>x</body></html>".getBytes("UTF-8") -> "text/html",
+    // case differs: octet
+    "<HTML><body>x</body></HTML>".getBytes("UTF-8") ->
+      "application/octet-stream",
+    "<!DOCTYPE html><html>".getBytes("UTF-8") -> "text/html",
+    "<ht".getBytes("UTF-8") -> "application/octet-stream",
+    Array[Byte]() -> "application/octet-stream",
+    Array(0x00, 0x01).map(_.toByte) -> "application/octet-stream")
+
   test("magic-byte mime sniffing classifies known prefixes") {
-    val cases: Seq[(Array[Byte], String)] = Seq(
-      Array(0xff, 0xd8, 0xff, 0xe0).map(_.toByte) -> "image/jpeg",
-      Array(0x89, 0x50, 0x4e, 0x47).map(_.toByte) -> "image/png",
-      Array(0x47, 0x49, 0x46, 0x38).map(_.toByte) -> "image/gif",
-      Array(0x42, 0x4d, 0x01).map(_.toByte) -> "image/bmp",
-      Array(0x49, 0x44, 0x33).map(_.toByte) -> "audio/mpeg",
-      Array(0x1a, 0x45, 0xdf, 0xa3).map(_.toByte) -> "video/webm",
-      // RIFF....WAVE, RIFF with wrong type tag, truncated RIFF
-      ("RIFF" + "\u0004\u0000\u0000\u0000" + "WAVEfmt ")
-        .getBytes("ISO-8859-1") -> "audio/wav",
-      ("RIFF" + "\u0004\u0000\u0000\u0000" + "AVI LIST")
-        .getBytes("ISO-8859-1") -> "application/octet-stream",
-      "RIFF".getBytes("ISO-8859-1") -> "application/octet-stream",
-      Multimodal.synthWav(7L) -> "audio/wav",
-      "<html><body>x</body></html>".getBytes("UTF-8") -> "text/html",
-      // case differs: octet
-      "<HTML><body>x</body></HTML>".getBytes("UTF-8") ->
-        "application/octet-stream",
-      "<!DOCTYPE html><html>".getBytes("UTF-8") -> "text/html",
-      "<ht".getBytes("UTF-8") -> "application/octet-stream",
-      Array[Byte]() -> "application/octet-stream",
-      Array(0x00, 0x01).map(_.toByte) -> "application/octet-stream")
-    val got = cases.map { case (p, _) => Multimodal.sniffMimeScalar(p) }
-    assert(got == cases.map(_._2), s"got=$got")
+    val got = mimeCases.map { case (p, _) => Multimodal.sniffMimeScalar(p) }
+    assert(got == mimeCases.map(_._2), s"got=$got")
+  }
+
+  test("Column and scalar mime sniffers agree byte-for-byte (parity)") {
+    import spark.implicits._
+    // the `mime` column the batched operators emit vs the scalar sniffer
+    val rows = mimeCases.zipWithIndex.map { case ((p, _), i) => (f"u$i%02d", p) }
+      .toDS().repartition(3)
+    val scalarSide = mimeCases.map { case (p, _) => Multimodal.sniffMimeScalar(p) }
+    val featSide = Multimodal.extractFeatures(rows, dim = 16).toDF()
+      .orderBy("url").select("mime").collect().map(_.getString(0)).toSeq
+    val resizeSide = Multimodal.resizeImages(rows, maxDim = 8).toDF()
+      .orderBy("url").select("mime").collect().map(_.getString(0)).toSeq
+    assert(featSide == scalarSide, s"extractFeatures=$featSide scalar=$scalarSide")
+    assert(resizeSide == scalarSide, s"resizeImages=$resizeSide scalar=$scalarSide")
   }
 
   test("batched feature extraction: stable schema, deterministic features") {
