@@ -4,8 +4,8 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CosineSimExpr, FingerprintExpr, HyperplaneBucketExpr, MinHashSigExpr, ShingleHashesExpr, SimHash64Expr}
-import graft.stages.{CnpCountExpr, CnpScrubExpr}
+import graft.functions.{CosineSimExpr, HyperplaneBucketExpr, NativeFn, TextFunctions}
+import graft.stages.CnpScrubber
 
 /** SQL surface for the native expressions: usable either as a session
   * extension (`spark.sql.extensions=graft.GraftExtensions`) or by calling
@@ -23,27 +23,24 @@ object GraftFunctions {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "")
 
+  /** A declared function: the first argument is the child, the rest are
+    * its int literals.
+    */
+  private def native(fn: NativeFn, usage: String) =
+    (fn.name, info(fn.name, usage), (es: Seq[Expression]) =>
+      fn.expr(es.head, es.tail.map(_.eval().asInstanceOf[Int])))
+
   val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("scrub_cnp",
-      info("scrub_cnp", "replaces checksum-valid Romanian CNPs with <CNP>"),
-      (es: Seq[Expression]) => CnpScrubExpr(es.head)),
-    ("count_cnp",
-      info("count_cnp", "counts checksum-valid Romanian CNPs"),
-      (es: Seq[Expression]) => CnpCountExpr(es.head)),
-    ("doc_fingerprint",
-      info("doc_fingerprint", "reflow-stable rolling-hash fingerprint of text"),
-      (es: Seq[Expression]) => FingerprintExpr(es.head)),
-    ("simhash64",
-      info("simhash64", "64-bit SimHash of a token array"),
-      (es: Seq[Expression]) => SimHash64Expr(es.head)),
-    ("shingle_hashes",
-      info("shingle_hashes", "hashes of word n-gram shingles (n literal)"),
-      (es: Seq[Expression]) => ShingleHashesExpr(es.head,
-        es(1).eval().asInstanceOf[Int])),
-    ("minhash_signature",
-      info("minhash_signature", "k-minhash signature of shingle hashes (k literal)"),
-      (es: Seq[Expression]) => MinHashSigExpr(es.head,
-        es(1).eval().asInstanceOf[Int])),
+    native(CnpScrubber.ScrubCnp,
+      "replaces checksum-valid Romanian CNPs with <CNP>"),
+    native(CnpScrubber.CountCnp, "counts checksum-valid Romanian CNPs"),
+    native(TextFunctions.DocFingerprint,
+      "reflow-stable rolling-hash fingerprint of text"),
+    native(TextFunctions.SimHash64, "64-bit SimHash of a token array"),
+    native(TextFunctions.ShingleHashes,
+      "hashes of word n-gram shingles (n literal)"),
+    native(TextFunctions.MinHashSignature,
+      "k-minhash signature of shingle hashes (k literal)"),
     ("cosine_sim",
       info("cosine_sim", "exact cosine similarity of two array<double>"),
       (es: Seq[Expression]) => CosineSimExpr(es.head, es(1))),

@@ -1,39 +1,23 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's production "derive thresholds from the corpus, then
-  * filter with them" composition: compute an exact percentile grid over the
-  * score distribution (`ro_vs_eng/quantiles_fetcher.py:56-65`), pick one
-  * percentile as the operating point (the 92nd in `run.sh:4-6`), and feed it
-  * to the threshold filter (`ro_vs_eng/filter_jql.py:27`) — all in one plan,
-  * no driver round-trip.
+  * filter with them" composition: an exact percentile grid over the score
+  * distribution (`ro_vs_eng/quantiles_fetcher.py:56-65`, spelled by
+  * q_a4_percentile_grid), one percentile picked as the operating point (the
+  * 92nd in `run.sh:4-6`) and fed to the threshold filter
+  * (`ro_vs_eng/filter_jql.py:27`) — all in one plan, no driver round-trip.
   *
-  * Scale shape: the grid is ONE aggregation pass (Spark's exact `percentile`
-  * is a single shuffle-to-one-reducer per group of a compact digest, fine
-  * for a global scalar); the derived 1-row threshold is broadcast into the
+  * Scale shape: the threshold is ONE aggregation pass (Spark's exact
+  * `percentile` is a single shuffle-to-one-reducer per group of a compact
+  * digest, fine for a global scalar); the derived 1-row threshold is broadcast into the
   * filter, so the corpus streams through a BroadcastNestedLoopJoin with a
   * pushed predicate — the corpus is scanned exactly twice (once to sort for
   * the percentile, once to filter), never collected.
   */
 object DerivedThresholds {
-
-  private def pName(q: Double): String = f"p${math.round(q * 1000)}%d"
-
-  /** One-row DataFrame with one exact-percentile column per grid point.
-    * r6: ONE `percentile(col, array(grid))` aggregate instead of one
-    * aggregate per grid point — the exact-percentile buffer (a counts map
-    * over every distinct value) was built and merged 10× for identical
-    * contents; the array form builds it once and interpolates every grid
-    * point from the same sorted counts, so the values are identical.
-    */
-  def percentileGrid(df: DataFrame, scoreCol: String,
-      grid: Seq[Double]): DataFrame =
-    df.agg(percentile(col(scoreCol), typedlit(grid)).as("_ps"))
-      .select(grid.zipWithIndex.map { case (q, i) =>
-        element_at(col("_ps"), i + 1).as(pName(q))
-      }: _*)
 
   /** Rows of `df` whose `scoreCol` clears the `pick` percentile of its own
     * distribution; the derived threshold is carried along as `threshold`.
@@ -41,12 +25,8 @@ object DerivedThresholds {
   def filterByDerivedPercentile(df: DataFrame, scoreCol: String,
       grid: Seq[Double], pick: Double): DataFrame = {
     require(grid.contains(pick), s"pick $pick must be a grid point $grid")
-    // only the picked point is aggregated — with the per-point grid the
-    // optimizer's column pruning did this implicitly (9 unused aggregates
-    // dropped under the Project); the r6 array-percentile grid is opaque
-    // to pruning, so the single-point aggregate is now explicit. Same
-    // value: one buffer, one interpolation, identical to the grid's
-    // entry for `pick`.
+    // only the picked point is aggregated: one buffer, one interpolation,
+    // identical to the grid's entry for `pick`
     val chosen = df.agg(percentile(col(scoreCol), lit(pick)).as("threshold"))
     df.crossJoin(broadcast(chosen)).filter(col(scoreCol) >= col("threshold"))
   }

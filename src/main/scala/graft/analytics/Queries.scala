@@ -529,7 +529,7 @@ object Queries {
     // r6: one percentile(value, array(grid)) aggregate — the former
     // 10-aggregate spelling built 10 identical exact-percentile count
     // buffers; the array form interpolates all 10 points from one buffer
-    // (identical doubles, DerivedThresholds.percentileGrid shape)
+    // (identical doubles)
     val grid = DerivedThresholds.ReferenceGrid
     t(s, dir, "events")
       .agg(percentile(col("value"), typedlit(grid)).as("_ps"))
@@ -730,7 +730,9 @@ object Queries {
   register("q_dedup_simhash_fingerprint", null) { (s, dir) =>
     import graft.functions.TextFunctions._
     t(s, dir, "documents")
-      .select(col("doc_id"), simhash64(normTokens(col("text"))).as("simhash"),
+      .select(col("doc_id"),
+        simhash64(graft.functions.Tokenize.norm_tokens(col("text")))
+          .as("simhash"),
         doc_fingerprint(col("text")).as("fingerprint"))
       .orderBy("doc_id")
   }
@@ -943,7 +945,6 @@ object Queries {
   //     per-mime means of feature slots 1–2 (width/height for images,
   //     sample-rate/channels for audio) -----------------------------------
   register("q_multimodal_media", null) { (s, _) =>
-    import s.implicits._
     val feats = graft.multimodal.Multimodal.extractFeatures(
       mediaPayloads(s, 500L))
     feats.toDF().groupBy("mime")
@@ -1124,7 +1125,7 @@ object Queries {
               |    AS age_group_prob_$j""".stripMargin).mkString(",\n")}
        |FROM r WHERE rk <= 3 GROUP BY doc_id ORDER BY doc_id""".stripMargin) {
     (s, dir) =>
-      import graft.functions.TopK
+      import graft.functions.{ArrayMath, TopK}
       // literal 6-slot array of codegen expressions — the former
       // transform(sequence(0,5), ...) HOF evaluated the lambda interpreted
       // per element; the arithmetic (long*31 + int, % 97, /10.0) and hence
@@ -1133,7 +1134,7 @@ object Queries {
         ((col("doc_id") * 31 + lit(i * 17)) % 97) / 10.0): _*)
       t(s, dir, "documents")
         .select(col("doc_id") +:
-          TopK.topKClassColumns(TopK.softmaxArr(logits),
+          TopK.topKClassColumns(ArrayMath.softmax_arr(logits),
             graft.model.Taxonomy.ageGroups, 3, "age_group"): _*)
         .orderBy("doc_id")
   }
@@ -1331,7 +1332,7 @@ object Queries {
        |  USING (doc_id)
        |ORDER BY t.doc_id""".stripMargin) { (s, dir) =>
     val words =
-      graft.stages.Heuristics.wordsCol(coalesce(col("text"), lit("")))
+      graft.functions.Tokenize.words_ws(coalesce(col("text"), lit("")))
     t(s, dir, "documents")
       .select(col("doc_id"),
         round(graft.functions.Repetition.top_ngram_char_frac(words, 2), 6)
@@ -1364,7 +1365,7 @@ object Queries {
        |FROM tot t LEFT JOIN covchars c USING (doc_id)
        |ORDER BY t.doc_id""".stripMargin) { (s, dir) =>
     val words =
-      graft.stages.Heuristics.wordsCol(coalesce(col("text"), lit("")))
+      graft.functions.Tokenize.words_ws(coalesce(col("text"), lit("")))
     t(s, dir, "documents")
       .select(col("doc_id"),
         round(graft.functions.Repetition.dup_ngram_char_frac(words, 3), 6)
@@ -1524,7 +1525,8 @@ object Queries {
       |            ELSE round(n_alpha * 1.0 / n_words, 6) END AS alpha_word_frac
       |FROM lstats l JOIN wstats USING (doc_id)
       |ORDER BY l.doc_id""".stripMargin) { (s, dir) =>
-    import graft.stages.Heuristics
+    import graft.functions.LineShape._
+    import graft.functions.Tokenize.words_ws
     val lt = replace(replace(replace(col("text"),
       lit(" table "), lit("\n- table ")),
       lit(" fast "), lit("...\n fast ")),
@@ -1532,10 +1534,9 @@ object Queries {
     t(s, dir, "documents")
       .withColumn("lt", lt)
       .select(col("doc_id"),
-        round(Heuristics.bulletLineFrac(col("lt")), 6).as("bullet_line_frac"),
-        round(Heuristics.ellipsisLineFrac(col("lt")), 6).as("ellipsis_line_frac"),
-        round(Heuristics.alphaWordFrac(Heuristics.wordsCol(col("lt"))), 6)
-          .as("alpha_word_frac"))
+        round(bullet_line_frac(col("lt")), 6).as("bullet_line_frac"),
+        round(ellipsis_line_frac(col("lt")), 6).as("ellipsis_line_frac"),
+        round(alpha_word_frac(words_ws(col("lt"))), 6).as("alpha_word_frac"))
       .orderBy("doc_id")
   }
 

@@ -3,7 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.stages.Heuristics
+import graft.functions.Repetition.ngram_strings
+import graft.functions.Tokenize.words_ws
 
 /** Corpus-wide vocabulary statistics — the derivation step behind the
   * stopword/marker lists the quality stages consume as constants (e.g.
@@ -25,7 +26,7 @@ object Vocab {
     * this the slowest query on the bench (3.7 s → sub-second at sf0.1).
     */
   def ngramStrings(textCol: Column, n: Int): Column =
-    graft.functions.Repetition.ngram_strings(Heuristics.wordsCol(textCol), n)
+    ngram_strings(words_ws(textCol), n)
 
   /** Top-k most frequent word n-grams with their counts: (gram, cnt). */
   def topNgrams(df: DataFrame, textCol: String, n: Int, k: Int): DataFrame = {

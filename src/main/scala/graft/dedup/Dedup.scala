@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
-import graft.synth.Det
+import graft.functions.Tokenize.norm_tokens
+import graft.functions.VectorFunctions.{cosine_sim, hyperplane_bucket}
 
 /** Deduplication operators for the training-data pipeline, each designed so
   * the candidate-pair set is bounded by bucketing (no all-pairs cross join):
@@ -72,7 +73,7 @@ object Dedup {
     */
   def withMinHash(df: DataFrame, textCol: String, shingleN: Int = 3): DataFrame =
     df.withColumn("shingles",
-        shingle_hashes(normTokens(col(textCol)), shingleN))
+        shingle_hashes(norm_tokens(col(textCol)), shingleN))
       .withColumn("minhash", minhash_signature(col("shingles"), NumHashes))
 
   /** LSH band key: hash of the band's r signature values + band index.
@@ -375,7 +376,7 @@ object Dedup {
       docs.select(col(idCol).as("id"), col(textCol).as("__text"))
         .join(hitIds.hint("merge"), Seq("id"), "left_semi")
         .select(col("id"), array_distinct(
-          shingle_hashes(normTokens(col("__text")), shingleN)).as("sh"))
+          shingle_hashes(norm_tokens(col("__text")), shingleN)).as("sh"))
         .filter(size(col("sh")) > 0))
     verifyJoin(hits, sets, Nil, "sh", graft.functions.ArrayMath.jaccard_sets,
       "jaccard", minJaccard)
@@ -469,7 +470,7 @@ object Dedup {
     }
     graft.analytics.Materialize.partitioned(withBucketStats(
       df.select(col(idCol).as("id"),
-          simhash64(normTokens(col(textCol))).as("sim"))
+          simhash64(norm_tokens(col(textCol))).as("sim"))
         .select(col("id"), col("sim"),
           explode(array((0 until nBands).map(b =>
             struct(lit(b).as("band"), bandBits(b).as("bits"))
@@ -850,8 +851,7 @@ object Dedup {
       s"bands*planes = ${bands * planes} sign bits must fit one long")
     graft.analytics.Materialize(df.select(col(idCol).as("id"),
       col(embCol).as("emb"),
-      graft.similarity.Ann.hyperplaneBucket(col(embCol), bands * planes, dim)
-        .as("full")))
+      hyperplane_bucket(col(embCol), bands * planes, dim).as("full")))
   }
 
   /** One row per (id, band bucket) with the bucket's size and min id — the
@@ -879,7 +879,7 @@ object Dedup {
       minCosine: Double, bucketCap: Int): DataFrame =
     verifyJoin(cappedCandidates(sized, "bucket", sigs, "emb", bucketCap),
       sigs.select(col("id"), col("emb")), Nil, "emb",
-      graft.similarity.Ann.cosine, "cosine", minCosine)
+      cosine_sim, "cosine", minCosine)
 
   /** One row per vector with its sign bucket, the bucket's size and min
     * id — materialized once, partitioned+sorted on the bucket key: the
@@ -892,7 +892,7 @@ object Dedup {
     */
   private def embBucketed(df: DataFrame, idCol: String, embCol: String,
       planes: Int, dim: Int): DataFrame = {
-    val sign = graft.similarity.Ann.hyperplaneBucket(col(embCol), planes, dim)
+    val sign = hyperplane_bucket(col(embCol), planes, dim)
     graft.analytics.Materialize.partitioned(withBucketStats(
       df.select(col(idCol).as("id"), col(embCol).as("emb"),
           sign.as("bucket"))
@@ -907,8 +907,7 @@ object Dedup {
     val allPairs = small.as("x").join(small.as("y").hint("merge"),
         col("x.bucket") === col("y.bucket") && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        graft.similarity.Ann.cosine(col("x.emb"), col("y.emb"))
-          .as("cosine"))
+        cosine_sim(col("x.emb"), col("y.emb")).as("cosine"))
     val big = withB.filter(col("bsz") > bucketCap)
     // star pairs verify via a join back to the vectors (bmin < id, so the
     // pair is already ordered); `withB` holds ONE row per vector — no
@@ -921,8 +920,7 @@ object Dedup {
       .join(embs.withColumnRenamed("id", "id_b")
         .withColumnRenamed("emb", "emb_b"), "id_b")
       .select(col("id_a"), col("id_b"),
-        graft.similarity.Ann.cosine(col("emb_a"), col("emb_b"))
-          .as("cosine"))
+        cosine_sim(col("emb_a"), col("emb_b")).as("cosine"))
     // chain verifies inline: lag() hands the previous row's vector over
     val wOrd = Window.partitionBy("bucket").orderBy(col("emb"), col("id"))
     val chainPairs = big
@@ -931,8 +929,7 @@ object Dedup {
       .filter(col("prev_id").isNotNull)
       .select(least(col("prev_id"), col("id")).as("id_a"),
         greatest(col("prev_id"), col("id")).as("id_b"),
-        graft.similarity.Ann.cosine(col("prev_emb"), col("emb"))
-          .as("cosine"))
+        cosine_sim(col("prev_emb"), col("emb")).as("cosine"))
     allPairs.unionByName(starPairs).unionByName(chainPairs)
       .distinct() // cosine is deterministic per pair
       .filter(col("cosine") >= minCosine)

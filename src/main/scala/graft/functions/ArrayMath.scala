@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnShim
@@ -38,14 +38,24 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ArrayMath {
 
-  def softmax_arr(arr: Column): Column =
-    ColumnShim.column(SoftmaxArrExpr(ColumnShim.expr(arr)))
+  def softmax_arr(arr: Column): Column = SoftmaxArr(arr)
 
-  def neg_indexed_sorted(probs: Column): Column =
-    ColumnShim.column(NegIndexedSortExpr(ColumnShim.expr(probs)))
+  def neg_indexed_sorted(probs: Column): Column = NegIndexedSorted(probs)
 
-  def sort_by_xxhash(toks: Column): Column =
-    ColumnShim.column(SortByXxHash64Expr(ColumnShim.expr(toks)))
+  def sort_by_xxhash(toks: Column): Column = SortByXxHash(toks)
+
+  private[graft] val SoftmaxArr = NativeFn("softmax_arr",
+    "graft.functions.ArrayMath", "softmaxArr", ArrayType(DoubleType),
+    Some(ArrayType(DoubleType, containsNull = true)))
+  private[graft] val NegIndexedSorted = NativeFn("neg_indexed_sorted",
+    "graft.functions.ArrayMath", "negIndexedSorted", ArrayType(DoubleType),
+    Some(ArrayType(StructType(Seq(
+      StructField("negp", DoubleType, nullable = true),
+      StructField("idx", IntegerType, nullable = false))),
+      containsNull = false)))
+  /** Same tokens, reordered: the result keeps the input's array type. */
+  private[graft] val SortByXxHash = NativeFn("sort_by_xxhash",
+    "graft.functions.ArrayMath", "sortByXxHash", ArrayType(StringType), None)
 
   // ---- static helpers (called from generated code) ------------------------
 
@@ -263,9 +273,13 @@ object ArrayMath {
   * thrown DIVIDE_BY_ZERO — unreachable at every call site (sets are
   * filtered `size > 0` before any pairing), and total-never-throws is
   * the safer contract for the unreachable case.
+  *
+  * Hand-written, not a [[NativeFn]]: it takes two children and accepts
+  * two input types, choosing the static method by element type at plan
+  * time; a declaration has one child, one input type and one method.
   */
 case class JaccardSetsExpr(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  extends BinaryExpression {
   private def elemType: DataType = left.dataType match {
     case ArrayType(t, _) => t
     case _ => NullType
@@ -300,58 +314,4 @@ case class JaccardSetsExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): JaccardSetsExpr = copy(l, r)
   override def prettyName: String = "jaccard_sets"
-}
-
-case class SoftmaxArrExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"softmax_arr requires array<double>, got ${t.catalogString}" +
-        " — cast explicitly")
-  }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullSafeEval(v: Any): Any =
-    ArrayMath.softmaxArr(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ArrayMath.softmaxArr($c)")
-  override protected def withNewChildInternal(c: Expression): SoftmaxArrExpr =
-    copy(c)
-  override def prettyName: String = "softmax_arr"
-}
-
-case class NegIndexedSortExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"neg_indexed_sorted requires array<double>, got ${t.catalogString}" +
-        " — cast explicitly")
-  }
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("negp", DoubleType, nullable = true),
-    StructField("idx", IntegerType, nullable = false))),
-    containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    ArrayMath.negIndexedSorted(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ArrayMath.negIndexedSorted($c)")
-  override protected def withNewChildInternal(c: Expression): NegIndexedSortExpr =
-    copy(c)
-  override def prettyName: String = "neg_indexed_sorted"
-}
-
-case class SortByXxHash64Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"sort_by_xxhash requires array<string>, got ${t.catalogString}")
-  }
-  override def dataType: DataType = child.dataType // same tokens, reordered
-  override def nullSafeEval(v: Any): Any =
-    ArrayMath.sortByXxHash(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ArrayMath.sortByXxHash($c)")
-  override protected def withNewChildInternal(c: Expression): SortByXxHash64Expr =
-    copy(c)
-  override def prettyName: String = "sort_by_xxhash"
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the r5 ADVICE item: the HOF `filter(split(...))` spellings in
   * [[graft.stages.Heuristics]] were CodegenFallback on a declared
   * corpus-scale quality-filter stage). Semantics are exactly the HOF
-  * chains', which remain as `*Hof` parity references pinned in
+  * chains', which remain as `Heuristics.*Hof` parity references pinned in
   * LineShapeParitySpec:
   *
   *  - lines = `split(text, "\n")`, non-blank = `length(trim(l)) > 0`
@@ -27,14 +23,20 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object LineShape {
 
-  def bullet_line_frac(text: Column): Column =
-    ColumnShim.column(BulletLineFracExpr(ColumnShim.expr(text)))
+  def bullet_line_frac(text: Column): Column = BulletLineFrac(text)
 
-  def ellipsis_line_frac(text: Column): Column =
-    ColumnShim.column(EllipsisLineFracExpr(ColumnShim.expr(text)))
+  def ellipsis_line_frac(text: Column): Column = EllipsisLineFrac(text)
 
-  def alpha_word_frac(words: Column): Column =
-    ColumnShim.column(AlphaWordFracExpr(ColumnShim.expr(words)))
+  def alpha_word_frac(words: Column): Column = AlphaWordFrac(words)
+
+  private[graft] val BulletLineFrac = NativeFn("bullet_line_frac",
+    "graft.functions.LineShape", "bulletLineFrac", StringType, Some(DoubleType))
+  private[graft] val EllipsisLineFrac = NativeFn("ellipsis_line_frac",
+    "graft.functions.LineShape", "ellipsisLineFrac", StringType,
+    Some(DoubleType))
+  private[graft] val AlphaWordFrac = NativeFn("alpha_word_frac",
+    "graft.functions.LineShape", "alphaWordFrac", ArrayType(StringType),
+    Some(DoubleType))
 
   // ---- static helpers (called from generated code) ------------------------
 
@@ -110,53 +112,4 @@ object LineShape {
     }
     hits.toDouble / n
   }
-}
-
-case class BulletLineFracExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bullet_line_frac requires string, got ${t.catalogString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any =
-    LineShape.bulletLineFrac(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LineShape.bulletLineFrac($c)")
-  override protected def withNewChildInternal(c: Expression): BulletLineFracExpr =
-    copy(c)
-  override def prettyName: String = "bullet_line_frac"
-}
-
-case class EllipsisLineFracExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ellipsis_line_frac requires string, got ${t.catalogString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any =
-    LineShape.ellipsisLineFrac(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.LineShape.ellipsisLineFrac($c)")
-  override protected def withNewChildInternal(c: Expression): EllipsisLineFracExpr =
-    copy(c)
-  override def prettyName: String = "ellipsis_line_frac"
-}
-
-case class AlphaWordFracExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"alpha_word_frac requires array<string>, got ${t.catalogString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any =
-    LineShape.alphaWordFrac(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LineShape.alphaWordFrac($c)")
-  override protected def withNewChildInternal(c: Expression): AlphaWordFracExpr =
-    copy(c)
-  override def prettyName: String = "alpha_word_frac"
 }

@@ -3,11 +3,8 @@ package graft.functions
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 
 /** Gopher-style repetition signals (Rae et al. 2021, appendix A1.1) as
   * native per-row Expressions — the scale-correct shape for 10^12 docs: no
@@ -40,12 +37,12 @@ object Repetition {
 
   def top_ngram_char_frac(tokens: Column, n: Int): Column = {
     require(n >= 1, s"n must be >= 1, got $n")
-    ColumnShim.column(TopNgramFracExpr(ColumnShim.expr(tokens), n))
+    TopNgramFrac(tokens, n)
   }
 
   def dup_ngram_char_frac(tokens: Column, n: Int): Column = {
     require(n >= 1, s"n must be >= 1, got $n")
-    ColumnShim.column(DupNgramFracExpr(ColumnShim.expr(tokens), n))
+    DupNgramFrac(tokens, n)
   }
 
   /** The space-joined n-gram STRINGS of a token array (empty when < n
@@ -55,8 +52,18 @@ object Repetition {
     */
   def ngram_strings(tokens: Column, n: Int): Column = {
     require(n >= 1, s"n must be >= 1, got $n")
-    ColumnShim.column(NgramStringsExpr(ColumnShim.expr(tokens), n))
+    NgramStrings(tokens, n)
   }
+
+  private[graft] val TopNgramFrac = NativeFn("top_ngram_char_frac",
+    "graft.functions.Repetition", "topNgramFrac", ArrayType(StringType),
+    Some(DoubleType), intArgs = 1)
+  private[graft] val DupNgramFrac = NativeFn("dup_ngram_char_frac",
+    "graft.functions.Repetition", "dupNgramFrac", ArrayType(StringType),
+    Some(DoubleType), intArgs = 1)
+  private[graft] val NgramStrings = NativeFn("ngram_strings",
+    "graft.functions.Repetition", "ngramStringsData", ArrayType(StringType),
+    Some(ArrayType(StringType, containsNull = false)), intArgs = 1)
 
   // ---- static helpers (called from generated code) ------------------------
 
@@ -159,40 +166,4 @@ object Repetition {
     while (i < len) { if (covered(i)) cc += codePoints(toks(i)); i += 1 }
     cc.toDouble / total.toDouble
   }
-}
-
-case class NgramStringsExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    Repetition.ngramStringsData(v.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Repetition.ngramStringsData($c, $n)")
-  override protected def withNewChildInternal(c: Expression): NgramStringsExpr =
-    copy(child = c)
-  override def prettyName: String = "ngram_strings"
-}
-
-case class TopNgramFracExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any =
-    Repetition.topNgramFrac(v.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Repetition.topNgramFrac($c, $n)")
-  override protected def withNewChildInternal(c: Expression): TopNgramFracExpr =
-    copy(child = c)
-  override def prettyName: String = "top_ngram_char_frac"
-}
-
-case class DupNgramFracExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any =
-    Repetition.dupNgramFrac(v.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Repetition.dupNgramFrac($c, $n)")
-  override protected def withNewChildInternal(c: Expression): DupNgramFracExpr =
-    copy(child = c)
-  override def prettyName: String = "dup_ngram_char_frac"
 }

@@ -1,26 +1,17 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Text-analysis primitives for the training-data pipeline: token counting,
-  * document fingerprinting (rolling hash), SimHash, and shingle hashing —
-  * each as either a codegen'd built-in chain or a native Expression with a
-  * static-call `doGenCode` (never a boxed row-at-a-time UDF).
+/** Text-analysis primitives for the training-data pipeline: BPE-ish token
+  * counting, document fingerprinting (rolling hash), SimHash, and shingle
+  * hashing — each as either a codegen'd built-in chain or a [[NativeFn]]
+  * (one static call per row in generated code, never a boxed UDF).
   */
 object TextFunctions {
-
-  /** X7 — whitespace token count (documented divergence from the reference's
-    * HF tokenizer: `small_model_inference/token_stats.py:11-13`).
-    */
-  def tokenCount(text: Column): Column =
-    size(filter(split(text, "\\s+"), w => length(w) > 0))
 
   /** GPT-2-style pretokenizer pattern, restricted to constructs both
     * java.util.regex and RE2 (the DuckDB oracle) support (no lookahead):
@@ -37,30 +28,38 @@ object TextFunctions {
   def tokenCountBpe(text: Column): Column =
     regexp_count(text, lit(BpeIshPattern))
 
-  /** Lowercased word tokens with punctuation-trimmed edges — a native
-    * codegen Expression since r6 ([[Tokenize.norm_tokens]]): the HOF
-    * spelling ran CodegenFallback-interpreted, one regexp Matcher per
-    * token, at the head of every minhash/simhash signature pass.
-    * [[normTokensHof]] stays as the parity reference (TokenizeParitySpec).
+  /** HOF reference of [[Tokenize.norm_tokens]], the lowercased word tokens
+    * with punctuation-trimmed edges (parity tests only). The HOF ran
+    * CodegenFallback-interpreted, one regexp Matcher per token, at the
+    * head of every minhash/simhash signature pass; TokenizeParitySpec pins
+    * the native function to it.
     */
-  def normTokens(text: Column): Column =
-    Tokenize.norm_tokens(text)
-
-  /** HOF reference of [[normTokens]] (parity tests only). */
   private[graft] def normTokensHof(text: Column): Column =
     filter(
       transform(split(lower(text), "\\s+"),
         w => regexp_replace(w, "(?U)^\\W+|\\W+$", "")),
       w => length(w) > 0)
 
-  def doc_fingerprint(c: Column): Column =
-    ColumnShim.column(FingerprintExpr(ColumnShim.expr(c)))
+  def doc_fingerprint(c: Column): Column = DocFingerprint(c)
 
-  def simhash64(tokens: Column): Column =
-    ColumnShim.column(SimHash64Expr(ColumnShim.expr(tokens)))
+  def simhash64(tokens: Column): Column = SimHash64(tokens)
 
-  def shingle_hashes(tokens: Column, n: Int): Column =
-    ColumnShim.column(ShingleHashesExpr(ColumnShim.expr(tokens), n))
+  def shingle_hashes(tokens: Column, n: Int): Column = ShingleHashes(tokens, n)
+
+  def minhash_signature(shingles: Column, k: Int): Column =
+    MinHashSignature(shingles, k)
+
+  private[graft] val DocFingerprint = NativeFn("doc_fingerprint",
+    "graft.functions.TextFunctions", "fingerprint", StringType, Some(LongType))
+  private[graft] val SimHash64 = NativeFn("simhash64",
+    "graft.functions.TextFunctions", "simhashTokens", ArrayType(StringType),
+    Some(LongType))
+  private[graft] val ShingleHashes = NativeFn("shingle_hashes",
+    "graft.functions.TextFunctions", "shingles", ArrayType(StringType),
+    Some(ArrayType(LongType, containsNull = false)), intArgs = 1)
+  private[graft] val MinHashSignature = NativeFn("minhash_signature",
+    "graft.functions.TextFunctions", "minhashSigK", ArrayType(LongType),
+    Some(ArrayType(LongType, containsNull = false)), intArgs = 1)
 
   // ---- static helpers (called from generated code) ------------------------
 
@@ -136,9 +135,6 @@ object TextFunctions {
     new GenericArrayData(out)
   }
 
-  def minhash_signature(shingles: Column, k: Int): Column =
-    ColumnShim.column(MinHashSigExpr(ColumnShim.expr(shingles), k))
-
   /** Deterministic affine constants for the MinHash family (odd a_j). */
   val MinHashMaxK = 64
   val minA: Array[Long] =
@@ -176,46 +172,4 @@ object TextFunctions {
     // bit_count(a XOR b) — pure built-ins, codegen
     bit_count(a.bitwiseXOR(b))
   }
-}
-
-case class FingerprintExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    TextFunctions.fingerprint(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextFunctions.fingerprint($c)")
-  override protected def withNewChildInternal(c: Expression): FingerprintExpr = copy(c)
-  override def prettyName: String = "doc_fingerprint"
-}
-
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    TextFunctions.simhashTokens(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextFunctions.simhashTokens($c)")
-  override protected def withNewChildInternal(c: Expression): SimHash64Expr = copy(c)
-  override def prettyName: String = "simhash64"
-}
-
-case class MinHashSigExpr(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    TextFunctions.minhashSigK(v.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextFunctions.minhashSigK($c, $k)")
-  override protected def withNewChildInternal(c: Expression): MinHashSigExpr =
-    copy(child = c)
-  override def prettyName: String = "minhash_signature"
-}
-
-case class ShingleHashesExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    TextFunctions.shingles(v.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextFunctions.shingles($c, $n)")
-  override protected def withNewChildInternal(c: Expression): ShingleHashesExpr =
-    copy(child = c)
-  override def prettyName: String = "shingle_hashes"
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,13 +14,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Each expression is defined as "exactly what the HOF chain computes":
   *  - [[Tokenize.words_ws]] ≡ `filter(split(text, "\\s+"), w => length(w)
-  *    > 0)` — the [[graft.stages.Heuristics.wordsCol]] contract. Java-regex
+  *    > 0)` — THE cross-engine tokenization contract, stated
+  *    declaratively by [[graft.stages.Heuristics.wordsColHof]]. Java-regex
   *    `\s` is the ASCII set [ \t\n\f\r]; those code points are
   *    single-byte in UTF-8 and never occur inside a multi-byte sequence,
   *    so the split runs directly over the UTF-8 bytes with zero decode.
   *  - [[Tokenize.norm_tokens]] ≡ `filter(transform(split(lower(text),
   *    "\\s+"), w => regexp_replace(w, "(?U)^\\W+|\\W+$", "")), w =>
-  *    length(w) > 0)` — the [[TextFunctions.normTokens]] contract.
+  *    length(w) > 0)` — the [[TextFunctions.normTokensHof]] contract.
   *    `lower` delegates to the same `UTF8String.toLowerCase` Spark's
   *    `Lower` uses (UTF8_BINARY collation), and the `(?U)\W` edge trim
   *    drops leading/trailing runs of non-word code points, where "word"
@@ -41,11 +38,15 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Tokenize {
 
-  def words_ws(text: Column): Column =
-    ColumnShim.column(WordsWsExpr(ColumnShim.expr(text)))
+  def words_ws(text: Column): Column = WordsWs(text)
 
-  def norm_tokens(text: Column): Column =
-    ColumnShim.column(NormTokensExpr(ColumnShim.expr(text)))
+  def norm_tokens(text: Column): Column = NormTokens(text)
+
+  private[graft] val WordsWs = NativeFn("words_ws", "graft.functions.Tokenize",
+    "wordsWs", StringType, Some(ArrayType(StringType, containsNull = false)))
+  private[graft] val NormTokens = NativeFn("norm_tokens",
+    "graft.functions.Tokenize", "normTokens", StringType,
+    Some(ArrayType(StringType, containsNull = false)))
 
   // ---- static helpers (called from generated code) ------------------------
 
@@ -122,38 +123,4 @@ object Tokenize {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-case class WordsWsExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"words_ws requires string, got ${t.catalogString}")
-  }
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    Tokenize.wordsWs(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Tokenize.wordsWs($c)")
-  override protected def withNewChildInternal(c: Expression): WordsWsExpr =
-    copy(c)
-  override def prettyName: String = "words_ws"
-}
-
-case class NormTokensExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"norm_tokens requires string, got ${t.catalogString}")
-  }
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    Tokenize.normTokens(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Tokenize.normTokens($c)")
-  override protected def withNewChildInternal(c: Expression): NormTokensExpr =
-    copy(c)
-  override def prettyName: String = "norm_tokens"
 }

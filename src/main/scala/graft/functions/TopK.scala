@@ -15,10 +15,9 @@ import org.apache.spark.sql.functions._
   */
 object TopK {
 
-  /** Numerically-stable softmax over an array<double> column (native). */
-  def softmaxArr(logits: Column): Column = ArrayMath.softmax_arr(logits)
-
-  /** HOF reference of [[softmaxArr]] (parity tests only). */
+  /** HOF reference of [[ArrayMath.softmax_arr]], the numerically-stable
+    * softmax over an array<double> column (parity tests only).
+    */
   private[graft] def softmaxArrHof(logits: Column): Column = {
     val m = array_max(logits)
     val e = transform(logits, x => exp(x - m))
@@ -42,7 +41,8 @@ object TopK {
     }
   }
 
-  /** HOF reference of the [[topKClassColumns]] sort (parity tests only):
+  /** HOF reference of [[ArrayMath.neg_indexed_sorted]], the
+    * [[topKClassColumns]] sort (parity tests only):
     * `array_sort(transform(probs, (p, i) => struct(p * -1.0, i)))` with
     * lexicographic struct ordering.
     */

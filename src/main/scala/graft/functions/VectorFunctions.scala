@@ -87,6 +87,11 @@ object VectorFunctions {
   * visible in the plan), and return NULL on array-length mismatch, matching
   * the HOF reference semantics (zip_with pads the shorter array with nulls
   * → the HOF aggregate is null).
+  *
+  * Both stay hand-written, not [[NativeFn]]s: the length check sets the
+  * result null inside the generated code, around the static call. A
+  * declaration's call can only return a value, so a null result would
+  * need a boxed return on every row.
   */
 case class CosineSimExpr(left: Expression, right: Expression)
   extends BinaryExpression {

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.{cosine_sim, hyperplane_bucket}
 import graft.synth.Det
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -18,15 +19,11 @@ import graft.synth.Det
   */
 object Ann {
 
-  /** Exact cosine similarity between two array<double> columns — a native
-    * codegen Expression (one pass). Catalyst higher-order functions are
-    * CodegenFallback, so the HOF formulation below exists only as the
-    * parity reference ([[cosineHof]], AnnSpec pins bit-identity).
+  /** HOF reference of [[graft.functions.VectorFunctions.cosine_sim]], the
+    * exact cosine similarity of two array<double> columns (parity tests
+    * only). Catalyst higher-order functions are CodegenFallback, so the
+    * native one-pass function runs the queries; AnnSpec pins bit-identity.
     */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.cosine_sim(a, b)
-
-  /** HOF reference implementation of [[cosine]] (parity tests only). */
   private[graft] def cosineHof(a: Column, b: Column): Column = {
     val dot = aggregate(zip_with(a, b, (x, y) => x * y),
       lit(0.0), (acc, v) => acc + v)
@@ -40,14 +37,12 @@ object Ann {
     (0 until dim).map(d =>
       if ((Det.mix64(p.toLong * 7919L + d * 104729L) & 1L) == 0L) 1.0 else -1.0)
 
-  /** Sign-bit bucket id from `planes` hyperplanes — the cosine-LSH key.
-    * Native Expression: ONE pass per plane over a cached ±1 matrix instead
-    * of `planes` interpreted HOF traversals per row.
+  /** HOF reference of [[graft.functions.VectorFunctions.hyperplane_bucket]],
+    * the sign-bit bucket id from `planes` hyperplanes — the cosine-LSH key
+    * (parity only). The native function makes ONE pass per plane over a
+    * cached ±1 matrix instead of `planes` interpreted HOF traversals per
+    * row.
     */
-  def hyperplaneBucket(emb: Column, planes: Int, dim: Int): Column =
-    graft.functions.VectorFunctions.hyperplane_bucket(emb, planes, dim)
-
-  /** HOF reference implementation of [[hyperplaneBucket]] (parity only). */
   private[graft] def hyperplaneBucketHof(emb: Column, planes: Int, dim: Int): Column = {
     val bits: Seq[Column] = (0 until planes).map { p =>
       val plane = typedlit(planeVec(p, dim))
@@ -68,7 +63,7 @@ object Ann {
     val c = corpus.select(col(cId).as("neighbor_id"), col(embCol).as("c_emb"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
+      .withColumn("cosine", cosine_sim(col("q_emb"), col("c_emb")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rk", row_number().over(w))
@@ -239,7 +234,7 @@ object Ann {
     // (AnnSpec's exactly-once test is the regression guard)
     val scored = c.join(q, "list_id")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
+      .withColumn("cosine", cosine_sim(col("q_emb"), col("c_emb")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rk", row_number().over(w))
@@ -260,12 +255,12 @@ object Ann {
       .map(lit)
     val q = queries
       .select(col(qId).as("query_id"), col(embCol).as("q_emb"),
-        hyperplaneBucket(col(embCol), planes, dim).as("qbucket"))
+        hyperplane_bucket(col(embCol), planes, dim).as("qbucket"))
       .withColumn("bucket",
         explode(array(masks.map(m => col("qbucket").bitwiseXOR(m)): _*)))
       .drop("qbucket")
     val c = corpus.select(col(cId).as("neighbor_id"), col(embCol).as("c_emb"),
-      hyperplaneBucket(col(embCol), planes, dim).as("bucket"))
+      hyperplane_bucket(col(embCol), planes, dim).as("bucket"))
     // no dedup needed: the corpus row carries ONE bucket and the probe
     // buckets are distinct (distinct masks XOR one fixed qbucket), so a
     // (query, neighbor) pair matches at most one probe — dropDuplicates
@@ -273,7 +268,7 @@ object Ann {
     // (AnnSpec's exactly-once test is the regression guard)
     val scored = c.join(q, "bucket")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
+      .withColumn("cosine", cosine_sim(col("q_emb"), col("c_emb")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rk", row_number().over(w))

@@ -2,10 +2,10 @@ package graft.stages
 
 import scala.collection.mutable.ArrayBuilder
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.NativeFn
 
 /** Single-pass CNP (Romanian personal-numeric-code) detector/scrubber.
   *
@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * 11), and the FIXTURES spec requires invalid-checksum 13-digit lookalikes
   * to pass through byte-identical. One digit-run scan ([[spans]]) finds the
   * CNPs for both [[count]] and [[scrub]]; the SQL functions `scrub_cnp` /
-  * `count_cnp` are a native Catalyst `Expression` pair with real `doGenCode`
-  * (a static call, so the stage stays inside whole-stage codegen), O(n)
+  * `count_cnp` are a [[NativeFn]] pair (one static call per row, so the
+  * stage stays inside whole-stage codegen), O(n)
   * over the string — cheaper than a regex candidate scan + UDF validation
   * at 100 TB.
   */
@@ -73,24 +73,9 @@ object CnpScrubber {
     if (out eq str) s else UTF8String.fromString(out)
   }
   def countU(s: UTF8String): Int = count(s.toString)
-}
 
-case class CnpScrubExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any =
-    CnpScrubber.scrubU(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.stages.CnpScrubber.scrubU($c)")
-  override protected def withNewChildInternal(c: Expression): CnpScrubExpr = copy(c)
-  override def prettyName: String = "scrub_cnp"
-}
-
-case class CnpCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(v: Any): Any =
-    CnpScrubber.countU(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.stages.CnpScrubber.countU($c)")
-  override protected def withNewChildInternal(c: Expression): CnpCountExpr = copy(c)
-  override def prettyName: String = "count_cnp"
+  private[graft] val ScrubCnp = NativeFn("scrub_cnp",
+    "graft.stages.CnpScrubber", "scrubU", StringType, Some(StringType))
+  private[graft] val CountCnp = NativeFn("count_cnp",
+    "graft.stages.CnpScrubber", "countU", StringType, Some(IntegerType))
 }

@@ -3,6 +3,7 @@ package graft.stages
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Tokenize
 import graft.synth.Corpus
 
 /** N3 — Gopher/C4-style heuristic quality metrics as pure Catalyst columns.
@@ -16,19 +17,13 @@ import graft.synth.Corpus
   */
 object Heuristics {
 
-  /** Whitespace tokenization of a text column (empty/blank text → empty
+  /** HOF reference of [[Tokenize.words_ws]] (parity tests only): the
+    * whitespace tokenization of a text column (empty/blank text → empty
     * array; `split` leaves empty leading tokens, so filter them out).
     * THE cross-engine tokenization contract ("\s+ split, empties
-    * dropped") — since r6 a native codegen Expression
-    * ([[graft.functions.Tokenize.words_ws]]): the HOF spelling below ran
-    * CodegenFallback-interpreted per token on every repetition/vocab/
-    * line-shape query. [[wordsColHof]] stays as the declarative contract
-    * statement; TokenizeParitySpec pins byte-identical outputs.
+    * dropped"), stated declaratively; the native function runs it in
+    * codegen, and TokenizeParitySpec pins byte-identical outputs.
     */
-  def wordsCol(text: Column): Column =
-    graft.functions.Tokenize.words_ws(text)
-
-  /** HOF reference of [[wordsCol]] (parity tests only). */
   private[graft] def wordsColHof(text: Column): Column =
     filter(split(text, "\\s+"), w => length(w) > 0)
 
@@ -73,16 +68,11 @@ object Heuristics {
   private def nonBlankLines(text: Column): Column =
     filter(split(text, "\n"), l => length(trim(l)) > 0)
 
-  /** Fraction of non-blank lines whose first non-space character is a
-    * bullet marker (Gopher's "lines starting with a bullet point" rule;
-    * marker set: •, ‣, ▪, -, *). Native codegen Expression since r6 (the
-    * r5 ADVICE item: the HOF spelling was CodegenFallback on a declared
-    * corpus-scale filter stage); [[bulletLineFracHof]] is the parity
-    * reference.
+  /** HOF reference of [[graft.functions.LineShape.bullet_line_frac]]
+    * (parity tests only): the fraction of non-blank lines whose first
+    * non-space character is a bullet marker (Gopher's "lines starting with
+    * a bullet point" rule; marker set: •, ‣, ▪, -, *).
     */
-  def bulletLineFrac(text: Column): Column =
-    graft.functions.LineShape.bullet_line_frac(text)
-
   private[graft] def bulletLineFracHof(text: Column): Column = {
     val lines = nonBlankLines(text)
     when(size(lines) === 0, lit(0.0)).otherwise(
@@ -91,13 +81,11 @@ object Heuristics {
         .cast("double") / size(lines))
   }
 
-  /** Fraction of non-blank lines ending in an ellipsis ("..." or "…") —
-    * Gopher's truncated-line signal for scraped link farms / teasers.
-    * Native since r6; [[ellipsisLineFracHof]] is the parity reference.
+  /** HOF reference of [[graft.functions.LineShape.ellipsis_line_frac]]
+    * (parity tests only): the fraction of non-blank lines ending in an
+    * ellipsis ("..." or "…") — Gopher's truncated-line signal for scraped
+    * link farms / teasers.
     */
-  def ellipsisLineFrac(text: Column): Column =
-    graft.functions.LineShape.ellipsis_line_frac(text)
-
   private[graft] def ellipsisLineFracHof(text: Column): Column = {
     val lines = nonBlankLines(text)
     when(size(lines) === 0, lit(0.0)).otherwise(
@@ -107,13 +95,11 @@ object Heuristics {
       })).cast("double") / size(lines))
   }
 
-  /** Fraction of words containing at least one letter (Gopher requires
-    * ≥ 0.8 — filters tables of numbers, markup soup, hash dumps).
-    * Native since r6; [[alphaWordFracHof]] is the parity reference.
+  /** HOF reference of [[graft.functions.LineShape.alpha_word_frac]]
+    * (parity tests only): the fraction of words containing at least one
+    * letter (Gopher requires ≥ 0.8 — filters tables of numbers, markup
+    * soup, hash dumps).
     */
-  def alphaWordFrac(words: Column): Column =
-    graft.functions.LineShape.alpha_word_frac(words)
-
   private[graft] def alphaWordFracHof(words: Column): Column =
     when(size(words) === 0, lit(0.0)).otherwise(
       size(filter(words, w => w.rlike("\\p{L}")))
@@ -124,7 +110,7 @@ object Heuristics {
     */
   def withHeuristics(df: DataFrame, textCol: String = "text"): DataFrame = {
     val t = col(textCol)
-    val w = wordsCol(t)
+    val w = Tokenize.words_ws(t)
     df.withColumns(Map(
       "doc_len_words" -> docLenWords(w),
       "mean_word_len" -> meanWordLen(w),

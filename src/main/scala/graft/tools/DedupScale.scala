@@ -360,8 +360,8 @@ object DedupScale {
         .filter(col("cl_a") === col("cl_b")).count()
       // bucket census: the quadratic budget is Σ C(bucket, 2)
       val buckets = graft.analytics.Materialize(slice.select(
-          graft.similarity.Ann.hyperplaneBucket(col("embedding"), 12, 64)
-            .as("b"))
+          graft.functions.VectorFunctions.hyperplane_bucket(
+            col("embedding"), 12, 64).as("b"))
         .groupBy("b").agg(count(lit(1)).as("sz")))
       val bRow = buckets.agg(count(lit(1)), max("sz"),
         coalesce(sum(col("sz") * (col("sz") - 1) / 2), lit(0.0))).head()

@@ -28,6 +28,28 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(row.getAs[Int]("nm") == 16)
   }
 
+  test("wrong input types fail analysis with an error naming the function") {
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.functions.col
+    import graft.functions.Repetition
+    GraftFunctions.registerAll(spark)
+    spark.sql("SELECT 'a b' AS s, 1 AS i").createOrReplaceTempView("typed")
+    Seq("simhash64(s)", "shingle_hashes(s, 3)", "minhash_signature(s, 16)",
+        "doc_fingerprint(i)", "scrub_cnp(i)", "count_cnp(i)").foreach { call =>
+      val name = call.takeWhile(_ != '(')
+      val e = intercept[AnalysisException](spark.sql(s"SELECT $call FROM typed"))
+      assert(e.getMessage.contains(s"$name requires"), e.getMessage)
+    }
+    val typed = spark.table("typed")
+    Seq("ngram_strings" -> Repetition.ngram_strings(col("s"), 2),
+        "top_ngram_char_frac" -> Repetition.top_ngram_char_frac(col("s"), 2),
+        "dup_ngram_char_frac" -> Repetition.dup_ngram_char_frac(col("s"), 2))
+      .foreach { case (name, c) =>
+        val e = intercept[AnalysisException](typed.select(c))
+        assert(e.getMessage.contains(s"$name requires"), e.getMessage)
+      }
+  }
+
   test("extension class injects the same functions at session build") {
     // same-JVM sessions share the context; newSession gives a fresh
     // function registry to exercise the injection path

@@ -3,7 +3,7 @@ package graft.dedup
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, Tokenize}
 
 /** Dedup operators against scalar oracles on planted fixtures. */
 class DedupSpec extends AnyFunSuite {
@@ -211,7 +211,7 @@ class DedupSpec extends AnyFunSuite {
     val near = base.replaceFirst("cinci", "chiar")
     val other = "cu totul alte cuvinte despre subiecte complet diferite aici " * 8
     val sigs = Seq(base, base, near, other).toDF("text")
-      .select(TextFunctions.simhash64(TextFunctions.normTokens(col("text")))
+      .select(TextFunctions.simhash64(Tokenize.norm_tokens(col("text")))
         .as("s")).collect().map(_.getLong(0))
     assert(sigs(0) == sigs(1))
     assert(TextFunctions.hammingDistance(sigs(0), sigs(2)) <= 8)
@@ -242,7 +242,7 @@ class DedupSpec extends AnyFunSuite {
     val df = rows.toDF("doc_id", "text")
     // driver-side signatures for the brute-force oracle (same expression)
     val sigs = df.select(col("doc_id"), TextFunctions.simhash64(
-        TextFunctions.normTokens(col("text"))).as("sim"))
+        Tokenize.norm_tokens(col("text"))).as("sim"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ids = sigs.keys.toSeq.sorted
     def ham(a: Long, b: Long): Int =

@@ -31,13 +31,13 @@ class LineShapeParitySpec extends AnyFunSuite {
   test("native line-shape metrics ≡ HOF on derived corpus + nasty strings") {
     import spark.implicits._
     val df = (corpus ++ nasty).toDF("text")
-    val w = Heuristics.wordsCol(col("text"))
+    val w = Tokenize.words_ws(col("text"))
     val rows = df.select(
-      Heuristics.bulletLineFrac(col("text")).as("b_n"),
+      LineShape.bullet_line_frac(col("text")).as("b_n"),
       Heuristics.bulletLineFracHof(col("text")).as("b_h"),
-      Heuristics.ellipsisLineFrac(col("text")).as("e_n"),
+      LineShape.ellipsis_line_frac(col("text")).as("e_n"),
       Heuristics.ellipsisLineFracHof(col("text")).as("e_h"),
-      Heuristics.alphaWordFrac(w).as("a_n"),
+      LineShape.alpha_word_frac(w).as("a_n"),
       Heuristics.alphaWordFracHof(Heuristics.wordsColHof(col("text"))).as("a_h")
     ).collect()
     rows.zipWithIndex.foreach { case (r, i) =>
@@ -51,9 +51,9 @@ class LineShapeParitySpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq[Option[String]](None).toDF("text")
     val r = df.select(
-      Heuristics.bulletLineFrac(col("text")),
-      Heuristics.ellipsisLineFrac(col("text")),
-      Heuristics.alphaWordFrac(Heuristics.wordsCol(col("text")))).collect()(0)
+      LineShape.bullet_line_frac(col("text")),
+      LineShape.ellipsis_line_frac(col("text")),
+      LineShape.alpha_word_frac(Tokenize.words_ws(col("text")))).collect()(0)
     assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2))
   }
 }

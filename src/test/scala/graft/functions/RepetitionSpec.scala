@@ -73,15 +73,61 @@ class RepetitionSpec extends AnyFunSuite {
   }
 
   test("interpreted eval matches the codegen path") {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.unsafe.types.UTF8String
+    import graft.stages.CnpScrubber
     val toks = new GenericArrayData(
       "a b a b c".split(" ").map(UTF8String.fromString(_)).toArray[Any])
-    // static helpers ARE the codegen body; nullSafeEval routes through them
-    assert(Repetition.topNgramFrac(toks, 2) ==
-      TopNgramFracExpr(null, 2).nullSafeEval(toks))
-    assert(Repetition.dupNgramFrac(toks, 2) ==
-      DupNgramFracExpr(null, 2).nullSafeEval(toks))
+    val cnp = graft.synth.SynthPages.makeCnp(42L, 1L, valid = true)
+    val text = UTF8String.fromString(
+      s"- Ana are  Mere...\n  • 12 34\ncnp $cnp aici")
+    val words = Tokenize.wordsWs(text)
+    val shingles = TextFunctions.shingles(words, 2)
+    val probs = new GenericArrayData(Array[Any](0.5, -1.0, 0.5))
+    // every declared native function: (declaration, input, int constants,
+    // its static method on that input)
+    val cases: Seq[(NativeFn, Any, Seq[Int], Any)] = Seq(
+      (LineShape.BulletLineFrac, text, Nil, LineShape.bulletLineFrac(text)),
+      (LineShape.EllipsisLineFrac, text, Nil,
+        LineShape.ellipsisLineFrac(text)),
+      (LineShape.AlphaWordFrac, words, Nil, LineShape.alphaWordFrac(words)),
+      (Tokenize.WordsWs, text, Nil, words),
+      (Tokenize.NormTokens, text, Nil, Tokenize.normTokens(text)),
+      (TextFunctions.DocFingerprint, text, Nil,
+        TextFunctions.fingerprint(text)),
+      (TextFunctions.SimHash64, words, Nil,
+        TextFunctions.simhashTokens(words)),
+      (TextFunctions.ShingleHashes, words, Seq(2), shingles),
+      (TextFunctions.MinHashSignature, shingles, Seq(8),
+        TextFunctions.minhashSigK(shingles, 8)),
+      (Repetition.NgramStrings, toks, Seq(2),
+        Repetition.ngramStringsData(toks, 2)),
+      (Repetition.TopNgramFrac, toks, Seq(2), Repetition.topNgramFrac(toks, 2)),
+      (Repetition.DupNgramFrac, toks, Seq(2), Repetition.dupNgramFrac(toks, 2)),
+      (ArrayMath.SoftmaxArr, probs, Nil, ArrayMath.softmaxArr(probs)),
+      (ArrayMath.NegIndexedSorted, probs, Nil,
+        ArrayMath.negIndexedSorted(probs)),
+      (ArrayMath.SortByXxHash, words, Nil, ArrayMath.sortByXxHash(words)),
+      (CnpScrubber.ScrubCnp, text, Nil, CnpScrubber.scrubU(text)),
+      (CnpScrubber.CountCnp, text, Nil, CnpScrubber.countU(text)))
+    assert(cases.map(_._1.name).distinct.size == 17)
+    cases.foreach { case (fn, in, ints, expected) =>
+      val e = fn.expr(BoundReference(0, fn.input, nullable = true), ints)
+      val row = InternalRow(in)
+      def scala(v: Any) = convertToScala(v, e.dataType)
+      // interpreted: reflection on the same static method
+      assert(scala(e.eval(row)) == scala(expected), fn.name)
+      // generated: the one static call by name, no reflection
+      val code = e.genCode(new CodegenContext).code.toString
+      assert(code.contains(s"${fn.owner}.${fn.method}("), fn.name)
+      assert(!code.contains("invoke("), fn.name)
+      val generated = GenerateUnsafeProjection.generate(Seq(e)).apply(row)
+      assert(scala(generated.get(0, e.dataType)) == scala(expected), fn.name)
+    }
     // and the DataFrame path (whole-stage codegen) agrees with the scalar
     val (top, dup) = fracs("a b a b c", 2)
     assert(top == Repetition.topNgramFrac(toks, 2))

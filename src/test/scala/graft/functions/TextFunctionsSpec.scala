@@ -4,9 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Token counting: whitespace (X7) and the BPE-ish pretokenizer variant,
-  * pinned against hand-counted expectations (the oracle checks corpus-level
-  * aggregates; these pin the per-string semantics).
+/** Token counting: whitespace (`size(words_ws)`, the `\s+`-split,
+  * empties-dropped contract TokenizeParitySpec pins) and the BPE-ish
+  * pretokenizer variant, pinned against hand-counted expectations (the
+  * oracle checks corpus-level aggregates; these pin the per-string
+  * semantics).
   */
 class TextFunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -22,7 +24,7 @@ class TextFunctionsSpec extends AnyFunSuite {
   private def countWs(s: String): Int = {
     import spark.implicits._
     Seq(s).toDF("text")
-      .select(TextFunctions.tokenCount(col("text")).as("n"))
+      .select(size(Tokenize.words_ws(col("text"))).as("n"))
       .head().getInt(0)
   }
 

@@ -8,6 +8,7 @@ import graft.TestSpark
 class AnnSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import org.apache.spark.sql.functions._
+  import graft.functions.VectorFunctions.{cosine_sim, hyperplane_bucket}
 
   private val dim = 16
   private def vec(id: Long): Array[Double] =
@@ -117,14 +118,14 @@ class AnnSpec extends AnyFunSuite {
     val df = corpus(300)
     val cos = df.as("a").crossJoin(df.limit(5).as("b"))
       .select(
-        Ann.cosine(col("a.embedding"), col("b.embedding")).as("native"),
+        cosine_sim(col("a.embedding"), col("b.embedding")).as("native"),
         Ann.cosineHof(col("a.embedding"), col("b.embedding")).as("hof"))
       .collect()
     assert(cos.length == 1500)
     cos.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
       s"cosine diverges: ${r.getDouble(0)} vs ${r.getDouble(1)}"))
     val buckets = df.select(
-        Ann.hyperplaneBucket(col("embedding"), 8, dim).as("native"),
+        hyperplane_bucket(col("embedding"), 8, dim).as("native"),
         Ann.hyperplaneBucketHof(col("embedding"), 8, dim).as("hof"))
       .collect()
     buckets.foreach(r => assert(r.getLong(0) == r.getLong(1)))
@@ -137,7 +138,7 @@ class AnnSpec extends AnyFunSuite {
       (2L, Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0)),      // mismatch: null
       (3L, Seq(1.0), Seq(1.0, 2.0, 3.0))).toDF("id", "a", "b")
     val rows = df.select(col("id"),
-        Ann.cosine(col("a"), col("b")).as("native"),
+        cosine_sim(col("a"), col("b")).as("native"),
         Ann.cosineHof(col("a"), col("b")).as("hof"))
       .orderBy("id").collect()
     assert(!rows(0).isNullAt(1) && rows(0).getDouble(1) == rows(0).getDouble(2))
@@ -148,7 +149,7 @@ class AnnSpec extends AnyFunSuite {
     // malformed rows out of every bucket join)
     val b = Seq((1L, Seq(1.0, -2.0, 0.5)), (2L, Seq(1.0, -2.0)))
       .toDF("id", "emb")
-      .select(col("id"), Ann.hyperplaneBucket(col("emb"), 4, 3).as("bk"))
+      .select(col("id"), hyperplane_bucket(col("emb"), 4, 3).as("bk"))
       .orderBy("id").collect()
     assert(!b(0).isNullAt(1))
     assert(b(1).isNullAt(1), "short embedding must not land in a bucket")
@@ -158,12 +159,12 @@ class AnnSpec extends AnyFunSuite {
     import spark.implicits._
     val ints = Seq((1L, Seq(1, 2, 3))).toDF("id", "emb")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      ints.select(Ann.cosine(col("emb"), col("emb"))).collect()
+      ints.select(cosine_sim(col("emb"), col("emb"))).collect()
     }
     assert(e.getMessage.toLowerCase.contains("array<double>")
       || e.getMessage.contains("cosine_sim"))
     val e2 = intercept[org.apache.spark.sql.AnalysisException] {
-      ints.select(Ann.hyperplaneBucket(col("emb"), 4, 3)).collect()
+      ints.select(hyperplane_bucket(col("emb"), 4, 3)).collect()
     }
     assert(e2.getMessage.contains("hyperplane_bucket")
       || e2.getMessage.toLowerCase.contains("array<double>"))
@@ -174,14 +175,14 @@ class AnnSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((1L, Seq(1.0, -2.0, 0.5))).toDF("id", "emb")
     val e = intercept[IllegalArgumentException] {
-      df.select(Ann.hyperplaneBucket(col("emb"), 65, 3))
+      df.select(hyperplane_bucket(col("emb"), 65, 3))
     }
     assert(e.getMessage.contains("[1, 64]"), e.getMessage)
     intercept[IllegalArgumentException] {
-      df.select(Ann.hyperplaneBucket(col("emb"), 0, 3))
+      df.select(hyperplane_bucket(col("emb"), 0, 3))
     }
     // 64 is the full word and legal: bit 63 is the sign bit, no wrap
-    df.select(Ann.hyperplaneBucket(typedLit(Seq.fill(64)(1.0)), 64, 64))
+    df.select(hyperplane_bucket(typedLit(Seq.fill(64)(1.0)), 64, 64))
       .head().getLong(0): Unit
   }
 
@@ -259,10 +260,10 @@ class AnnSpec extends AnyFunSuite {
   test("hyperplane bucket is deterministic and balanced enough") {
     val df = corpus(500)
     val buckets = df.select(
-      Ann.hyperplaneBucket(col("embedding"), 6, dim).as("b"))
+      hyperplane_bucket(col("embedding"), 6, dim).as("b"))
       .groupBy("b").count().collect()
     assert(buckets.length > 4, "all vectors in one bucket — LSH degenerate")
-    val again = df.select(Ann.hyperplaneBucket(col("embedding"), 6, dim).as("b"))
+    val again = df.select(hyperplane_bucket(col("embedding"), 6, dim).as("b"))
       .groupBy("b").count().collect()
     assert(buckets.map(r => (r.getLong(0), r.getLong(1))).toSet ==
       again.map(r => (r.getLong(0), r.getLong(1))).toSet)

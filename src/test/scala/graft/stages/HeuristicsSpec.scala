@@ -60,10 +60,11 @@ class HeuristicsSpec extends AnyFunSuite {
 
   private def lineShape(text: String): (Double, Double, Double) = {
     import spark.implicits._
+    import graft.functions.LineShape._
     val t = org.apache.spark.sql.functions.col("text")
     val r = Seq(text).toDF("text")
-      .select(Heuristics.bulletLineFrac(t), Heuristics.ellipsisLineFrac(t),
-        Heuristics.alphaWordFrac(Heuristics.wordsCol(t)))
+      .select(bullet_line_frac(t), ellipsis_line_frac(t),
+        alpha_word_frac(graft.functions.Tokenize.words_ws(t)))
       .head()
     (r.getDouble(0), r.getDouble(1), r.getDouble(2))
   }
