@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   * This operator produces the identical contiguous 1-based numbering
   * distributed: range-repartition by the sort key (non-overlapping key
   * ranges per partition), rank WITHIN each partition (a distributed
-  * window keyed by partition id), then add each partition's cumulative
-  * row offset via a broadcast of the tiny per-partition count manifest
-  * (`numPartitions` rows). Two passes over the data, no single-partition
-  * stage anywhere.
+  * window keyed by partition id and tag), then add each partition's
+  * cumulative per-tag row offset via a broadcast of the tiny count
+  * manifest (`numPartitions` × tags rows). Two passes over the data, no
+  * single-partition stage anywhere.
   *
   * Determinism: like any row_number, the numbering is deterministic iff
   * `sortCols` is a total order (ties land in one partition — the
@@ -24,15 +24,30 @@ import org.apache.spark.sql.functions._
   */
 object Align {
 
-  /** EAGER, not lazy: calling this materializes the whole range-partitioned
-    * input (localCheckpoint) and collects the per-partition row census at
-    * CALL time — required so the offsets and the ranking read one frozen
-    * partitioning (see the comment below). Do not construct the returned
-    * frame speculatively: building it and discarding it (or branching on
-    * it lazily) still pays the full materialization.
+  /** Global row numbers computed independently WITHIN each value of
+    * `tagCol`, in one pass (r6 optimization): when the sides of an
+    * alignment join are filters of ONE table (the reference's
+    * `comparison.py` pairs two status slices of the same result set),
+    * numbering each side separately costs two scans, two eager
+    * materializations and two driver censuses. Here the tagged union is
+    * range-partitioned by `sortCols` ONCE (tags interleave in the same
+    * key ranges — ranges don't need to align with tags for correctness,
+    * since ranking partitions by (__pid, tag)); one census counts
+    * per-(partition, tag) rows; per-tag cumulative offsets then make the
+    * within-(partition, tag) rank globally contiguous per tag — the
+    * numbers are IDENTICAL to `row_number() OVER (PARTITION BY tag ORDER
+    * BY sortCols)` (AlignSpec pins it). A constant tag numbers the whole
+    * frame.
+    *
+    * EAGER, not lazy: calling this materializes the whole range-partitioned
+    * input (localCheckpoint) and collects the per-(partition, tag) row
+    * census at CALL time — required so the offsets and the ranking read one
+    * frozen partitioning (see the comment below). Do not construct the
+    * returned frame speculatively: building it and discarding it (or
+    * branching on it lazily) still pays the full materialization.
     */
-  def withGlobalRowNumber(df: DataFrame, sortCols: Seq[Column],
-      out: String, numPartitions: Int = 0): DataFrame = {
+  def withGlobalRowNumberByTag(df: DataFrame, tagCol: String,
+      sortCols: Seq[Column], out: String, numPartitions: Int = 0): DataFrame = {
     val n = if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
     // The range exchange samples sort-key boundaries per execution: if the
@@ -49,48 +64,6 @@ object Align {
     // unreachable. Caveat (standard for localCheckpoint): an executor loss
     // fails the query instead of recomputing — on a preemptible cluster,
     // set spark.graft.checkpoint.reliable=true (see [[Materialize]]).
-    val ranged = df.repartitionByRange(n, sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .transform(Materialize.apply)
-    // per-partition counts → cumulative offsets, computed driver-side over
-    // the tiny n-row manifest
-    val counts = ranged.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets =
-      if (counts.isEmpty) Seq.empty[(Int, Long)]
-      else counts.scanLeft((-1, 0L)) { case ((_, cum), (pid, cnt)) =>
-        (pid, cum + cnt)
-      }.sliding(2).collect { case Array((_, off), (pid, _)) => (pid, off) }
-        .toSeq
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offsetsDf = offsets.toDF("__pid", "__off")
-    val local = Window.partitionBy("__pid").orderBy(sortCols: _*)
-    ranged.join(broadcast(offsetsDf), "__pid")
-      .withColumn(out, row_number().over(local) + col("__off"))
-      .drop("__pid")
-  }
-
-  /** [[withGlobalRowNumber]] computed independently WITHIN each value of
-    * `tagCol`, in one pass (r6 optimization): when the sides of an
-    * alignment join are filters of ONE table (the reference's
-    * `comparison.py` pairs two status slices of the same result set), a
-    * per-side [[withGlobalRowNumber]] costs two scans, two eager
-    * materializations and two driver censuses. Here the tagged union is
-    * range-partitioned by `sortCols` ONCE (tags interleave in the same
-    * key ranges — ranges don't need to align with tags for correctness,
-    * since ranking partitions by (__pid, tag)); one census counts
-    * per-(partition, tag) rows; per-tag cumulative offsets then make the
-    * within-(partition, tag) rank globally contiguous per tag — the
-    * numbers are IDENTICAL to running [[withGlobalRowNumber]] on each
-    * tag's slice (AlignSpec pins it).
-    *
-    * Same eager-materialization caveats as [[withGlobalRowNumber]].
-    */
-  def withGlobalRowNumberByTag(df: DataFrame, tagCol: String,
-      sortCols: Seq[Column], out: String, numPartitions: Int = 0): DataFrame = {
-    val n = if (numPartitions > 0) numPartitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
     val ranged = df.repartitionByRange(n, sortCols: _*)
       .withColumn("__pid", spark_partition_id())
       .transform(Materialize.apply)
@@ -115,7 +88,7 @@ object Align {
       }
       l
     }
-    // a LocalRelation (driver-computed manifest), as in withGlobalRowNumber
+    // a LocalRelation: the driver-computed manifest, broadcast
     val offsetsDf = spark.createDataFrame(offsetRows,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(tagCol,

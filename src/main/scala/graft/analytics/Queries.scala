@@ -936,7 +936,7 @@ object Queries {
       .orderBy("lang_pred", "keep")
   }
 
-  // --- multimodal: binary payload metadata + batched feature extraction.
+  // --- multimodal: binary payload metadata + per-partition feature extraction.
   //     Images (hash%3==0: synthetic PNG) decode FOR REAL via javax.imageio
   //     → width/height/channel stats; WAV audio (hash%3==1: synthetic PCM)
   //     decodes FOR REAL via javax.sound.sampled → rate/channels/duration/
@@ -1276,7 +1276,7 @@ object Queries {
   }
 
   //  3. q_smallmodel_records — the REAL deterministic multi-task scorer
-  //     (hashed-ngram heads, batched mapPartitions inference) emitting the
+  //     (hashed-ngram heads, mapPartitions inference) emitting the
   //     full record schema; not SQL-expressible → golden-fixture pinned
   //     (TaskScorerSpec) and rows-only here.
   register("q_smallmodel_records", null) { (s, dir) =>

@@ -71,15 +71,13 @@ object Dedup {
     * NumHashes longs via the one-pass native expression) columns.
     * Pure expressions — no shuffle.
     */
-  def withMinHash(df: DataFrame, textCol: String, shingleN: Int = 3): DataFrame =
+  private def withMinHash(df: DataFrame, textCol: String, shingleN: Int): DataFrame =
     df.withColumn("shingles",
         shingle_hashes(norm_tokens(col(textCol)), shingleN))
       .withColumn("minhash", minhash_signature(col("shingles"), NumHashes))
 
-  /** LSH band key: hash of the band's r signature values + band index.
-    * `private[graft]` so the streaming twin buckets identically.
-    */
-  private[graft] def bandKey(b: Int): Column =
+  /** LSH band key: hash of the band's r signature values + band index. */
+  private def bandKey(b: Int): Column =
     xxhash64(lit(b) +: (0 until RowsPerBand).map(r =>
       col("minhash").getItem(b * RowsPerBand + r)): _*)
 
@@ -348,38 +346,6 @@ object Dedup {
           "candidate pair(s) not examined — near-dup recall inside those " +
           "buckets is adjacency/representative only")
     stats
-  }
-
-  /** Batch EXACT re-verification of a candidate pair frame against the
-    * stored documents — the bridge that composes estimate-based paths back
-    * to exactness. [[graft.streaming.StreamOps.nearDupStream]] emits
-    * signature-agreement ESTIMATES of Jaccard (bounded state cannot hold
-    * shingle sets); piping its hits through this function yields the same
-    * verified semantics as [[minhashNearDups]]: join each (id_a, id_b) to
-    * its texts, recompute the shingle sets with the SAME parameters, keep
-    * exact J ≥ `minJaccard`.
-    *
-    * Scale shape: the document side is PRUNED to ids that appear in a hit
-    * (left-semi join) BEFORE any shingling, so tokenization cost is linear
-    * in the hit set, not the corpus; the pruned set frame is materialized
-    * once and feeds both verify joins. Run the stream at a LOWER estimate
-    * threshold than the batch target (estimate se ≈ √(J(1−J)/32) ≈ 0.07 at
-    * J = 0.8) so its hit superset covers the exact answer, then re-verify
-    * at the target — StreamOpsSpec pins stream ∘ reverify ≡ batch.
-    */
-  def reverifyPairs(pairs: DataFrame, docs: DataFrame, idCol: String,
-      textCol: String, minJaccard: Double, shingleN: Int = 3): DataFrame = {
-    val hits = pairs.select("id_a", "id_b").distinct()
-    val hitIds = hits.select(col("id_a").as("id"))
-      .unionByName(hits.select(col("id_b").as("id"))).distinct()
-    val sets = graft.analytics.Materialize(
-      docs.select(col(idCol).as("id"), col(textCol).as("__text"))
-        .join(hitIds.hint("merge"), Seq("id"), "left_semi")
-        .select(col("id"), array_distinct(
-          shingle_hashes(norm_tokens(col("__text")), shingleN)).as("sh"))
-        .filter(size(col("sh")) > 0))
-    verifyJoin(hits, sets, Nil, "sh", graft.functions.ArrayMath.jaccard_sets,
-      "jaccard", minJaccard)
   }
 
   // ---- SimHash ----------------------------------------------------------

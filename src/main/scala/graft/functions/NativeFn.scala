@@ -26,24 +26,38 @@ import org.apache.spark.sql.types.DataType
   * @param input   the one accepted input type (array element nullability
   *                is ignored); anything else fails analysis
   * @param result  the result type; `None` returns the input type unchanged
-  * @param intArgs how many trailing int constants the method takes
+  * @param intArgs name and allowed range of each trailing int constant the
+  *                method takes; a constant outside its range fails analysis
   */
 final case class NativeFn(name: String, owner: String, method: String,
-    input: DataType, result: Option[DataType], intArgs: Int = 0) {
+    input: DataType, result: Option[DataType],
+    intArgs: Seq[(String, Range.Inclusive)] = Nil) {
 
   /** This function over a Column, with its `intArgs` constants. */
   def apply(child: Column, ints: Int*): Column =
     ColumnShim.column(expr(ColumnShim.expr(child), ints))
 
   def expr(child: Expression, ints: Seq[Int]): NativeCall = {
-    require(ints.length == intArgs,
-      s"$name takes $intArgs int constant(s), got ${ints.length}")
+    require(ints.length == intArgs.length,
+      s"$name takes ${intArgs.length} int constant(s), got ${ints.length}")
     NativeCall(this, child, ints)
   }
 
+  /** The first constant outside its declared range, as a message naming
+    * this function and the bound.
+    */
+  private[functions] def outOfRange(ints: Seq[Int]): Option[String] =
+    intArgs.zip(ints).collectFirst { case ((param, range), v)
+        if !range.contains(v) =>
+      val bound =
+        if (range.end == Int.MaxValue) s"$param >= ${range.start}"
+        else s"$param in [${range.start}, ${range.end}]"
+      s"$name requires $bound, got $v"
+    }
+
   @transient private lazy val target: Method =
     Class.forName(owner).getMethod(method,
-      CodeGenerator.javaClass(input) +: Seq.fill(intArgs)(Integer.TYPE): _*)
+      CodeGenerator.javaClass(input) +: intArgs.map(_ => Integer.TYPE): _*)
   require(target.getReturnType ==
     CodeGenerator.javaClass(result.getOrElse(input)),
     s"$owner.$method returns ${target.getReturnType}, $name declares " +
@@ -56,8 +70,10 @@ final case class NativeFn(name: String, owner: String, method: String,
 
 /** One row-wise call of a [[NativeFn]] on `child` with int constants
   * `ints`. A plain `UnaryExpression`: null in, null out; foldable and
-  * nullable as its child. Prints as `name(child, ints...)`, e.g.
-  * `minhash_signature(sh#12, 32)`; its SQL is `name(child)`.
+  * nullable as its child. Analysis refuses a child of the wrong type and a
+  * constant outside its declared range, so neither reaches a task. Prints
+  * as `name(child, ints...)`, e.g. `minhash_signature(sh#12, 32)`; its SQL
+  * is `name(child)`.
   */
 case class NativeCall(fn: NativeFn, child: Expression, ints: Seq[Int])
     extends UnaryExpression {
@@ -65,10 +81,11 @@ case class NativeCall(fn: NativeFn, child: Expression, ints: Seq[Int])
   override def dataType: DataType = fn.result.getOrElse(child.dataType)
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (DataTypeUtils.sameType(child.dataType, fn.input))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"${fn.name} requires " +
-      s"${fn.input.catalogString}, got ${child.dataType.catalogString}")
+    if (!DataTypeUtils.sameType(child.dataType, fn.input))
+      TypeCheckResult.TypeCheckFailure(s"${fn.name} requires " +
+        s"${fn.input.catalogString}, got ${child.dataType.catalogString}")
+    else fn.outOfRange(ints).fold[TypeCheckResult](
+      TypeCheckResult.TypeCheckSuccess)(TypeCheckResult.TypeCheckFailure)
 
   override def nullSafeEval(v: Any): Any = fn.invoke(v, ints)
 

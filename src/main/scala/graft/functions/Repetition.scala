@@ -35,35 +35,29 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
   */
 object Repetition {
 
-  def top_ngram_char_frac(tokens: Column, n: Int): Column = {
-    require(n >= 1, s"n must be >= 1, got $n")
+  def top_ngram_char_frac(tokens: Column, n: Int): Column =
     TopNgramFrac(tokens, n)
-  }
 
-  def dup_ngram_char_frac(tokens: Column, n: Int): Column = {
-    require(n >= 1, s"n must be >= 1, got $n")
+  def dup_ngram_char_frac(tokens: Column, n: Int): Column =
     DupNgramFrac(tokens, n)
-  }
 
   /** The space-joined n-gram STRINGS of a token array (empty when < n
     * tokens) — one codegen'd pass; the HOF spelling
     * (`transform(sequence(...), i => array_join(slice(...)))`) is
     * CodegenFallback and ~7× slower on the vocab query.
     */
-  def ngram_strings(tokens: Column, n: Int): Column = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    NgramStrings(tokens, n)
-  }
+  def ngram_strings(tokens: Column, n: Int): Column = NgramStrings(tokens, n)
 
   private[graft] val TopNgramFrac = NativeFn("top_ngram_char_frac",
     "graft.functions.Repetition", "topNgramFrac", ArrayType(StringType),
-    Some(DoubleType), intArgs = 1)
+    Some(DoubleType), Seq("n" -> (1 to Int.MaxValue)))
   private[graft] val DupNgramFrac = NativeFn("dup_ngram_char_frac",
     "graft.functions.Repetition", "dupNgramFrac", ArrayType(StringType),
-    Some(DoubleType), intArgs = 1)
+    Some(DoubleType), Seq("n" -> (1 to Int.MaxValue)))
   private[graft] val NgramStrings = NativeFn("ngram_strings",
     "graft.functions.Repetition", "ngramStringsData", ArrayType(StringType),
-    Some(ArrayType(StringType, containsNull = false)), intArgs = 1)
+    Some(ArrayType(StringType, containsNull = false)),
+    Seq("n" -> (1 to Int.MaxValue)))
 
   // ---- static helpers (called from generated code) ------------------------
 

@@ -56,10 +56,13 @@ object TextFunctions {
     Some(LongType))
   private[graft] val ShingleHashes = NativeFn("shingle_hashes",
     "graft.functions.TextFunctions", "shingles", ArrayType(StringType),
-    Some(ArrayType(LongType, containsNull = false)), intArgs = 1)
+    Some(ArrayType(LongType, containsNull = false)),
+    Seq("n" -> (1 to Int.MaxValue)))
+  /** k indexes the [[MinHashMaxK]]-entry affine tables. */
   private[graft] val MinHashSignature = NativeFn("minhash_signature",
     "graft.functions.TextFunctions", "minhashSigK", ArrayType(LongType),
-    Some(ArrayType(LongType, containsNull = false)), intArgs = 1)
+    Some(ArrayType(LongType, containsNull = false)),
+    Seq("k" -> (1 to MinHashMaxK)))
 
   // ---- static helpers (called from generated code) ------------------------
 
@@ -135,8 +138,11 @@ object TextFunctions {
     new GenericArrayData(out)
   }
 
-  /** Deterministic affine constants for the MinHash family (odd a_j). */
-  val MinHashMaxK = 64
+  /** Deterministic affine constants for the MinHash family (odd a_j).
+    * `final`: a compile-time constant, so the [[MinHashSignature]]
+    * declaration above reads 64, not the field's uninitialized 0.
+    */
+  final val MinHashMaxK = 64
   val minA: Array[Long] =
     Array.tabulate(MinHashMaxK)(j => graft.synth.Det.mix64(0xa5a5a5a5L + j) | 1L)
   val minB: Array[Long] =

@@ -8,8 +8,8 @@ import javax.imageio.ImageIO
 import org.apache.spark.sql.Dataset
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed metadata,
-  * decode/feature-extract as batched `mapPartitions` (the JVM analogue of
-  * `mapInPandas` — batch shape, schema and partitioning are real).
+  * decode/feature-extract as one `mapPartitions` pass (the JVM analogue of
+  * `mapInPandas` — schema and partitioning are real).
   *
   * Image decode is REAL: `javax.imageio` ships in the JDK (PNG/JPEG/GIF/BMP)
   * and produces width/height/channel-statistics features. Non-image or
@@ -175,7 +175,7 @@ object Multimodal {
   /** STUB — deterministic fake decoder standing in for the compressed
     * audio/video codecs this container lacks (mp3, webm, …). Produces a
     * feature vector as a pure function of the payload bytes so tests are
-    * reproducible. The Spark-side contract (batched iterator in, fixed-dim
+    * reproducible. The Spark-side contract (payload bytes in, fixed-dim
     * float vector out) is exactly what a real codec plugs into — see
     * [[decodeImageFeatures]] / [[decodeAudioFeatures]] for the image and
     * WAV paths that ARE real.
@@ -195,36 +195,30 @@ object Multimodal {
   final case class MediaFeatures(url: String, mime: String, n_bytes: Long,
       decoded: Boolean, features: Array[Float])
 
-  /** Batched feature extraction over (url, payload) rows. Batch size mirrors
-    * the reference's inference batching (32, `small_model_inference/
-    * small_model_inference.py:46`); the iterator shape keeps one decoder
-    * context per partition. Images and WAV audio decode for real;
-    * everything else gets the labeled stub with `decoded = false`.
+  /** Feature extraction over (url, payload) rows, one `mapPartitions`
+    * pass: every row of a partition decodes inside one task, and a
+    * vectorized codec (or a JNI batch API) slots in here without touching
+    * the plan. Images and WAV audio decode for real; everything else gets
+    * the labeled stub with `decoded = false`.
     */
   def extractFeatures(rows: Dataset[(String, Array[Byte])],
-      dim: Int = ImageFeatureDim, batchSize: Int = 32): Dataset[MediaFeatures] = {
+      dim: Int = ImageFeatureDim): Dataset[MediaFeatures] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.mapPartitions { iter =>
-      iter.grouped(batchSize).flatMap { batch =>
-        // the whole batch decodes inside one task; a vectorized codec
-        // (or a JNI batch API) slots in here without touching the plan
-        batch.map { case (url, payload) =>
-          val mime = sniffMimeScalar(payload)
-          val real =
-            if (mime.startsWith("image/")) decodeImageFeatures(payload, dim)
-            else if (mime == "audio/wav") decodeAudioFeatures(payload, dim)
-            else None
-          real match {
-            case Some(f) =>
-              MediaFeatures(url, mime, payload.length.toLong, decoded = true, f)
-            case None =>
-              MediaFeatures(url, mime, payload.length.toLong, decoded = false,
-                stubDecodeFeatures(payload, dim))
-          }
-        }
+    rows.mapPartitions(_.map { case (url, payload) =>
+      val mime = sniffMimeScalar(payload)
+      val real =
+        if (mime.startsWith("image/")) decodeImageFeatures(payload, dim)
+        else if (mime == "audio/wav") decodeAudioFeatures(payload, dim)
+        else None
+      real match {
+        case Some(f) =>
+          MediaFeatures(url, mime, payload.length.toLong, decoded = true, f)
+        case None =>
+          MediaFeatures(url, mime, payload.length.toLong, decoded = false,
+            stubDecodeFeatures(payload, dim))
       }
-    }
+    })
   }
 
   final case class ResizedImage(url: String, mime: String, orig_w: Int,
@@ -263,32 +257,28 @@ object Multimodal {
       }
     } catch { case _: Exception => None }
 
-  /** Distributed resize over (url, payload) rows — same batched
-    * `mapPartitions` contract as [[extractFeatures]]. Non-image or
-    * undecodable payloads pass through with `decoded = false` and an empty
-    * payload (rows are never dropped — C6 discipline).
+  /** Distributed resize over (url, payload) rows — same `mapPartitions`
+    * contract as [[extractFeatures]]. Non-image or undecodable payloads
+    * pass through with `decoded = false` and an empty payload (rows are
+    * never dropped — C6 discipline).
     */
-  def resizeImages(rows: Dataset[(String, Array[Byte])], maxDim: Int = 256,
-      batchSize: Int = 32): Dataset[ResizedImage] = {
+  def resizeImages(rows: Dataset[(String, Array[Byte])],
+      maxDim: Int = 256): Dataset[ResizedImage] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.mapPartitions { iter =>
-      iter.grouped(batchSize).flatMap { batch =>
-        batch.map { case (url, payload) =>
-          val mime = sniffMimeScalar(payload)
-          val real =
-            if (mime.startsWith("image/")) resizeImage(payload, maxDim)
-            else None
-          real match {
-            case Some((png, w, h, ow, oh)) =>
-              ResizedImage(url, mime, w, h, ow, oh, png, decoded = true)
-            case None =>
-              ResizedImage(url, mime, 0, 0, 0, 0, Array.emptyByteArray,
-                decoded = false)
-          }
-        }
+    rows.mapPartitions(_.map { case (url, payload) =>
+      val mime = sniffMimeScalar(payload)
+      val real =
+        if (mime.startsWith("image/")) resizeImage(payload, maxDim)
+        else None
+      real match {
+        case Some((png, w, h, ow, oh)) =>
+          ResizedImage(url, mime, w, h, ow, oh, png, decoded = true)
+        case None =>
+          ResizedImage(url, mime, 0, 0, 0, 0, Array.emptyByteArray,
+            decoded = false)
       }
-    }
+    })
   }
 
   final case class FrameSample(url: String, mime: String, frame_idx: Int,
@@ -345,44 +335,40 @@ object Multimodal {
     * payload. WAV samples REAL PCM windows via [[sampleWavWindows]];
     * video/compressed-audio payloads (no codec in this container) emit
     * deterministic STUB frames flagged `decoded = false` — the Spark-side
-    * contract (flatMap fan-out, schema, time offsets, batch shape) is what
-    * a real codec plugs into.
+    * contract (flatMap fan-out, schema, time offsets) is what a real codec
+    * plugs into.
     */
-  def sampleFrames(rows: Dataset[(String, Array[Byte])], n: Int = 4,
-      batchSize: Int = 32): Dataset[FrameSample] = {
+  def sampleFrames(rows: Dataset[(String, Array[Byte])],
+      n: Int = 4): Dataset[FrameSample] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.mapPartitions { iter =>
-      iter.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { case (url, payload) =>
-          val mime = sniffMimeScalar(payload)
-          val real =
-            if (mime == "audio/wav") sampleWavWindows(payload, n) else None
-          real match {
-            case Some(wins) =>
-              wins.zipWithIndex.map { case ((t, bytes), i) =>
-                FrameSample(url, mime, i, t, bytes, decoded = true)
-              }
-            case None =>
-              // one pass over the payload; each frame reseeds from (hash+i)
-              val base = payload.foldLeft(0x9e3779b97f4a7c15L)((a, x) =>
-                graft.synth.Det.mix64(a ^ x))
-              (0 until n).map { i =>
-                // deterministic fake frame: payload-hash-seeded bytes
-                val b = new Array[Byte](64)
-                var hsh = graft.synth.Det.mix64(base + i)
-                var j = 0
-                while (j < b.length) {
-                  hsh = graft.synth.Det.mix64(hsh)
-                  b(j) = hsh.toByte
-                  j += 1
-                }
-                FrameSample(url, mime, i, -1f, b, decoded = false)
-              }
+    rows.mapPartitions(_.flatMap { case (url, payload) =>
+      val mime = sniffMimeScalar(payload)
+      val real =
+        if (mime == "audio/wav") sampleWavWindows(payload, n) else None
+      real match {
+        case Some(wins) =>
+          wins.zipWithIndex.map { case ((t, bytes), i) =>
+            FrameSample(url, mime, i, t, bytes, decoded = true)
           }
-        }
+        case None =>
+          // one pass over the payload; each frame reseeds from (hash+i)
+          val base = payload.foldLeft(0x9e3779b97f4a7c15L)((a, x) =>
+            graft.synth.Det.mix64(a ^ x))
+          (0 until n).map { i =>
+            // deterministic fake frame: payload-hash-seeded bytes
+            val b = new Array[Byte](64)
+            var hsh = graft.synth.Det.mix64(base + i)
+            var j = 0
+            while (j < b.length) {
+              hsh = graft.synth.Det.mix64(hsh)
+              b(j) = hsh.toByte
+              j += 1
+            }
+            FrameSample(url, mime, i, -1f, b, decoded = false)
+          }
       }
-    }
+    })
   }
 
   /** Deterministic tiny WAV (real `javax.sound.sampled` encode of a

@@ -72,19 +72,6 @@ object Ann {
         round(col("cosine"), 6).as("cosine"), col("rk"))
   }
 
-  /** LSH-bucketed approximate top-k: candidates share one of the query's
-    * probed hyperplane buckets; exact cosine ranks within candidates. Scale
-    * path — bucket join instead of cross join.
-    *
-    * Multi-probe (probeRadius ≥ 1, default 1): each query probes its own
-    * bucket PLUS every bucket within Hamming distance `probeRadius` (sign
-    * bits flipped — the buckets a true neighbor most likely lands in),
-    * fixing the sparse-bucket recall hole of single-probe LSH. Only the
-    * small QUERY side is replicated ×(Σ C(planes,r)); the corpus keeps one
-    * row per vector, so the join stays linear in the corpus at 100 TB.
-    * Recall/cost dial: radius 1 ≈ cheap recall boost, radius 2 for
-    * recall-critical small query sets; `probeRadius = 0` is single-probe.
-    */
   // ---- IVF (inverted-file) ANN — the second scale path -------------------
   /** Deterministic IVF coarse quantizer: Lloyd's k-means on a BOUNDED,
     * deterministically-ordered corpus sample, trained driver-side (the
@@ -243,6 +230,19 @@ object Ann {
         round(col("cosine"), 6).as("cosine"), col("rk"))
   }
 
+  /** LSH-bucketed approximate top-k: candidates share one of the query's
+    * probed hyperplane buckets; exact cosine ranks within candidates. Scale
+    * path — bucket join instead of cross join.
+    *
+    * Multi-probe (probeRadius ≥ 1, default 1): each query probes its own
+    * bucket PLUS every bucket within Hamming distance `probeRadius` (sign
+    * bits flipped — the buckets a true neighbor most likely lands in),
+    * fixing the sparse-bucket recall hole of single-probe LSH. Only the
+    * small QUERY side is replicated ×(Σ C(planes,r)); the corpus keeps one
+    * row per vector, so the join stays linear in the corpus at 100 TB.
+    * Recall/cost dial: radius 1 ≈ cheap recall boost, radius 2 for
+    * recall-critical small query sets; `probeRadius = 0` is single-probe.
+    */
   def lshTopK(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
       embCol: String, k: Int, planes: Int = 8, dim: Int = 64,
       probeRadius: Int = 1): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.functions.Tokenize.isWordCp
 import graft.synth.Corpus
 
 /** Single-pass scalar implementation of the N3 heuristic metrics, used
@@ -13,9 +14,10 @@ import graft.synth.Corpus
   * in HeuristicsParitySpec) for SQL-surface use.
   *
   * Semantics are identical to [[Heuristics]] on NFC text with ASCII
-  * whitespace: tokens split on java-regex `\s` (ASCII), stopword match on
-  * the `(?U)\W`-trimmed lowercased token, duplicate lines on raw line
-  * strings with blank (space-only) lines excluded.
+  * whitespace: tokens split on java-regex `\s` (ASCII), word lengths in
+  * code points, stopword match on the `(?U)\W`-trimmed lowercased token,
+  * duplicate lines on raw line strings with blank (space-only) lines
+  * excluded.
   */
 object HeuristicsScalar {
 
@@ -43,19 +45,17 @@ object HeuristicsScalar {
   @inline private def isSpaceAscii(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  // (?U)\w of java.util.regex ≈ letters, digits, marks, connector punct.
-  @inline private def isWordChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c) || c == '_' ||
-      Character.getType(c) == Character.NON_SPACING_MARK ||
-      Character.getType(c) == Character.COMBINING_SPACING_MARK ||
-      Character.getType(c) == Character.ENCLOSING_MARK
-
-  /** Lowercased (?U)\W-edge-trimmed token, allocation-free when unchanged. */
+  /** Lowercased (?U)\W-edge-trimmed token. The trim walks code points
+    * with [[graft.functions.Tokenize.isWordCp]], the one `(?U)\w`
+    * predicate (TokenizeParitySpec pins it against the regex).
+    */
   def normForStopword(s: String, from: Int, until: Int): String = {
     var a = from
+    while (a < until && !isWordCp(s.codePointAt(a)))
+      a += Character.charCount(s.codePointAt(a))
     var b = until
-    while (a < b && !isWordChar(s.charAt(a))) a += 1
-    while (b > a && !isWordChar(s.charAt(b - 1))) b -= 1
+    while (b > a && !isWordCp(s.codePointBefore(b)))
+      b -= Character.charCount(s.codePointBefore(b))
     if (a >= b) return ""
     val sb = new java.lang.StringBuilder(b - a)
     var i = a
@@ -77,13 +77,18 @@ object HeuristicsScalar {
       if (isSpaceAscii(c)) i += 1
       else {
         val start = i
+        // word length in code points, as Spark's `length`: a surrogate
+        // pair counts once
+        var pairs = 0
         while (i < n && !isSpaceAscii(text.charAt(i))) {
           val cc = text.charAt(i)
-          if (cc < 128 && symbolChars(cc)) symbols += 1
+          if (cc < 128) { if (symbolChars(cc)) symbols += 1 }
+          else if (Character.isLowSurrogate(cc) && i > start &&
+              Character.isHighSurrogate(text.charAt(i - 1))) pairs += 1
           i += 1
         }
         words += 1
-        totalWordLen += (i - start)
+        totalWordLen += (i - start - pairs)
         if (stopwords.contains(normForStopword(text, start, i))) stopHits += 1
       }
     }

@@ -38,7 +38,7 @@ final case class SmallModelRecord(
   * constants (splitmix64-seeded, quantized) — no training run, no I/O,
   * identical on every JVM. The north rule replaces neural trainers with
   * deterministic scorers; what must match the reference is the DATAFLOW:
-  * batched per-partition inference, softmax over class logits, per-task
+  * per-partition inference, softmax over class logits, per-task
   * top-3 extraction into `{task}_class_{1..3}` / `{task}_prob_{1..3}`.
   */
 object TaskScorer extends Serializable {
@@ -184,10 +184,11 @@ object TaskScorer extends Serializable {
       ag(0)._1, ag(0)._2, ag(1)._1, ag(1)._2, ag(2)._1, ag(2)._2)
   }
 
-  /** Distributed inference: (doc_id, text) → annotated records. Batched
-    * `mapPartitions` with one broadcast deref per partition — the same
-    * physical shape as the reference's per-shard batch loop
-    * (`small_model_inference.py:46-66`). No shuffle.
+  /** Distributed inference: (doc_id, text) → annotated records. One
+    * `mapPartitions` pass with one broadcast deref per partition — the
+    * per-shard loop of the reference (`small_model_inference.py:46-66`),
+    * without its GPU batching, which a row-at-a-time CPU scorer does not
+    * need. No shuffle.
     */
   def annotateRecords(docs: Dataset[(Long, String)]): Dataset[SmallModelRecord] = {
     val spark = docs.sparkSession
@@ -195,7 +196,7 @@ object TaskScorer extends Serializable {
     val bw = spark.sparkContext.broadcast(default)
     docs.mapPartitions { iter =>
       val w = bw.value
-      iter.grouped(32).flatMap(_.map { case (id, text) => record(id, text, w) })
+      iter.map { case (id, text) => record(id, text, w) }
     }
   }
 }

@@ -498,147 +498,6 @@ object DedupScale {
         "checksum_equal" -> (cN == rN && cH == rH))
     }
 
-    // ---- streaming near-dup at volume + batch re-verify bridge -----------
-    phase("stream_near_dup") {
-      // bounded-cluster slice (same rationale as the prefix join): cluster
-      // sizes ≤ ~5 in the slice, so neither the stream's bucketCap FIFO
-      // nor a batch cap truncates — candidate sets must then be IDENTICAL
-      // (same signatures, same band keys), and stream ∘ exact re-verify
-      // must equal the batch verified pair set at volume, not just on the
-      // spec fixture
-      val slice = corpus
-        .filter((col("cluster") === -1L || col("cluster") >= 2000L) &&
-          col("doc_id") < 400000L)
-        .select(col("doc_id"), col("text"),
-          lit(java.sql.Timestamp.valueOf("2026-01-01 10:00:00")).as("ts"))
-      val sliceN = slice.count()
-      slice.repartition(16).write.mode("overwrite")
-        .parquet(s"$base/stream_landing")
-      val src = spark.readStream
-        .schema("doc_id LONG, text STRING, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 2) // force multi-micro-batch state
-        .parquet(s"$base/stream_landing")
-      // est threshold 0.4 << batch 0.8: P(est < 0.4 | J ≥ 0.8) ≈ 1e-8 with
-      // 32 hashes, so the hit superset covers; re-verify tightens to exact
-      val t0 = System.nanoTime()
-      val q = graft.streaming.StreamOps.nearDupStream(
-          src, "doc_id", "text", "ts", minEstJaccard = 0.4)
-        .writeStream.format("memory").queryName("scale_stream")
-        .option("checkpointLocation", s"$base/stream_ckpt")
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      val streamSec = (System.nanoTime() - t0) / 1e9
-      // measured, not assumed: the landing-file count over maxFilesPerTrigger
-      // is an implementation detail of the write above — the progress log is
-      // the ground truth for how many micro-batches actually carried rows
-      val microBatches = q.recentProgress.count(_.numInputRows > 0)
-      val hits = spark.table("scale_stream")
-      val nHits = hits.select("id_a", "id_b").distinct().count()
-      val reverified = graft.analytics.Materialize(Dedup.reverifyPairs(
-        hits.toDF(), slice, "doc_id", "text", minJaccard = minJ))
-      val batch = graft.analytics.Materialize(Dedup.minhashNearDups(
-        slice, "doc_id", "text", minJaccard = minJ))
-      val rv = reverified.select("id_a", "id_b")
-      val bt = batch.select("id_a", "id_b")
-      val equal = rv.exceptAll(bt).isEmpty && bt.exceptAll(rv).isEmpty
-      Seq("slice_docs" -> sliceN,
-        "micro_batches" -> microBatches,
-        "stream_wall_sec" -> math.rint(streamSec * 100) / 100,
-        "stream_docs_per_sec" -> math.rint(sliceN / streamSec),
-        "candidate_hits" -> nHits,
-        "reverified_pairs" -> reverified.count(),
-        "batch_pairs" -> batch.count(),
-        "stream_reverify_equals_batch" -> equal)
-    }
-
-    // ---- streaming state bound under the MEGA cluster ---------------------
-    phase("stream_state_bound") {
-      // The r4 stream phase ran the bounded-cluster slice (candidate-set
-      // identity proof); THIS one streams a slice INCLUDING the zipf head
-      // cluster with a SMALL bucketCap — the hot-template case where an
-      // unbounded design accumulates O(cluster) state. Event time advances
-      // with doc_id (1 s/doc) and files land in id order
-      // (repartitionByRange), so the watermark genuinely moves and cold
-      // buckets expire: state must PLATEAU at O(docs-per-lateness-window),
-      // far under the O(slice) a growing store would show, while the FIFO
-      // cap bounds the mega bucket's entry arrays and exact dups keep
-      // pairing throughout.
-      val top = topClusters(0)._1
-      val lim = math.min(nDocs, 200000L)
-      val slice = corpus
-        .filter((col("cluster") === top || col("cluster") === -1L) &&
-          col("doc_id") < lim)
-        .select(col("doc_id"), col("text"),
-          timestamp_seconds(lit(1767225600L) + col("doc_id")).as("ts"))
-      val sliceN = slice.count()
-      val megaIds = corpus.filter(col("cluster") === top &&
-        col("doc_id") < lim).select(col("doc_id").as("id"))
-      val megaN = megaIds.count()
-      // land the files SEQUENTIALLY in id order: FileStreamSource orders
-      // new files by modification time, so micro-batches then replay the
-      // corpus in event-time order and the watermark advances monotonically
-      // (a bulk repartitionByRange write lands parts in task-completion
-      // order — event time would arrive shuffled and every batch would mix
-      // late data; the operator survives that too, but THIS phase measures
-      // the steady-state plateau, which needs an orderly replay)
-      val landing = s"$base/state_landing"
-      ToolFs.rmTree(new java.io.File(landing))
-      val step = lim / 16
-      for (i <- 0L until 16L)
-        // last range takes the division remainder — every slice doc must
-        // land, or the coverage/plateau metrics (computed over the FULL
-        // slice) would silently overstate their denominators at a lim
-        // that is not a multiple of 16
-        slice.filter(col("doc_id") >= i * step &&
-            (if (i == 15L) lit(true) else col("doc_id") < (i + 1) * step))
-          .coalesce(1).write.mode("append").parquet(landing)
-      val src = spark.readStream
-        .schema("doc_id LONG, text STRING, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(landing)
-      val cap = 16
-      val q = graft.streaming.StreamOps.nearDupStream(
-          src, "doc_id", "text", "ts", minEstJaccard = 0.8,
-          lateness = "1 hour", bucketCap = cap)
-        .writeStream.format("memory").queryName("state_stream")
-        .option("checkpointLocation", s"$base/state_ckpt")
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      // DETERMINISM CAVEAT (the one phase where it is soft): under FIFO
-      // eviction, WHICH entries a row pairs against depends on intra-batch
-      // arrival order into the group iterator, which Spark does not
-      // contract across runs — candidate_hits / coverage have been
-      // observed identical across four runs on this host, but unlike
-      // every other phase that is empirical, not structural. The
-      // structural invariants here are the state plateau and the cap.
-      val stateRows = q.recentProgress.filter(_.numInputRows > 0)
-        .map(p => p.stateOperators.headOption.map(_.numRowsTotal)
-          .getOrElse(0L)).toSeq
-      val hits = spark.table("state_stream")
-      val nHits = hits.select("id_a", "id_b").distinct().count()
-      // exact dups still pair: fraction of mega docs that appear in ≥1 hit
-      // (every arrival pairs against the bucket's current FIFO window)
-      val inHit = hits.select(col("id_a").as("id"))
-        .unionByName(hits.select(col("id_b").as("id"))).distinct()
-      val megaCovered = megaIds.join(inHit.hint("merge"), Seq("id"),
-        "left_semi").count()
-      val unboundedRows = sliceN * graft.dedup.Dedup.Bands
-      Seq("slice_docs" -> sliceN, "mega_docs" -> megaN,
-        "bucket_cap" -> cap,
-        "micro_batches" -> stateRows.length,
-        "state_rows_per_batch" -> stateRows,
-        "peak_state_rows" -> (if (stateRows.isEmpty) 0L else stateRows.max),
-        "unbounded_would_be_rows" -> unboundedRows,
-        "state_plateaued" -> (stateRows.nonEmpty &&
-          stateRows.max < unboundedRows / 3),
-        "candidate_hits" -> nHits,
-        "mega_docs_in_a_hit" -> megaCovered,
-        "mega_hit_coverage" -> (if (megaN == 0) 0.0
-          else math.rint(megaCovered.toDouble / megaN * 1e4) / 1e4))
-    }
-
     // ---- AQE skew-join split on the zipf host key -------------------------
     phase("aqe_skew_join") {
       // dimension-style host join with broadcast disabled: the zipf head

@@ -26,11 +26,7 @@ object PlanEvidence {
       sb.append(df.queryExecution.explainString(
           org.apache.spark.sql.execution.SimpleMode)
         .replaceAll("""\$\$\$?Lambda[$]?\d*/0x[0-9a-f]+@[0-9a-f]+""",
-          "\\$\\$Lambda")
-        // streaming operators embed per-run UUIDs (runId, watermark node id)
-        .replaceAll(
-          """[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}""",
-          "<uuid>"))
+          "\\$\\$Lambda"))
       sb.append("\n```\n")
     }
 
@@ -94,11 +90,11 @@ object PlanEvidence {
       "streams once against the derived threshold, nothing is collected.")(
       graft.analytics.Queries.all("q_pct_threshold_filter")(spark, sf))
 
-    section("Small-model inference — shuffle-free batched scoring " +
+    section("Small-model inference — shuffle-free per-partition scoring " +
       "(q_smallmodel_records)",
       "One pruned 2-column scan into one MapPartitions (broadcast weight " +
-      "tensors, batch 32) — per-task top-3 record emission adds no " +
-      "Exchange before the output sort.")(
+      "tensors, one record per row) — per-task top-3 record emission adds " +
+      "no Exchange before the output sort.")(
       graft.analytics.Queries.all("q_smallmodel_records")(spark, sf))
 
     section("Exact Jaccard via prefix filter — token equi-join, no " +
@@ -114,7 +110,7 @@ object PlanEvidence {
 
     section("Distributed global row_number — no single-partition window " +
       "(q_j2_rownumber_align)",
-      "`Align.withGlobalRowNumber`: ONE RangePartitioning exchange, " +
+      "`Align.withGlobalRowNumberByTag`: ONE RangePartitioning exchange, " +
       "materialized eagerly (localCheckpoint) so BOTH the offsets census " +
       "and the ranking read the same frozen partitioning — the ranked " +
       "side scans the checkpointed RDD (`Scan ExistingRDD`) and plans NO " +
@@ -134,23 +130,6 @@ object PlanEvidence {
       "(native codegen expression) re-ranks. The corpus is never " +
       "replicated and never cross-joined — the 100-TB-safe shape.")(
       graft.analytics.Queries.all("q_ann_ivf_topk")(spark, sf))
-
-    section("Streaming MinHash near-dup — bounded keyed state, no " +
-      "unbounded join (nearDupStream)",
-      "`StreamOps.nearDupStream` on an unbounded source: signatures + " +
-      "band explode stay narrow (codegen project), one Exchange on the " +
-      "group key feeds `FlatMapGroupsWithState` with an EventTimeWatermark " +
-      "above it — per-bucket FIFO-capped state, NO stream-stream join and " +
-      "no unbounded state operator anywhere in the plan.")({
-      import org.apache.spark.sql.functions._
-      val src = spark.readStream.format("rate")
-        .option("rowsPerSecond", 1).load()
-        .select(col("value").as("doc_id"),
-          concat(lit("text body nr "), col("value")).as("text"),
-          col("timestamp").as("ts"))
-      graft.streaming.StreamOps
-        .nearDupStream(src, "doc_id", "text", "ts").toDF()
-    })
 
     // fixed path (not a temp dir): the scan's Location line embeds the
     // path, and PLANS.md must regenerate byte-identically

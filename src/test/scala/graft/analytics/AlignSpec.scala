@@ -9,7 +9,15 @@ class AlignSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import org.apache.spark.sql.functions._
 
-  test("withGlobalRowNumber equals the unpartitioned window, any partitioning") {
+  /** One-tag numbering: a constant tag makes the tagged operator number
+    * the whole frame.
+    */
+  private def globalRowNumber(df: org.apache.spark.sql.DataFrame,
+      parts: Int): org.apache.spark.sql.DataFrame =
+    Align.withGlobalRowNumberByTag(df.withColumn("tag", lit("all")), "tag",
+      Seq(col("k")), "rn", numPartitions = parts).drop("tag")
+
+  test("one-tag numbering equals the unpartitioned window, any partitioning") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val df = (0 until 5000)
@@ -19,16 +27,14 @@ class AlignSpec extends AnyFunSuite {
         row_number().over(Window.orderBy("k")).cast("long"))
       .select("k", "rn").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (parts <- Seq(1, 3, 16)) {
-      val got = Align.withGlobalRowNumber(df.repartition(7), Seq(col("k")),
-          "rn", numPartitions = parts)
+      val got = globalRowNumber(df.repartition(7), parts)
         .select("k", "rn").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got.size == naive.size)
       assert(got == naive, s"numbering diverges at numPartitions=$parts")
     }
   }
 
-  test("withGlobalRowNumber under the reliable-materialization conf " +
-      "matches the in-memory path") {
+  test("reliable-materialization conf matches the in-memory numbering") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-align-ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
@@ -36,8 +42,7 @@ class AlignSpec extends AnyFunSuite {
     try {
       val df = (0 until 2000)
         .map(i => ((i * 40503L) % 65521L, s"v$i")).toDF("k", "v")
-      val got = Align.withGlobalRowNumber(df.repartition(5), Seq(col("k")),
-          "rn", numPartitions = 8)
+      val got = globalRowNumber(df.repartition(5), 8)
         .select("k", "rn").collect().map(r => r.getLong(0) -> r.getLong(1))
         .toMap
       val expect = df.orderBy("k").collect().map(_.getLong(0))
@@ -50,8 +55,7 @@ class AlignSpec extends AnyFunSuite {
     import spark.implicits._
     val ks: Seq[Int] = (1 to 997).map(i => i * 13)
     val df = ks.toDF("k")
-    val out = Align.withGlobalRowNumber(df, Seq(col("k")), "rn",
-      numPartitions = 8)
+    val out = globalRowNumber(df, 8)
     val rns = out.select("rn").collect().map(_.getLong(0)).sorted
     val expect: Array[Long] = Array.tabulate(997)(i => (i + 1).toLong)
     assert(rns.sameElements(expect))
@@ -71,8 +75,11 @@ class AlignSpec extends AnyFunSuite {
     // contain NO range exchange of its own — the one boundary sample
     // happened before the checkpoint and is frozen in the blocks — with
     // the offsets coming from a driver-computed LocalTableScan broadcast.
-    val df = (0 until 2000).map(i => ((i * 48271) % 65537, i)).toDF("k", "v")
-    val out = Align.withGlobalRowNumber(df, Seq(col("k")), "rn",
+    // Two tags: the per-(partition, tag) census must not change the shape.
+    val df = (0 until 2000)
+      .map(i => ((i * 48271) % 65537, if (i % 2 == 0) "x" else "y"))
+      .toDF("k", "tag")
+    val out = Align.withGlobalRowNumberByTag(df, "tag", Seq(col("k")), "rn",
       numPartitions = 8)
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("ExistingRDD"),
@@ -85,8 +92,10 @@ class AlignSpec extends AnyFunSuite {
       "offsets must be the driver-computed manifest, not a re-aggregation")
   }
 
-  test("withGlobalRowNumberByTag ≡ per-tag withGlobalRowNumber (r6 one-pass)") {
+  test("withGlobalRowNumberByTag ≡ row_number() partitioned by tag " +
+      "(r6 one-pass)") {
     import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
     // 3 tags, interleaved keys, skewed tag sizes, a tag missing from some
     // key ranges — the numbering must equal numbering each tag's slice
     // independently
@@ -94,34 +103,16 @@ class AlignSpec extends AnyFunSuite {
       val tag = if (i % 7 == 0) "C" else if (i % 2 == 0) "A" else "B"
       (((i * 48271) % 65537).toLong, tag, i)
     }.toDF("k", "tag", "v")
+    val want = df.withColumn("rn", row_number()
+        .over(Window.partitionBy("tag").orderBy("k")).cast("long"))
+      .select("tag", "k", "rn").collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     for (parts <- Seq(1, 4, 16)) {
       val got = Align.withGlobalRowNumberByTag(df, "tag", Seq(col("k")),
           "rn", numPartitions = parts)
         .select("tag", "k", "rn").collect()
         .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val want = Seq("A", "B", "C").flatMap { tg =>
-        Align.withGlobalRowNumber(df.filter(col("tag") === tg),
-            Seq(col("k")), "rn", numPartitions = parts)
-          .select("k", "rn").collect()
-          .map(r => (tg, r.getLong(0)) -> r.getLong(1))
-      }.toMap
       assert(got == want, s"tagged numbering diverges at parts=$parts")
     }
-  }
-
-  test("withGlobalRowNumberByTag plans ONE materialized range exchange " +
-      "and a driver-manifest offsets join") {
-    import spark.implicits._
-    val df = (0 until 500).map(i => (i.toLong, if (i % 2 == 0) "x" else "y"))
-      .toDF("k", "tag")
-    val out = Align.withGlobalRowNumberByTag(df, "tag", Seq(col("k")), "rn",
-      numPartitions = 4)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD"),
-      "ranked side must read the one materialized range partitioning")
-    assert(!plan.contains("rangepartitioning"),
-      "numbering plan must not re-sample a range exchange")
-    assert(plan.contains("LocalTableScan"),
-      "offsets must be the driver-computed manifest")
   }
 }

@@ -56,12 +56,15 @@ class DedupSpec extends AnyFunSuite {
       val (sa, sb) = (shingleSet(a), shingleSet(b))
       sa.intersect(sb).size.toDouble / sa.union(sb).size
     }
-    // deterministic path (no LSH recall involved): exact re-verification
-    // of the one candidate pair
+    // deterministic path (no LSH recall involved): the score expression
+    // of the minhash verify join, evaluated on the one pair
     import spark.implicits._
-    val got = Dedup.reverifyPairs(Seq((1L, 2L)).toDF("id_a", "id_b"),
-        docs(1L -> a, 2L -> b), "doc_id", "text", minJaccard = 0.0)
-      .select("jaccard").head().getDouble(0)
+    def shingleSetCol(c: String) = array_distinct(
+      TextFunctions.shingle_hashes(Tokenize.norm_tokens(col(c)), 3))
+    val got = Seq((a, b)).toDF("a", "b")
+      .select(graft.functions.ArrayMath.jaccard_sets(
+        shingleSetCol("a"), shingleSetCol("b")))
+      .head().getDouble(0)
     assert(math.abs(got - expect) < 1e-6, s"got $got expect $expect")
   }
 
@@ -687,7 +690,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("empty and whitespace-only texts never reach a verify join: no NaN " +
       "score, no empty-text id in any shingle-set operator's output") {
-    import spark.implicits._
     val base = "unu doi trei patru cinci șase șapte opt nouă zece " * 5
     val empties = Set(10L, 11L, 12L, 13L)
     val df = docs(1L -> base, 2L -> base, 3L -> base.replace("cinci", "x"),
@@ -697,22 +699,14 @@ class DedupSpec extends AnyFunSuite {
     def rows(out: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       out.select("id_a", "id_b", out.columns.last).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // candidate pairs naming empty-text ids: two empty sets would score NaN,
-    // which passes any `>=` threshold
-    val cands = Seq((1L, 2L), (1L, 10L), (10L, 11L), (11L, 12L), (12L, 13L))
-      .toDF("id_a", "id_b")
-    val outs = Seq(
-      "minhashNearDups" -> Dedup.minhashNearDups(df, "doc_id", "text",
-        minJaccard = 0.5),
-      "reverifyPairs" -> Dedup.reverifyPairs(cands, df, "doc_id", "text",
-        minJaccard = 0.5))
-    for ((name, out) <- outs) {
-      val got = rows(out)
-      assert(got.contains((1L, 2L, 1.0)), s"$name lost the real pair: $got")
-      assert(!got.exists(_._3.isNaN), s"$name emitted a NaN score: $got")
-      assert(!got.exists(p => empties(p._1) || empties(p._2)),
-        s"$name emitted an empty-text id: $got")
-    }
+    // two empty shingle sets would score NaN, which passes any `>=`
+    // threshold
+    val got = rows(Dedup.minhashNearDups(df, "doc_id", "text",
+      minJaccard = 0.5))
+    assert(got.contains((1L, 2L, 1.0)), s"minhash lost the real pair: $got")
+    assert(!got.exists(_._3.isNaN), s"minhash emitted a NaN score: $got")
+    assert(!got.exists(p => empties(p._1) || empties(p._2)),
+      s"minhash emitted an empty-text id: $got")
     // jaccardPrefixJoin's token contract is `split(text, ' ')`, shared with
     // its DuckDB oracle (`string_split`): "" and "   " are the one-token set
     // {""}, never an empty set, so they score 1.0 with each other (never
@@ -725,31 +719,6 @@ class DedupSpec extends AnyFunSuite {
     assert(prefix.filter(p => empties(p._1) || empties(p._2)) ==
       Set((10L, 11L, 1.0), (10L, 12L, 1.0), (11L, 12L, 1.0)),
       s"prefix empty-text rows: $prefix")
-  }
-
-  test("reverifyPairs: exact re-verification keeps true near-dups with the " +
-      "minhashNearDups jaccard and drops junk candidate pairs") {
-    val tA = (1 to 40).map(i => s"cuv$i").mkString(" ")
-    val tAnear = (1 to 40).map(i => if (i == 20) "alt20" else s"cuv$i")
-      .mkString(" ") // 3 of 38 shingles change: J = 35/41 ≈ 0.854
-    val tB = (1 to 30).map(i => s"alte$i").mkString(" ")
-    val corpus = docs(1L -> tA, 2L -> tAnear, 3L -> tB, 4L -> tB)
-    // candidates: the two true pairs plus junk (cross-content, unknown id)
-    import spark.implicits._
-    val cands = Seq((1L, 2L), (3L, 4L), (1L, 3L), (2L, 4L), (1L, 99L),
-        (1L, 2L) /* duplicate hit row — must not double-emit */)
-      .toDF("id_a", "id_b")
-    val got = Dedup.reverifyPairs(cands, corpus, "doc_id", "text",
-        minJaccard = 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // ≡ the batch-verified pairs for the same threshold/shingles
-    val batch = Dedup.minhashNearDups(corpus, "doc_id", "text",
-        minJaccard = 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(got.toSet == batch.toSet, s"got ${got.toSeq} batch ${batch.toSeq}")
-    assert(got.length == got.toSet.size, "duplicate hit double-emitted")
-    assert(got.map(p => (p._1, p._2)).toSet == Set((1L, 2L), (3L, 4L)))
-    assert(!got.exists(p => p._2 == 99L), "unknown id must drop, not null")
   }
 
   test("no dedup join ever plans a broadcast: corpus-scale frames behind " +
@@ -785,9 +754,6 @@ class DedupSpec extends AnyFunSuite {
       Dedup.simhashNearDups(df, "doc_id", "text"))
     noBroadcast("simhashNearDups capped")(
       Dedup.simhashNearDups(df, "doc_id", "text", bucketCap = 2))
-    noBroadcast("reverifyPairs")(
-      Dedup.reverifyPairs(Seq((1L, 2L)).toDF("id_a", "id_b"), df,
-        "doc_id", "text", 0.5))
     noBroadcast("dupClusters")(
       Dedup.withClusterSizes(Dedup.dupClusters(
         Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"))))

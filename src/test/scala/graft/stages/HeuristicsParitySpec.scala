@@ -33,7 +33,12 @@ class HeuristicsParitySpec extends AnyFunSuite {
     import spark.implicits._
     val cases = Seq("", " ", "  \t \n ", "###", "a\nb\na\n\na",
       "x " + " " + " y", "ș,i și. (și)", "linie\nlinie\nlinie",
-      "cuvânt\tcuvânt  cuvânt\n cuvânt")
+      "cuvânt\tcuvânt  cuvânt\n cuvânt",
+      // edge characters (?U)\w keeps but a per-char letter/digit/mark test
+      // trims: connector punctuation, ZWJ, a letter number, and a
+      // supplementary-plane letter (one code point, two chars: also a
+      // word-length case)
+      "și\u203F", "și\u200D", "\u2160și", "\uD835\uDC1Aîn")
     val colRows = Heuristics.withHeuristics(cases.toDF("text"))
       .select("doc_len_words", "mean_word_len", "symbol_word_ratio",
         "stopword_frac", "dup_line_frac").collect()
