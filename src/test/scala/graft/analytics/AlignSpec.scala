@@ -75,12 +75,8 @@ class AlignSpec extends AnyFunSuite {
     // contain NO range exchange of its own — the one boundary sample
     // happened before the checkpoint and is frozen in the blocks — with
     // the offsets coming from a driver-computed LocalTableScan broadcast.
-    // Two tags: the per-(partition, tag) census must not change the shape.
-    val df = (0 until 2000)
-      .map(i => ((i * 48271) % 65537, if (i % 2 == 0) "x" else "y"))
-      .toDF("k", "tag")
-    val out = Align.withGlobalRowNumberByTag(df, "tag", Seq(col("k")), "rn",
-      numPartitions = 8)
+    val df = (0 until 2000).map(i => ((i * 48271) % 65537, i)).toDF("k", "v")
+    val out = globalRowNumber(df, 8)
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("ExistingRDD"),
       "ranked side must read the one materialized range partitioning")
@@ -114,5 +110,21 @@ class AlignSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       assert(got == want, s"tagged numbering diverges at parts=$parts")
     }
+  }
+
+  test("withGlobalRowNumberByTag plans ONE materialized range exchange " +
+      "and a driver-manifest offsets join") {
+    import spark.implicits._
+    val df = (0 until 500).map(i => (i.toLong, if (i % 2 == 0) "x" else "y"))
+      .toDF("k", "tag")
+    val out = Align.withGlobalRowNumberByTag(df, "tag", Seq(col("k")), "rn",
+      numPartitions = 4)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("ExistingRDD"),
+      "ranked side must read the one materialized range partitioning")
+    assert(!plan.contains("rangepartitioning"),
+      "numbering plan must not re-sample a range exchange")
+    assert(plan.contains("LocalTableScan"),
+      "offsets must be the driver-computed manifest")
   }
 }
