@@ -723,7 +723,7 @@ object Queries {
       d.filter(col("doc_id") % 5 === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L))
     graft.dedup.Dedup.minhashNearDups(planted, "doc_id", "text",
-      minJaccard = 0.9).orderBy("id_a", "id_b")
+      minJaccard = 0.9).pairs.orderBy("id_a", "id_b")
   }
 
   // --- dedup 4: SimHash signatures + fingerprints (expressions; rows-only) -
@@ -744,7 +744,7 @@ object Queries {
       d.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L))
     graft.dedup.Dedup.simhashNearDups(planted, "doc_id", "text", maxHamming = 3)
-      .orderBy("id_a", "id_b")
+      .pairs.orderBy("id_a", "id_b")
   }
 
   // --- dedup 6: benchmark decontamination (GPT-3 appendix C n-gram rule) ---
@@ -856,7 +856,7 @@ object Queries {
   // --- similarity 3: embedding near-dup pairs (rows-only; planted dups) ----
   register("q_ann_near_dups", null) { (s, dir) =>
     graft.dedup.Dedup.embeddingNearDups(plantedEmbeddings(s, dir), "vec_id",
-      "embedding", minCosine = 0.999).orderBy("id_a", "id_b")
+      "embedding", minCosine = 0.999).pairs.orderBy("id_a", "id_b")
   }
 
   // --- similarity 3b: banded embedding near-dup (the recall dial — 4 sign
@@ -864,7 +864,7 @@ object Queries {
   //     verify join; rows-only, superset-of-single-band spec-pinned) -------
   register("q_ann_near_dups_banded", null) { (s, dir) =>
     graft.dedup.Dedup.embeddingNearDups(plantedEmbeddings(s, dir), "vec_id",
-      "embedding", minCosine = 0.999, bands = 4).orderBy("id_a", "id_b")
+      "embedding", minCosine = 0.999, bands = 4).pairs.orderBy("id_a", "id_b")
   }
 
   // --- text analysis: per-doc quality metrics (C4-ish, oracle-checked) -----

@@ -85,7 +85,7 @@ object Dedup {
     * with exact Jaccard over the shingle sets; `minJaccard` filters the
     * verified similarity. Shuffles: ONE band-key shuffle total (the
     * [[sizedBands]] explode+window, materialized so every pairing branch
-    * reads it — see [[pairsFromSized]]) plus the candidate join-back.
+    * and the census read it) plus the candidate join-back.
     *
     * Skew guard: a band bucket larger than `bucketCap` (boilerplate/template
     * mega-clusters — the one place bucketed LSH still goes quadratic) is NOT
@@ -103,36 +103,59 @@ object Dedup {
     *
     * The cap is OPT-IN (default `Int.MaxValue` = exact all-pairs in every
     * bucket): trading recall for boundedness is a deployment decision, not a
-    * default. When a cap is set, run it as [[minhashNearDupsWithStats]] so
+    * default. When a cap is set, read the result's [[NearDups.stats]] so
     * the truncation is OBSERVED, not assumed absent — a 100-TB operator
     * can't read scaladoc at runtime.
     *
-    * UNCAPPED-DEFAULT exposure (shared by the simhash and embedding twins):
-    * the pairing self-join roots at the checkpointed pre-partitioned banded
-    * frame, so it has no shuffle stage for AQE's OptimizeSkewedJoin to
-    * split — with the default cap, a mega bucket's C(s,2) expansion runs in
-    * the one task that owns its bucket key (pre-r5, each side re-exchanged
-    * and AQE could at least split the straggler). A corpus that can contain
-    * template mega-clusters should set `bucketCap`; that is the structural
-    * bound, and the C(s,2) OUTPUT volume — not the task placement — is the
-    * real quadratic term either way.
+    * UNCAPPED-DEFAULT exposure (shared by the simhash and embedding
+    * operators): the pairing self-join roots at the checkpointed
+    * pre-partitioned banded frame, so it has no shuffle stage for AQE's
+    * OptimizeSkewedJoin to split — with the default cap, a mega bucket's
+    * C(s,2) expansion runs in the one task that owns its bucket key (pre-r5,
+    * each side re-exchanged and AQE could at least split the straggler). A
+    * corpus that can contain template mega-clusters should set `bucketCap`;
+    * that is the structural bound, and the C(s,2) OUTPUT volume — not the
+    * task placement — is the real quadratic term either way.
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       minJaccard: Double = 0.8, shingleN: Int = 3,
-      bucketCap: Int = Int.MaxValue): DataFrame =
+      bucketCap: Int = Int.MaxValue): NearDups = {
     // The signature frame feeds the banded build plus the two verify
     // joins; Catalyst plans each branch separately (the subtrees differ
     // after pruning, so ReusedExchange never fires) and would recompute
     // tokenization + shingle + minhash per branch. Materializing sigs
     // once (eager localCheckpoint) replaces the per-branch signature
     // compute with one pass + block reads — the 100-TB term, where
-    // tokenize+shingle+hash dominates the job. The banded frame is then
-    // materialized AGAIN inside nearDupsFromSigs so the pairing runs one
-    // band-key shuffle instead of one per branch (see pairsFromSized).
-    nearDupsFromSigs(
-      graft.analytics.Materialize(
-        buildSigs(df, idCol, textCol, shingleN)),
-      minJaccard, bucketCap)
+    // tokenize+shingle+hash dominates the job.
+    val sigs = graft.analytics.Materialize(
+      buildSigs(df, idCol, textCol, shingleN))
+    // The banded frame is materialized AGAIN, partition-preserving
+    // ([[graft.analytics.Materialize.partitioned]]): the band explode +
+    // window — the operator's one band-key shuffle — runs ONCE, and all
+    // four pairing branches (both sides of the small-bucket self-join, the
+    // mega-bucket star, and the mega-bucket chain) plus the census read
+    // it; the checkpointed frame still ADVERTISES its hash partitioning and
+    // sort order on `band_key`, so the self-join and the census plan no
+    // re-exchange and no re-sort of their own. (Before round 5 each branch
+    // re-derived the banded frame — five separate
+    // Generate+Exchange(band_key)+Window chains in the committed plan; the
+    // dominant DEDUP_SCALE phase carried a ~5× avoidable shuffle factor on
+    // exactly its hottest key.) `minhash` is deliberately NOT carried into
+    // the banded frame: ×Bands duplication of the 32-long signature would
+    // make the one shuffle ~10× wider per row; only the chain branch needs
+    // it, only for capped-bucket rows, and joins it back from the already-
+    // materialized sigs.
+    val sized = graft.analytics.Materialize.partitioned(sizedBands(sigs))
+    // verification: exact Jaccard over shingle SETS of the candidates only
+    // (one intersection per pair; union size derived)
+    new NearDups(
+      verifyJoin(cappedCandidates(sized, "band_key", sigs, "minhash",
+          bucketCap),
+        sigs.select(col("id"), array_distinct(col("shingles")).as("sh")),
+        Nil, "sh", graft.functions.ArrayMath.jaccard_sets, "jaccard",
+        minJaccard),
+      "minhashNearDups", bucketCap, sized)
+  }
 
   /** `(id, shingles, minhash)` signature frame the pairing and the census
     * read (empty shingle sets dropped — they can't near-dup).
@@ -143,49 +166,18 @@ object Dedup {
       .filter(size(col("shingles")) > 0)
       .select(col(idCol).as("id"), col("shingles"), col("minhash"))
 
-  private def nearDupsFromSigs(sigs: DataFrame, minJaccard: Double,
-      bucketCap: Int): DataFrame =
-    pairsFromSized(sigs,
-      graft.analytics.Materialize.partitioned(sizedBands(sigs)),
-      minJaccard, bucketCap)
-
-  /** Pairing over a MATERIALIZED [[sizedBands]] frame: the band explode +
-    * window — the operator's one band-key shuffle — runs ONCE, and all
-    * four pairing branches (both sides of the small-bucket self-join, the
-    * mega-bucket star, and the mega-bucket chain) read the result. The
-    * materialization is [[graft.analytics.Materialize.partitioned]], so
-    * the checkpointed frame still ADVERTISES its hash partitioning and
-    * sort order on `band_key`: the self-join and the census plan no
-    * re-exchange and no re-sort of their own. (Before round 5 each branch
-    * re-derived the banded frame — five separate
-    * Generate+Exchange(band_key)+Window chains in the committed plan; the
-    * dominant DEDUP_SCALE phase carried a ~5× avoidable shuffle factor on
-    * exactly its hottest key.) `minhash` is deliberately NOT carried into
-    * the banded frame: ×Bands duplication of the 32-long signature would
-    * make the one shuffle ~10× wider per row; only the chain branch needs
-    * it, only for capped-bucket rows, and joins it back from the already-
-    * materialized sigs.
-    */
-  private def pairsFromSized(sigs: DataFrame, sized: DataFrame,
-      minJaccard: Double, bucketCap: Int): DataFrame =
-    // verification: exact Jaccard over shingle SETS of the candidates only
-    // (one intersection per pair; union size derived)
-    verifyJoin(cappedCandidates(sized, "band_key", sigs, "minhash", bucketCap),
-      sigs.select(col("id"), array_distinct(col("shingles")).as("sh")),
-      Nil, "sh", graft.functions.ArrayMath.jaccard_sets, "jaccard",
-      minJaccard)
-
   /** Distinct `(id_a < id_b)` candidates from a sized bucket frame (`id`,
     * `key`, `bsz`, `bmin` — see [[withBucketStats]]): buckets within
     * `bucketCap` pair all-pairs through a self-join on `key`; each bucket
     * over the cap emits a STAR to its min-id member plus a CHAIN of its
-    * members in (`orderCol`, id) order, with `orderCol` joined back from
-    * `orderFrom` (one row per id) for the capped rows only — identical and
-    * near-identical signatures sort adjacent, so duplicate runs stay
-    * connected even if the star edge to the representative fails
-    * verification (mixed-content mega bucket). `distinct` collapses
-    * multi-band hits. The one capped-bucket pairing shared by the minhash
-    * and banded-embedding operators.
+    * members in (`orderCol`, id) order — identical and near-identical
+    * signatures sort adjacent, so duplicate runs stay connected even if
+    * the star edge to the representative fails verification (mixed-content
+    * mega bucket). The chain reads `orderCol` in place when `sized` carries
+    * it (no join and no re-key on `key`); otherwise it joins `orderCol`
+    * back from `orderFrom` (one row per id) for the capped rows only, and
+    * re-keys them. `distinct` collapses multi-band hits. The one
+    * capped-bucket pairing shared by the minhash and embedding operators.
     */
   private def cappedCandidates(sized: DataFrame, key: String,
       orderFrom: DataFrame, orderCol: String, bucketCap: Int): DataFrame = {
@@ -199,8 +191,11 @@ object Dedup {
     val starPairs = big.filter(col("id") =!= col("bmin"))
       .select(col("bmin").as("id_a"), col("id").as("id_b"))
     val wOrd = Window.partitionBy(key).orderBy(col(orderCol), col("id"))
-    val chainPairs = big
-      .join(orderFrom.select(col("id"), col(orderCol)).hint("merge"), "id")
+    val ordered =
+      if (sized.columns.contains(orderCol)) big
+      else big.join(orderFrom.select(col("id"), col(orderCol)).hint("merge"),
+        "id")
+    val chainPairs = ordered
       .withColumn("prev", lag("id", 1).over(wOrd))
       .filter(col("prev").isNotNull)
       .select(least(col("prev"), col("id")).as("id_a"),
@@ -268,20 +263,41 @@ object Dedup {
       explode(array((0 until Bands).map(bandKey): _*)).as("band_key")),
       "band_key")
 
-  /** Truncation telemetry for a capped pairing over a sized bucket frame:
-    * one row of `(n_buckets, capped_buckets, skipped_pairs)` where
-    * `skipped_pairs` is the per-bucket `C(s,2) − max(s−1, 2s−4)` — a true
-    * UPPER bound on the candidate pairs the star+chain expansion does not
-    * examine (and hence on lost NEAR-dup pairs; exact dups still connect
-    * through the chain). The star emits s−1 edges and the chain s−1, but
-    * they overlap on the chain edges incident to the bucket representative
-    * `bmin` (one if bmin sorts to a chain end, two if interior), so the
-    * DISTINCT examined pairs can be as few as max(s−1, 2s−4) — subtracting
-    * the naive 2(s−1) would understate the skips by up to 2 per capped
-    * bucket and break the bound. Zero capped buckets ⇒ the capped run was
-    * exhaustive and its recall caveat is vacuous.
+  /** Totals of one operator's truncation census (see [[censusStats]]). */
+  final case class BucketStats(nBuckets: Long, cappedBuckets: Long,
+    skippedPairs: Long)
+
+  /** A bucketed near-dup operator's result: the verified `pairs` and the
+    * truncation census over the SAME materialized bucket frame the pairs
+    * are built from. The operator materializes its signatures and bucket
+    * frame when called, so the census never repeats the signature or the
+    * banding work; the census itself is one aggregate job, run on the
+    * first read of `stats` and never again — a caller that reads only
+    * `pairs` runs none. A capped run that truncated logs a warning on that
+    * first read, so a caller that asks is never silently short of recall.
     */
-  private def censusFromSized(sized: DataFrame, bucketCap: Int): DataFrame = {
+  final class NearDups private[dedup] (val pairs: DataFrame, opName: String,
+      bucketCap: Int, sized: DataFrame) {
+    lazy val stats: BucketStats = censusStats(opName, bucketCap, sized)
+  }
+
+  /** Truncation census of a capped pairing over a sized bucket frame (one
+    * row per (id, bucket) with the bucket's `bsz` and `bmin`):
+    * `(n_buckets, capped_buckets, skipped_pairs)` where `skipped_pairs` is
+    * the per-bucket `C(s,2) − max(s−1, 2s−4)` — a true UPPER bound on the
+    * candidate pairs the star+chain expansion does not examine (and hence
+    * on lost NEAR-dup pairs; exact dups still connect through the chain).
+    * The star emits s−1 edges and the chain s−1, but they overlap on the
+    * chain edges incident to the bucket representative `bmin` (one if bmin
+    * sorts to a chain end, two if interior), so the DISTINCT examined pairs
+    * can be as few as max(s−1, 2s−4) — subtracting the naive 2(s−1) would
+    * understate the skips by up to 2 per capped bucket and break the bound.
+    * Zero capped buckets ⇒ the capped run was exhaustive and its recall
+    * caveat is vacuous. Logs the one capped-run warning all three operators
+    * share (a wording or field change lands once, not per operator).
+    */
+  private def censusStats(opName: String, bucketCap: Int,
+      sized: DataFrame): BucketStats = {
     // `id === bmin` picks exactly one census row per bucket. Per-bucket
     // skipped pairs are clamped at 0: a just-over-cap bucket of size 2–3
     // emits MORE star+chain edges than C(s,2) and must not offset real
@@ -292,7 +308,7 @@ object Dedup {
     // worst bucket), and telemetry may be approximate but must never
     // fail the job or lie low. coalesce: zero buckets ⇒ 0s, not NULLs.
     val bszD = col("bsz").cast("double")
-    sized
+    val row = sized
       .filter(col("id") === col("bmin"))
       .agg(count(lit(1)).as("n_buckets"),
         coalesce(sum(when(col("bsz") > bucketCap, 1L).otherwise(0L)),
@@ -303,41 +319,7 @@ object Dedup {
               greatest(bszD - 1, bszD * 2 - 4)))
             .otherwise(0.0)), lit(0.0)))
           .cast("long").as("skipped_pairs"))
-  }
-
-  /** Totals from [[censusFromSized]], as returned by the
-    * `*NearDupsWithStats` operators.
-    */
-  final case class BucketStats(nBuckets: Long, cappedBuckets: Long,
-    skippedPairs: Long)
-
-  /** [[minhashNearDups]] plus an EAGER truncation census. The
-    * shingle/minhash signatures — the dominant cost of the whole pass — are
-    * computed ONCE and materialized (eager localCheckpoint), and so is the
-    * banded [[sizedBands]] frame: the census aggregate and all four pairing
-    * branches read the SAME single band-key shuffle, so the stats never
-    * double the signature OR the banding work. A capped run that actually
-    * truncated logs a warning, so silent recall loss is impossible.
-    */
-  def minhashNearDupsWithStats(df: DataFrame, idCol: String, textCol: String,
-      minJaccard: Double = 0.8, shingleN: Int = 3,
-      bucketCap: Int = Int.MaxValue): (DataFrame, BucketStats) = {
-    val sigs = graft.analytics.Materialize(
-      buildSigs(df, idCol, textCol, shingleN))
-    val sized = graft.analytics.Materialize.partitioned(sizedBands(sigs))
-    val stats = censusStats("minhashNearDups", bucketCap, sized)
-    (pairsFromSized(sigs, sized, minJaccard, bucketCap), stats)
-  }
-
-  /** Runs the truncation census over a sized banded frame, converts the
-    * one-row result to [[BucketStats]], and logs the shared capped-run
-    * warning — the one census-and-warn contract all three
-    * `*NearDupsWithStats` operators share (a wording or field change lands
-    * once, not per operator).
-    */
-  private def censusStats(opName: String, bucketCap: Int,
-      sized: DataFrame): BucketStats = {
-    val row = censusFromSized(sized, bucketCap).collect()(0)
+      .collect()(0)
     val stats = BucketStats(row.getLong(0), row.getLong(1), row.getLong(2))
     if (stats.cappedBuckets > 0)
       System.err.println(
@@ -370,29 +352,42 @@ object Dedup {
     * signatures sort adjacent, so byte-identical duplicate runs stay
     * connected) plus a STAR to the bucket's min-id member; every edge is
     * still exact-Hamming-verified, so a star/chain edge between
-    * dissimilar docs is dropped, never a false merge. Pair with
-    * [[simhashNearDupsWithStats]] so a capped run's truncation is
-    * OBSERVED. (Rationale: the checkpoint-rooted self-join below is not
+    * dissimilar docs is dropped, never a false merge; read the result's
+    * [[NearDups.stats]] so a capped run's truncation is OBSERVED.
+    * (Rationale: the checkpoint-rooted self-join below is not
     * AQE-skew-splittable, and a 16-bit band holding a 50k-doc template
     * cluster is C(50k,2) candidate pairs with or without AQE — the cap is
     * the structural fix, exactly as for minhash.)
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, bucketCap: Int = Int.MaxValue): DataFrame =
-    simhashPairsFromBanded(
-      simhashBanded(df, idCol, textCol, simhashBandCount(maxHamming)),
-      maxHamming, bucketCap)
-
-  /** [[simhashNearDups]] plus the eager truncation census (same
-    * [[BucketStats]] contract and logging as the minhash twin).
-    */
-  def simhashNearDupsWithStats(df: DataFrame, idCol: String,
-      textCol: String, maxHamming: Int = 3,
-      bucketCap: Int = Int.MaxValue): (DataFrame, BucketStats) = {
+      maxHamming: Int = 3, bucketCap: Int = Int.MaxValue): NearDups = {
+    import org.apache.spark.sql.expressions.Window
     val banded = simhashBanded(df, idCol, textCol,
       simhashBandCount(maxHamming))
-    val stats = censusStats("simhashNearDups", bucketCap, banded)
-    (simhashPairsFromBanded(banded, maxHamming, bucketCap), stats)
+    val small = banded.filter(col("bsz") <= bucketCap)
+    val allPairs = small.as("x").join(small.as("y").hint("merge"),
+        col("x.band") === col("y.band") && col("x.bits") === col("y.bits") &&
+          col("x.id") < col("y.id"))
+      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
+        hamming(col("x.sim"), col("y.sim")).as("hamming"))
+    val big = banded.filter(col("bsz") > bucketCap)
+    // bmin < id always, so the star pair is already (id_a < id_b)
+    val starPairs = big.filter(col("id") =!= col("bmin"))
+      .select(col("bmin").as("id_a"), col("id").as("id_b"),
+        hamming(col("bsim"), col("sim")).as("hamming"))
+    val wOrd = Window.partitionBy("band", "bits")
+      .orderBy(col("sim"), col("id"))
+    val chainPairs = big
+      .withColumn("prev_id", lag("id", 1).over(wOrd))
+      .withColumn("prev_sim", lag("sim", 1).over(wOrd))
+      .filter(col("prev_id").isNotNull)
+      .select(least(col("prev_id"), col("id")).as("id_a"),
+        greatest(col("prev_id"), col("id")).as("id_b"),
+        hamming(col("prev_sim"), col("sim")).as("hamming"))
+    new NearDups(allPairs.unionByName(starPairs).unionByName(chainPairs)
+        .distinct() // hamming is deterministic per pair — multi-band safe
+        .filter(col("hamming") <= maxHamming),
+      "simhashNearDups", bucketCap, banded)
   }
 
   /** Pigeonhole band count for a Hamming threshold. 63 is the honest
@@ -446,34 +441,6 @@ object Dedup {
       "band", "bits")
       .withColumn("bsim", min_by(col("sim"), col("id"))
         .over(Window.partitionBy("band", "bits"))))
-  }
-
-  private def simhashPairsFromBanded(banded: DataFrame, maxHamming: Int,
-      bucketCap: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val small = banded.filter(col("bsz") <= bucketCap)
-    val allPairs = small.as("x").join(small.as("y").hint("merge"),
-        col("x.band") === col("y.band") && col("x.bits") === col("y.bits") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        hamming(col("x.sim"), col("y.sim")).as("hamming"))
-    val big = banded.filter(col("bsz") > bucketCap)
-    // bmin < id always, so the star pair is already (id_a < id_b)
-    val starPairs = big.filter(col("id") =!= col("bmin"))
-      .select(col("bmin").as("id_a"), col("id").as("id_b"),
-        hamming(col("bsim"), col("sim")).as("hamming"))
-    val wOrd = Window.partitionBy("band", "bits")
-      .orderBy(col("sim"), col("id"))
-    val chainPairs = big
-      .withColumn("prev_id", lag("id", 1).over(wOrd))
-      .withColumn("prev_sim", lag("sim", 1).over(wOrd))
-      .filter(col("prev_id").isNotNull)
-      .select(least(col("prev_id"), col("id")).as("id_a"),
-        greatest(col("prev_id"), col("id")).as("id_b"),
-        hamming(col("prev_sim"), col("sim")).as("hamming"))
-    allPairs.unionByName(starPairs).unionByName(chainPairs)
-      .distinct() // hamming is deterministic per pair — multi-band safe
-      .filter(col("hamming") <= maxHamming)
   }
 
   // ---- n-gram Jaccard ------------------------------------------------------
@@ -727,7 +694,7 @@ object Dedup {
 
   // ---- embedding cosine near-dup ------------------------------------------
   /** Near-duplicate embedding pairs: random-hyperplane sign buckets (LSH for
-    * cosine), exact cosine verification within buckets.
+    * cosine), exact cosine verification of the candidates.
     *
     * `bucketCap` is the same OPT-IN mega-bucket skew guard as
     * [[minhashNearDups]]/[[simhashNearDups]]: an oversized sign bucket
@@ -735,7 +702,7 @@ object Dedup {
     * all-pairs — members CHAIN in (emb, id) order (lexicographic array
     * order sorts near-identical vectors adjacent) plus a STAR to the
     * bucket's min-id member; every edge is exact-cosine-verified, so no
-    * false merge is possible. Pair with [[embeddingNearDupsWithStats]] so
+    * false merge is possible. Read the result's [[NearDups.stats]] so
     * truncation is OBSERVED.
     *
     * `bands` is the recall dial (same amplification as minhash's banding):
@@ -749,156 +716,59 @@ object Dedup {
     * `planes` rows equal the single-band matrix), hence the banded
     * candidate set is a strict superset of the single-band one and
     * verification is identical — `bands > 1` can only add true pairs,
-    * never lose one (DedupSpec pins the superset). The banded path
-    * mirrors the minhash pairing shape: one materialized
-    * `(id, bucket, bsz, bmin)` frame carries the operator's single
-    * bucket-key shuffle (embeddings deliberately NOT exploded ×bands —
-    * the verify joins read them back from the one-row-per-vector sigs
-    * frame), and `bucketCap` applies per band with the same star/chain
-    * guard.
+    * never lose one (DedupSpec pins the superset). Every band count runs
+    * the minhash pairing shape: one materialized `(id, bucket, bsz, bmin)`
+    * frame carries the operator's single bucket-key shuffle (embeddings
+    * deliberately NOT exploded ×bands — the verify joins read them back
+    * from the one-row-per-vector sigs frame; only the one-band frame,
+    * already one row per vector, carries them), [[cappedCandidates]] applies
+    * `bucketCap` per band with the star/chain guard and yields DISTINCT
+    * candidate ids, and ONE exact cosine verify join prices the work at
+    * the deduped candidate count rather than once per band hit.
     */
   def embeddingNearDups(df: DataFrame, idCol: String, embCol: String,
       minCosine: Double = 0.95, planes: Int = 12, dim: Int = 64,
-      bucketCap: Int = Int.MaxValue, bands: Int = 1): DataFrame = {
-    requireDial(bands, planes)
-    if (bands == 1)
-      embPairsFromBucketed(
-        embBucketed(df, idCol, embCol, planes, dim), minCosine, bucketCap)
-    else {
-      val sigs = embSigs(df, idCol, embCol, bands, planes, dim)
-      embPairsFromSizedBands(sigs,
-        graft.analytics.Materialize.partitioned(
-          sizedEmbBands(sigs, bands, planes)),
-        minCosine, bucketCap)
-    }
-  }
-
-  /** `bands`/`planes` must be ≥ 1: `bands = 0` would route to the banded
-    * path and explode over an EMPTY band array — every row silently
-    * dropped, zero pairs, an all-zero census — and `planes = 0` buckets
-    * the whole corpus into one all-pairs cell. Both are dial typos, not
-    * meaningful requests; fail loudly (the ≤ 63-bit upper bound lives in
-    * [[embSigs]]).
-    */
-  private def requireDial(bands: Int, planes: Int): Unit = {
+      bucketCap: Int = Int.MaxValue, bands: Int = 1): NearDups = {
+    // `bands`/`planes` must be ≥ 1: `bands = 0` would explode over an
+    // EMPTY band array — every row silently dropped, zero pairs, an
+    // all-zero census — and `planes = 0` buckets the whole corpus into one
+    // all-pairs cell. Both are dial typos; fail loudly. One band is the
+    // plain sign word (hyperplane_bucket allows up to 64 planes); more
+    // bands tag each key with its band index ABOVE the sign bits, so their
+    // sign words must leave tag room in one long.
     require(bands >= 1, s"bands = $bands must be >= 1")
     require(planes >= 1, s"planes = $planes must be >= 1")
-  }
-
-  /** [[embeddingNearDups]] plus the eager truncation census (same
-    * [[BucketStats]] contract and logging as the minhash twin).
-    */
-  def embeddingNearDupsWithStats(df: DataFrame, idCol: String,
-      embCol: String, minCosine: Double = 0.95, planes: Int = 12,
-      dim: Int = 64, bucketCap: Int = Int.MaxValue, bands: Int = 1)
-      : (DataFrame, BucketStats) = {
-    requireDial(bands, planes)
-    if (bands == 1) {
-      val withB = embBucketed(df, idCol, embCol, planes, dim)
-      val stats = censusStats("embeddingNearDups", bucketCap, withB)
-      (embPairsFromBucketed(withB, minCosine, bucketCap), stats)
-    } else {
-      val sigs = embSigs(df, idCol, embCol, bands, planes, dim)
-      val sized = graft.analytics.Materialize.partitioned(
-        sizedEmbBands(sigs, bands, planes))
-      val stats = censusStats("embeddingNearDups", bucketCap, sized)
-      (embPairsFromSizedBands(sigs, sized, minCosine, bucketCap), stats)
-    }
-  }
-
-  /** One MATERIALIZED row per vector with the full (bands·planes)-bit sign
-    * word — the single hyperplane pass shared by the banded explode and
-    * both verify joins (one pass over the embedding matrix total; the
-    * banded frame then carries only ids and bucket keys).
-    */
-  private def embSigs(df: DataFrame, idCol: String, embCol: String,
-      bands: Int, planes: Int, dim: Int): DataFrame = {
-    require(bands * planes <= 63,
+    require(bands == 1 || bands * planes <= 63,
       s"bands*planes = ${bands * planes} sign bits must fit one long")
-    graft.analytics.Materialize(df.select(col(idCol).as("id"),
+    // One MATERIALIZED row per vector with the full (bands·planes)-bit sign
+    // word — the single hyperplane pass shared by the banded explode and
+    // both verify joins (one pass over the embedding matrix total; the
+    // banded frame then carries ids and bucket keys, plus the vector at
+    // one band).
+    val sigs = graft.analytics.Materialize(df.select(col(idCol).as("id"),
       col(embCol).as("emb"),
       hyperplane_bucket(col(embCol), bands * planes, dim).as("full")))
-  }
-
-  /** One row per (id, band bucket) with the bucket's size and min id — the
-    * banded operator's ONE shuffle on the bucket key ([[sizedBands]] twin).
-    * Band b's key is its `planes` sign bits tagged with the band index in
-    * the bits ABOVE them, so bands never collide.
-    */
-  private def sizedEmbBands(sigs: DataFrame, bands: Int,
-      planes: Int): DataFrame = {
-    val mask = (1L << planes) - 1L
-    withBucketStats(sigs.select(col("id"),
-      explode(array((0 until bands).map(b =>
-        shiftright(col("full"), b * planes).bitwiseAND(lit(mask))
-          .bitwiseOR(lit(b.toLong << planes))): _*)).as("bucket")),
-      "bucket")
-  }
-
-  /** Banded pairing over a MATERIALIZED [[sizedEmbBands]] frame — the
-    * [[pairsFromSized]] shape for embeddings: [[cappedCandidates]] (capped
-    * buckets chained in (emb, id) order) yields DISTINCT candidate ids,
-    * then ONE exact cosine verify join prices the work at the deduped
-    * candidate count rather than once per band hit.
-    */
-  private def embPairsFromSizedBands(sigs: DataFrame, sized: DataFrame,
-      minCosine: Double, bucketCap: Int): DataFrame =
-    verifyJoin(cappedCandidates(sized, "bucket", sigs, "emb", bucketCap),
-      sigs.select(col("id"), col("emb")), Nil, "emb",
-      cosine_sim, "cosine", minCosine)
-
-  /** One row per vector with its sign bucket, the bucket's size and min
-    * id — materialized once, partitioned+sorted on the bucket key: the
-    * self-join doesn't bucket every vector twice AND doesn't exchange the
-    * (heavy — full embedding per row) frame once per side, and the census
-    * reads the same frame. `bsim`-style inline star verification is NOT
-    * carried here: a per-row copy of the representative's vector would
-    * double the frame's width, so the star branch joins vectors back
-    * instead (capped-bucket rows only).
-    */
-  private def embBucketed(df: DataFrame, idCol: String, embCol: String,
-      planes: Int, dim: Int): DataFrame = {
-    val sign = hyperplane_bucket(col(embCol), planes, dim)
-    graft.analytics.Materialize.partitioned(withBucketStats(
-      df.select(col(idCol).as("id"), col(embCol).as("emb"),
-          sign.as("bucket"))
-        .repartition(col("bucket")),
+    // One row per (id, band bucket) with the bucket's size and min id —
+    // the operator's ONE shuffle on the bucket key (the [[sizedBands]]
+    // shape). Band b's key is its `planes` sign bits tagged with b in the
+    // bits above them, so bands never collide; band 0's key is exactly
+    // hyperplane_bucket(emb, planes, dim). One band is one row per vector,
+    // so carrying `emb` adds no rows and lets the capped chain read it in
+    // place (no join-back, no re-key on `bucket`); more bands leave it out
+    // (it would be copied ×bands) and the chain joins it back.
+    val (key, carried): (Int => Column, Seq[Column]) =
+      if (bands == 1) (_ => col("full"), Seq(col("emb")))
+      else (b => shiftright(col("full"), b * planes)
+        .bitwiseAND(lit((1L << planes) - 1L))
+        .bitwiseOR(lit(b.toLong << planes)), Nil)
+    val sized = graft.analytics.Materialize.partitioned(withBucketStats(
+      sigs.select(col("id") +: carried :+
+        explode(array((0 until bands).map(key): _*)).as("bucket"): _*),
       "bucket"))
-  }
-
-  private def embPairsFromBucketed(withB: DataFrame, minCosine: Double,
-      bucketCap: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val small = withB.filter(col("bsz") <= bucketCap)
-    val allPairs = small.as("x").join(small.as("y").hint("merge"),
-        col("x.bucket") === col("y.bucket") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        cosine_sim(col("x.emb"), col("y.emb")).as("cosine"))
-    val big = withB.filter(col("bsz") > bucketCap)
-    // star pairs verify via a join back to the vectors (bmin < id, so the
-    // pair is already ordered); `withB` holds ONE row per vector — no
-    // dedup needed on the join side
-    val embs = withB.select(col("id"), col("emb")).hint("merge")
-    val starPairs = big.filter(col("id") =!= col("bmin"))
-      .select(col("bmin").as("id_a"), col("id").as("id_b"))
-      .join(embs.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("emb", "emb_a"), "id_a")
-      .join(embs.withColumnRenamed("id", "id_b")
-        .withColumnRenamed("emb", "emb_b"), "id_b")
-      .select(col("id_a"), col("id_b"),
-        cosine_sim(col("emb_a"), col("emb_b")).as("cosine"))
-    // chain verifies inline: lag() hands the previous row's vector over
-    val wOrd = Window.partitionBy("bucket").orderBy(col("emb"), col("id"))
-    val chainPairs = big
-      .withColumn("prev_id", lag("id", 1).over(wOrd))
-      .withColumn("prev_emb", lag("emb", 1).over(wOrd))
-      .filter(col("prev_id").isNotNull)
-      .select(least(col("prev_id"), col("id")).as("id_a"),
-        greatest(col("prev_id"), col("id")).as("id_b"),
-        cosine_sim(col("prev_emb"), col("emb")).as("cosine"))
-    allPairs.unionByName(starPairs).unionByName(chainPairs)
-      .distinct() // cosine is deterministic per pair
-      .filter(col("cosine") >= minCosine)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
+    new NearDups(
+      verifyJoin(cappedCandidates(sized, "bucket", sigs, "emb", bucketCap),
+        sigs.select(col("id"), col("emb")), Nil, "emb",
+        cosine_sim, "cosine", minCosine),
+      "embeddingNearDups", bucketCap, sized)
   }
 }

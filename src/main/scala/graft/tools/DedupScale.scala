@@ -135,9 +135,10 @@ object DedupScale {
     var pairs: org.apache.spark.sql.DataFrame = null
     var nPairs = 0L
     phase("minhash_lsh_capped") {
-      val (p, stats) = Dedup.minhashNearDupsWithStats(
+      val nd = Dedup.minhashNearDups(
         corpus, "doc_id", "text", minJaccard = minJ, bucketCap = bucketCap)
-      pairs = graft.analytics.Materialize(p)
+      val stats = nd.stats
+      pairs = graft.analytics.Materialize(nd.pairs)
       nPairs = pairs.count()
       Seq("bucket_cap" -> bucketCap, "min_jaccard" -> minJ,
         "verified_pairs" -> nPairs,
@@ -254,8 +255,8 @@ object DedupScale {
 
     // ---- SimHash near-dup over the bounded-cluster slice -----------------
     phase("simhash_near_dup") {
-      // simhashNearDups has no bucketCap: a mega template cluster sharing
-      // one 16-bit band value is all-pairs BY CONSTRUCTION, so (same
+      // uncapped here: a mega template cluster sharing one 16-bit band
+      // value is all-pairs BY CONSTRUCTION, so (same
       // rationale as the exact jaccard phase) the mega mass belongs to the
       // capped LSH path and this phase runs the bounded-cluster slice.
       // 16-bit bands are the 64-bit/hamming≤3 pigeonhole split; at larger
@@ -266,7 +267,7 @@ object DedupScale {
           col("doc_id") < lim)
       val sliceN = slice.count()
       val pairs = graft.analytics.Materialize(
-        Dedup.simhashNearDups(slice, "doc_id", "text", maxHamming = 3))
+        Dedup.simhashNearDups(slice, "doc_id", "text", maxHamming = 3).pairs)
       val nPairsSim = pairs.count()
       // recovery oracle: pristine members (n_edits = 0) of one cluster are
       // byte-identical texts → identical simhash → hamming 0 → guaranteed
@@ -309,9 +310,10 @@ object DedupScale {
       val lim = math.min(nDocs, 1000000L)
       val slice = corpus.filter(col("doc_id") < lim)
       val sliceN = slice.count()
-      val (p, stats) = Dedup.simhashNearDupsWithStats(slice, "doc_id",
+      val nd = Dedup.simhashNearDups(slice, "doc_id",
         "text", maxHamming = 3, bucketCap = 512)
-      val pairs = graft.analytics.Materialize(p)
+      val stats = nd.stats
+      val pairs = graft.analytics.Materialize(nd.pairs)
       val n = pairs.count()
       val top1 = topClusters(0)._1
       val megaIds = corpus.filter(col("cluster") === top1 &&
@@ -347,7 +349,7 @@ object DedupScale {
       val sliceN = slice.count()
       val pairs = graft.analytics.Materialize(Dedup.embeddingNearDups(
         slice, "doc_id", "embedding", minCosine = 0.95, planes = 12,
-        dim = 64))
+        dim = 64).pairs)
       val nPairsEmb = pairs.count()
       val meta = slice.filter(col("cluster") >= 0)
         .select(col("doc_id"), col("cluster"))
@@ -371,7 +373,7 @@ object DedupScale {
       // single-band planes, so banded pairs ⊇ the single-band set
       val pairsB = graft.analytics.Materialize(Dedup.embeddingNearDups(
         slice, "doc_id", "embedding", minCosine = 0.95, planes = 12,
-        dim = 64, bands = 4))
+        dim = 64, bands = 4).pairs)
       val nPairsB = pairsB.count()
       val recoveredB = pairsB
         .join(meta.select(col("doc_id").as("id_a"),
@@ -405,10 +407,11 @@ object DedupScale {
       val slice = corpus.filter(col("doc_id") < lim)
         .select(col("doc_id"), col("cluster"), col("embedding"))
       val sliceN = slice.count()
-      val (p, stats) = Dedup.embeddingNearDupsWithStats(slice, "doc_id",
+      val nd = Dedup.embeddingNearDups(slice, "doc_id",
         "embedding", minCosine = 0.95, planes = 12, dim = 64,
         bucketCap = 512)
-      val pairs = graft.analytics.Materialize(p)
+      val stats = nd.stats
+      val pairs = graft.analytics.Materialize(nd.pairs)
       val n = pairs.count()
       val top1 = topClusters(0)._1
       val megaIds = slice.filter(col("cluster") === top1)

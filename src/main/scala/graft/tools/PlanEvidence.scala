@@ -19,14 +19,28 @@ object PlanEvidence {
     val sf = "/root/testdata/sf0.01"
     val sb = new StringBuilder
 
+    // expression ids (`#N`) and AQE `plan_id=N` come from JVM-global
+    // counters, so they depend on every section planned before this one:
+    // renumber each densely, in order of first appearance within the
+    // section, so deleting or reordering a section leaves the others'
+    // text unchanged
+    def dense(s: String, re: scala.util.matching.Regex,
+        fmt: Int => String): String = {
+      val ids = scala.collection.mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
+        fmt(ids.getOrElseUpdate(m.group(1), ids.size))))
+    }
+
     def section(title: String, note: String)(df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n## $title\n\n$note\n\n```\n")
       // lambda identities (`$$Lambda$123/0x7f...@1a2b`) differ per JVM run;
       // scrub them so a regenerated PLANS.md diffs clean iff plan SHAPE moved
-      sb.append(df.queryExecution.explainString(
+      val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.SimpleMode)
         .replaceAll("""\$\$\$?Lambda[$]?\d*/0x[0-9a-f]+@[0-9a-f]+""",
-          "\\$\\$Lambda"))
+          "\\$\\$Lambda")
+      sb.append(dense(dense(plan, """#(\d+)""".r, i => s"#$i"),
+        """plan_id=(\d+)""".r, i => s"plan_id=$i"))
       sb.append("\n```\n")
     }
 
@@ -154,9 +168,6 @@ object PlanEvidence {
           .select("url", "keep")
       })
 
-    // new sections append at the END: sections share one SparkSession, so
-    // an insertion mid-file would shift every later section's expression
-    // ids and break the byte-stable-regen discipline
     section("Benchmark decontamination — eval-dim broadcast, corpus never " +
       "shuffled on grams (q_decontam_survivors)",
       "`Decontaminate.decontaminate`: the eval set's distinct gram frame is " +

@@ -33,13 +33,13 @@ class DedupSpec extends AnyFunSuite {
     val other = "complet diferit text despre altceva cu totul alte cuvinte " * 5
     val df = docs(1L -> base, 2L -> base, 3L -> near, 4L -> other)
     val pairs = Dedup.minhashNearDups(df, "doc_id", "text", minJaccard = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), s"exact dup pair missing: $pairs")
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L),
       s"unrelated doc matched: $pairs")
     // exact duplicate verifies at jaccard 1.0
     val j12 = Dedup.minhashNearDups(df, "doc_id", "text", minJaccard = 0.5)
-      .filter(col("id_a") === 1 && col("id_b") === 2)
+      .pairs.filter(col("id_a") === 1 && col("id_b") === 2)
       .select("jaccard").head().getDouble(0)
     assert(j12 == 1.0)
   }
@@ -225,7 +225,7 @@ class DedupSpec extends AnyFunSuite {
     val base = "unu doi trei patru cinci șase șapte opt nouă zece " * 8
     val df = docs(1L -> base, 2L -> base, 3L -> ("x " + base))
     val pairs = Dedup.simhashNearDups(df, "doc_id", "text", maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
   }
 
@@ -253,7 +253,7 @@ class DedupSpec extends AnyFunSuite {
     val want = (for (a <- ids; b <- ids if a < b && ham(a, b) <= 4)
       yield (a, b)).toSet
     val got = Dedup.simhashNearDups(df, "doc_id", "text", maxHamming = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want,
       s"missing=${(want -- got).take(5)} spurious=${(got -- want).take(5)}")
     // the motivating case: a wanted pair whose differing bits span all
@@ -268,7 +268,7 @@ class DedupSpec extends AnyFunSuite {
     // maxHamming = 0 is exact-signature bucketing (one full-width band):
     // the planted byte-identical pair and any hash-identical variants
     val exact = Dedup.simhashNearDups(df, "doc_id", "text", maxHamming = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantExact = (for (a <- ids; b <- ids if a < b && ham(a, b) == 0)
       yield (a, b)).toSet
     assert(exact == wantExact && exact.contains((0L, 1L)))
@@ -285,8 +285,9 @@ class DedupSpec extends AnyFunSuite {
     val template = "pagina șablon identică pe toate gazdele acestui site " * 6
     val rows = (1L to 600L).map(i => i -> template) ++ Seq(
       2001L -> ("conținut complet diferit despre altceva " * 6))
-    val (pairsDf, stats) = Dedup.simhashNearDupsWithStats(
+    val nd = Dedup.simhashNearDups(
       docs(rows: _*), "doc_id", "text", maxHamming = 3, bucketCap = 100)
+    val (pairsDf, stats) = (nd.pairs, nd.stats)
     val pairs = pairsDf.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.length < 5000, s"pair explosion: ${pairs.length}")
     assert(pairs.length >= 599, s"cluster under-connected: ${pairs.length}")
@@ -297,8 +298,8 @@ class DedupSpec extends AnyFunSuite {
     assert(cl.length == 600)
     assert(cl.forall(_.getLong(1) == 1L), "template cluster split by cap")
     // uncapped census on the same corpus: silent
-    val (_, uncapped) = Dedup.simhashNearDupsWithStats(
-      docs(rows: _*), "doc_id", "text")
+    val uncapped = Dedup.simhashNearDups(
+      docs(rows: _*), "doc_id", "text").stats
     assert(uncapped.cappedBuckets == 0L && uncapped.skippedPairs == 0L)
   }
 
@@ -309,8 +310,9 @@ class DedupSpec extends AnyFunSuite {
     val rows = (1L to 400L).map(i => (i, tpl.toSeq)) ++ Seq(
       (2001L, Seq.tabulate(8)(i => if (i % 2 == 0) 1.0 else -0.7)))
     val df = rows.toDF("vec_id", "embedding")
-    val (pairsDf, stats) = Dedup.embeddingNearDupsWithStats(df, "vec_id",
+    val nd = Dedup.embeddingNearDups(df, "vec_id",
       "embedding", minCosine = 0.999, planes = 6, dim = 8, bucketCap = 50)
+    val (pairsDf, stats) = (nd.pairs, nd.stats)
     val pairs = pairsDf.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.length < 3000, s"pair explosion: ${pairs.length}")
     assert(pairs.length >= 399, s"cluster under-connected: ${pairs.length}")
@@ -323,7 +325,7 @@ class DedupSpec extends AnyFunSuite {
       (3L, Seq.tabulate(8)(i => if (i == 0) 1.0 else -0.3 * i)))
       .toDF("vec_id", "embedding")
     val got = Dedup.embeddingNearDups(smallRows, "vec_id", "embedding",
-      minCosine = 0.999, planes = 6, dim = 8)
+      minCosine = 0.999, planes = 6, dim = 8).pairs
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == Set((1L, 2L, 1.0)))
   }
@@ -349,7 +351,7 @@ class DedupSpec extends AnyFunSuite {
     val df = rows.toDF("vec_id", "embedding")
     def run(bands: Int) =
       Dedup.embeddingNearDups(df, "vec_id", "embedding", minCosine = 0.9,
-        planes = 8, dim = dim, bands = bands)
+        planes = 8, dim = dim, bands = bands).pairs
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val single = run(1)
     val banded = run(4)
@@ -390,8 +392,8 @@ class DedupSpec extends AnyFunSuite {
         Dedup.embeddingNearDups(df, "vec_id", "embedding", dim = 2,
           planes = bad))
       intercept[IllegalArgumentException](
-        Dedup.embeddingNearDupsWithStats(df, "vec_id", "embedding", dim = 2,
-          bands = bad))
+        Dedup.embeddingNearDups(df, "vec_id", "embedding", dim = 2,
+          bands = bad).stats)
     }
   }
 
@@ -402,9 +404,10 @@ class DedupSpec extends AnyFunSuite {
     val rows = (1L to 400L).map(i => (i, tpl.toSeq)) ++ Seq(
       (2001L, Seq.tabulate(8)(i => if (i % 2 == 0) 1.0 else -0.7)))
     val df = rows.toDF("vec_id", "embedding")
-    val (pairsDf, stats) = Dedup.embeddingNearDupsWithStats(df, "vec_id",
+    val nd = Dedup.embeddingNearDups(df, "vec_id",
       "embedding", minCosine = 0.999, planes = 6, dim = 8, bucketCap = 50,
       bands = 3)
+    val (pairsDf, stats) = (nd.pairs, nd.stats)
     val pairs = pairsDf.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.length < 3000, s"pair explosion: ${pairs.length}")
     assert(pairs.length >= 399, s"cluster under-connected: ${pairs.length}")
@@ -425,7 +428,7 @@ class DedupSpec extends AnyFunSuite {
     for (cap <- Seq(Int.MaxValue, 1)) {
       val plan = Dedup.embeddingNearDups(emb, "vec_id", "embedding",
         minCosine = 0.9, planes = 4, dim = 8, bucketCap = cap, bands = 3)
-        .queryExecution.executedPlan.toString
+        .pairs.queryExecution.executedPlan.toString
       assert(!plan.contains("Generate "),
         s"banded pairing re-derives its frame (cap=$cap):\n$plan")
       val exch =
@@ -447,7 +450,7 @@ class DedupSpec extends AnyFunSuite {
     val rows = (1L to 1000L).map(i => i -> template) ++ uniq
     val df = docs(rows: _*)
     val pairsDf = Dedup.minhashNearDups(df, "doc_id", "text",
-      minJaccard = 0.9, bucketCap = 100)
+      minJaccard = 0.9, bucketCap = 100).pairs
     val pairs = pairsDf.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.length < 5000, s"pair explosion: ${pairs.length} pairs")
     assert(pairs.length >= 999, s"cluster under-connected: ${pairs.length}")
@@ -470,7 +473,7 @@ class DedupSpec extends AnyFunSuite {
     val rows = (1L to 200L).map(i => i -> tA) ++
       (201L to 400L).map(i => i -> tB)
     val pairsDf = Dedup.minhashNearDups(docs(rows: _*), "doc_id", "text",
-      minJaccard = 0.9, bucketCap = 50)
+      minJaccard = 0.9, bucketCap = 50).pairs
     val pairs = pairsDf.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.length < 20000, s"pair explosion: ${pairs.length}")
     assert(!pairs.exists(p => p._1 <= 200L && p._2 > 200L),
@@ -490,8 +493,9 @@ class DedupSpec extends AnyFunSuite {
       2001L -> ("conținut complet diferit despre altceva " * 6))
     val df = docs(rows: _*)
     // capped run: the 1000-doc template bucket exceeds cap=100 in every band
-    val (pairs, stats) = Dedup.minhashNearDupsWithStats(df, "doc_id", "text",
+    val nd = Dedup.minhashNearDups(df, "doc_id", "text",
       minJaccard = 0.9, bucketCap = 100)
+    val (pairs, stats) = (nd.pairs, nd.stats)
     assert(stats.cappedBuckets > 0, "capped fixture must report truncation")
     assert(stats.skippedPairs > 0)
     // skipped ≥ C(1000,2) − 2·999 for at least one band's bucket
@@ -500,15 +504,79 @@ class DedupSpec extends AnyFunSuite {
     // clean corpus under the same cap: census must be silent
     val clean = docs((1L to 50L).map(i =>
       i -> (1 to 25).map(j => s"cuvânt${i}_$j").mkString(" ")): _*)
-    val (_, cleanStats) = Dedup.minhashNearDupsWithStats(clean, "doc_id",
-      "text", minJaccard = 0.9, bucketCap = 100)
+    val cleanStats = Dedup.minhashNearDups(clean, "doc_id",
+      "text", minJaccard = 0.9, bucketCap = 100).stats
     assert(cleanStats.cappedBuckets == 0L)
     assert(cleanStats.skippedPairs == 0L)
     assert(cleanStats.nBuckets > 0L)
     // default cap is OPT-IN (Int.MaxValue): an uncapped census never trips
-    val (_, uncapped) = Dedup.minhashNearDupsWithStats(df, "doc_id", "text",
-      minJaccard = 0.9)
+    val uncapped = Dedup.minhashNearDups(df, "doc_id", "text",
+      minJaccard = 0.9).stats
     assert(uncapped.cappedBuckets == 0L)
+  }
+
+  test("the census runs on demand: reading only pairs runs no census job; " +
+      "reading stats twice runs one census aggregate and warns once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val template = "pagina șablon identică pe toate gazdele acestui site " * 6
+    val rows = (1L to 300L).map(i => i -> template) ++ Seq(
+      2001L -> ("conținut complet diferit despre altceva " * 6))
+    val sc = spark.sparkContext
+    val group = "dedup-census-on-demand"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val censusRuns = new java.util.concurrent.atomic.AtomicInteger
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    // a census query is the one whose output is the three census columns
+    val sqlListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.map(_.name) ==
+            Seq("n_buckets", "capped_buckets", "skipped_pairs"))
+          censusRuns.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def settled[T](body: => T): T = {
+      val out = body
+      org.apache.spark.graftshim.Bus.drain(sc)
+      out
+    }
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(sqlListener)
+    sc.setJobGroup(group, "census on demand")
+    try {
+      val nd = Dedup.minhashNearDups(docs(rows: _*), "doc_id", "text",
+        minJaccard = 0.9, bucketCap = 100)
+      val nPairs = settled(nd.pairs.count())
+      assert(nPairs >= 299)
+      assert(censusRuns.get == 0, "reading pairs ran the census")
+      val beforeStats = jobs.get
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      val first = settled(nd.stats)
+      val afterFirst = jobs.get
+      val second = settled(nd.stats)
+      System.setErr(stderr)
+      assert(censusRuns.get == 1, s"${censusRuns.get} census queries")
+      assert(afterFirst > beforeStats, "the first stats read ran no job")
+      assert(jobs.get == afterFirst, "the second stats read ran a job")
+      assert(second == first && first.cappedBuckets > 0)
+      val warnings = "\\[dedup\\] minhashNearDups bucketCap=100 truncated".r
+        .findAllIn(err.toString("UTF-8")).size
+      assert(warnings == 1, s"$warnings truncation warnings")
+    } finally {
+      System.setErr(stderr)
+      sc.clearJobGroup()
+      spark.listenerManager.unregister(sqlListener)
+      sc.removeSparkListener(jobListener)
+    }
   }
 
   test("dupClusters fails loudly when maxIter is too small (no silent wrong labels)") {
@@ -548,13 +616,15 @@ class DedupSpec extends AnyFunSuite {
 
   test("bucket census on an empty/degenerate corpus returns zeros, " +
       "never NULL-NPEs") {
-    val (out, stats) = Dedup.minhashNearDupsWithStats(
+    val nd = Dedup.minhashNearDups(
       docs(), "doc_id", "text", bucketCap = 4)
+    val (out, stats) = (nd.pairs, nd.stats)
     assert(out.collect().isEmpty)
     assert(stats == Dedup.BucketStats(0L, 0L, 0L))
     // all-empty texts: every row drops at the shingle filter, same shape
-    val (out2, stats2) = Dedup.minhashNearDupsWithStats(
+    val nd2 = Dedup.minhashNearDups(
       docs(1L -> "", 2L -> ""), "doc_id", "text", bucketCap = 4)
+    val (out2, stats2) = (nd2.pairs, nd2.stats)
     assert(out2.collect().isEmpty && stats2 == Dedup.BucketStats(0L, 0L, 0L))
   }
 
@@ -566,7 +636,7 @@ class DedupSpec extends AnyFunSuite {
       val base = "unu doi trei patru cinci șase șapte opt nouă zece " * 5
       val df = docs(1L -> base, 2L -> base, 3L -> ("x " + base))
       val pairs = Dedup.minhashNearDups(df, "doc_id", "text", minJaccard = 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(pairs.contains((1L, 2L)))
       def anyFile(p: java.io.File): Boolean =
         p.isFile || Option(p.listFiles).exists(_.exists(anyFile))
@@ -620,7 +690,7 @@ class DedupSpec extends AnyFunSuite {
     val rows = (1L to 300L).map(i => i -> template)
     val df = docs(rows: _*)
     val pairs = Dedup.minhashNearDups(df, "doc_id", "text",
-      minJaccard = 0.9, bucketCap = 50)
+      minJaccard = 0.9, bucketCap = 50).pairs
     val cl = Dedup.withClusterSizes(Dedup.dupClusters(pairs)).collect()
     assert(cl.length == 300)
     assert(cl.forall(_.getLong(1) == 1L), "single cluster rooted at min id")
@@ -674,9 +744,9 @@ class DedupSpec extends AnyFunSuite {
     // the chain edges at the representative, so distinct examined can be as
     // few as 2·10−4 = 16 → skipped = 45 − 16 = 29 per bucket, 232 total.
     val tpl = "pagina șablon identică repetată pe fiecare gazdă din corpus " * 4
-    val (_, stats) = Dedup.minhashNearDupsWithStats(
+    val stats = Dedup.minhashNearDups(
       docs((1L to 10L).map(_ -> tpl): _*), "doc_id", "text",
-      minJaccard = 0.9, bucketCap = 5)
+      minJaccard = 0.9, bucketCap = 5).stats
     assert(stats == Dedup.BucketStats(8L, 8L, 8L * 29L),
       s"got $stats")
     // in THIS fixture identical sigs chain in id order with bmin=1 at the
@@ -702,7 +772,7 @@ class DedupSpec extends AnyFunSuite {
     // two empty shingle sets would score NaN, which passes any `>=`
     // threshold
     val got = rows(Dedup.minhashNearDups(df, "doc_id", "text",
-      minJaccard = 0.5))
+      minJaccard = 0.5).pairs)
     assert(got.contains((1L, 2L, 1.0)), s"minhash lost the real pair: $got")
     assert(!got.exists(_._3.isNaN), s"minhash emitted a NaN score: $got")
     assert(!got.exists(p => empties(p._1) || empties(p._2)),
@@ -741,19 +811,19 @@ class DedupSpec extends AnyFunSuite {
         s"$name re-planned to broadcast at runtime:\n$fin")
     }
     noBroadcast("minhashNearDups")(
-      Dedup.minhashNearDups(df, "doc_id", "text", minJaccard = 0.5))
+      Dedup.minhashNearDups(df, "doc_id", "text", minJaccard = 0.5).pairs)
     noBroadcast("minhashNearDups capped")(
       Dedup.minhashNearDups(df, "doc_id", "text", minJaccard = 0.5,
-        bucketCap = 2))
+        bucketCap = 2).pairs)
     noBroadcast("jaccardPrefixJoin hash")(
       Dedup.jaccardPrefixJoin(grouped, "doc_id", "text", "grp", 0.5))
     noBroadcast("jaccardPrefixJoin freq")(
       Dedup.jaccardPrefixJoin(grouped, "doc_id", "text", "grp", 0.5,
         freqOrder = true))
     noBroadcast("simhashNearDups")(
-      Dedup.simhashNearDups(df, "doc_id", "text"))
+      Dedup.simhashNearDups(df, "doc_id", "text").pairs)
     noBroadcast("simhashNearDups capped")(
-      Dedup.simhashNearDups(df, "doc_id", "text", bucketCap = 2))
+      Dedup.simhashNearDups(df, "doc_id", "text", bucketCap = 2).pairs)
     noBroadcast("dupClusters")(
       Dedup.withClusterSizes(Dedup.dupClusters(
         Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"))))
@@ -761,25 +831,25 @@ class DedupSpec extends AnyFunSuite {
       Dedup.embeddingNearDups(
         Seq((1L, Seq.fill(8)(0.5)), (2L, Seq.fill(8)(0.5)))
           .toDF("vec_id", "embedding"),
-        "vec_id", "embedding", minCosine = 0.9, planes = 4, dim = 8))
+        "vec_id", "embedding", minCosine = 0.9, planes = 4, dim = 8).pairs)
     noBroadcast("embeddingNearDups capped")(
       Dedup.embeddingNearDups(
         Seq((1L, Seq.fill(8)(0.5)), (2L, Seq.fill(8)(0.5)))
           .toDF("vec_id", "embedding"),
         "vec_id", "embedding", minCosine = 0.9, planes = 4, dim = 8,
-        bucketCap = 1))
+        bucketCap = 1).pairs)
     noBroadcast("embeddingNearDups banded")(
       Dedup.embeddingNearDups(
         Seq((1L, Seq.fill(8)(0.5)), (2L, Seq.fill(8)(0.5)))
           .toDF("vec_id", "embedding"),
         "vec_id", "embedding", minCosine = 0.9, planes = 4, dim = 8,
-        bands = 3))
+        bands = 3).pairs)
     noBroadcast("embeddingNearDups banded capped")(
       Dedup.embeddingNearDups(
         Seq((1L, Seq.fill(8)(0.5)), (2L, Seq.fill(8)(0.5)))
           .toDF("vec_id", "embedding"),
         "vec_id", "embedding", minCosine = 0.9, planes = 4, dim = 8,
-        bucketCap = 1, bands = 3))
+        bucketCap = 1, bands = 3).pairs)
   }
 
   test("minhash pairing runs ONE band-key shuffle: the banded frame is " +
@@ -791,7 +861,7 @@ class DedupSpec extends AnyFunSuite {
       Seq(61L -> ("complet diferit text despre altceva aici " * 5))
     for (cap <- Seq(Int.MaxValue, 20)) {
       val plan = Dedup.minhashNearDups(docs(rows: _*), "doc_id", "text",
-        minJaccard = 0.9, bucketCap = cap)
+        minJaccard = 0.9, bucketCap = cap).pairs
         .queryExecution.executedPlan.toString
       // zero Generate: the band explode ran once, inside the checkpoint job
       assert(!plan.contains("Generate "),
@@ -827,10 +897,10 @@ class DedupSpec extends AnyFunSuite {
         s"$name re-exchanges on its bucket key ($keyPat):\n$plan")
     }
     pin("simhashNearDups", "bits")(
-      Dedup.simhashNearDups(df, "doc_id", "text"))
+      Dedup.simhashNearDups(df, "doc_id", "text").pairs)
     pin("embeddingNearDups", "bucket")(
       Dedup.embeddingNearDups(emb, "vec_id", "embedding",
-        minCosine = 0.9, planes = 4, dim = 8))
+        minCosine = 0.9, planes = 4, dim = 8).pairs)
     pin("jaccardPrefixJoin hash", "tok")(
       Dedup.jaccardPrefixJoin(grouped, "doc_id", "text", "grp", 0.5))
     pin("jaccardPrefixJoin freq", "tok")(
@@ -846,8 +916,24 @@ class DedupSpec extends AnyFunSuite {
     val df = Seq((1L, v1.toSeq), (2L, v2.toSeq), (3L, v3.toSeq))
       .toDF("vec_id", "embedding")
     val pairs = Dedup.embeddingNearDups(df, "vec_id", "embedding",
-      minCosine = 0.999, planes = 6, dim = 8)
+      minCosine = 0.999, planes = 6, dim = 8).pairs
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)))
+  }
+
+  test("embedding near-dups at planes = 64 (one band: the sign word fills " +
+      "the long) finds planted identical vectors, one bucket per vector") {
+    import spark.implicits._
+    val v1 = Array.tabulate(8)(i => 0.1 * (i + 1))
+    val v3 = Array.tabulate(8)(i => if (i == 0) 1.0 else -0.3 * i)
+    val v5 = v1.map(-_)
+    val df = Seq((1L, v1.toSeq), (2L, v1.toSeq), (3L, v3.toSeq),
+      (4L, v3.toSeq), (5L, v5.toSeq)).toDF("vec_id", "embedding")
+    val nd = Dedup.embeddingNearDups(df, "vec_id", "embedding",
+      minCosine = 0.999, planes = 64, dim = 8)
+    val pairs = nd.pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.toSet == Set((1L, 2L), (3L, 4L)))
+    // a zero band mask would put every vector in ONE bucket
+    assert(nd.stats.nBuckets == 3L, s"census: ${nd.stats}")
   }
 }
