@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.storage.StorageLevel
 
 /** One policy for "materialize this frame eagerly and cut its lineage" —
@@ -35,19 +35,16 @@ object Materialize {
   // DedupSpec's no-broadcast plan test.
   val ReliableConfKey = "spark.graft.checkpoint.reliable"
 
-  def apply(df: DataFrame): DataFrame = dataset(df)
-
-  /** Typed twin of [[apply]] — persist/checkpoint preserve the element
-    * type, so `Dataset[T]` pipelines (media payloads, typed stages) share
-    * the same policy.
+  /** Materializes `ds` under the policy above. Persist and checkpoint keep
+    * the element type, so typed `Dataset[T]` pipelines (media payloads)
+    * share the one policy with DataFrames.
     */
-  def dataset[T](ds: org.apache.spark.sql.Dataset[T])
-      : org.apache.spark.sql.Dataset[T] =
+  def apply[T](ds: Dataset[T]): Dataset[T] =
     if (ds.sparkSession.conf.getOption(ReliableConfKey)
           .exists(_.equalsIgnoreCase("true"))) {
       if (ds.sparkSession.sparkContext.getCheckpointDir.isEmpty)
         throw new IllegalStateException(
-          s"$ReliableConfKey=true but no checkpoint directory is set — " +
+          s"$ReliableConfKey=true but no checkpoint directory is set - " +
             "call sparkContext.setCheckpointDir(...) first")
       reliable(ds)
     } else ds.localCheckpoint(true)
@@ -139,8 +136,7 @@ object Materialize {
     * accumulators in it. The cache is released as soon as the checkpoint
     * files exist.
     */
-  private def reliable[T](ds: org.apache.spark.sql.Dataset[T])
-      : org.apache.spark.sql.Dataset[T] = {
+  private def reliable[T](ds: Dataset[T]): Dataset[T] = {
     val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
     val c = p.checkpoint(eager = true)
     p.unpersist(blocking = false)

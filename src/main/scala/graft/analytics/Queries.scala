@@ -711,7 +711,7 @@ object Queries {
     val chain = d.filter(col("doc_id") % 25 === 0)
       .select(col("doc_id").as("id_a"), (col("doc_id") + 5).as("id_b"))
     graft.dedup.Dedup.withClusterSizes(
-      graft.dedup.Dedup.dupClusters(star.unionByName(chain)))
+      graft.dedup.Dedup.dupClusters(star.unionByName(chain)).labels)
       .orderBy("id")
   }
 
@@ -982,7 +982,7 @@ object Queries {
   register("q_multimodal_transform", null) { (s, _) =>
     // materialized once: the resize and frame branches of the union are
     // planned independently, which would re-synthesize every payload
-    val payloads = Materialize.dataset(mediaPayloads(s, 200L))
+    val payloads = Materialize(mediaPayloads(s, 200L))
     val resized = graft.multimodal.Multimodal.resizeImages(payloads, maxDim = 6)
       .toDF().select(col("url"), lit("resize").as("op"),
         lit(0).as("idx"), col("mime"),

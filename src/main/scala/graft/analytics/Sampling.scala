@@ -63,6 +63,19 @@ object Sampling {
     substring(md5(concat(blocks :+ lit(salt): _*).cast("binary")), 1, 15)
   }
 
+  /** `CASE WHEN strata = s THEN v ... ELSE default END` with the WHENs in
+    * stratum order; the bare `default` when `values` is empty.
+    */
+  private def stratumCase(strata: Column, values: Map[String, Column],
+      default: Column): Column =
+    values.toSeq.sortBy(_._1).foldLeft(null: Column) { case (acc, (s, v)) =>
+      if (acc == null) when(strata === lit(s), v)
+      else acc.when(strata === lit(s), v)
+    } match {
+      case null => default
+      case c    => c.otherwise(default)
+    }
+
   /** Keep a deterministic `rates(stratum)` fraction of each stratum
     * (`defaultRate` for strata not in the map). Pure filter — no shuffle,
     * no RNG, stable across runs/retries/backfills for a fixed salt.
@@ -76,15 +89,9 @@ object Sampling {
       salt: String): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must identify the row")
     val strata = col(strataCol)
-    val threshold = rates.toSeq.sortBy(_._1).foldLeft(null: Column) {
-      case (acc, (s, r)) =>
-        val t = lit(thresholdHex(r))
-        if (acc == null) when(strata === lit(s), t)
-        else acc.when(strata === lit(s), t)
-    } match {
-      case null => lit(thresholdHex(defaultRate))
-      case c    => c.otherwise(lit(thresholdHex(defaultRate)))
-    }
+    val threshold = stratumCase(strata,
+      rates.map { case (s, r) => s -> lit(thresholdHex(r)) },
+      lit(thresholdHex(defaultRate)))
     df.filter(coordinate(strata, keyCols.map(col), salt) < threshold)
   }
 
@@ -117,14 +124,8 @@ object Sampling {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(strataCol)).orderBy(orderCols: _*)
     val strata = col(strataCol)
-    val budget = budgets.toSeq.sortBy(_._1).foldLeft(null: Column) {
-      case (acc, (s, b)) =>
-        if (acc == null) when(strata === lit(s), lit(b))
-        else acc.when(strata === lit(s), lit(b))
-    } match {
-      case null => lit(defaultBudget)
-      case c    => c.otherwise(lit(defaultBudget))
-    }
+    val budget = stratumCase(strata,
+      budgets.map { case (s, b) => s -> lit(b) }, lit(defaultBudget))
     df.withColumn("_cum_tokens", sum(col(tokensCol)).over(w))
       .filter(col("_cum_tokens") <= budget)
       .drop("_cum_tokens")

@@ -325,7 +325,7 @@ object Dedup {
       System.err.println(
         s"[dedup] $opName bucketCap=$bucketCap truncated " +
           s"${stats.cappedBuckets} bucket(s); up to ${stats.skippedPairs} " +
-          "candidate pair(s) not examined — near-dup recall inside those " +
+          "candidate pair(s) not examined - near-dup recall inside those " +
           "buckets is adjacency/representative only")
     stats
   }
@@ -617,14 +617,6 @@ object Dedup {
     *
     * Throws IllegalStateException instead of returning a silent non-fixpoint
     * if `maxIter` is hit while labels are still moving.
-    */
-  def dupClusters(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 25): DataFrame =
-    dupClustersWithStats(pairs, idA, idB, maxIter)._1
-
-  /** [[dupClusters]] returning also the number of propagate+jump iterations
-    * it took to converge — the O(log diameter) bound made assertable
-    * (DedupSpec pins a 10^4-node chain to ≲ 2·log₂ n iterations).
     *
     * Per-iteration lineage cuts follow the [[graft.analytics.Materialize]]
     * policy: in-memory `localCheckpoint` by default, or RELIABLE
@@ -640,12 +632,13 @@ object Dedup {
     * projection), not a second pass; task retries can only overcount, and at
     * the fixpoint nothing increments, so convergence detection stays exact.
     */
-  def dupClustersWithStats(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 25): (DataFrame, Int) = {
+  def dupClusters(pairs: DataFrame, maxIter: Int = 25): Clusters = {
     import graft.analytics.Materialize
     val spark = pairs.sparkSession
-    val bi = Materialize(pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .unionByName(pairs.select(col(idB).as("src"), col(idA).as("dst"))))
+    def edges(a: String, b: String) =
+      pairs.select(col(a).as("src"), col(b).as("dst"))
+    val bi = Materialize(
+      edges("id_a", "id_b").unionByName(edges("id_b", "id_a")))
     var labels = Materialize(bi.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     var changed = 1L
@@ -678,12 +671,20 @@ object Dedup {
     }
     if (changed > 0) throw new IllegalStateException(
       s"dupClusters did not reach a fixpoint in $maxIter iterations " +
-        s"($changed labels still moving) — raise maxIter")
-    (labels.select(col("id"), col("label").as("cluster_id")), it)
+        s"($changed labels still moving) - raise maxIter")
+    Clusters(labels.select(col("id"), col("label").as("cluster_id")), it)
   }
 
-  /** `dupClusters` + per-cluster size (the `minhash_cluster_size` column
-    * shape) via one groupBy-join on cluster_id.
+  /** [[dupClusters]]' result: the `labels` (`id`, `cluster_id`) and the
+    * number of propagate+jump `iterations` it took to converge — the
+    * O(log diameter) bound made assertable (DedupSpec pins a 10^4-node
+    * chain to ≲ 2·log₂ n iterations).
+    */
+  final case class Clusters(labels: DataFrame, iterations: Int)
+
+  /** [[dupClusters]]' `labels` + per-cluster size (the
+    * `minhash_cluster_size` column shape) via one groupBy-join on
+    * cluster_id.
     */
   def withClusterSizes(clusters: DataFrame): DataFrame = {
     val sizes = clusters.groupBy("cluster_id")

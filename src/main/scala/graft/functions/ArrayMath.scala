@@ -68,30 +68,37 @@ object ArrayMath {
 
   def softmaxArr(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
-    val out = new Array[Any](n)
     var i = 0
     var anyNull = false
     while (i < n && !anyNull) { anyNull = arr.isNullAt(i); i += 1 }
-    if (anyNull) {
-      // HOF semantics: a null element nulls the aggregate sum, so EVERY
-      // output element of `transform(e, _ / s)` is null
-      return new GenericArrayData(out) // all nulls
-    }
-    if (n == 0) return new GenericArrayData(out)
-    var m = arr.getDouble(0)
-    i = 1
-    while (i < n) { val v = arr.getDouble(i); if (v > m) m = v; i += 1 }
+    // HOF semantics: a null element nulls the aggregate sum, so EVERY
+    // output element of `transform(e, _ / s)` is null
+    if (anyNull || n == 0) new GenericArrayData(new Array[Any](n))
+    else new GenericArrayData(softmax(arr.toDoubleArray()))
+  }
+
+  /** Numerically stable softmax — the reference's `torch.softmax(dim=1)` —
+    * in the HOF chain's operation order: max by `>`, `exp(x − m)`, a left
+    * fold of the sum from 0.0, then one division per element. The one
+    * definition behind [[softmaxArr]], `TaskScorer.scoreDoc` and
+    * `LangIdModel.topLangs`.
+    */
+  def softmax(x: Array[Double]): Array[Double] = {
+    val n = x.length
+    var m = x(0)
+    var i = 1
+    while (i < n) { if (x(i) > m) m = x(i); i += 1 }
     val e = new Array[Double](n)
     var s = 0.0
     i = 0
     while (i < n) {
-      e(i) = math.exp(arr.getDouble(i) - m)
+      e(i) = math.exp(x(i) - m)
       s += e(i) // left fold from 0.0, as aggregate(e, 0.0, +)
       i += 1
     }
     i = 0
-    while (i < n) { out(i) = e(i) / s; i += 1 }
-    new GenericArrayData(out)
+    while (i < n) { e(i) /= s; i += 1 }
+    e
   }
 
   def negIndexedSorted(probs: ArrayData): ArrayData = {

@@ -101,7 +101,7 @@ case class CosineSimExpr(left: Expression, right: Expression)
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"cosine_sim requires (array<double>, array<double>), got " +
-          s"(${l.catalogString}, ${r.catalogString}) — cast explicitly")
+          s"(${l.catalogString}, ${r.catalogString}) - cast explicitly")
     }
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true // null on length mismatch
@@ -139,14 +139,14 @@ case class HyperplaneBucketExpr(child: Expression, planes: Int, dim: Int)
   // (the operators layer tighter bounds on top: lshTopK's probe fan-out
   // ≤ 24, banded near-dup's bands·planes ≤ 63 tag space)
   require(planes >= 1 && planes <= 64,
-    s"planes = $planes must be in [1, 64] — sign bits pack into one long")
+    s"planes = $planes must be in [1, 64] - sign bits pack into one long")
   require(dim >= 1, s"dim = $dim must be >= 1")
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
       case t => TypeCheckResult.TypeCheckFailure(
         s"hyperplane_bucket requires array<double>, got ${t.catalogString}" +
-          " — cast explicitly")
+          " - cast explicitly")
     }
   override def dataType: DataType = LongType
   override def nullable: Boolean = true // null unless length == dim

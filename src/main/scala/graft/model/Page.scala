@@ -7,9 +7,7 @@ import java.sql.Timestamp
   * `(url:string, warc_ts:timestamp, html:binary, text:string, lang:string)`.
   *
   * Mirrors the reference's ingested record (9-field projection at
-  * `fineweb/fineweb2_download.py:14-24`); the extra reference fields
-  * (`id`, `language_score`, `minhash_cluster_size`, `top_langs`) are carried
-  * by [[RefPage]] for parity tests.
+  * `fineweb/fineweb2_download.py:14-24`).
   */
 final case class Page(
     url: String,
@@ -17,23 +15,6 @@ final case class Page(
     html: Array[Byte],
     text: String,
     lang: String
-)
-
-/** Reference-parity record: [[Page]] + the upstream metadata columns the
-  * reference keeps (`fineweb/fineweb2_download.py:14-24`,
-  * `dataset_upload.py:22-39`).
-  */
-final case class RefPage(
-    id: String,
-    url: String,
-    warc_ts: Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String,
-    language_score: Double,
-    minhash_cluster_size: Long,
-    top_langs: String,
-    shard_id: Long
 )
 
 /** Full annotated output row of the quality pipeline (§2.8 N1–N5).

@@ -4,6 +4,7 @@ import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
+import javax.sound.sampled.{AudioFormat, AudioSystem}
 
 import org.apache.spark.sql.Dataset
 
@@ -97,6 +98,29 @@ object Multimodal {
       }
     } catch { case _: Exception => None }
 
+  /** Opens a WAV payload via `javax.sound.sampled` and reads it whole if
+    * it is linear PCM in its canonical signedness (16-bit signed, 8-bit
+    * unsigned) with a positive frame size: (format, header frame length,
+    * PCM bytes). Gated on ENCODING, not just sample width: a mu-law/A-law
+    * WAV also reports 8 bits but its companded bytes are NOT linear PCM —
+    * decoding them as such would emit garbage flagged `decoded = true` —
+    * so every other format is None and falls back to the labeled stub.
+    * Throws on payloads the JDK cannot open; callers catch.
+    */
+  private def readLinearPcm(payload: Array[Byte])
+      : Option[(AudioFormat, Long, Array[Byte])] = {
+    val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload))
+    try {
+      val fmt = in.getFormat
+      val bits = fmt.getSampleSizeInBits
+      val linearPcm =
+        (bits == 16 && fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED) ||
+        (bits == 8 && fmt.getEncoding == AudioFormat.Encoding.PCM_UNSIGNED)
+      if (fmt.getFrameSize <= 0 || !linearPcm) None
+      else Some((fmt, in.getFrameLength, in.readAllBytes()))
+    } finally in.close()
+  }
+
   /** Feature layout of [[decodeAudioFeatures]]:
     * [0]=sample rate (Hz), [1]=channels, [2]=bits/sample,
     * [3]=duration (sec), [4]=RMS amplitude (0..1), [5]=peak amplitude,
@@ -112,64 +136,44 @@ object Multimodal {
     */
   def decodeAudioFeatures(payload: Array[Byte],
       dim: Int = AudioFeatureDim): Option[Array[Float]] =
-    try {
-      val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new ByteArrayInputStream(payload))
-      try {
-        val fmt = in.getFormat
-        val bits = fmt.getSampleSizeInBits
-        // Gate on ENCODING, not just sample width: a mu-law/A-law WAV also
-        // reports 8 bits but its companded bytes are NOT linear PCM —
-        // decoding them as such would emit garbage amplitudes flagged
-        // `decoded = true`. Only linear PCM in its canonical signedness
-        // (16-bit signed, 8-bit unsigned) is read raw; everything else
-        // falls back to the labeled stub.
-        import javax.sound.sampled.AudioFormat.Encoding
-        val linearPcm =
-          (bits == 16 && fmt.getEncoding == Encoding.PCM_SIGNED) ||
-          (bits == 8 && fmt.getEncoding == Encoding.PCM_UNSIGNED)
-        if (!linearPcm) None
-        else {
-          val frames = in.getFrameLength
-          val frameBytes = fmt.getFrameSize
-          val bytes = in.readAllBytes()
-          val n = bytes.length / frameBytes
-          val step = math.max(1, n / 65536)
-          var i = 0
-          var kept = 0
-          var sumSq = 0.0
-          var sumAbs = 0.0
-          var peak = 0.0
-          val little = !fmt.isBigEndian
-          while (i < n) {
-            // first channel of the frame, normalized to [-1, 1]
-            val off = i * frameBytes
-            val v =
-              if (bits == 16) {
-                val lo = bytes(off) & 0xff
-                val hi = bytes(off + 1) & 0xff
-                val s = if (little) (hi << 8) | lo else (lo << 8) | hi
-                s.toShort / 32768.0
-              } else (bytes(off) & 0xff).toDouble / 128.0 - 1.0 // 8-bit unsigned
-            val a = math.abs(v)
-            sumSq += v * v; sumAbs += a; if (a > peak) peak = a
-            kept += 1
-            i += step
-          }
-          if (kept == 0) None
-          else {
-            val out = new Array[Float](dim)
-            out(0) = fmt.getSampleRate
-            out(1) = fmt.getChannels.toFloat
-            out(2) = bits.toFloat
-            out(3) = (frames.toDouble / fmt.getSampleRate).toFloat
-            out(4) = math.sqrt(sumSq / kept).toFloat
-            out(5) = peak.toFloat
-            out(6) = (sumAbs / kept).toFloat
-            Some(out)
-          }
-        }
-      } finally in.close()
+    try readLinearPcm(payload).flatMap { case (fmt, frames, bytes) =>
+      val bits = fmt.getSampleSizeInBits
+      val frameBytes = fmt.getFrameSize
+      val n = bytes.length / frameBytes
+      val step = math.max(1, n / 65536)
+      var i = 0
+      var kept = 0
+      var sumSq = 0.0
+      var sumAbs = 0.0
+      var peak = 0.0
+      val little = !fmt.isBigEndian
+      while (i < n) {
+        // first channel of the frame, normalized to [-1, 1]
+        val off = i * frameBytes
+        val v =
+          if (bits == 16) {
+            val lo = bytes(off) & 0xff
+            val hi = bytes(off + 1) & 0xff
+            val s = if (little) (hi << 8) | lo else (lo << 8) | hi
+            s.toShort / 32768.0
+          } else (bytes(off) & 0xff).toDouble / 128.0 - 1.0 // 8-bit unsigned
+        val a = math.abs(v)
+        sumSq += v * v; sumAbs += a; if (a > peak) peak = a
+        kept += 1
+        i += step
+      }
+      if (kept == 0) None
+      else {
+        val out = new Array[Float](dim)
+        out(0) = fmt.getSampleRate
+        out(1) = fmt.getChannels.toFloat
+        out(2) = bits.toFloat
+        out(3) = (frames.toDouble / fmt.getSampleRate).toFloat
+        out(4) = math.sqrt(sumSq / kept).toFloat
+        out(5) = peak.toFloat
+        out(6) = (sumAbs / kept).toFloat
+        Some(out)
+      }
     } catch { case _: Exception => None }
 
   /** STUB — deterministic fake decoder standing in for the compressed
@@ -291,44 +295,27 @@ object Multimodal {
     */
   def sampleWavWindows(payload: Array[Byte], n: Int, windowMs: Int = 25)
       : Option[Seq[(Float, Array[Byte])]] =
-    try {
-      import javax.sound.sampled.AudioSystem
-      val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload))
-      try {
-        val fmt = in.getFormat
-        val frameBytes = fmt.getFrameSize
-        // same linear-PCM gate as decodeAudioFeatures: a mu-law/A-law WAV
-        // opens fine but its companded bytes are NOT raw PCM — emitting
-        // them flagged decoded=true would break the windows' contract
-        import javax.sound.sampled.AudioFormat.Encoding
-        val bits = fmt.getSampleSizeInBits
-        val linearPcm =
-          (bits == 16 && fmt.getEncoding == Encoding.PCM_SIGNED) ||
-          (bits == 8 && fmt.getEncoding == Encoding.PCM_UNSIGNED)
-        if (frameBytes <= 0 || !linearPcm) None
-        else {
-          val bytes = in.readAllBytes()
-          val totalFrames = bytes.length / frameBytes
-          // a clip shorter than n×windowMs tiles into n shorter windows
-          // instead of n identical full-clip copies (offsets stay strictly
-          // increasing whenever the clip has ≥ n frames)
-          val winFrames = math.min(
-            math.max(1, (fmt.getSampleRate * windowMs / 1000.0).toInt),
-            math.max(1, totalFrames / n))
-          if (totalFrames == 0) None
-          else Some((0 until n).map { i =>
-            // window starts spread evenly across the clip, clamped so the
-            // final window never runs past the end
-            val start = math.min(
-              (totalFrames.toLong * i / n).toInt,
-              math.max(0, totalFrames - winFrames))
-            val end = math.min(totalFrames, start + winFrames)
-            (start / fmt.getSampleRate,
-              java.util.Arrays.copyOfRange(bytes, start * frameBytes,
-                end * frameBytes))
-          })
-        }
-      } finally in.close()
+    try readLinearPcm(payload).flatMap { case (fmt, _, bytes) =>
+      val frameBytes = fmt.getFrameSize
+      val totalFrames = bytes.length / frameBytes
+      // a clip shorter than n×windowMs tiles into n shorter windows
+      // instead of n identical full-clip copies (offsets stay strictly
+      // increasing whenever the clip has ≥ n frames)
+      val winFrames = math.min(
+        math.max(1, (fmt.getSampleRate * windowMs / 1000.0).toInt),
+        math.max(1, totalFrames / n))
+      if (totalFrames == 0) None
+      else Some((0 until n).map { i =>
+        // window starts spread evenly across the clip, clamped so the
+        // final window never runs past the end
+        val start = math.min(
+          (totalFrames.toLong * i / n).toInt,
+          math.max(0, totalFrames - winFrames))
+        val end = math.min(totalFrames, start + winFrames)
+        (start / fmt.getSampleRate,
+          java.util.Arrays.copyOfRange(bytes, start * frameBytes,
+            end * frameBytes))
+      })
     } catch { case _: Exception => None }
 
   /** Frame/window sampling over (url, payload) rows: `n` samples per

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{cosine_sim, hyperplane_bucket}
@@ -14,8 +15,9 @@ import graft.synth.Det
   *    set; the scale path for corpus×corpus search (probes the query's
   *    bucket; recall grows with fewer planes / multi-probe)
   *
-  * Dot products use `aggregate(zip_with(...))` higher-order functions — pure
-  * codegen'd Catalyst expressions, no UDF.
+  * Cosine and the sign bucket are the native `cosine_sim` and
+  * `hyperplane_bucket` functions (no UDF, no interpreted HOF); every top-k
+  * operator builds its own candidate join and ends in [[rankTopK]].
   */
 object Ann {
 
@@ -58,18 +60,9 @@ object Ann {
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, qId: String,
       cId: String, embCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val q = queries.select(col(qId).as("query_id"), col(embCol).as("q_emb"))
     val c = corpus.select(col(cId).as("neighbor_id"), col(embCol).as("c_emb"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine_sim(col("q_emb"), col("c_emb")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"), col("rk"))
+    rankTopK(c.crossJoin(broadcast(q)), k)
   }
 
   // ---- IVF (inverted-file) ANN — the second scale path -------------------
@@ -109,7 +102,7 @@ object Ann {
       .map(normalize)
       .filter(v => v.exists(_ != 0.0))
     require(sample.length >= nlist,
-      s"IVF training needs ≥ nlist=$nlist non-zero sample vectors, " +
+      s"IVF training needs >= nlist=$nlist non-zero sample vectors, " +
         s"got ${sample.length}")
     var centroids = Array.tabulate(nlist)(i =>
       sample(i * (sample.length / nlist)).clone())
@@ -179,7 +172,6 @@ object Ann {
   def ivfTopK(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
       embCol: String, k: Int, centroids: Array[Array[Double]],
       nprobe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types.{IntegerType, StructField}
     val spark = corpus.sparkSession
@@ -219,15 +211,7 @@ object Ann {
     // can match at most once — a dropDuplicates here would be a no-op
     // costing a full extra hash exchange over every scored candidate
     // (AnnSpec's exactly-once test is the regression guard)
-    val scored = c.join(q, "list_id")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine_sim(col("q_emb"), col("c_emb")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"), col("rk"))
+    rankTopK(c.join(q, "list_id"), k)
   }
 
   /** LSH-bucketed approximate top-k: candidates share one of the query's
@@ -246,8 +230,7 @@ object Ann {
   def lshTopK(queries: DataFrame, corpus: DataFrame, qId: String, cId: String,
       embCol: String, k: Int, planes: Int = 8, dim: Int = 64,
       probeRadius: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(planes <= 24, "probe-mask fan-out over ≤ 24 planes")
+    require(planes <= 24, "probe-mask fan-out over <= 24 planes")
     // enumerate the kept masks directly — O(Σ C(planes,r)), never 2^planes
     val masks: Seq[Column] = (0 to math.min(probeRadius, planes))
       .flatMap(r => (0 until planes).combinations(r)
@@ -266,12 +249,21 @@ object Ann {
     // (query, neighbor) pair matches at most one probe — dropDuplicates
     // here was a no-op costing a full hash exchange of all candidates
     // (AnnSpec's exactly-once test is the regression guard)
-    val scored = c.join(q, "bucket")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine_sim(col("q_emb"), col("c_emb")))
+    rankTopK(c.join(q, "bucket"), k)
+  }
+
+  /** The exact re-rank every top-k operator ends with: drop self pairs,
+    * exact cosine over the candidate (`query_id`, `q_emb`, `neighbor_id`,
+    * `c_emb`) rows, rank by (cosine desc, neighbor_id) per query, keep
+    * rank ≤ k, round the cosine to 6 places.
+    */
+  private def rankTopK(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w))
+    candidates
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", cosine_sim(col("q_emb"), col("c_emb")))
+      .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("neighbor_id"),
         round(col("cosine"), 6).as("cosine"), col("rk"))

@@ -2,6 +2,7 @@ package graft.stages
 
 import java.util.Locale
 
+import graft.functions.ArrayMath
 import graft.synth.{Corpus, Det}
 
 /** N1 — fastText-style language-ID model: hashed character n-gram (2..4)
@@ -67,15 +68,21 @@ object LangIdModel extends Serializable {
     }
   }
 
-  /** The committed quantized weight vector. Built once per JVM. */
-  lazy val weights: Array[Float] = {
+  /** A quantized weight vector: each (markers, delta) part's n-grams are
+    * added in the given order, then every weight is rounded to the `Q`
+    * grid.
+    */
+  private def buildWeights(parts: (Array[String], Float)*): Array[Float] = {
     val w = new Array[Float](NumBuckets)
-    roMarkers.foreach(m => addNgrams(w, m, 1.0f))
-    otherMarkers.foreach(m => addNgrams(w, m, -1.2f))
+    for ((markers, delta) <- parts) markers.foreach(m => addNgrams(w, m, delta))
     var i = 0
     while (i < w.length) { w(i) = math.round(w(i) / Q) * Q; i += 1 }
     w
   }
+
+  /** The committed quantized weight vector. Built once per JVM. */
+  lazy val weights: Array[Float] =
+    buildWeights(roMarkers -> 1.0f, otherMarkers -> -1.2f)
 
   /** Max chars of text scored per doc — bounds cost on pathological pages
     * (mirrors the reference's context caps, e.g. 2048 tokens at
@@ -112,16 +119,8 @@ object LangIdModel extends Serializable {
   val MultiLangs: Array[String] = Array("ron_Latn", "eng_Latn", "hun_Latn")
 
   /** One quantized weight vector per language in [[MultiLangs]] order. */
-  lazy val multiWeights: Array[Array[Float]] = {
-    def build(markers: Array[String]): Array[Float] = {
-      val w = new Array[Float](NumBuckets)
-      markers.foreach(m => addNgrams(w, m, 1.0f))
-      var i = 0
-      while (i < w.length) { w(i) = math.round(w(i) / Q) * Q; i += 1 }
-      w
-    }
-    Array(build(roMarkers), build(enMarkers), build(huMarkers))
-  }
+  lazy val multiWeights: Array[Array[Float]] =
+    Array(roMarkers, enMarkers, huMarkers).map(m => buildWeights(m -> 1.0f))
 
   private val MultiGain = 60.0
 
@@ -138,10 +137,8 @@ object LangIdModel extends Serializable {
       while (l < lw.length) { sums(l) += lw(l)(b); l += 1 }
     }
     val logits = sums.map(s => if (count == 0) 0.0 else MultiGain * s / count)
-    val m = logits.max
-    val e = logits.map(x => math.exp(x - m))
-    val z = e.sum
-    MultiLangs.zip(e.map(_ / z)).sortBy { case (l, p) => (-p, l) }.toSeq
+    MultiLangs.zip(ArrayMath.softmax(logits))
+      .sortBy { case (l, p) => (-p, l) }.toSeq
   }
 
   /** fineweb2-style JSON string, entries prob-desc, 4 decimals:

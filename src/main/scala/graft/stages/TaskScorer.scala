@@ -2,6 +2,7 @@ package graft.stages
 
 import org.apache.spark.sql.Dataset
 
+import graft.functions.ArrayMath
 import graft.model.Taxonomy
 import graft.synth.Det
 
@@ -107,20 +108,6 @@ object TaskScorer extends Serializable {
     ab.result()
   }
 
-  /** Numerically-stable softmax (the reference's `torch.softmax(dim=1)`). */
-  def softmax(logits: Array[Double]): Array[Double] = {
-    var m = logits(0)
-    var i = 1
-    while (i < logits.length) { if (logits(i) > m) m = logits(i); i += 1 }
-    val e = new Array[Double](logits.length)
-    var s = 0.0
-    i = 0
-    while (i < logits.length) { e(i) = math.exp(logits(i) - m); s += e(i); i += 1 }
-    i = 0
-    while (i < logits.length) { e(i) /= s; i += 1 }
-    e
-  }
-
   /** Top-k (classIdx, prob), prob desc with class-index tiebreak — the
     * deterministic equivalent of `torch.topk(probs, k)`
     * (`small_model_inference.py:88-90`).
@@ -166,7 +153,7 @@ object TaskScorer extends Serializable {
         c += 1
       }
       off += labels.length
-      softmax(logits)
+      ArrayMath.softmax(logits)
     }.toArray
     DocScores(score, score.toInt, taskProbs)
   }

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.graftshim.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -24,8 +25,8 @@ import graft.synth.ScaleCorpus
 object DedupScale {
 
   /** Aggregates shuffle-write bytes per completed stage. Listener events
-    * are delivered asynchronously; phases sleep briefly before reading, so
-    * the numbers are telemetry (±last stage), not a ledger.
+    * are delivered asynchronously; each phase drains the listener bus
+    * before reading, so the figures count every stage the phase ran.
     */
   private final class ShuffleTally extends SparkListener {
     val total = new java.util.concurrent.atomic.AtomicLong
@@ -104,7 +105,7 @@ object DedupScale {
       val t0 = System.nanoTime()
       val stats = body
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // let the listener bus drain (telemetry, not ledger)
+      Bus.drain(sc)
       sc.removeSparkListener(tally)
       phases += name -> (Seq(
         "wall_sec" -> math.rint(sec * 100) / 100,
@@ -153,9 +154,10 @@ object DedupScale {
       // cc_ckpt, every other phase keeps the in-memory default
       sc.setCheckpointDir(s"$base/cc_ckpt")
       spark.conf.set(graft.analytics.Materialize.ReliableConfKey, "true")
-      val (labels, iters) =
-        try Dedup.dupClustersWithStats(pairs, maxIter = 30)
+      val clusters =
+        try Dedup.dupClusters(pairs, maxIter = 30)
         finally spark.conf.unset(graft.analytics.Materialize.ReliableConfKey)
+      val labels = clusters.labels
       val nComponents = labels.select("cluster_id").distinct().count()
       // recovery vs planted: a planted cluster (≥2 members) is INTACT iff
       // every member carries one shared label (absent members = LSH miss)
@@ -177,7 +179,7 @@ object DedupScale {
         .agg(countDistinct(col("cluster_id")).as("l"),
           coalesce(sum(when(col("cluster_id").isNull, 1L).otherwise(0L)),
             lit(0L)).as("unlabeled")).head()
-      Seq("cc_iterations" -> iters,
+      Seq("cc_iterations" -> clusters.iterations,
         "components" -> nComponents,
         "planted_clusters_ge2" -> ge2,
         "planted_recovered_intact" -> intact,
@@ -474,7 +476,7 @@ object DedupScale {
     // ---- lineage kill + resume at volume ---------------------------------
     phase("lineage_resume") {
       import graft.lineage.{ResumableRunner, SimulatedFailure}
-      val docs = math.max(400000L, math.min(nDocs / 2, 1000000L))
+      val docs = math.min(nDocs / 2, 1000000L)
       val pages = graft.synth.SynthPages.pages(spark, docs, partitions = 64)
       def checksum(dir: String): (Long, Long) = {
         val df = spark.read.parquet(dir)

@@ -12,7 +12,6 @@ import graft.TestSpark
   */
 class DecontaminateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  import org.apache.spark.sql.functions._
 
   private def df(rows: (Long, String)*) = {
     import spark.implicits._

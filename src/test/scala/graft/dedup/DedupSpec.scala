@@ -294,7 +294,7 @@ class DedupSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 2001L || p._2 == 2001L))
     assert(stats.cappedBuckets >= 4, s"census silent: $stats")
     assert(stats.skippedPairs > 0)
-    val cl = Dedup.dupClusters(pairsDf.select("id_a", "id_b")).collect()
+    val cl = Dedup.dupClusters(pairsDf.select("id_a", "id_b")).labels.collect()
     assert(cl.length == 600)
     assert(cl.forall(_.getLong(1) == 1L), "template cluster split by cap")
     // uncapped census on the same corpus: silent
@@ -318,7 +318,7 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.length >= 399, s"cluster under-connected: ${pairs.length}")
     assert(!pairs.exists(p => p._1 == 2001L || p._2 == 2001L))
     assert(stats.cappedBuckets == 1L, s"census: $stats")
-    val cl = Dedup.dupClusters(pairsDf.select("id_a", "id_b")).collect()
+    val cl = Dedup.dupClusters(pairsDf.select("id_a", "id_b")).labels.collect()
     assert(cl.length == 400 && cl.forall(_.getLong(1) == 1L))
     // small corpus, default cap ≡ pre-cap operator output
     val smallRows = Seq((1L, tpl.toSeq), (2L, tpl.toSeq),
@@ -415,7 +415,7 @@ class DedupSpec extends AnyFunSuite {
     // the identical-vector cluster lands in ONE bucket per band
     assert(stats.cappedBuckets == 3L, s"census: $stats")
     assert(stats.skippedPairs > 0L)
-    val cl = Dedup.dupClusters(pairsDf.select("id_a", "id_b")).collect()
+    val cl = Dedup.dupClusters(pairsDf.select("id_a", "id_b")).labels.collect()
     assert(cl.length == 400 && cl.forall(_.getLong(1) == 1L),
       "cluster split by the per-band cap")
   }
@@ -457,7 +457,7 @@ class DedupSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 > 2000L || p._2 > 2000L),
       "unique docs must not pair")
     // the thinned edge list must still form ONE component over all 1000
-    val cl = Dedup.dupClusters(pairsDf).collect()
+    val cl = Dedup.dupClusters(pairsDf).labels.collect()
     assert(cl.length == 1000)
     assert(cl.forall(_.getLong(1) == 1L), "cluster split by the cap")
   }
@@ -478,7 +478,7 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.length < 20000, s"pair explosion: ${pairs.length}")
     assert(!pairs.exists(p => p._1 <= 200L && p._2 > 200L),
       "families must not cross-pair below the jaccard threshold")
-    val cl = Dedup.withClusterSizes(Dedup.dupClusters(pairsDf)).collect()
+    val cl = Dedup.withClusterSizes(Dedup.dupClusters(pairsDf).labels).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(cl.length == 400)
     assert(cl.filter(_._1 <= 200L).forall(c => c._2 == 1L && c._3 == 200L),
@@ -568,9 +568,13 @@ class DedupSpec extends AnyFunSuite {
       assert(afterFirst > beforeStats, "the first stats read ran no job")
       assert(jobs.get == afterFirst, "the second stats read ran a job")
       assert(second == first && first.cappedBuckets > 0)
+      val logged = err.toString("UTF-8")
       val warnings = "\\[dedup\\] minhashNearDups bucketCap=100 truncated".r
-        .findAllIn(err.toString("UTF-8")).size
+        .findAllIn(logged).size
       assert(warnings == 1, s"$warnings truncation warnings")
+      // ASCII only: a forked JVM under the POSIX locale prints any other
+      // char as '?'
+      assert(logged.forall(_ < 128), s"non-ASCII in the warning: $logged")
     } finally {
       System.setErr(stderr)
       sc.clearJobGroup()
@@ -583,7 +587,7 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val e = intercept[IllegalStateException] {
-      Dedup.dupClusters(pairs, maxIter = 1).collect()
+      Dedup.dupClusters(pairs, maxIter = 1).labels.collect()
     }
     assert(e.getMessage.contains("fixpoint"))
   }
@@ -593,7 +597,7 @@ class DedupSpec extends AnyFunSuite {
     // a 2000-node chain has diameter 1999: plain min-label propagation
     // needs ~2000 rounds; the pointer-jump step must close it within 25
     val pairs = (1L until 2000L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val cl = Dedup.withClusterSizes(Dedup.dupClusters(pairs)).collect()
+    val cl = Dedup.withClusterSizes(Dedup.dupClusters(pairs).labels).collect()
     assert(cl.length == 2000)
     assert(cl.forall(_.getLong(1) == 1L))
     assert(cl.forall(_.getLong(2) == 2000L))
@@ -607,8 +611,8 @@ class DedupSpec extends AnyFunSuite {
     // a lucky constant: 20 « 9999.
     val n = 10000L
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (cl, iters) = Dedup.dupClustersWithStats(pairs)
-    val rows = cl.collect()
+    val cl = Dedup.dupClusters(pairs)
+    val (rows, iters) = (cl.labels.collect(), cl.iterations)
     assert(rows.length == n)
     assert(rows.forall(_.getLong(1) == 1L), "chain must form one cluster")
     assert(iters <= 20, s"pointer jumping degraded: $iters iterations")
@@ -651,14 +655,14 @@ class DedupSpec extends AnyFunSuite {
       .toString
     val pairs = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val local = Dedup.dupClusters(pairs)
+    val local = Dedup.dupClusters(pairs).labels
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // reliable mode is the Materialize policy: the conf plus the context's
     // checkpoint dir
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set(graft.analytics.Materialize.ReliableConfKey, "true")
     val reliable =
-      try Dedup.dupClusters(pairs)
+      try Dedup.dupClusters(pairs).labels
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       finally spark.conf.unset(graft.analytics.Materialize.ReliableConfKey)
     assert(reliable == local)
@@ -676,7 +680,7 @@ class DedupSpec extends AnyFunSuite {
     // star (20 ← 21,22,23) — min-label must travel the chain's diameter
     val pairs = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L),
       (21L, 20L), (22L, 20L), (23L, 20L)).toDF("id_a", "id_b")
-    val got = Dedup.withClusterSizes(Dedup.dupClusters(pairs))
+    val got = Dedup.withClusterSizes(Dedup.dupClusters(pairs).labels)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val expect = Set(
       (1L, 1L, 4L), (2L, 1L, 4L), (3L, 1L, 4L), (4L, 1L, 4L),
@@ -691,7 +695,7 @@ class DedupSpec extends AnyFunSuite {
     val df = docs(rows: _*)
     val pairs = Dedup.minhashNearDups(df, "doc_id", "text",
       minJaccard = 0.9, bucketCap = 50).pairs
-    val cl = Dedup.withClusterSizes(Dedup.dupClusters(pairs)).collect()
+    val cl = Dedup.withClusterSizes(Dedup.dupClusters(pairs).labels).collect()
     assert(cl.length == 300)
     assert(cl.forall(_.getLong(1) == 1L), "single cluster rooted at min id")
     assert(cl.forall(_.getLong(2) == 300L), "cluster_size must be 300")
@@ -826,7 +830,7 @@ class DedupSpec extends AnyFunSuite {
       Dedup.simhashNearDups(df, "doc_id", "text", bucketCap = 2).pairs)
     noBroadcast("dupClusters")(
       Dedup.withClusterSizes(Dedup.dupClusters(
-        Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"))))
+        Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")).labels))
     noBroadcast("embeddingNearDups")(
       Dedup.embeddingNearDups(
         Seq((1L, Seq.fill(8)(0.5)), (2L, Seq.fill(8)(0.5)))

@@ -202,7 +202,6 @@ class AnnSpec extends AnyFunSuite {
 
   test("IVF preserves the caller's id type: string ids work and " +
       "nprobe = nlist matches brute force (no numeric-cast asymmetry)") {
-    import spark.implicits._
     // zero-padded string ids so the tie-break order is consistent across
     // the brute-force and IVF paths
     val df = corpus(60).select(
