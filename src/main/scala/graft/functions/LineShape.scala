@@ -6,10 +6,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Expressions for the Gopher line-shape metrics (r6 optimization +
-  * the r5 ADVICE item: the HOF `filter(split(...))` spellings in
-  * [[graft.stages.Heuristics]] were CodegenFallback on a declared
-  * corpus-scale quality-filter stage). Semantics are exactly the HOF
-  * chains', which remain as `Heuristics.*Hof` parity references pinned in
+  * the r5 ADVICE item: the HOF `filter(split(...))` spellings were
+  * CodegenFallback on a declared corpus-scale quality-filter stage).
+  * Semantics are exactly the HOF chains', which remain as `*Hof` parity
+  * references in the test-scope `graft.stages.Heuristics`, pinned in
   * LineShapeParitySpec:
   *
   *  - lines = `split(text, "\n")`, non-blank = `length(trim(l)) > 0`

@@ -31,7 +31,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
   * signals of exactly this shape (`small_model_inference/filter.py:22`);
   * repetition is the canonical Gopher addition the north rule's
   * "Gopher/C4-style heuristic filters" family implies beyond the five
-  * baseline metrics in [[graft.stages.Heuristics]].
+  * baseline metrics of [[graft.stages.HeuristicsScalar]].
   */
 object Repetition {
 

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Each expression is defined as "exactly what the HOF chain computes":
   *  - [[Tokenize.words_ws]] ≡ `filter(split(text, "\\s+"), w => length(w)
   *    > 0)` — THE cross-engine tokenization contract, stated
-  *    declaratively by [[graft.stages.Heuristics.wordsColHof]]. Java-regex
+  *    declaratively by `Heuristics.wordsColHof` (test scope). Java-regex
   *    `\s` is the ASCII set [ \t\n\f\r]; those code points are
   *    single-byte in UTF-8 and never occur inside a multi-byte sequence,
   *    so the split runs directly over the UTF-8 bytes with zero decode.

@@ -12,10 +12,11 @@ import graft.stages.{HeuristicsScalar, LangIdModel, PerplexityModel, ScrubScalar
 /** Row shape entering the fused scorer (matched by name in `.as[...]`):
   * the pruned page columns plus the derived `crawl_snapshot`. Scrub,
   * heuristics, langid, perplexity and the keep decision all run per row
-  * in ONE `mapPartitions` pass. The Column twin [[graft.stages.Heuristics]]
-  * is a parity reference only: as Catalyst expressions it re-tokenizes per
-  * metric, so the scalar pass reads the text fewer times. [[graft.stages.Scrub]]
-  * holds only the regex strings that specify the scrub.
+  * in ONE `mapPartitions` pass. The heuristics' Column twin (test-scope
+  * `graft.stages.Heuristics`) is a parity reference only: as Catalyst
+  * expressions it re-tokenizes per metric, so the scalar pass reads the
+  * text fewer times. [[graft.stages.Scrub]] holds only the regex strings
+  * that specify the scrub.
   */
 final case class PipeRow(
     url: String,

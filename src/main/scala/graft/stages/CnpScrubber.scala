@@ -42,17 +42,17 @@ object CnpScrubber {
   }
 
   /** CNP spans of `s` as start/end pairs, in text order: the maximal runs of
-    * `Character.isDigit` chars that are exactly 13 long and pass
-    * [[isValidCnp]].
+    * `Character.isDigit` chars (read from [[CharTable]]) that are exactly
+    * 13 long and pass [[isValidCnp]].
     */
   def spans(s: String): Array[Int] = {
     val sp = new ArrayBuilder.ofInt
     val n = s.length
     var i = 0
     while (i < n) {
-      if (Character.isDigit(s.charAt(i))) {
+      if (CharTable.isDigit(s.charAt(i))) {
         val start = i
-        while (i < n && Character.isDigit(s.charAt(i))) i += 1
+        while (i < n && CharTable.isDigit(s.charAt(i))) i += 1
         if (i - start == 13 && isValidCnp(s, start)) sp.addOne(start).addOne(i)
       } else i += 1
     }

@@ -4,16 +4,18 @@ import graft.synth.Det
 
 /** THE character-n-gram tokenization shared by every hashed-feature scorer
   * ([[LangIdModel.rawScore]], [[LangIdModel.topLangs]],
-  * [[TaskScorer.gramBuckets]]): lowercase, fold \n\t to space, cap at
-  * maxChars, pad with one space on each side, then visit every n-gram for
-  * n = minN..maxN. One definition — the scorers cannot desynchronize their
-  * tokenization (each applies its own hash salt and bucket mask to the
-  * visited spans).
+  * [[TaskScorer.gramBuckets]]): lowercase per char
+  * (`Character.toLowerCase(char)`, read from [[CharTable]]), fold \n\t to
+  * space, cap at maxChars, pad with one space on each side, then visit
+  * every n-gram for n = minN..maxN. One definition — the scorers cannot
+  * desynchronize their tokenization (each applies its own hash salt and
+  * bucket mask to the visited spans).
   *
   * r6 hot-path shape (bit-identical buckets, identical VISIT ORDER — the
   * per-doc Float accumulation order of the scorers must not move):
   *  - the normalized buffer is a reused per-thread char[] (no
-  *    StringBuilder virtual charAt in the hash loop);
+  *    StringBuilder virtual charAt in the hash loop), lowered through
+  *    [[CharTable]] (one load per char below U+0800);
   *  - the n-gram hashes share prefix states: `hash(j, n+1)` is one mix64
   *    step on `hash(j, n)`'s state, so a states[] pass per n costs ONE
   *    mix64 per position instead of re-hashing all n chars — 4·L mix64
@@ -21,21 +23,6 @@ import graft.synth.Det
   *    n-major visit order of the original loop preserved exactly.
   */
 object Grams {
-  /** Normalized, space-padded buffer ('\n'/'\t' → ' ', lowercased). */
-  def normalize(text: String, maxChars: Int): java.lang.StringBuilder = {
-    val len = math.min(text.length, maxChars)
-    val sb = new java.lang.StringBuilder(len + 2)
-    sb.append(' ')
-    var i = 0
-    while (i < len) {
-      val c = text.charAt(i)
-      sb.append(if (c == '\n' || c == '\t') ' ' else Character.toLowerCase(c))
-      i += 1
-    }
-    sb.append(' ')
-    sb
-  }
-
   // reused per-thread buffers — executor task threads each get their own;
   // sized for the largest cap in use (LangIdModel.MaxChars = 4000) and
   // grown on demand
@@ -53,9 +40,10 @@ object Grams {
 
   /** Visits the hashed bucket of every n-gram of the normalized text.
     * Returns the gram count. `f` receives `(hash(span) & mask).toInt`.
-    * Buckets and visit order are identical to hashing each span with
-    * [[Det.hashString]] for n = minN..maxN in n-major order (GramsSpec
-    * pins it).
+    * Buckets and visit order are identical to hashing each span of the
+    * normalized, padded buffer with [[Det.hashString]] for n = minN..maxN
+    * in n-major order (GramsSpec pins it against that buffer built with a
+    * `StringBuilder`).
     */
   def foreachBucket(text: String, maxChars: Int, minN: Int, maxN: Int,
       salt: Long, mask: Long)(f: Int => Unit): Int = {
@@ -67,7 +55,7 @@ object Grams {
     var i = 0
     while (i < len) {
       val c = text.charAt(i)
-      buf(i + 1) = if (c == '\n' || c == '\t') ' ' else Character.toLowerCase(c)
+      buf(i + 1) = if (c == '\n' || c == '\t') ' ' else CharTable.toLowerCase(c)
       i += 1
     }
     buf(L - 1) = ' '

@@ -1,23 +1,29 @@
 package graft.stages
 
-import graft.functions.Tokenize.isWordCp
-import graft.synth.Corpus
+import graft.stages.CharTable.{isWordCp, toLowerCase}
+import graft.synth.{Corpus, Det}
 
 /** Single-pass scalar implementation of the N3 heuristic metrics, used
   * inside the fused `mapPartitions` scorer.
   *
-  * Why not the Column version in the hot path: Catalyst higher-order
+  * Why not a Column version in the hot path: Catalyst higher-order
   * functions (`filter`/`aggregate`/`transform`) are CodegenFallback, so the
-  * heuristic Project runs interpreted and re-tokenizes the text once per
-  * metric (~7 splits/doc). This computes all five metrics in one tokenizer
-  * pass; [[Heuristics]] remains the declarative equivalent (cross-validated
-  * in HeuristicsParitySpec) for SQL-surface use.
+  * heuristic Project would run interpreted and re-tokenize the text once per
+  * metric (~7 splits/doc). This computes all five metrics in one walk over
+  * the text. The declarative Column twin, `graft.stages.Heuristics`, lives
+  * in test scope as the reference of HeuristicsParitySpec.
   *
-  * Semantics are identical to [[Heuristics]] on NFC text with ASCII
+  * Semantics are identical to that twin on NFC text with ASCII
   * whitespace: tokens split on java-regex `\s` (ASCII), word lengths in
   * code points, stopword match on the `(?U)\W`-trimmed lowercased token,
   * duplicate lines on raw line strings with blank (space-only) lines
   * excluded.
+  *
+  * Allocation-free per doc (bar the returned `Metrics`): stopwords are
+  * looked up straight from a char range of the text ([[isStopword]]), and
+  * duplicate lines are found by a 64-bit range hash in a reused per-thread
+  * table with an exact `regionMatches` on a hash hit. Per-char predicates
+  * go through [[CharTable]].
   */
 object HeuristicsScalar {
 
@@ -29,11 +35,19 @@ object HeuristicsScalar {
       dupLineFrac: Double
   )
 
-  private val stopwords: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String](256)
-    Corpus.roStopwords.foreach(s.add)
-    s
+  /** Open-addressing (linear probe) stopword table keyed by
+    * `String.hashCode`, at most 1/4 full.
+    */
+  private val stopKeys: Array[String] = {
+    val t = new Array[String](Integer.highestOneBit(Corpus.roStopwords.length * 4 - 1) << 1)
+    Corpus.roStopwords.foreach { w =>
+      var h = w.hashCode & (t.length - 1)
+      while (t(h) != null) h = (h + 1) & (t.length - 1)
+      t(h) = w
+    }
+    t
   }
+  private val maxStopLen: Int = Corpus.roStopwords.map(_.length).max
 
   private val symbolChars: Array[Boolean] = {
     val a = new Array[Boolean](128)
@@ -45,43 +59,147 @@ object HeuristicsScalar {
   @inline private def isSpaceAscii(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  /** Lowercased (?U)\W-edge-trimmed token. The trim walks code points
-    * with [[graft.functions.Tokenize.isWordCp]], the one `(?U)\w`
-    * predicate (TokenizeParitySpec pins it against the regex).
+  /** True iff `s[from, until)`, trimmed of `(?U)\W` edges and lowercased
+    * per char with `Character.toLowerCase(char)`, is a stopword. The trim
+    * walks code points with [[graft.functions.Tokenize.isWordCp]], the one
+    * `(?U)\w` predicate (TokenizeParitySpec pins it against the regex).
+    * Per-char lowering keeps the length, so a range longer than the
+    * longest stopword is a miss before any char is lowered.
     */
-  def normForStopword(s: String, from: Int, until: Int): String = {
+  def isStopword(s: String, from: Int, until: Int): Boolean = {
     var a = from
     while (a < until && !isWordCp(s.codePointAt(a)))
       a += Character.charCount(s.codePointAt(a))
     var b = until
     while (b > a && !isWordCp(s.codePointBefore(b)))
       b -= Character.charCount(s.codePointBefore(b))
-    if (a >= b) return ""
-    val sb = new java.lang.StringBuilder(b - a)
+    val len = b - a
+    if (len == 0 || len > maxStopLen) return false
+    var h = 0
     var i = a
-    while (i < b) { sb.append(Character.toLowerCase(s.charAt(i))); i += 1 }
-    sb.toString
+    while (i < b) { h = 31 * h + toLowerCase(s.charAt(i)); i += 1 }
+    val mask = stopKeys.length - 1
+    var slot = h & mask
+    while (true) {
+      val k = stopKeys(slot)
+      if (k == null) return false
+      if (k.length == len) {
+        var j = 0
+        while (j < len && k.charAt(j) == toLowerCase(s.charAt(a + j))) j += 1
+        if (j == len) return true
+      }
+      slot = (slot + 1) & mask
+    }
+    false
   }
 
+  private final val FnvBasis = 0xcbf29ce484222325L
+  private final val FnvPrime = 0x100000001b3L
+
+  /** The distinct non-blank lines of one doc, as (64-bit hash, start,
+    * length) ranges of its text: open addressing at most half full. A slot
+    * is live iff it carries the current generation, so starting a doc
+    * costs one increment, not a clear.
+    */
+  private final class LineSet {
+    private var hashes = new Array[Long](256)
+    private var starts = new Array[Int](256)
+    private var lens = new Array[Int](256)
+    private var gens = new Array[Int](256)
+    private var gen = 1
+    private var size = 0
+
+    def clear(): Unit = {
+      gen += 1
+      if (gen == 0) { java.util.Arrays.fill(gens, 0); gen = 1 }
+      size = 0
+    }
+
+    /** True iff `text[start, start + len)` (hash `h`) was added since the
+      * last `clear`; adds it otherwise.
+      */
+    def addIsDup(text: String, h: Long, start: Int, len: Int): Boolean = {
+      val mask = gens.length - 1
+      var s = Det.mix64(h).toInt & mask
+      while (gens(s) == gen) {
+        if (hashes(s) == h && lens(s) == len &&
+            text.regionMatches(starts(s), text, start, len)) return true
+        s = (s + 1) & mask
+      }
+      hashes(s) = h; starts(s) = start; lens(s) = len; gens(s) = gen
+      size += 1
+      if (2 * size > mask) grow()
+      false
+    }
+
+    private def grow(): Unit = {
+      val oh = hashes
+      val os = starts
+      val ol = lens
+      val og = gens
+      val cap = 2 * og.length
+      hashes = new Array[Long](cap); starts = new Array[Int](cap)
+      lens = new Array[Int](cap); gens = new Array[Int](cap)
+      var i = 0
+      while (i < og.length) {
+        if (og(i) == gen) {
+          var s = Det.mix64(oh(i)).toInt & (cap - 1)
+          while (gens(s) == gen) s = (s + 1) & (cap - 1)
+          hashes(s) = oh(i); starts(s) = os(i); lens(s) = ol(i); gens(s) = gen
+        }
+        i += 1
+      }
+    }
+  }
+
+  // executor task threads each get their own
+  private val lineSet = new ThreadLocal[LineSet] {
+    override def initialValue(): LineSet = new LineSet
+  }
+
+  /** One walk over the text: words (count, code-point length, symbols,
+    * stopword hits) and lines (non-blank count, duplicates) together.
+    */
   def compute(text: String): Metrics = {
     if (text == null || text.isEmpty) return Metrics(0, 0.0, 0.0, 0.0, 0.0)
     val n = text.length
-    // word pass: count + total length + stopword hits; symbols counted inline
+    val seen = lineSet.get()
+    seen.clear()
     var words = 0
     var totalWordLen = 0L
     var stopHits = 0
     var symbols = 0
+    var lineCount = 0
+    var dupCount = 0
+    var lineStart = 0
+    var lineHash = FnvBasis
+    // Spark's trim() strips only ' ': a line is blank iff all spaces
+    var blank = true
     var i = 0
-    while (i < n) {
-      val c = text.charAt(i)
-      if (isSpaceAscii(c)) i += 1
-      else {
+    while (i <= n) {
+      val c = if (i < n) text.charAt(i) else '\n'
+      if (c == '\n') {
+        if (!blank) {
+          lineCount += 1
+          if (seen.addIsDup(text, lineHash, lineStart, i - lineStart)) dupCount += 1
+        }
+        lineStart = i + 1
+        lineHash = FnvBasis
+        blank = true
+        i += 1
+      } else if (isSpaceAscii(c)) {
+        if (c != ' ') blank = false
+        lineHash = (lineHash ^ c) * FnvPrime
+        i += 1
+      } else {
+        blank = false
         val start = i
         // word length in code points, as Spark's `length`: a surrogate
         // pair counts once
         var pairs = 0
         while (i < n && !isSpaceAscii(text.charAt(i))) {
           val cc = text.charAt(i)
+          lineHash = (lineHash ^ cc) * FnvPrime
           if (cc < 128) { if (symbolChars(cc)) symbols += 1 }
           else if (Character.isLowSurrogate(cc) && i > start &&
               Character.isHighSurrogate(text.charAt(i - 1))) pairs += 1
@@ -89,37 +207,16 @@ object HeuristicsScalar {
         }
         words += 1
         totalWordLen += (i - start - pairs)
-        if (stopwords.contains(normForStopword(text, start, i))) stopHits += 1
+        if (isStopword(text, start, i)) stopHits += 1
       }
     }
-    // duplicate-line fraction over non-blank (space-trimmed) raw lines
-    var lineCount = 0
-    var dupCount = 0
-    var seen: java.util.HashSet[String] = null
-    var lineStart = 0
-    var j = 0
-    while (j <= n) {
-      if (j == n || text.charAt(j) == '\n') {
-        // Spark's trim() strips only ' ': a line is blank iff all spaces
-        var k = lineStart
-        var blank = true
-        while (blank && k < j) { if (text.charAt(k) != ' ') blank = false; k += 1 }
-        if (!blank) {
-          if (seen == null) seen = new java.util.HashSet[String]()
-          lineCount += 1
-          if (!seen.add(text.substring(lineStart, j))) dupCount += 1
-        }
-        lineStart = j + 1
-      }
-      j += 1
-    }
-    if (words == 0) Metrics(0, 0.0, 0.0, 0.0,
-      if (lineCount == 0) 0.0 else dupCount.toDouble / lineCount)
+    val dupLineFrac = if (lineCount == 0) 0.0 else dupCount.toDouble / lineCount
+    if (words == 0) Metrics(0, 0.0, 0.0, 0.0, dupLineFrac)
     else Metrics(
       words,
       totalWordLen.toDouble / words,
       symbols.toDouble / words,
       stopHits.toDouble / words,
-      if (lineCount == 0) 0.0 else dupCount.toDouble / lineCount)
+      dupLineFrac)
   }
 }

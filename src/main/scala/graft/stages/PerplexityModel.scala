@@ -2,6 +2,7 @@ package graft.stages
 
 import java.util.Locale
 
+import graft.stages.CharTable.{isLetter, isWhitespace, toLowerCase}
 import graft.synth.Corpus
 
 /** N2 — KenLM-style n-gram (bigram + unigram backoff) language model with
@@ -9,6 +10,12 @@ import graft.synth.Corpus
   * a word→id open-addressing hash table and a V×V bigram-membership bitset
   * (~8 KiB). Perplexity = exp(−mean log p), accumulated per-row in Float in
   * a fixed order ⇒ partition-invariant (FIXTURES.md §5 determinism).
+  *
+  * The token walk allocates nothing: each whitespace token is trimmed and
+  * looked up straight from its char range of the text ([[tokenId]]), and
+  * the per-char predicates come from [[CharTable]]. Those tables live in
+  * objects, so the broadcast payload is the model's own fields and nothing
+  * more.
   *
   * Replaces the reference's continuous quality `score` consumed by the
   * threshold filter (`small_model_inference/small_model_inference.py:40-95`,
@@ -61,10 +68,48 @@ final class PerplexityModel(
   def normToken(raw: String): String = {
     var a = 0
     var b = raw.length
-    while (a < b && !Character.isLetter(raw.charAt(a))) a += 1
-    while (b > a && !Character.isLetter(raw.charAt(b - 1))) b -= 1
+    while (a < b && !isLetter(raw.charAt(a))) a += 1
+    while (b > a && !isLetter(raw.charAt(b - 1))) b -= 1
     if (a == 0 && b == raw.length) raw.toLowerCase(Locale.ROOT)
     else raw.substring(a, b).toLowerCase(Locale.ROOT)
+  }
+
+  /** `wordId(normToken(text.substring(from, until)))`, read straight from
+    * the text, or [[PerplexityModel.NoToken]] when the trim leaves nothing.
+    * The trimmed range is hashed lowercased per char (the `String.hashCode`
+    * formula) into the `keys` table and compared char by char. Per-char
+    * lowering equals `toLowerCase(Locale.ROOT)` except on `İ` (two chars),
+    * `Σ` (final sigma depends on context) and surrogates (lowered by code
+    * point); a range holding any of these takes `normToken` + `wordId`.
+    */
+  def tokenId(text: String, from: Int, until: Int): Int = {
+    var a = from
+    var b = until
+    while (a < b && !isLetter(text.charAt(a))) a += 1
+    while (b > a && !isLetter(text.charAt(b - 1))) b -= 1
+    if (a == b) return PerplexityModel.NoToken
+    var h = 0
+    var i = a
+    while (i < b) {
+      val c = text.charAt(i)
+      if (c == '\u0130' || c == '\u03A3' || Character.isSurrogate(c))
+        return wordId(normToken(text.substring(from, until)))
+      h = 31 * h + toLowerCase(c)
+      i += 1
+    }
+    val len = b - a
+    var slot = h & (cap - 1)
+    while (true) {
+      val k = keys(slot)
+      if (k == null) return -1
+      if (k.length == len) {
+        var j = 0
+        while (j < len && k.charAt(j) == toLowerCase(text.charAt(a + j))) j += 1
+        if (j == len) return vals(slot)
+      }
+      slot = (slot + 1) & (cap - 1)
+    }
+    -1
   }
 
   /** Perplexity over whitespace tokens; empty/whitespace text gets the OOV
@@ -78,13 +123,12 @@ final class PerplexityModel(
     var i = 0
     val len = text.length
     while (i < len && n < maxTokens) {
-      while (i < len && Character.isWhitespace(text.charAt(i))) i += 1
+      while (i < len && isWhitespace(text.charAt(i))) i += 1
       val start = i
-      while (i < len && !Character.isWhitespace(text.charAt(i))) i += 1
+      while (i < len && !isWhitespace(text.charAt(i))) i += 1
       if (i > start) {
-        val tok = normToken(text.substring(start, i))
-        if (tok.nonEmpty) {
-          val id = wordId(tok)
+        val id = tokenId(text, start, i)
+        if (id != PerplexityModel.NoToken) {
           val lp =
             if (id < 0) oovLogProb
             else if (prev < 0) uniLogProb
@@ -101,6 +145,9 @@ final class PerplexityModel(
 }
 
 object PerplexityModel {
+  /** [[PerplexityModel.tokenId]] of a range with no letter: not a token. */
+  final val NoToken = -2
+
   /** The committed model derived from the corpus bigram chain. */
   lazy val default: PerplexityModel = {
     val v = Corpus.roVocab

@@ -476,8 +476,13 @@ object DedupScale {
     // ---- lineage kill + resume at volume ---------------------------------
     phase("lineage_resume") {
       import graft.lineage.{ResumableRunner, SimulatedFailure}
+      import spark.implicits._
       val docs = math.min(nDocs / 2, 1000000L)
-      val pages = graft.synth.SynthPages.pages(spark, docs, partitions = 64)
+      // written once: every wave of the three runs below filters its input,
+      // and a generated, uncached Dataset would be generated again per wave
+      graft.synth.SynthPages.pages(spark, docs, partitions = 64)
+        .write.parquet(s"$base/lin_pages")
+      val pages = spark.read.parquet(s"$base/lin_pages").as[graft.model.Page]
       def checksum(dir: String): (Long, Long) = {
         val df = spark.read.parquet(dir)
         val r = df.agg(count(lit(1)),

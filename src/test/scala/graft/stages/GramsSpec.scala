@@ -11,13 +11,30 @@ import graft.synth.{Det, SynthPages}
   */
 class GramsSpec extends AnyFunSuite {
 
+  /** Normalized, space-padded buffer ('\n'/'\t' → ' ', lowercased with
+    * `Character.toLowerCase(char)`): the buffer `foreachBucket` hashes.
+    */
+  private def normalize(text: String, maxChars: Int): java.lang.StringBuilder = {
+    val len = math.min(text.length, maxChars)
+    val sb = new java.lang.StringBuilder(len + 2)
+    sb.append(' ')
+    var i = 0
+    while (i < len) {
+      val c = text.charAt(i)
+      sb.append(if (c == '\n' || c == '\t') ' ' else Character.toLowerCase(c))
+      i += 1
+    }
+    sb.append(' ')
+    sb
+  }
+
   /** The pre-r6 definition, verbatim: per n, hash each span with
     * Det.hashString over the normalized buffer.
     */
   private def naive(text: String, maxChars: Int, minN: Int, maxN: Int,
       salt: Long, mask: Long): Seq[Int] = {
     if (text == null || text.isEmpty) return Seq.empty
-    val sb = Grams.normalize(text, maxChars)
+    val sb = normalize(text, maxChars)
     val L = sb.length
     val out = Seq.newBuilder[Int]
     var n = minN

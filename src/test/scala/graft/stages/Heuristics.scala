@@ -6,11 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.functions.Tokenize
 import graft.synth.Corpus
 
-/** N3 — Gopher/C4-style heuristic quality metrics as pure Catalyst columns.
+/** N3 — Gopher/C4-style heuristic quality metrics as pure Catalyst columns:
+  * the declarative twin of [[HeuristicsScalar]] (HeuristicsSpec,
+  * HeuristicsParitySpec) and the home of the `*Hof` references of
+  * TokenizeParitySpec and LineShapeParitySpec. Test scope: production runs
+  * [[HeuristicsScalar]] and the native functions.
   *
-  * Stays entirely inside whole-stage codegen (no UDF, no mapPartitions):
-  * higher-order array functions over `split(text)`. Dataflow analogue in the
-  * reference: the learned quality gates consumed by threshold filters
+  * Higher-order array functions over `split(text)`. Dataflow analogue in
+  * the reference: the learned quality gates consumed by threshold filters
   * (`small_model_inference/filter.py:22`, `ro_vs_eng/filter_jql.py:27`);
   * metric definitions follow Gopher (Rae et al. 2021) / C4 (Raffel et al.
   * 2020) as mandated by the north rule.
