@@ -622,19 +622,14 @@ object Dedup {
     * policy: in-memory `localCheckpoint` by default, or RELIABLE
     * checkpoints in the context's checkpoint directory under
     * `spark.graft.checkpoint.reliable=true` — at 100-TB scale the labels
-    * don't fit (and must survive) executor memory. Reliable mode persists
-    * before checkpointing, so the eager count and the file-write jobs
-    * share one computation (a recompute would double every accumulator
-    * bump, reading the changed-count ~2×).
+    * don't fit (and must survive) executor memory.
     *
-    * The per-iteration changed-label count is folded into the SAME job that
-    * materializes the iteration's checkpoint (a LongAccumulator bumped by the
-    * projection), not a second pass; task retries can only overcount, and at
-    * the fixpoint nothing increments, so convergence detection stays exact.
+    * The per-iteration changed-label count is a count of the `__chg` rows
+    * of the iteration's materialized frame: one extra job over the
+    * checkpointed blocks, exact under task retries.
     */
   def dupClusters(pairs: DataFrame, maxIter: Int = 25): Clusters = {
     import graft.analytics.Materialize
-    val spark = pairs.sparkSession
     def edges(a: String, b: String) =
       pairs.select(col(a).as("src"), col(b).as("dst"))
     val bi = Materialize(
@@ -658,14 +653,11 @@ object Dedup {
       // label(x) ≤ x, so the inner self-join is total and monotone.
       val parents = propagated
         .select(col("id").as("pid"), col("mid_label").as("plabel"))
-      val acc = spark.sparkContext.longAccumulator(s"dupClusters.changed.$it")
-      val touch = udf { chg: Boolean => if (chg) acc.add(1L); chg }
-        .asNondeterministic() // never elide/dedup the accumulator bump
       val updated = Materialize(propagated.join(parents.hint("merge"),
           propagated("mid_label") === parents("pid"))
         .select(col("id"), col("plabel").as("new_label"),
-          touch(col("plabel") < col("old_label")).as("__chg")))
-      changed = acc.value // Materialize above already ran the counting job
+          (col("plabel") < col("old_label")).as("__chg")))
+      changed = updated.filter(col("__chg")).count()
       labels = updated.select(col("id"), col("new_label").as("label"))
       it += 1
     }

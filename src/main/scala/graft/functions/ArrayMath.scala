@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * orders mirror the HOF chains exactly, so results are bit-identical
   * (pinned in ArrayMathParitySpec):
   *
-  *  - [[ArrayMath.softmax_arr]] ≡ the [[TopK.softmaxArrHof]] chain
-  *    (`e = transform(x, exp(x − array_max(x)))`, `s = aggregate(e, 0.0,
+  *  - [[ArrayMath.softmax_arr]] ≡ the test-scope `NativeRef.softmaxArrHof`
+  *    chain (`e = transform(x, exp(x − array_max(x)))`, `s = aggregate(e, 0.0,
   *    +)` left fold, `transform(e, _ / s)`), also covering q_x8_softmax's
   *    inline spelling (its p0 is element 1 of this array — the numerator
   *    `exp(x0 − m)` and denominator are the same IEEE ops in the same

@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Expressions for the Gopher line-shape metrics (r6 optimization +
   * the r5 ADVICE item: the HOF `filter(split(...))` spellings were
   * CodegenFallback on a declared corpus-scale quality-filter stage).
-  * Semantics are exactly the HOF chains', which remain as `*Hof` parity
+  * Semantics are exactly the HOF chains', which live on as `*Hof` parity
   * references in the test-scope `graft.stages.Heuristics`, pinned in
   * LineShapeParitySpec:
   *

@@ -28,18 +28,6 @@ object TextFunctions {
   def tokenCountBpe(text: Column): Column =
     regexp_count(text, lit(BpeIshPattern))
 
-  /** HOF reference of [[Tokenize.norm_tokens]], the lowercased word tokens
-    * with punctuation-trimmed edges (parity tests only). The HOF ran
-    * CodegenFallback-interpreted, one regexp Matcher per token, at the
-    * head of every minhash/simhash signature pass; TokenizeParitySpec pins
-    * the native function to it.
-    */
-  private[graft] def normTokensHof(text: Column): Column =
-    filter(
-      transform(split(lower(text), "\\s+"),
-        w => regexp_replace(w, "(?U)^\\W+|\\W+$", "")),
-      w => length(w) > 0)
-
   def doc_fingerprint(c: Column): Column = DocFingerprint(c)
 
   def simhash64(tokens: Column): Column = SimHash64(tokens)
@@ -173,7 +161,6 @@ object TextFunctions {
     new GenericArrayData(out)
   }
 
-  def hammingDistance(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
   def hamming(a: Column, b: Column): Column = {
     // bit_count(a XOR b) — pure built-ins, codegen
     bit_count(a.bitwiseXOR(b))

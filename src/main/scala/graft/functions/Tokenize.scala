@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    so the split runs directly over the UTF-8 bytes with zero decode.
   *  - [[Tokenize.norm_tokens]] ≡ `filter(transform(split(lower(text),
   *    "\\s+"), w => regexp_replace(w, "(?U)^\\W+|\\W+$", "")), w =>
-  *    length(w) > 0)` — the [[TextFunctions.normTokensHof]] contract.
+  *    length(w) > 0)` — the `NativeRef.normTokensHof` contract (test scope).
   *    `lower` delegates to the same `UTF8String.toLowerCase` Spark's
   *    `Lower` uses (UTF8_BINARY collation), and the `(?U)\W` edge trim
   *    drops leading/trailing runs of non-word code points, where "word"
@@ -31,8 +31,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    TokenizeParitySpec pins it code-point-by-code-point against a real
   *    `Pattern.compile("(?U)\\w")`.
   *
-  * The HOF spellings remain in their original homes as `*Hof` parity
-  * references; TokenizeParitySpec pins byte-identical outputs over every
+  * The HOF spellings live on as test-scope `*Hof` parity references
+  * (`Heuristics`, `NativeRef`); TokenizeParitySpec pins byte-identical outputs over every
   * text fixture family (diacritics, blank runs, punctuation-only tokens,
   * supplementary-plane code points).
   */

@@ -10,20 +10,10 @@ import org.apache.spark.sql.functions._
   * `small_model_inference.py:84-93`). Since r6 the two per-element-heavy
   * steps (softmax, the (−prob, idx) struct sort) are native codegen
   * Expressions ([[ArrayMath]]) — the HOF spellings were CodegenFallback,
-  * interpreted per element; they remain below as `*Hof` parity references
-  * (bit-identity pinned in ArrayMathParitySpec).
+  * interpreted per element; they live on as the test-scope `NativeRef`
+  * parity references (bit-identity pinned in ArrayMathParitySpec).
   */
 object TopK {
-
-  /** HOF reference of [[ArrayMath.softmax_arr]], the numerically-stable
-    * softmax over an array<double> column (parity tests only).
-    */
-  private[graft] def softmaxArrHof(logits: Column): Column = {
-    val m = array_max(logits)
-    val e = transform(logits, x => exp(x - m))
-    val s = aggregate(e, lit(0.0), (acc, v) => acc + v)
-    transform(e, x => x / s)
-  }
 
   /** 2k columns `{prefix}_class_j` / `{prefix}_prob_j` (j = 1..k) from a
     * probs array: prob desc, class-index tiebreak — sorted via the native
@@ -40,13 +30,4 @@ object TopK {
         round(e.getField("negp") * -1.0, 6).as(s"${prefix}_prob_$j"))
     }
   }
-
-  /** HOF reference of [[ArrayMath.neg_indexed_sorted]], the
-    * [[topKClassColumns]] sort (parity tests only):
-    * `array_sort(transform(probs, (p, i) => struct(p * -1.0, i)))` with
-    * lexicographic struct ordering.
-    */
-  private[graft] def negIndexedSortedHof(probs: Column): Column =
-    array_sort(transform(probs,
-      (p, i) => struct((p * -1.0).as("negp"), i.as("idx"))))
 }

@@ -288,21 +288,24 @@ object Multimodal {
   final case class FrameSample(url: String, mime: String, frame_idx: Int,
       t_offset_sec: Float, frame: Array[Byte], decoded: Boolean)
 
+  /** Length of each window [[sampleWavWindows]] slices. */
+  val WavWindowMs = 25
+
   /** REAL time-window sampling for WAV: decodes via `javax.sound.sampled`
-    * and slices `n` evenly-spaced raw-PCM windows of `windowMs`
+    * and slices `n` evenly-spaced raw-PCM windows of [[WavWindowMs]]
     * milliseconds, each tagged with its time offset. The audio analogue of
     * video frame-sampling, on the one time-indexed medium the JDK decodes.
     */
-  def sampleWavWindows(payload: Array[Byte], n: Int, windowMs: Int = 25)
+  def sampleWavWindows(payload: Array[Byte], n: Int)
       : Option[Seq[(Float, Array[Byte])]] =
     try readLinearPcm(payload).flatMap { case (fmt, _, bytes) =>
       val frameBytes = fmt.getFrameSize
       val totalFrames = bytes.length / frameBytes
-      // a clip shorter than n×windowMs tiles into n shorter windows
+      // a clip shorter than n×WavWindowMs tiles into n shorter windows
       // instead of n identical full-clip copies (offsets stay strictly
       // increasing whenever the clip has ≥ n frames)
       val winFrames = math.min(
-        math.max(1, (fmt.getSampleRate * windowMs / 1000.0).toInt),
+        math.max(1, (fmt.getSampleRate * WavWindowMs / 1000.0).toInt),
         math.max(1, totalFrames / n))
       if (totalFrames == 0) None
       else Some((0 until n).map { i =>

@@ -21,39 +21,10 @@ import graft.synth.Det
   */
 object Ann {
 
-  /** HOF reference of [[graft.functions.VectorFunctions.cosine_sim]], the
-    * exact cosine similarity of two array<double> columns (parity tests
-    * only). Catalyst higher-order functions are CodegenFallback, so the
-    * native one-pass function runs the queries; AnnSpec pins bit-identity.
-    */
-  private[graft] def cosineHof(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y),
-      lit(0.0), (acc, v) => acc + v)
-    val na = sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))
-    val nb = sqrt(aggregate(b, lit(0.0), (acc, v) => acc + v * v))
-    dot / (na * nb)
-  }
-
   /** Deterministic random hyperplanes (components from splitmix64, ±1). */
   private[graft] def planeVec(p: Int, dim: Int): Seq[Double] =
     (0 until dim).map(d =>
       if ((Det.mix64(p.toLong * 7919L + d * 104729L) & 1L) == 0L) 1.0 else -1.0)
-
-  /** HOF reference of [[graft.functions.VectorFunctions.hyperplane_bucket]],
-    * the sign-bit bucket id from `planes` hyperplanes — the cosine-LSH key
-    * (parity only). The native function makes ONE pass per plane over a
-    * cached ±1 matrix instead of `planes` interpreted HOF traversals per
-    * row.
-    */
-  private[graft] def hyperplaneBucketHof(emb: Column, planes: Int, dim: Int): Column = {
-    val bits: Seq[Column] = (0 until planes).map { p =>
-      val plane = typedlit(planeVec(p, dim))
-      val dot = aggregate(zip_with(emb, plane, (x, y) => x * y),
-        lit(0.0), (acc, v) => acc + v)
-      when(dot >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** Exact top-k cosine neighbors for each query row (brute force baseline).
     * The query set must be small (it is broadcast); the corpus side streams.
@@ -66,6 +37,10 @@ object Ann {
   }
 
   // ---- IVF (inverted-file) ANN — the second scale path -------------------
+  /** Vectors [[trainIvfCentroids]] samples, and its Lloyd iterations. */
+  private val IvfSampleSize = 4096
+  private val IvfIters = 8
+
   /** Deterministic IVF coarse quantizer: Lloyd's k-means on a BOUNDED,
     * deterministically-ordered corpus sample, trained driver-side (the
     * Faiss pattern — train on a sample, assign at scale). Cosine metric:
@@ -74,7 +49,7 @@ object Ann {
     * Returns `nlist` unit-norm centroids.
     */
   def trainIvfCentroids(corpus: DataFrame, idCol: String, embCol: String,
-      nlist: Int, sampleSize: Int = 4096, iters: Int = 8): Array[Array[Double]] = {
+      nlist: Int): Array[Array[Double]] = {
     // cast defensively: an array<float> embedding column (the documented
     // input type) would otherwise surface boxed Floats through getSeq and
     // ClassCastException on .toArray
@@ -82,7 +57,7 @@ object Ann {
       .filter(col(embCol).isNotNull)
       .select(col(idCol).cast("string").as("id"),
         col(embCol).cast("array<double>").as("emb"))
-      .orderBy("id").limit(sampleSize)
+      .orderBy("id").limit(IvfSampleSize)
       .collect()
       .map(_.getSeq[Double](1).toArray)
     // a ragged corpus (one malformed longer/shorter embedding) must be
@@ -106,7 +81,7 @@ object Ann {
         s"got ${sample.length}")
     var centroids = Array.tabulate(nlist)(i =>
       sample(i * (sample.length / nlist)).clone())
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until IvfIters) {
       val sums = Array.fill(nlist)(new Array[Double](centroids(0).length))
       val counts = new Array[Long](nlist)
       sample.foreach { v =>

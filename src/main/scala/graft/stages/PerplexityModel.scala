@@ -112,17 +112,18 @@ final class PerplexityModel(
     -1
   }
 
-  /** Perplexity over whitespace tokens; empty/whitespace text gets the OOV
-    * worst case (mirrors C6: degenerate inputs stay in-band, never throw).
+  /** Perplexity over the first [[PerplexityModel.MaxTokens]] whitespace
+    * tokens; empty/whitespace text gets the OOV worst case (mirrors C6:
+    * degenerate inputs stay in-band, never throw).
     */
-  def perplexity(text: String, maxTokens: Int = 2048): Double = {
+  def perplexity(text: String): Double = {
     if (text == null) return math.exp(-oovLogProb)
     var sum = 0.0f
     var n = 0
     var prev = -1
     var i = 0
     val len = text.length
-    while (i < len && n < maxTokens) {
+    while (i < len && n < PerplexityModel.MaxTokens) {
       while (i < len && isWhitespace(text.charAt(i))) i += 1
       val start = i
       while (i < len && !isWhitespace(text.charAt(i))) i += 1
@@ -147,6 +148,11 @@ final class PerplexityModel(
 object PerplexityModel {
   /** [[PerplexityModel.tokenId]] of a range with no letter: not a token. */
   final val NoToken = -2
+
+  /** Tokens [[PerplexityModel.perplexity]] scores; the rest of a longer
+    * text is not read.
+    */
+  final val MaxTokens = 2048
 
   /** The committed model derived from the corpus bigram chain. */
   lazy val default: PerplexityModel = {

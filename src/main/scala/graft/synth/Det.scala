@@ -47,6 +47,27 @@ object Det {
   def nextDouble(seed: Long, id: Long, field: String): Double =
     (hash(seed, id, field) >>> 11).toDouble / (1L << 53).toDouble
 
+  /** CDF of zipf(s) over `n` ranks (rank r weighs 1/(r+1)^s), normalized
+    * by a running sum; the last entry is exactly 1.0. Draw a rank with
+    * [[zipfRank]].
+    */
+  def zipfCdf(n: Int, s: Double): Array[Double] = {
+    val w = Array.tabulate(n)(r => 1.0 / math.pow(r + 1.0, s))
+    val total = w.sum
+    val cdf = new Array[Double](n)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += w(i) / total; cdf(i) = acc; i += 1 }
+    cdf(n - 1) = 1.0
+    cdf
+  }
+
+  /** The rank of [[zipfCdf]] `cdf` that a uniform `u` in [0, 1) falls in. */
+  def zipfRank(cdf: Array[Double], u: Double): Int = {
+    val i = java.util.Arrays.binarySearch(cdf, u)
+    if (i >= 0) i else math.min(-i - 1, cdf.length - 1)
+  }
+
   /** Stateful-but-deterministic stream: k-th draw for one (id, field). */
   def streamInt(seed: Long, id: Long, field: String, k: Int, n: Int): Int =
     (java.lang.Long.remainderUnsigned(

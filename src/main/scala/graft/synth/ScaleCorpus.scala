@@ -49,24 +49,9 @@ object ScaleCorpus {
   val Vocab = 50000
   val EmbDim = 64
 
-  /** CDF for zipf(s) over n ranks, built once per JVM. */
-  private def zipfCdf(n: Int, s: Double): Array[Double] = {
-    val w = Array.tabulate(n)(r => 1.0 / math.pow(r + 1.0, s))
-    val total = w.sum
-    val cdf = new Array[Double](n)
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += w(i) / total; cdf(i) = acc; i += 1 }
-    cdf(n - 1) = 1.0
-    cdf
-  }
-  private lazy val clusterCdf = zipfCdf(NClusters, 1.0)
-  private lazy val vocabCdf = zipfCdf(Vocab, 1.05)
-
-  private def zipfIdx(cdf: Array[Double], u: Double): Int = {
-    val i = java.util.Arrays.binarySearch(cdf, u)
-    if (i >= 0) i else math.min(-i - 1, cdf.length - 1)
-  }
+  // zipf CDFs, built once per JVM
+  private lazy val clusterCdf = Det.zipfCdf(NClusters, 1.0)
+  private lazy val vocabCdf = Det.zipfCdf(Vocab, 1.05)
 
   /** Template token list for a cluster (or a unique doc when cluster < 0):
     * zipf-head words mixed with rare tokens owned by the template.
@@ -78,7 +63,7 @@ object ScaleCorpus {
     while (k < nTok) {
       out(k) =
         if (Det.streamInt(seed, key, rareTag + "_mix", k, 100) < 70)
-          "w" + zipfIdx(vocabCdf,
+          "w" + Det.zipfRank(vocabCdf,
             (Det.streamInt(seed, key, rareTag + "_w", k, 1 << 30).toDouble
               / (1 << 30)))
         else rareTag + key + "x" + k
@@ -109,7 +94,7 @@ object ScaleCorpus {
     val clustered = Det.nextDouble(seed, id, "clustered") < ClusterFrac
     val cluster =
       if (!clustered) -1L
-      else zipfIdx(clusterCdf, Det.nextDouble(seed, id, "cluster")).toLong
+      else Det.zipfRank(clusterCdf, Det.nextDouble(seed, id, "cluster")).toLong
     val host = SynthPages.zipfHost(Det.nextDouble(seed, id, "host"))
     if (cluster < 0) {
       val nTok = 60 + Det.nextInt(seed, id, "len", 60)

@@ -23,21 +23,8 @@ object SynthPages {
   val DefaultSeed = 42L
 
   // --- zipf host distribution (s = 1.2 over 1000 hosts) -------------------
-  private val NHosts = 1000
-  private val zipfCdf: Array[Double] = {
-    val w = Array.tabulate(NHosts)(r => 1.0 / math.pow(r + 1.0, 1.2))
-    val total = w.sum
-    val cdf = new Array[Double](NHosts)
-    var acc = 0.0
-    var i = 0
-    while (i < NHosts) { acc += w(i) / total; cdf(i) = acc; i += 1 }
-    cdf(NHosts - 1) = 1.0
-    cdf
-  }
-  def zipfHost(u: Double): Int = {
-    val idx = java.util.Arrays.binarySearch(zipfCdf, u)
-    if (idx >= 0) idx else math.min(-idx - 1, NHosts - 1)
-  }
+  private val hostCdf = Det.zipfCdf(1000, 1.2)
+  def zipfHost(u: Double): Int = Det.zipfRank(hostCdf, u)
 
   // --- crawl snapshots ------------------------------------------------------
   val snapshots: Array[String] =

@@ -4,10 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.graftshim.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.dedup.Dedup
+import graft.analytics.Materialize
+import graft.dedup.{Decontaminate, Dedup}
+import graft.similarity.Ann
 import graft.synth.ScaleCorpus
 
 /** DEDUP_SCALE evidence run: the dedup/similarity family executed end-to-end
@@ -43,13 +45,39 @@ object DedupScale {
     * simhash and embedding recovery oracles. Double arithmetic (Column `/`
     * divides in double; ANSI would throw on a long overflow).
     */
-  private def plantedPairs(m: org.apache.spark.sql.DataFrame): Long = {
-    import org.apache.spark.sql.functions._
+  private def plantedPairs(m: DataFrame): Long =
     m.groupBy("cluster").agg(count(lit(1)).as("k"))
       .filter(col("k") >= 2)
       .agg(coalesce(sum(col("k") * (col("k") - 1) / 2), lit(0.0)))
       .head().getDouble(0).toLong
+
+  /** `df` materialized, and its row count. */
+  private def counted(df: DataFrame): (DataFrame, Long) = {
+    val m = Materialize(df)
+    (m, m.count())
   }
+
+  /** The `pairs` (`id_a`, `id_b`) whose two endpoints share a planted
+    * cluster, each tagged with both endpoints' `meta` columns: `doc_id`
+    * becomes `id_a`/`id_b`, every other column `c` becomes `c_a`/`c_b`.
+    */
+  private def sameCluster(pairs: DataFrame, meta: DataFrame): DataFrame = {
+    def end(s: String) = meta.select(meta.columns.toSeq.map(c =>
+      col(c).as(if (c == "doc_id") s"id_$s" else s"${c}_$s")): _*)
+    pairs.join(end("a").hint("merge"), Seq("id_a"))
+      .join(end("b").hint("merge"), Seq("id_b"))
+      .filter(col("cluster_a") === col("cluster_b"))
+  }
+
+  /** The truncation census of a capped near-dup operator. */
+  private def census(s: Dedup.BucketStats): Seq[(String, Any)] = Seq(
+    "n_buckets" -> s.nBuckets,
+    "capped_buckets" -> s.cappedBuckets,
+    "skipped_pairs_upper_bound" -> s.skippedPairs)
+
+  /** `num / den` to 4 decimals; 0.0 when `den` is 0 (`NaN` is not JSON). */
+  private def frac(num: Long, den: Long): Double =
+    if (den == 0L) 0.0 else math.rint(num.toDouble / den * 1e4) / 1e4
 
   private def renderJson(v: Any): String = v match {
     case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -83,18 +111,8 @@ object DedupScale {
     // ~50k docs per partition keeps each sort buffer modest and AQE
     // coalesces the small stages back down
     val shufflePartitions = math.max(64L, nDocs / 50000L)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = ToolFs.cpus
+    val spark = ToolFs.session(cpus, shufflePartitions)
     val sc = spark.sparkContext
 
     val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Any)]
@@ -116,11 +134,14 @@ object DedupScale {
         f"(shuffle ${tally.total.get / 1e6}%.0f MB)")
     }
 
+    // the bounded-cluster slice: unique docs + clusters of ≤ ~25 members
+    val bounded = col("cluster") === -1L || col("cluster") >= 2000L
+
     // ---- corpus ----------------------------------------------------------
-    var corpus: org.apache.spark.sql.DataFrame = null
+    var corpus: DataFrame = null
     var topClusters: Array[(Long, Long)] = null
     phase("corpus_build") {
-      corpus = graft.analytics.Materialize(
+      corpus = Materialize(
         ScaleCorpus.docs(spark, nDocs, partitions = 128).toDF())
       val n = corpus.count()
       topClusters = corpus.filter(col("cluster") >= 0)
@@ -132,20 +153,37 @@ object DedupScale {
         "top_cluster_sizes" -> topClusters.map(_._2).toSeq)
     }
 
+    // a mega-including slice through a capped near-dup operator: the
+    // census of what the cap truncated, and how many members of the zipf
+    // head cluster still land in some pair
+    def cappedMega(slice: DataFrame)(
+        nearDups: DataFrame => Dedup.NearDups): Seq[(String, Any)] = {
+      val sliceN = slice.count()
+      val nd = nearDups(slice)
+      val stats = nd.stats
+      val (pairs, n) = counted(nd.pairs)
+      val megaIds = slice.filter(col("cluster") === topClusters(0)._1)
+        .select(col("doc_id").as("id"))
+      val megaN = megaIds.count()
+      val inPair = pairs.select(col("id_a").as("id"))
+        .unionByName(pairs.select(col("id_b").as("id"))).distinct()
+      val covered = megaIds.join(inPair.hint("merge"), Seq("id"),
+        "left_semi").count()
+      Seq("slice_docs" -> sliceN, "bucket_cap" -> bucketCap, "pairs" -> n) ++
+        census(stats) ++ Seq("mega_docs" -> megaN,
+          "mega_docs_in_a_pair" -> covered,
+          "mega_pair_coverage" -> frac(covered, megaN))
+    }
+
     // ---- minhash LSH near-dup with census --------------------------------
-    var pairs: org.apache.spark.sql.DataFrame = null
-    var nPairs = 0L
+    var pairs: DataFrame = null
     phase("minhash_lsh_capped") {
       val nd = Dedup.minhashNearDups(
         corpus, "doc_id", "text", minJaccard = minJ, bucketCap = bucketCap)
       val stats = nd.stats
-      pairs = graft.analytics.Materialize(nd.pairs)
-      nPairs = pairs.count()
+      pairs = Materialize(nd.pairs)
       Seq("bucket_cap" -> bucketCap, "min_jaccard" -> minJ,
-        "verified_pairs" -> nPairs,
-        "n_buckets" -> stats.nBuckets,
-        "capped_buckets" -> stats.cappedBuckets,
-        "skipped_pairs_upper_bound" -> stats.skippedPairs)
+        "verified_pairs" -> pairs.count()) ++ census(stats)
     }
 
     // ---- connected components (reliable checkpoint dir) ------------------
@@ -153,10 +191,10 @@ object DedupScale {
       // reliable mode for this phase only: the labels checkpoint to
       // cc_ckpt, every other phase keeps the in-memory default
       sc.setCheckpointDir(s"$base/cc_ckpt")
-      spark.conf.set(graft.analytics.Materialize.ReliableConfKey, "true")
+      spark.conf.set(Materialize.ReliableConfKey, "true")
       val clusters =
         try Dedup.dupClusters(pairs, maxIter = 30)
-        finally spark.conf.unset(graft.analytics.Materialize.ReliableConfKey)
+        finally spark.conf.unset(Materialize.ReliableConfKey)
       val labels = clusters.labels
       val nComponents = labels.select("cluster_id").distinct().count()
       // recovery vs planted: a planted cluster (≥2 members) is INTACT iff
@@ -183,7 +221,7 @@ object DedupScale {
         "components" -> nComponents,
         "planted_clusters_ge2" -> ge2,
         "planted_recovered_intact" -> intact,
-        "intact_frac" -> math.rint(intact.toDouble / ge2 * 1e4) / 1e4,
+        "intact_frac" -> frac(intact, ge2),
         "mega_cluster_labels" -> megaIntact.getLong(0),
         "mega_cluster_unlabeled_members" -> megaIntact.getLong(1))
     }
@@ -200,13 +238,9 @@ object DedupScale {
       // which under a hash order lands in ~20% of prefixes and would
       // produce ~C(0.2·n, 2) ≈ 5e10 candidates from the top token alone —
       // never enters a prefix.
-      val slice = corpus.filter(col("cluster") === -1L ||
-          col("cluster") >= 2000L)
-        .withColumn("grp", lit("all"))
-      val out = graft.analytics.Materialize(
-        Dedup.jaccardPrefixJoin(slice, "doc_id", "text", "grp", minJ,
-          freqOrder = true, assumeUniqueIds = true))
-      val n = out.count()
+      val slice = corpus.filter(bounded).withColumn("grp", lit("all"))
+      val (_, n) = counted(Dedup.jaccardPrefixJoin(slice, "doc_id", "text",
+        "grp", minJ, freqOrder = true, assumeUniqueIds = true))
       val sliceN = slice.count()
       Seq("slice_docs" -> sliceN, "exact_pairs" -> n,
         "note" -> ("mega clusters excluded: exact all-pairs output over a " +
@@ -224,14 +258,11 @@ object DedupScale {
       // so recall over that slice must be exactly 1.0.
       val bench = corpus.filter(col("doc_id") % 1009 === 0)
       val docs = corpus.filter(col("doc_id") % 1009 =!= 0)
-      val hits = graft.analytics.Materialize(
-        graft.dedup.Decontaminate.gramHits(docs, bench, "doc_id", "text",
-          n = 13))
-      val nHits = hits.count()
+      val (hits, nHits) = counted(
+        Decontaminate.gramHits(docs, bench, "doc_id", "text", n = 13))
       val benchN = bench.count()
       val corpusN = docs.count()
-      val benchGrams =
-        graft.dedup.Decontaminate.benchGrams(bench, "text", 13).count()
+      val benchGrams = Decontaminate.benchGrams(bench, "text", 13).count()
       val evalPristineClusters = bench
         .filter(col("cluster") >= 0 && col("n_edits") === 0)
         .select("cluster").distinct()
@@ -242,7 +273,7 @@ object DedupScale {
       val flaggedN = expected.join(hits, Seq("id"), "left_semi").count()
       // the real anti-join removal path at volume, then the ledger check:
       // survivors + contaminated must tile the corpus exactly
-      val survivors = graft.dedup.Decontaminate.decontaminate(
+      val survivors = Decontaminate.decontaminate(
         docs, bench, "doc_id", "text", n = 13, minHits = 1).count()
       Seq("bench_docs" -> benchN, "bench_distinct_13grams" -> benchGrams,
         "corpus_docs" -> corpusN,
@@ -251,8 +282,7 @@ object DedupScale {
         "survivors_tile_corpus" -> (survivors + nHits == corpusN),
         "pristine_sibling_expected" -> expN,
         "pristine_sibling_flagged" -> flaggedN,
-        "pristine_sibling_recall" ->
-          math.rint(flaggedN.toDouble / math.max(expN, 1L) * 1e4) / 1e4)
+        "pristine_sibling_recall" -> frac(flaggedN, expN))
     }
 
     // ---- SimHash near-dup over the bounded-cluster slice -----------------
@@ -263,14 +293,11 @@ object DedupScale {
       // capped LSH path and this phase runs the bounded-cluster slice.
       // 16-bit bands are the 64-bit/hamming≤3 pigeonhole split; at larger
       // corpora the band count/width widens with the signature.
-      val lim = math.min(nDocs, 1000000L)
       val slice = corpus
-        .filter((col("cluster") === -1L || col("cluster") >= 2000L) &&
-          col("doc_id") < lim)
+        .filter(bounded && col("doc_id") < math.min(nDocs, 1000000L))
       val sliceN = slice.count()
-      val pairs = graft.analytics.Materialize(
+      val (pairs, nPairsSim) = counted(
         Dedup.simhashNearDups(slice, "doc_id", "text", maxHamming = 3).pairs)
-      val nPairsSim = pairs.count()
       // recovery oracle: pristine members (n_edits = 0) of one cluster are
       // byte-identical texts → identical simhash → hamming 0 → guaranteed
       // band collision. Every planted pristine pair MUST be recovered;
@@ -281,23 +308,15 @@ object DedupScale {
         .select(col("doc_id"), col("cluster"), col("n_edits"))
       val plantedPristine = plantedPairs(meta.filter(col("n_edits") === 0))
       val plantedAll = plantedPairs(meta)
-      val tagged = pairs
-        .join(meta.select(col("doc_id").as("id_a"),
-          col("cluster").as("cl_a"), col("n_edits").as("e_a")).hint("merge"),
-          Seq("id_a"))
-        .join(meta.select(col("doc_id").as("id_b"),
-          col("cluster").as("cl_b"), col("n_edits").as("e_b")).hint("merge"),
-          Seq("id_b"))
-        .filter(col("cl_a") === col("cl_b"))
+      val tagged = sameCluster(pairs, meta)
       val recSame = tagged.count()
       val recPristine = tagged
-        .filter(col("e_a") === 0 && col("e_b") === 0).count()
+        .filter(col("n_edits_a") === 0 && col("n_edits_b") === 0).count()
       Seq("slice_docs" -> sliceN, "max_hamming" -> 3,
         "pairs" -> nPairsSim,
         "planted_pristine_pairs" -> plantedPristine,
         "recovered_pristine_pairs" -> recPristine,
-        "pristine_recall" -> (if (plantedPristine == 0) 0.0
-          else math.rint(recPristine.toDouble / plantedPristine * 1e4) / 1e4),
+        "pristine_recall" -> frac(recPristine, plantedPristine),
         "planted_cluster_pairs_any_edits" -> plantedAll,
         "recovered_same_cluster_pairs" -> recSame)
     }
@@ -309,31 +328,9 @@ object DedupScale {
       // guard (r5) — a 16-bit band holding the zipf head cluster is
       // C(s,2) candidates uncapped, and the checkpoint-rooted self-join
       // is not AQE-skew-splittable, so the cap is the structural bound
-      val lim = math.min(nDocs, 1000000L)
-      val slice = corpus.filter(col("doc_id") < lim)
-      val sliceN = slice.count()
-      val nd = Dedup.simhashNearDups(slice, "doc_id",
-        "text", maxHamming = 3, bucketCap = 512)
-      val stats = nd.stats
-      val pairs = graft.analytics.Materialize(nd.pairs)
-      val n = pairs.count()
-      val top1 = topClusters(0)._1
-      val megaIds = corpus.filter(col("cluster") === top1 &&
-        col("doc_id") < lim).select(col("doc_id").as("id"))
-      val megaN = megaIds.count()
-      val inPair = pairs.select(col("id_a").as("id"))
-        .unionByName(pairs.select(col("id_b").as("id"))).distinct()
-      val covered = megaIds.join(inPair.hint("merge"), Seq("id"),
-        "left_semi").count()
-      Seq("slice_docs" -> sliceN, "bucket_cap" -> 512,
-        "pairs" -> n,
-        "n_buckets" -> stats.nBuckets,
-        "capped_buckets" -> stats.cappedBuckets,
-        "skipped_pairs_upper_bound" -> stats.skippedPairs,
-        "mega_docs" -> megaN,
-        "mega_docs_in_a_pair" -> covered,
-        "mega_pair_coverage" -> (if (megaN == 0) 0.0
-          else math.rint(covered.toDouble / megaN * 1e4) / 1e4))
+      cappedMega(corpus.filter(col("doc_id") < math.min(nDocs, 1000000L)))(
+        Dedup.simhashNearDups(_, "doc_id", "text", maxHamming = 3,
+          bucketCap = bucketCap))
     }
 
     // ---- embedding near-dup over the bounded-cluster slice ----------------
@@ -343,27 +340,20 @@ object DedupScale {
       // is budgeted by candidate count, and single-band hyperplane LSH at
       // 12 planes is the measured recall point (cluster vectors sit at
       // cosine ≳ 0.999; P[all 12 signs agree] ≈ (1 − θ/π)^12 ≈ 0.9)
-      val lim = math.min(nDocs, 400000L)
       val slice = corpus
-        .filter((col("cluster") === -1L || col("cluster") >= 2000L) &&
-          col("doc_id") < lim)
+        .filter(bounded && col("doc_id") < math.min(nDocs, 400000L))
         .select(col("doc_id"), col("cluster"), col("embedding"))
       val sliceN = slice.count()
-      val pairs = graft.analytics.Materialize(Dedup.embeddingNearDups(
-        slice, "doc_id", "embedding", minCosine = 0.95, planes = 12,
-        dim = 64).pairs)
-      val nPairsEmb = pairs.count()
+      def bandedPairs(bands: Int) = counted(Dedup.embeddingNearDups(slice,
+        "doc_id", "embedding", minCosine = 0.95, planes = 12, dim = 64,
+        bands = bands).pairs)
+      val (pairs, nPairsEmb) = bandedPairs(1)
       val meta = slice.filter(col("cluster") >= 0)
         .select(col("doc_id"), col("cluster"))
       val planted = plantedPairs(meta)
-      val recovered = pairs
-        .join(meta.select(col("doc_id").as("id_a"),
-          col("cluster").as("cl_a")).hint("merge"), Seq("id_a"))
-        .join(meta.select(col("doc_id").as("id_b"),
-          col("cluster").as("cl_b")).hint("merge"), Seq("id_b"))
-        .filter(col("cl_a") === col("cl_b")).count()
+      val recovered = sameCluster(pairs, meta).count()
       // bucket census: the quadratic budget is Σ C(bucket, 2)
-      val buckets = graft.analytics.Materialize(slice.select(
+      val buckets = Materialize(slice.select(
           graft.functions.VectorFunctions.hyperplane_bucket(
             col("embedding"), 12, 64).as("b"))
         .groupBy("b").agg(count(lit(1)).as("sz")))
@@ -373,28 +363,18 @@ object DedupScale {
       // same 12 planes — 1−(1−r^12)^4 predicts ≈0.999 at the cluster
       // vectors' cos θ from the 0.949 single-band draw; band 0 ≡ the
       // single-band planes, so banded pairs ⊇ the single-band set
-      val pairsB = graft.analytics.Materialize(Dedup.embeddingNearDups(
-        slice, "doc_id", "embedding", minCosine = 0.95, planes = 12,
-        dim = 64, bands = 4).pairs)
-      val nPairsB = pairsB.count()
-      val recoveredB = pairsB
-        .join(meta.select(col("doc_id").as("id_a"),
-          col("cluster").as("cl_a")).hint("merge"), Seq("id_a"))
-        .join(meta.select(col("doc_id").as("id_b"),
-          col("cluster").as("cl_b")).hint("merge"), Seq("id_b"))
-        .filter(col("cl_a") === col("cl_b")).count()
+      val (pairsB, nPairsB) = bandedPairs(4)
+      val recoveredB = sameCluster(pairsB, meta).count()
       Seq("slice_docs" -> sliceN, "min_cosine" -> 0.95, "planes" -> 12,
         "pairs" -> nPairsEmb,
         "planted_cluster_pairs" -> planted,
         "recovered_cluster_pairs" -> recovered,
-        "single_band_recall" -> (if (planted == 0) 0.0
-          else math.rint(recovered.toDouble / planted * 1e4) / 1e4),
+        "single_band_recall" -> frac(recovered, planted),
         "n_buckets" -> bRow.getLong(0), "max_bucket" -> bRow.getLong(1),
         "candidate_pairs_budget" -> bRow.getDouble(2).toLong,
         "bands" -> 4, "banded_pairs" -> nPairsB,
         "banded_recovered_cluster_pairs" -> recoveredB,
-        "banded_recall" -> (if (planted == 0) 0.0
-          else math.rint(recoveredB.toDouble / planted * 1e4) / 1e4))
+        "banded_recall" -> frac(recoveredB, planted))
     }
 
     // ---- embedding capped path over the mega-including slice --------------
@@ -405,33 +385,10 @@ object DedupScale {
       // carrying two 64-dim vectors — the bucketCap star/chain guard (r5)
       // is the structural bound, same as the simhash phase above. 400k-id
       // budget matches the bounded-slice embedding phase.
-      val lim = math.min(nDocs, 400000L)
-      val slice = corpus.filter(col("doc_id") < lim)
-        .select(col("doc_id"), col("cluster"), col("embedding"))
-      val sliceN = slice.count()
-      val nd = Dedup.embeddingNearDups(slice, "doc_id",
-        "embedding", minCosine = 0.95, planes = 12, dim = 64,
-        bucketCap = 512)
-      val stats = nd.stats
-      val pairs = graft.analytics.Materialize(nd.pairs)
-      val n = pairs.count()
-      val top1 = topClusters(0)._1
-      val megaIds = slice.filter(col("cluster") === top1)
-        .select(col("doc_id").as("id"))
-      val megaN = megaIds.count()
-      val inPair = pairs.select(col("id_a").as("id"))
-        .unionByName(pairs.select(col("id_b").as("id"))).distinct()
-      val covered = megaIds.join(inPair.hint("merge"), Seq("id"),
-        "left_semi").count()
-      Seq("slice_docs" -> sliceN, "bucket_cap" -> 512,
-        "pairs" -> n,
-        "n_buckets" -> stats.nBuckets,
-        "capped_buckets" -> stats.cappedBuckets,
-        "skipped_pairs_upper_bound" -> stats.skippedPairs,
-        "mega_docs" -> megaN,
-        "mega_docs_in_a_pair" -> covered,
-        "mega_pair_coverage" -> (if (megaN == 0) 0.0
-          else math.rint(covered.toDouble / megaN * 1e4) / 1e4))
+      cappedMega(corpus.filter(col("doc_id") < math.min(nDocs, 400000L))
+          .select(col("doc_id"), col("cluster"), col("embedding")))(
+        Dedup.embeddingNearDups(_, "doc_id", "embedding", minCosine = 0.95,
+          planes = 12, dim = 64, bucketCap = bucketCap))
     }
 
     // ---- IVF ANN over the full corpus ------------------------------------
@@ -439,31 +396,24 @@ object DedupScale {
       val emb = corpus.select(col("doc_id"), col("embedding"))
       val queries = emb.filter(col("doc_id") < 64)
       val nlist = 128
-      val cents = graft.similarity.Ann.trainIvfCentroids(
-        emb, "doc_id", "embedding", nlist)
-      val ivf = graft.analytics.Materialize(graft.similarity.Ann.ivfTopK(
-        queries, emb, "doc_id", "doc_id", "embedding", 10, cents, nprobe = 8))
-      val nIvf = ivf.count()
-      val bf = graft.analytics.Materialize(graft.similarity.Ann
-        .bruteForceTopK(queries, emb, "doc_id", "doc_id", "embedding", 10))
-      val nBf = bf.count()
+      val cents = Ann.trainIvfCentroids(emb, "doc_id", "embedding", nlist)
+      def ivfAt(nprobe: Int) = counted(Ann.ivfTopK(
+        queries, emb, "doc_id", "doc_id", "embedding", 10, cents, nprobe))
+      val (ivf, nIvf) = ivfAt(8)
+      val (bf, nBf) = counted(
+        Ann.bruteForceTopK(queries, emb, "doc_id", "doc_id", "embedding", 10))
       // recall@10 vs exact brute force over all nDocs vectors, at two
       // nprobe settings — the recall/cost dial is the evidence (the corpus
       // mixes tight planted clusters with near-uniform unique vectors; the
       // uniform mass is IVF's documented hard case)
-      def recall(df: org.apache.spark.sql.DataFrame): Double = {
-        val hit = df.select("query_id", "neighbor_id")
-          .intersect(bf.select("query_id", "neighbor_id")).count()
-        math.rint(hit.toDouble / nBf * 1e4) / 1e4
-      }
+      def recall(df: DataFrame): Double =
+        frac(df.select("query_id", "neighbor_id")
+          .intersect(bf.select("query_id", "neighbor_id")).count(), nBf)
       // time ONLY the nprobe=32 query execution (materialize then count);
       // the recall intersect against the brute-force frame runs untimed,
       // symmetric with how the nprobe=8 figure is produced
       val t32 = System.nanoTime()
-      val ivf32 = graft.analytics.Materialize(graft.similarity.Ann.ivfTopK(
-        queries, emb, "doc_id", "doc_id", "embedding", 10, cents,
-        nprobe = 32))
-      ivf32.count(): Unit
+      val (ivf32, _) = ivfAt(32)
       val sec32 = (System.nanoTime() - t32) / 1e9
       val recall32 = recall(ivf32)
       Seq("nlist" -> nlist, "queries" -> 64, "k" -> 10,
@@ -491,13 +441,12 @@ object DedupScale {
         (r.getLong(0), r.getLong(1))
       }
       // interrupted: the runner dies after 2 waves (8 of 16 chunks)
+      def run1(fail: Option[Int]) = ResumableRunner.run(pages,
+        s"$base/lin_out", s"$base/lin_led", "run1", failAfterWaves = fail)
       val killed =
-        try { ResumableRunner.run(pages, s"$base/lin_out", s"$base/lin_led",
-          "run1", failAfterWaves = Some(2)); -1 }
-        catch { case _: SimulatedFailure => 2 }
+        try { run1(Some(2)); -1 } catch { case _: SimulatedFailure => 2 }
       // resume from the lineage table: only the remaining chunks run
-      val resumed = ResumableRunner.run(pages, s"$base/lin_out",
-        s"$base/lin_led", "run1")
+      val resumed = run1(None)
       // uninterrupted reference run
       ResumableRunner.run(pages, s"$base/lin_ref", s"$base/lin_led2", "ref")
       val (cN, cH) = checksum(s"$base/lin_out")
@@ -512,25 +461,26 @@ object DedupScale {
     phase("aqe_skew_join") {
       // dimension-style host join with broadcast disabled: the zipf head
       // host (~18% of all rows) lands in one shuffle partition that AQE
-      // must split. Band-key skew inside the LSH join is handled
+      // must split (AQE's skew-join split is on by default in Spark 4). Band-key skew inside the LSH join is handled
       // STRUCTURALLY (bucketCap star+chain, phase minhash_lsh_capped);
       // this validates the runtime path for joins we don't pre-shape.
       // broadcast disabled on BOTH the static and the AQE-runtime knobs:
       // a 1000-row dim would otherwise (correctly) broadcast and the skew
       // path would never run — this phase validates the skew machinery,
       // not the best plan for this join
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
+      val confs = Seq(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32m",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m")
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         val big = corpus.select(col("doc_id"), col("host"), col("text"))
         // dim MATERIALIZED first: OptimizeSkewedJoin only rewrites
         // SMJ(Sort(ShuffleStage), Sort(ShuffleStage)) — an aggregate
         // between the shuffle stage and the sort defeats the pattern (the
         // run-1 artifact recorded skew_fired=false for exactly that shape)
-        val dim = graft.analytics.Materialize(
+        val dim = Materialize(
           corpus.groupBy("host").agg(count(lit(1)).as("host_docs")))
         val joined = big.join(dim, "host")
         // run THIS Dataset's own query execution so the adaptive plan we
@@ -538,7 +488,10 @@ object DedupScale {
         // QueryExecution and leave this plan un-adapted)
         val qe = joined.queryExecution
         qe.toRdd.count(): Unit
-        val plan = qe.executedPlan.toString
+        // ids renumbered over the WHOLE plan, before the line filter
+        // below, so the excerpt does not depend on what earlier phases
+        // planned
+        val plan = ToolFs.normalizePlan(qe.executedPlan.toString)
         // Spark marks the rewritten join "skew=true" and the split-reader
         // nodes "AQEShuffleRead ... skewed"
         val skewNodes = "skew=true".r.findAllIn(plan).length +
@@ -548,13 +501,7 @@ object DedupScale {
           .take(5).map(_.trim.take(180)).mkString(" | ")
         Seq("rows" -> nDocs, "skew_split_nodes" -> skewNodes,
           "skew_fired" -> (skewNodes > 0), "plan_excerpt" -> excerpt)
-      } finally {
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.conf.unset(
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      }
+      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
     }
 
     val out: Seq[(String, Any)] = Seq(

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the committed golden decision fixture
   * (src/test/resources/golden_decisions.csv): url, keep, md5(scrubbed_text)
   * for the first 2,000 synthetic pages. Committed once; GoldenFixtureSpec
@@ -12,10 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GoldenGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolFs.session(8, 8)
     val rows = graft.pipeline.QualityPipeline
       .annotate(graft.synth.SynthPages.pages(spark, 2000L))
       .collect()

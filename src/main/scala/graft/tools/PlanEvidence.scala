@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: physical-plan evidence that the optimizer-facing
   * properties hold — filter/projection pushdown to the parquet scan,
   * broadcast of dimension sides, whole-stage codegen spans, and the
@@ -11,36 +9,20 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanEvidence {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // 8 cores whatever the host: the flagship section prints
+    // `Range (0, 1000, step=1, splits=8)` from defaultParallelism
+    val spark = ToolFs.session(8, 8)
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.01"
     val sb = new StringBuilder
 
-    // expression ids (`#N`) and AQE `plan_id=N` come from JVM-global
-    // counters, so they depend on every section planned before this one:
-    // renumber each densely, in order of first appearance within the
-    // section, so deleting or reordering a section leaves the others'
-    // text unchanged
-    def dense(s: String, re: scala.util.matching.Regex,
-        fmt: Int => String): String = {
-      val ids = scala.collection.mutable.HashMap.empty[String, Int]
-      re.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
-        fmt(ids.getOrElseUpdate(m.group(1), ids.size))))
-    }
-
+    // each section normalized on its own, so a regenerated PLANS.md diffs
+    // clean iff plan SHAPE moved, and deleting or reordering a section
+    // leaves the others' text unchanged
     def section(title: String, note: String)(df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n## $title\n\n$note\n\n```\n")
-      // lambda identities (`$$Lambda$123/0x7f...@1a2b`) differ per JVM run;
-      // scrub them so a regenerated PLANS.md diffs clean iff plan SHAPE moved
-      val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.SimpleMode)
-        .replaceAll("""\$\$\$?Lambda[$]?\d*/0x[0-9a-f]+@[0-9a-f]+""",
-          "\\$\\$Lambda")
-      sb.append(dense(dense(plan, """#(\d+)""".r, i => s"#$i"),
-        """plan_id=(\d+)""".r, i => s"plan_id=$i"))
+      sb.append(ToolFs.normalizePlan(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.SimpleMode)))
       sb.append("\n```\n")
     }
 

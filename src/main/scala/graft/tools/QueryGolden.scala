@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Canonical text form of a query result, used by both the golden
   * generator and QueryGoldenSpec: columns sorted by name, every value
@@ -47,11 +47,7 @@ object QueryGoldenGen {
       .filterNot(graft.SparkEntry.oracleSql.contains).sorted
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolFs.session(8, 8)
     val outDir = Paths.get("src/test/resources/golden_queries")
     Files.createDirectories(outDir)
     noOracleQueries.foreach { name =>

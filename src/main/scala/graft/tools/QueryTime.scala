@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Times individual `SparkEntry.queries` entries with a noop sink,
   * several draws each — the per-query numbers in `graft.Bench` are
   * single draws on a burst-throttled host, so a 2× swing there needs
@@ -15,18 +13,7 @@ object QueryTime {
     val draws = if (args.length > 1) args(1).toInt else 3
     val names = if (args.length > 2) args.drop(2).toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
-    // same width knob as graft.Bench; unset, the host's core count
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolFs.session(ToolFs.cpus, ToolFs.cpus)
     for (n <- names) {
       val q = graft.SparkEntry.queries(n)
       val times = (1 to draws).map { _ =>

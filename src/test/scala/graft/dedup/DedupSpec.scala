@@ -3,7 +3,7 @@ package graft.dedup
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.{TextFunctions, Tokenize}
+import graft.functions.{NativeRef, TextFunctions, Tokenize}
 
 /** Dedup operators against scalar oracles on planted fixtures. */
 class DedupSpec extends AnyFunSuite {
@@ -217,8 +217,8 @@ class DedupSpec extends AnyFunSuite {
       .select(TextFunctions.simhash64(Tokenize.norm_tokens(col("text")))
         .as("s")).collect().map(_.getLong(0))
     assert(sigs(0) == sigs(1))
-    assert(TextFunctions.hammingDistance(sigs(0), sigs(2)) <= 8)
-    assert(TextFunctions.hammingDistance(sigs(0), sigs(3)) > 12)
+    assert(NativeRef.hammingDistance(sigs(0), sigs(2)) <= 8)
+    assert(NativeRef.hammingDistance(sigs(0), sigs(3)) > 12)
   }
 
   test("simhashNearDups bucket join finds planted pairs") {
@@ -249,7 +249,7 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ids = sigs.keys.toSeq.sorted
     def ham(a: Long, b: Long): Int =
-      TextFunctions.hammingDistance(sigs(a), sigs(b))
+      NativeRef.hammingDistance(sigs(a), sigs(b))
     val want = (for (a <- ids; b <- ids if a < b && ham(a, b) <= 4)
       yield (a, b)).toSet
     val got = Dedup.simhashNearDups(df, "doc_id", "text", maxHamming = 4)

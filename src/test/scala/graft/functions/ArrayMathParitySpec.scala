@@ -54,7 +54,7 @@ class ArrayMathParitySpec extends AnyFunSuite {
     val df = arrays.toDF("a")
     val rows = df.select(
       ArrayMath.softmax_arr(col("a")).as("native"),
-      TopK.softmaxArrHof(col("a")).as("hof")).collect()
+      NativeRef.softmaxArrHof(col("a")).as("hof")).collect()
     rows.zipWithIndex.foreach { case (r, i) =>
       val n = r.getSeq[Double](0)
       val h = r.getSeq[Double](1)
@@ -87,7 +87,7 @@ class ArrayMathParitySpec extends AnyFunSuite {
     val df = probs.toDF("p")
     val rows = df.select(
       ArrayMath.neg_indexed_sorted(col("p")).as("native"),
-      TopK.negIndexedSortedHof(col("p")).as("hof")).collect()
+      NativeRef.negIndexedSortedHof(col("p")).as("hof")).collect()
     rows.zipWithIndex.foreach { case (r, i) =>
       val n = r.getSeq[org.apache.spark.sql.Row](0)
         .map(e => (e.getDouble(0), e.getInt(1)))

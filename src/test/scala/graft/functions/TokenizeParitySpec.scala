@@ -60,7 +60,7 @@ class TokenizeParitySpec extends AnyFunSuite {
     val df = (corpus ++ nasty).toDF("text")
     val rows = df.select(
       Tokenize.norm_tokens(col("text")).as("native"),
-      TextFunctions.normTokensHof(col("text")).as("hof")).collect()
+      NativeRef.normTokensHof(col("text")).as("hof")).collect()
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(r.getSeq[String](0) == r.getSeq[String](1), s"row $i")
     }

@@ -119,14 +119,14 @@ class AnnSpec extends AnyFunSuite {
     val cos = df.as("a").crossJoin(df.limit(5).as("b"))
       .select(
         cosine_sim(col("a.embedding"), col("b.embedding")).as("native"),
-        Ann.cosineHof(col("a.embedding"), col("b.embedding")).as("hof"))
+        AnnRef.cosineHof(col("a.embedding"), col("b.embedding")).as("hof"))
       .collect()
     assert(cos.length == 1500)
     cos.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
       s"cosine diverges: ${r.getDouble(0)} vs ${r.getDouble(1)}"))
     val buckets = df.select(
         hyperplane_bucket(col("embedding"), 8, dim).as("native"),
-        Ann.hyperplaneBucketHof(col("embedding"), 8, dim).as("hof"))
+        AnnRef.hyperplaneBucketHof(col("embedding"), 8, dim).as("hof"))
       .collect()
     buckets.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
@@ -139,7 +139,7 @@ class AnnSpec extends AnyFunSuite {
       (3L, Seq(1.0), Seq(1.0, 2.0, 3.0))).toDF("id", "a", "b")
     val rows = df.select(col("id"),
         cosine_sim(col("a"), col("b")).as("native"),
-        Ann.cosineHof(col("a"), col("b")).as("hof"))
+        AnnRef.cosineHof(col("a"), col("b")).as("hof"))
       .orderBy("id").collect()
     assert(!rows(0).isNullAt(1) && rows(0).getDouble(1) == rows(0).getDouble(2))
     assert(rows(1).isNullAt(1) && rows(1).isNullAt(2), "mismatch must be null")
