@@ -1465,7 +1465,7 @@ object Queries {
       when(col("doc_id") % 4 === 0, lit("#sec")).otherwise(lit("")))
     UrlOps.keepLatestPerUrl(
         t(s, dir, "documents").withColumn("url", url),
-        "url", "doc_id", tieCols = Seq.empty)
+        "url", "doc_id")
       .select("canon_url", "doc_id")
       .orderBy("doc_id")
   }

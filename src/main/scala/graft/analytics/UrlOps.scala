@@ -1,7 +1,6 @@
 package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** URL canonicalization + per-URL recrawl dedup — the hygiene step before
@@ -64,44 +63,25 @@ object UrlOps {
       .otherwise(concat(scheme, lit("://"), auth, stripPathSlash(rest)))
   }
 
-  /** One row per canonical URL: the newest by `tsCol`, ties broken by
-    * `tieCols` (supply enough for a total order or the survivor is
-    * nondeterministic). ONE hash exchange on the canonical URL.
+  /** One row per canonical URL: the newest by `tsCol`. `tsCol` must order
+    * the rows of one canonical URL totally, or the survivor of a tie is
+    * nondeterministic. A `max_by` aggregate behind ONE hash exchange on the
+    * canonical URL: it partial-combines map-side (co-located recrawls
+    * collapse before the shuffle) and never sorts, where a `row_number`
+    * window would exchange and sort every row. `max_by` skips null-ts rows,
+    * so a URL whose every ts is null yields null fields: `tsCol` is a crawl
+    * timestamp and non-null by contract.
     *
     * The output carries the canonical form as `canon_url`; input columns
-    * named `canon_url`, `_canon_url` or `_rn` are reserved (overwritten /
-    * duplicated) — rename them first.
+    * named `canon_url` or `_canon_url` are reserved (duplicated /
+    * overwritten) — rename them first.
     */
-  def keepLatestPerUrl(
-      df: DataFrame,
-      urlCol: String,
-      tsCol: String,
-      tieCols: Seq[Column]): DataFrame = {
-    if (tieCols.isEmpty) {
-      // r6 fast path (the common "newest wins" call): a max_by aggregate
-      // replaces the window — the window shape exchanged AND per-partition
-      // sorted every row; the aggregate partial-combines map-side (co-
-      // located recrawls collapse before the shuffle) and never sorts.
-      // Survivor identical: max ts per canon_url, ties nondeterministic
-      // exactly as the un-tie-broken window was (documented above). One
-      // contract note: max_by skips null-ts rows, so a group whose EVERY
-      // ts is null yields null fields where the window kept an arbitrary
-      // row — tsCol is a crawl timestamp and non-null by contract; pass a
-      // tieCol to route such data through the window path instead.
-      val withC = df.withColumn("_canon_url", canonicalizeUrl(col(urlCol)))
-      val dataCols = withC.columns.filter(_ != "_canon_url")
-      withC.groupBy(col("_canon_url"))
-        .agg(max_by(struct(dataCols.map(col): _*), col(tsCol)).as("_row"))
-        .select(dataCols.map(c => col(s"_row.$c").as(c)) :+
-          col("_canon_url").as("canon_url"): _*)
-    } else {
-      val w = Window.partitionBy(col("_canon_url"))
-        .orderBy(col(tsCol).desc +: tieCols: _*)
-      df.withColumn("_canon_url", canonicalizeUrl(col(urlCol)))
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .drop("_rn")
-        .withColumnRenamed("_canon_url", "canon_url")
-    }
+  def keepLatestPerUrl(df: DataFrame, urlCol: String, tsCol: String): DataFrame = {
+    val withC = df.withColumn("_canon_url", canonicalizeUrl(col(urlCol)))
+    val dataCols = withC.columns.filter(_ != "_canon_url")
+    withC.groupBy(col("_canon_url"))
+      .agg(max_by(struct(dataCols.map(col): _*), col(tsCol)).as("_row"))
+      .select(dataCols.map(c => col(s"_row.$c").as(c)) :+
+        col("_canon_url").as("canon_url"): _*)
   }
 }

@@ -83,8 +83,6 @@ object Annotations {
       Some(a.int_score.toInt)
     else None
 
-  val PenaltyDistance = 5.0
-
   /** Column wrapper (one deterministic scalar UDF; used where the full
     * *-stripping/ERROR semantics are required — the declarative subset is
     * covered by regexp_extract in the analytics queries).

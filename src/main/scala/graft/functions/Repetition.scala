@@ -1,7 +1,5 @@
 package graft.functions
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
@@ -72,8 +70,6 @@ object Repetition {
     out
   }
 
-  private def codePoints(s: String): Int = s.codePointCount(0, s.length)
-
   /** Gram key for identity: tokens joined by a space — unambiguous because
     * the tokens are whitespace-split words and cannot contain one.
     */
@@ -100,64 +96,76 @@ object Repetition {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  def topNgramFrac(arr: ArrayData, n: Int): Double = {
-    val toks = tokenStrings(arr)
-    val len = toks.length
-    var total = 0L
-    var i = 0
-    while (i < len) { total += codePoints(toks(i)); i += 1 }
-    if (total == 0L || len < n) return 0.0
-    // gram -> (count, charLen, firstPos)
-    val counts = new mutable.HashMap[String, Array[Long]]()
-    var u = 0
-    var gl = 0L // rolling char length of the window [u, u+n)
-    var j = 0
-    while (j < n) { gl += codePoints(toks(j)); j += 1 }
-    while (u + n <= len) {
-      val rec = counts.getOrElseUpdate(gramKey(toks, u, n), Array(0L, gl, u.toLong))
-      rec(0) += 1L
-      if (u + n < len) gl += codePoints(toks(u + n)) - codePoints(toks(u))
-      u += 1
-    }
-    // max by (count, charLen, -firstPos)
-    var bestCnt = -1L; var bestGl = -1L; var bestPos = Long.MaxValue
-    counts.valuesIterator.foreach { rec =>
-      val (c, g, p) = (rec(0), rec(1), rec(2))
-      if (c > bestCnt || (c == bestCnt && (g > bestGl ||
-          (g == bestGl && p < bestPos)))) {
-        bestCnt = c; bestGl = g; bestPos = p
+  /** The one pass both metrics read. `cps(i)` is the code points of
+    * tokens [0, i), so a window's char length is a difference and
+    * `cps(len)` is the doc's word chars. When the doc has word chars and at
+    * least n tokens, each window's gram key is built once and mapped to its
+    * first occurrence: `first(u)` is that position for window u, and
+    * `count(f)` is how often the gram first seen at f occurs (0 at other
+    * positions). The map is a `java.util.HashMap`, whose bins turn into
+    * trees for `Comparable` keys: grams with one `String.hashCode` (the
+    * `Aa`/`BB` family) cost O(log n) each, not a walk of one chain.
+    */
+  private final class Occurrences(arr: ArrayData, n: Int) {
+    private val toks = tokenStrings(arr)
+    val cps: Array[Long] = new Array[Long](toks.length + 1)
+    locally {
+      var i = 0
+      while (i < toks.length) {
+        cps(i + 1) = cps(i) + toks(i).codePointCount(0, toks(i).length)
+        i += 1
       }
     }
-    (bestCnt * bestGl).toDouble / total.toDouble
+    val total: Long = cps(toks.length)
+    val windows: Int = if (total == 0L) 0 else math.max(toks.length - n + 1, 0)
+    val first: Array[Int] = new Array[Int](windows)
+    val count: Array[Int] = new Array[Int](windows)
+    locally {
+      val seen = new java.util.HashMap[String, Integer](windows * 2)
+      var u = 0
+      while (u < windows) {
+        val f = seen.putIfAbsent(gramKey(toks, u, n), u)
+        first(u) = if (f == null) u else f.intValue
+        count(first(u)) += 1
+        u += 1
+      }
+    }
+  }
+
+  def topNgramFrac(arr: ArrayData, n: Int): Double = {
+    val o = new Occurrences(arr, n)
+    if (o.windows == 0) return 0.0
+    // max by (count, charLen, -firstPos): first occurrences visited in
+    // position order with a strict "better" test keep the earliest on a tie
+    var bestCnt = 0L; var bestGl = 0L
+    var u = 0
+    while (u < o.windows) {
+      if (o.first(u) == u) {
+        val c = o.count(u).toLong
+        val g = o.cps(u + n) - o.cps(u)
+        if (c > bestCnt || (c == bestCnt && g > bestGl)) { bestCnt = c; bestGl = g }
+      }
+      u += 1
+    }
+    (bestCnt * bestGl).toDouble / o.total.toDouble
   }
 
   def dupNgramFrac(arr: ArrayData, n: Int): Double = {
-    val toks = tokenStrings(arr)
-    val len = toks.length
-    var total = 0L
-    var i = 0
-    while (i < len) { total += codePoints(toks(i)); i += 1 }
-    if (total == 0L || len < n) return 0.0
-    val counts = new mutable.HashMap[String, Int]()
+    val o = new Occurrences(arr, n)
+    if (o.windows == 0) return 0.0
+    // union of the windows whose gram occurs twice or more, each word once:
+    // windows come in position order, so only the part past the last
+    // covered word is new
+    var cc = 0L
+    var coveredTo = 0
     var u = 0
-    while (u + n <= len) {
-      val k = gramKey(toks, u, n)
-      counts.update(k, counts.getOrElse(k, 0) + 1)
-      u += 1
-    }
-    // union of positions covered by grams with count >= 2, each word once
-    val covered = new Array[Boolean](len)
-    u = 0
-    while (u + n <= len) {
-      if (counts(gramKey(toks, u, n)) >= 2) {
-        var j = 0
-        while (j < n) { covered(u + j) = true; j += 1 }
+    while (u < o.windows) {
+      if (o.count(o.first(u)) >= 2) {
+        cc += o.cps(u + n) - o.cps(math.max(u, coveredTo))
+        coveredTo = u + n
       }
       u += 1
     }
-    var cc = 0L
-    i = 0
-    while (i < len) { if (covered(i)) cc += codePoints(toks(i)); i += 1 }
-    cc.toDouble / total.toDouble
+    cc.toDouble / o.total.toDouble
   }
 }

@@ -96,11 +96,6 @@ object Taxonomy {
   val ageGroups: Seq[String] = Seq(
     "Preșcolar", "Școală primară", "Școală gimnazială", "Liceu", "Licență",
     "Post-universitar")
-
-  val topicToId: Map[String, Int] = topics.zipWithIndex.toMap
-
-  /** Adult-content topic label (`full_dataset_analysis/adult.py:8`). */
-  val adultTopic: String = "Conținut pentru adulți"
 }
 
 /** The driver-generated testdata contract (TESTDATA.md, seed=42) — the ONE

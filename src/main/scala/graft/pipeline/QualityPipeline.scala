@@ -107,17 +107,26 @@ object QualityPipeline {
     }
   }
 
-  /** Salted, snapshot-partitioned write — the pipeline's only shuffle.
-    * Salting spreads zipf-skewed hosts across `saltBuckets` writers per
-    * snapshot (north rule: "salted repartitioning for skewed hosts");
-    * at cluster scale the same call writes an Iceberg table
-    * (`.writeTo(t).overwritePartitions()`) — parquet here because the
-    * sandbox ships no Iceberg runtime.
+  /** The salt-key policy of the pipeline's only shuffle: hash on
+    * (`crawl_snapshot`, `pmod(xxhash64(url), saltBuckets)`), so
+    * zipf-skewed hosts spread across `saltBuckets` writers per snapshot
+    * (north rule: "salted repartitioning for skewed hosts").
+    * [[writeAnnotated]] and PlanEvidence's flagship section call it. The
+    * benchmarks (`graft.Bench` and perfbench's `Workloads`) keep
+    * their own copy of this exchange, so the plans they measure stay fixed
+    * when it changes.
+    */
+  def saltedExchange[T](ds: Dataset[T], saltBuckets: Int): Dataset[T] =
+    ds.repartition(saltBuckets, col("crawl_snapshot"),
+      pmod(xxhash64(col("url")), lit(saltBuckets)))
+
+  /** Salted, snapshot-partitioned write. At cluster scale the same call
+    * writes an Iceberg table (`.writeTo(t).overwritePartitions()`) —
+    * parquet here because the sandbox ships no Iceberg runtime.
     */
   def writeAnnotated(ds: Dataset[AnnotatedPage], outPath: String,
       saltBuckets: Int = 32): Unit = {
-    ds.repartition(saltBuckets, col("crawl_snapshot"),
-        pmod(xxhash64(col("url")), lit(saltBuckets)))
+    saltedExchange(ds, saltBuckets)
       .write.mode("overwrite")
       .partitionBy("crawl_snapshot")
       .parquet(outPath)

@@ -4,7 +4,7 @@ import graft.synth.Det
 
 /** THE character-n-gram tokenization shared by every hashed-feature scorer
   * ([[LangIdModel.rawScore]], [[LangIdModel.topLangs]],
-  * [[TaskScorer.gramBuckets]]): lowercase per char
+  * [[TaskScorer.scoreDoc]]): lowercase per char
   * (`Character.toLowerCase(char)`, read from [[CharTable]]), fold \n\t to
   * space, cap at maxChars, pad with one space on each side, then visit
   * every n-gram for n = minN..maxN. One definition — the scorers cannot

@@ -98,16 +98,6 @@ object TaskScorer extends Serializable {
     new Weights(rows)
   }
 
-  /** Hashed n-gram bucket stream — the shared [[Grams]] tokenization (one
-    * definition with [[LangIdModel]]), under this scorer's salt and mask.
-    */
-  def gramBuckets(text: String): Array[Int] = {
-    val ab = new scala.collection.mutable.ArrayBuilder.ofInt
-    Grams.foreachBucket(text, MaxChars, MinN, MaxN, HashSalt, Mask.toLong)(
-      ab += _)
-    ab.result()
-  }
-
   /** Top-k (classIdx, prob), prob desc with class-index tiebreak — the
     * deterministic equivalent of `torch.topk(probs, k)`
     * (`small_model_inference.py:88-90`).
@@ -125,20 +115,18 @@ object TaskScorer extends Serializable {
     * path and the spec's independent checks.
     */
   def scoreDoc(text: String, w: Weights): DocScores = {
-    val bs = gramBuckets(text)
-    val n = bs.length
-    // ONE gram pass over the bucket-major weight rows; every head's
-    // accumulator receives its additions in gram order (double += the
-    // widened float), so every score and prob is bit-identical to a
-    // head-by-head sum
+    // ONE pass over the shared `Grams` bucket stream (one tokenization
+    // with `LangIdModel`, under this scorer's salt and mask) and the
+    // bucket-major weight rows; every head's accumulator receives its
+    // additions in gram order (double += the widened float), so every
+    // score and prob is bit-identical to a head-by-head sum
     val rows = w.rows
     val acc = new Array[Double](Width)
-    var i = 0
-    while (i < n) {
-      val base = bs(i) * Width
+    val n = Grams.foreachBucket(text, MaxChars, MinN, MaxN, HashSalt,
+        Mask.toLong) { b =>
+      val base = b * Width
       var k = 0
       while (k < Width) { acc(k) += rows(base + k); k += 1 }
-      i += 1
     }
     val regMean = if (n == 0) 0.0 else acc(0) / n
     // score ∈ [0,5]: the reference regression head is trained on 0-5

@@ -47,14 +47,9 @@ object PlanEvidence {
       "Scan→(snapshot project, codegen)→one fused MapPartitions (heuristics + " +
       "scrub + langid + perplexity + decision) → Exchange (the salted " +
       "repartition) — the ONLY shuffle; scoring is embarrassingly parallel.")(
-      {
-        import org.apache.spark.sql.functions._
+      graft.pipeline.QualityPipeline.saltedExchange(
         graft.pipeline.QualityPipeline.annotate(
-            graft.synth.SynthPages.pages(spark, 1000L))
-          .toDF()
-          .repartition(8, col("crawl_snapshot"),
-            pmod(xxhash64(col("url")), lit(8)))
-      })
+          graft.synth.SynthPages.pages(spark, 1000L)).toDF(), 8))
 
     section("MinHash LSH — bucket join, no cross join, ONE band-key " +
       "shuffle (q_dedup_minhash_lsh)",
@@ -194,7 +189,7 @@ object PlanEvidence {
       "`UrlOps.keepLatestPerUrl`: canonicalization is a pure built-in " +
       "regexp chain (no UDF — it evaluates inside the scan's " +
       "WholeStageCodegen), and the per-URL latest-crawl cut is a " +
-      "row_number window behind ONE hash exchange on the canonical URL — " +
+      "max_by aggregate behind ONE hash exchange on the canonical URL — " +
       "the cheap recrawl-hygiene pass that runs before any content-level " +
       "dedup at corpus scale.")(
       graft.analytics.Queries.all("q_url_canonical_dedup")(spark, sf))

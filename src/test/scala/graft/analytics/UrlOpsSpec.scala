@@ -95,7 +95,7 @@ class UrlOpsSpec extends AnyFunSuite {
       (2L, "https://x.ro/a#frag", "new"),
       (3L, "https://x.ro/b", "only"))
       .toDF("ts", "url", "tag")
-    val out = UrlOps.keepLatestPerUrl(df, "url", "ts", Seq.empty)
+    val out = UrlOps.keepLatestPerUrl(df, "url", "ts")
       .select("canon_url", "tag").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(out == Map("https://x.ro/a" -> "new", "https://x.ro/b" -> "only"))
@@ -105,7 +105,7 @@ class UrlOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (0 until 50).map(i => (i.toLong, s"https://x.ro/${i % 7}"))
       .toDF("ts", "url")
-    val plan = UrlOps.keepLatestPerUrl(df, "url", "ts", Seq.empty)
+    val plan = UrlOps.keepLatestPerUrl(df, "url", "ts")
       .queryExecution.executedPlan.toString
     assert("Exchange".r.findAllIn(plan).size == 1 &&
       plan.contains("Exchange hashpartitioning(_canon_url"),

@@ -63,7 +63,7 @@ class AnnotationsSpec extends AnyFunSuite {
     val out = parse("Valoare educațională: patru\nTopic: t\nSubtopic: s\n" +
       "Format: f\nNivel educațional: n\nExplicație: e")
     assert(out.int_score == "patru")
-    assert(intScore(out).isEmpty) // → eval applies PenaltyDistance 5
+    assert(intScore(out).isEmpty) // → eval applies the penalty distance 5
   }
 
   test("unknown keys set the problem flag but don't fail") {
@@ -93,13 +93,10 @@ class AnnotationsSpec extends AnyFunSuite {
     }
   }
 
-  test("taxonomy enums round-trip through the id maps") {
+  test("taxonomy enums have the reference class counts") {
     import graft.model.Taxonomy
     assert(Taxonomy.topics.length == 24)
     assert(Taxonomy.formats.length == 24)
     assert(Taxonomy.ageGroups.length == 6)
-    assert(Taxonomy.topicToId("Conținut pentru adulți") == 0)
-    assert(Taxonomy.topics(Taxonomy.topicToId("Software")) == "Software")
-    assert(Taxonomy.adultTopic == Taxonomy.topics.head)
   }
 }

@@ -6,7 +6,6 @@ import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 import org.scalacheck.util.Pretty
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.synth.{Corpus, SynthPages}
 
@@ -41,9 +40,9 @@ object ScrubRegexRef {
 
 /** The anchored scanner against the regex reference on generated documents
   * that mix every pattern with the edge cases that decide match order, and
-  * a linear-time bound on adversarial shapes the regex cannot survive.
+  * the [[LinearTimeBound]] on adversarial shapes the regex cannot survive.
   */
-class ScrubPropertySpec extends AnyFunSuite {
+class ScrubPropertySpec extends LinearTimeBound {
 
   private def digits(n: Int): Gen[String] = Gen.listOfN(n, Gen.numChar).map(_.mkString)
   private def strOf(chars: String, min: Int, max: Int): Gen[String] =
@@ -159,27 +158,11 @@ class ScrubPropertySpec extends AnyFunSuite {
       ("prostule ×N", fill("prostule "), _.nSlurs, _ / "prostule ".length))
   }
 
-  private def nanos(t: String): Long = {
-    val t0 = System.nanoTime()
-    ScrubScalar(t)
-    System.nanoTime() - t0
-  }
-
   test("linear time on adversarial shapes: 1 MB < 250 ms, 1 MB / 128 KB time ratio <= 16") {
-    val big = 1 << 20
-    val small = 1 << 17
     adversarial.foreach { case (name, make, field, expect) =>
-      val s = make(small)
-      val b = make(big)
+      val b = make(BigLen)
       assert(field(ScrubScalar(b)) == expect(b.length), s"$name: match count")
-      (1 to 20).foreach(_ => ScrubScalar(s))
-      // best of 9, the two sizes interleaved so a host slowdown hits both
-      val (ts, tb) = (1 to 9).map(_ => (nanos(s), nanos(b)))
-        .reduce((x, y) => (math.min(x._1, y._1), math.min(x._2, y._2)))
-      val ratio = tb.toDouble / math.max(ts, 1L)
-      info(f"$name: 128 KB ${ts / 1e6}%.2f ms, 1 MB ${tb / 1e6}%.2f ms, ratio $ratio%.1f")
-      assert(tb < 250L * 1000 * 1000, f"$name: 1 MB took ${tb / 1e6}%.1f ms")
-      assert(ratio <= 16.0, f"$name: 1 MB / 128 KB = $ratio%.1f")
+      assertLinear(name, make(SmallLen), b)(ScrubScalar(_))
     }
   }
 }
