@@ -753,7 +753,8 @@ object Queries {
   // because the synthetic docs are ~50 words (the production default is the
   // GPT-3 13); gram identity is the shared 64-bit shingle hash on the Spark
   // side vs gram STRINGS in DuckDB — equal strings hash equal, so the
-  // distinct-overlap counts agree (collisions are a ~k²/2⁶⁴ event).
+  // distinct-overlap counts agree (64-bit token and gram hashes: a
+  // collision is a ~k²/2⁶⁵ event on k distinct grams).
   private val decontamGramCtes =
     """WITH toks AS (
       |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),

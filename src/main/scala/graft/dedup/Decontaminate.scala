@@ -15,9 +15,9 @@ import graft.functions.TextFunctions.shingle_hashes
   * Token contract: the same as [[Dedup.jaccardPrefixJoin]] — `split` on a
   * single space (the oracle's `string_split(text, ' ')`), n-grams over the
   * token SEQUENCE, gram identity by the shared 64-bit shingle hash
-  * ([[graft.functions.TextFunctions.shingles]] — equal gram strings hash
-  * equal; distinct-gram counts treat hash collisions as shared grams, a
-  * ~k²/2⁶⁴ event on k distinct grams).
+  * ([[graft.functions.TextFunctions.shingles]], built from 64-bit token
+  * hashes — equal gram strings hash equal; distinct-gram counts treat hash
+  * collisions as shared grams, a ~k²/2⁶⁵ event on k distinct grams).
   *
   * Caller contract: `idCol` is unique in `docs` (duplicate ids would merge
   * into one report row with an ambiguous `n_grams`) — same contract as

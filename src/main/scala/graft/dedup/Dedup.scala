@@ -67,14 +67,8 @@ object Dedup {
   val Bands = 8
   val RowsPerBand = NumHashes / Bands // r = 4
 
-  /** Adds `shingles` (hashed word n-grams) and `minhash` (array of
-    * NumHashes longs via the one-pass native expression) columns.
-    * Pure expressions — no shuffle.
-    */
-  private def withMinHash(df: DataFrame, textCol: String, shingleN: Int): DataFrame =
-    df.withColumn("shingles",
-        shingle_hashes(norm_tokens(col(textCol)), shingleN))
-      .withColumn("minhash", minhash_signature(col("shingles"), NumHashes))
+  /** Words per shingle. */
+  private final val ShingleN = 3
 
   /** LSH band key: hash of the band's r signature values + band index. */
   private def bandKey(b: Int): Column =
@@ -118,7 +112,7 @@ object Dedup {
     * task placement — is the real quadratic term either way.
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      minJaccard: Double = 0.8, shingleN: Int = 3,
+      minJaccard: Double = 0.8,
       bucketCap: Int = Int.MaxValue): NearDups = {
     // The signature frame feeds the banded build plus the two verify
     // joins; Catalyst plans each branch separately (the subtrees differ
@@ -128,7 +122,7 @@ object Dedup {
     // compute with one pass + block reads — the 100-TB term, where
     // tokenize+shingle+hash dominates the job.
     val sigs = graft.analytics.Materialize(
-      buildSigs(df, idCol, textCol, shingleN))
+      buildSigs(df, idCol, textCol))
     // The banded frame is materialized AGAIN, partition-preserving
     // ([[graft.analytics.Materialize.partitioned]]): the band explode +
     // window — the operator's one band-key shuffle — runs ONCE, and all
@@ -158,11 +152,14 @@ object Dedup {
   }
 
   /** `(id, shingles, minhash)` signature frame the pairing and the census
-    * read (empty shingle sets dropped — they can't near-dup).
+    * read: hashed word [[ShingleN]]-grams and their NumHashes-long MinHash
+    * signature, pure expressions with no shuffle (empty shingle sets
+    * dropped — they can't near-dup).
     */
-  private def buildSigs(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int): DataFrame =
-    withMinHash(df, textCol, shingleN)
+  private def buildSigs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.withColumn("shingles",
+        shingle_hashes(norm_tokens(col(textCol)), ShingleN))
+      .withColumn("minhash", minhash_signature(col("shingles"), NumHashes))
       .filter(size(col("shingles")) > 0)
       .select(col(idCol).as("id"), col("shingles"), col("minhash"))
 

@@ -106,20 +106,25 @@ object TextFunctions {
     out
   }
 
-  /** Hashes of the n-gram shingles of a token array (MinHash input). */
+  /** Hashes of the n-gram shingles of a token array (MinHash input): each
+    * token's UTF-8 bytes hashed to 64 bits with [[ArrayMath.xx64]] (a null
+    * token as the empty one), then mixed in gram order.
+    */
   def shingles(arr: ArrayData, n: Int): ArrayData = {
     val len = arr.numElements()
     if (len < n) return new GenericArrayData(Array.empty[Any])
-    val out = new Array[Any](len - n + 1)
+    val th = new Array[Long](len)
     var i = 0
+    while (i < len) {
+      th(i) = ArrayMath.xx64(if (arr.isNullAt(i)) UTF8String.EMPTY_UTF8 else arr.getUTF8String(i))
+      i += 1
+    }
+    val out = new Array[Any](len - n + 1)
+    i = 0
     while (i + n <= len) {
       var h = 0x27d4eb2f165667c5L
       var j = 0
-      while (j < n) {
-        val t = if (arr.isNullAt(i + j)) "" else arr.getUTF8String(i + j).toString
-        h = graft.synth.Det.mix64(h ^ t.hashCode.toLong)
-        j += 1
-      }
+      while (j < n) { h = graft.synth.Det.mix64(h ^ th(i + j)); j += 1 }
       out(i) = h
       i += 1
     }

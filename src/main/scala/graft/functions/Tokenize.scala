@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - [[Tokenize.words_ws]] ≡ `filter(split(text, "\\s+"), w => length(w)
   *    > 0)` — THE cross-engine tokenization contract, stated
   *    declaratively by `Heuristics.wordsColHof` (test scope). Java-regex
-  *    `\s` is the ASCII set [ \t\n\f\r]; those code points are
+  *    `\s` is the ASCII set of [[Tokenize.isAsciiSpace]]; those chars are
   *    single-byte in UTF-8 and never occur inside a multi-byte sequence,
   *    so the split runs directly over the UTF-8 bytes with zero decode.
   *  - [[Tokenize.norm_tokens]] ≡ `filter(transform(split(lower(text),
@@ -50,10 +50,14 @@ object Tokenize {
 
   // ---- static helpers (called from generated code) ------------------------
 
-  /** java-regex default `\s`: the six ASCII whitespace chars. */
-  @inline private def isWsByte(b: Byte): Boolean =
-    b == ' '.toByte || b == '\t'.toByte || b == '\n'.toByte ||
-      b == 0x0B.toByte || b == '\f'.toByte || b == '\r'.toByte
+  /** java-regex default `\s`: the six ASCII whitespace chars. The one
+    * spelling of the set; the byte split, the char split and the
+    * heuristics' word walk all call it.
+    */
+  @inline def isAsciiSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+
+  @inline private def isWsByte(b: Byte): Boolean = isAsciiSpace((b & 0xff).toChar)
 
   /** Maximal runs of non-`\s` bytes as UTF8String slices — exactly the
     * non-empty tokens of `split(text, "\\s+")`.
@@ -87,13 +91,6 @@ object Tokenize {
         t == Character.CONNECTOR_PUNCTUATION
     }
 
-  /** java-regex default `\s` on a char (tokens are split before trimming,
-    * so this only guards the scan bounds).
-    */
-  @inline private def isWsChar(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
-      c == '\r'
-
   /** lower → ASCII-\s split → `(?U)\W` edge trim → drop empties, one pass.
     * Lowercasing uses `Locale.ROOT`, never the JVM default: under tr-TR the
     * default maps `I` to dotless `ı`, and shingle hashes would follow the
@@ -106,9 +103,9 @@ object Tokenize {
     val out = new java.util.ArrayList[Any](16)
     var i = 0
     while (i < n) {
-      while (i < n && isWsChar(str.charAt(i))) i += 1
+      while (i < n && isAsciiSpace(str.charAt(i))) i += 1
       val start = i
-      while (i < n && !isWsChar(str.charAt(i))) i += 1
+      while (i < n && !isAsciiSpace(str.charAt(i))) i += 1
       if (i > start) {
         // (?U)\W+ edge trim on the token [start, i), by code point
         var a = start

@@ -52,8 +52,7 @@ object Multimodal {
     * 10000² image costs the same as a thumbnail. Returns None when no
     * registered reader accepts the payload.
     */
-  def decodeImageFeatures(payload: Array[Byte],
-      dim: Int = ImageFeatureDim): Option[Array[Float]] =
+  def decodeImageFeatures(payload: Array[Byte]): Option[Array[Float]] =
     try {
       val img = ImageIO.read(new ByteArrayInputStream(payload))
       if (img == null) None
@@ -82,7 +81,7 @@ object Multimodal {
           }
           y += stepY
         }
-        val out = new Array[Float](dim)
+        val out = new Array[Float](ImageFeatureDim)
         out(0) = w.toFloat
         out(1) = h.toFloat
         out(2) = img.getColorModel.getNumComponents.toFloat
@@ -134,8 +133,7 @@ object Multimodal {
     * compressed formats this container has no codec for (mp3 etc.) and for
     * corrupt payloads — those fall back to the labeled stub.
     */
-  def decodeAudioFeatures(payload: Array[Byte],
-      dim: Int = AudioFeatureDim): Option[Array[Float]] =
+  def decodeAudioFeatures(payload: Array[Byte]): Option[Array[Float]] =
     try readLinearPcm(payload).flatMap { case (fmt, frames, bytes) =>
       val bits = fmt.getSampleSizeInBits
       val frameBytes = fmt.getFrameSize
@@ -164,7 +162,7 @@ object Multimodal {
       }
       if (kept == 0) None
       else {
-        val out = new Array[Float](dim)
+        val out = new Array[Float](AudioFeatureDim)
         out(0) = fmt.getSampleRate
         out(1) = fmt.getChannels.toFloat
         out(2) = bits.toFloat
@@ -205,22 +203,21 @@ object Multimodal {
     * the plan. Images and WAV audio decode for real; everything else gets
     * the labeled stub with `decoded = false`.
     */
-  def extractFeatures(rows: Dataset[(String, Array[Byte])],
-      dim: Int = ImageFeatureDim): Dataset[MediaFeatures] = {
+  def extractFeatures(rows: Dataset[(String, Array[Byte])]): Dataset[MediaFeatures] = {
     val spark = rows.sparkSession
     import spark.implicits._
     rows.mapPartitions(_.map { case (url, payload) =>
       val mime = sniffMimeScalar(payload)
       val real =
-        if (mime.startsWith("image/")) decodeImageFeatures(payload, dim)
-        else if (mime == "audio/wav") decodeAudioFeatures(payload, dim)
+        if (mime.startsWith("image/")) decodeImageFeatures(payload)
+        else if (mime == "audio/wav") decodeAudioFeatures(payload)
         else None
       real match {
         case Some(f) =>
           MediaFeatures(url, mime, payload.length.toLong, decoded = true, f)
         case None =>
           MediaFeatures(url, mime, payload.length.toLong, decoded = false,
-            stubDecodeFeatures(payload, dim))
+            stubDecodeFeatures(payload, ImageFeatureDim))
       }
     })
   }

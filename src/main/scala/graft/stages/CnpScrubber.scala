@@ -6,39 +6,32 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.NativeFn
+import graft.synth.Corpus
 
 /** Single-pass CNP (Romanian personal-numeric-code) detector/scrubber.
   *
-  * A regex alone cannot express the CNP checksum (weights 279146358279 mod
-  * 11), and the FIXTURES spec requires invalid-checksum 13-digit lookalikes
-  * to pass through byte-identical. One digit-run scan ([[spans]]) finds the
-  * CNPs for both [[count]] and [[scrub]]; the SQL functions `scrub_cnp` /
+  * A regex alone cannot express the CNP checksum
+  * ([[graft.synth.Corpus.checkDigit]]), and the FIXTURES spec requires
+  * invalid-checksum 13-digit lookalikes to pass through byte-identical.
+  * One digit-run scan ([[spans]]) finds the CNPs for both [[count]] and
+  * [[scrub]]; the SQL functions `scrub_cnp` /
   * `count_cnp` are a [[NativeFn]] pair (one static call per row, so the
   * stage stays inside whole-stage codegen), O(n)
   * over the string — cheaper than a regex candidate scan + UDF validation
   * at 100 TB.
   */
 object CnpScrubber {
-  private val weights: Array[Int] = "279146358279".map(_ - '0').toArray
   final val Token = "<CNP>"
 
-  /** True iff s[from, from+13) is 13 ASCII digits, lead digit 1-8, with a
-    * valid checksum.
+  /** True iff s[from, from+13) is 13 ASCII digits, lead digit 1-8, the
+    * last one the [[graft.synth.Corpus.checkDigit]] of the other twelve.
     */
   def isValidCnp(s: CharSequence, from: Int): Boolean = {
     val lead = s.charAt(from)
-    if (lead < '1' || lead > '8') return false
-    var sum = 0
-    var i = 0
-    while (i < 12) {
-      val d = s.charAt(from + i) - '0'
-      if (d < 0 || d > 9) return false
-      sum += d * weights(i)
-      i += 1
+    lead >= '1' && lead <= '8' && {
+      val ck = Corpus.checkDigit(s, from)
+      ck >= 0 && s.charAt(from + 12) - '0' == ck
     }
-    val r = sum % 11
-    val ck = if (r == 10) 1 else r
-    s.charAt(from + 12) - '0' == ck
   }
 
   /** CNP spans of `s` as start/end pairs, in text order: the maximal runs of

@@ -1,6 +1,7 @@
 package graft.stages
 
-import graft.stages.CharTable.{isWordCp, toLowerCase}
+import graft.functions.Tokenize.isAsciiSpace
+import graft.stages.CharTable.isWordCp
 import graft.synth.{Corpus, Det}
 
 /** Single-pass scalar implementation of the N3 heuristic metrics, used
@@ -35,19 +36,7 @@ object HeuristicsScalar {
       dupLineFrac: Double
   )
 
-  /** Open-addressing (linear probe) stopword table keyed by
-    * `String.hashCode`, at most 1/4 full.
-    */
-  private val stopKeys: Array[String] = {
-    val t = new Array[String](Integer.highestOneBit(Corpus.roStopwords.length * 4 - 1) << 1)
-    Corpus.roStopwords.foreach { w =>
-      var h = w.hashCode & (t.length - 1)
-      while (t(h) != null) h = (h + 1) & (t.length - 1)
-      t(h) = w
-    }
-    t
-  }
-  private val maxStopLen: Int = Corpus.roStopwords.map(_.length).max
+  private val stopwords = new WordTable(Corpus.roStopwords)
 
   private val symbolChars: Array[Boolean] = {
     val a = new Array[Boolean](128)
@@ -55,16 +44,11 @@ object HeuristicsScalar {
     a
   }
 
-  // ASCII \s of java.util.regex: [ \t\n\x0B\f\r]
-  @inline private def isSpaceAscii(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-
   /** True iff `s[from, until)`, trimmed of `(?U)\W` edges and lowercased
     * per char with `Character.toLowerCase(char)`, is a stopword. The trim
     * walks code points with [[graft.functions.Tokenize.isWordCp]], the one
-    * `(?U)\w` predicate (TokenizeParitySpec pins it against the regex).
-    * Per-char lowering keeps the length, so a range longer than the
-    * longest stopword is a miss before any char is lowered.
+    * `(?U)\w` predicate (TokenizeParitySpec pins it against the regex);
+    * the lookup is [[WordTable.find]].
     */
   def isStopword(s: String, from: Int, until: Int): Boolean = {
     var a = from
@@ -73,24 +57,7 @@ object HeuristicsScalar {
     var b = until
     while (b > a && !isWordCp(s.codePointBefore(b)))
       b -= Character.charCount(s.codePointBefore(b))
-    val len = b - a
-    if (len == 0 || len > maxStopLen) return false
-    var h = 0
-    var i = a
-    while (i < b) { h = 31 * h + toLowerCase(s.charAt(i)); i += 1 }
-    val mask = stopKeys.length - 1
-    var slot = h & mask
-    while (true) {
-      val k = stopKeys(slot)
-      if (k == null) return false
-      if (k.length == len) {
-        var j = 0
-        while (j < len && k.charAt(j) == toLowerCase(s.charAt(a + j))) j += 1
-        if (j == len) return true
-      }
-      slot = (slot + 1) & mask
-    }
-    false
+    stopwords.find(s, a, b) >= 0
   }
 
   private final val FnvBasis = 0xcbf29ce484222325L
@@ -187,7 +154,7 @@ object HeuristicsScalar {
         lineHash = FnvBasis
         blank = true
         i += 1
-      } else if (isSpaceAscii(c)) {
+      } else if (isAsciiSpace(c)) {
         if (c != ' ') blank = false
         lineHash = (lineHash ^ c) * FnvPrime
         i += 1
@@ -197,7 +164,7 @@ object HeuristicsScalar {
         // word length in code points, as Spark's `length`: a surrogate
         // pair counts once
         var pairs = 0
-        while (i < n && !isSpaceAscii(text.charAt(i))) {
+        while (i < n && !isAsciiSpace(text.charAt(i))) {
           val cc = text.charAt(i)
           lineHash = (lineHash ^ cc) * FnvPrime
           if (cc < 128) { if (symbolChars(cc)) symbols += 1 }

@@ -2,7 +2,7 @@ package graft.stages
 
 import java.util.Locale
 
-import graft.stages.CharTable.{isLetter, isWhitespace, toLowerCase}
+import graft.stages.CharTable.{isLetter, isWhitespace}
 import graft.synth.Corpus
 
 /** N2 — KenLM-style n-gram (bigram + unigram backoff) language model with
@@ -31,29 +31,13 @@ final class PerplexityModel(
     val oovLogProb: Float
 ) extends Serializable {
   private val V = vocab.length
-  // open addressing (linear probe) word→id table, 2x capacity, power of two
-  private val cap: Int = Integer.highestOneBit(V * 4 - 1) << 1
-  private val keys = new Array[String](cap)
-  private val vals = new Array[Int](cap)
-  locally {
-    var i = 0
-    while (i < V) {
-      var h = vocab(i).hashCode & (cap - 1)
-      while (keys(h) != null) h = (h + 1) & (cap - 1)
-      keys(h) = vocab(i); vals(h) = i
-      i += 1
-    }
-  }
+  private val words = new WordTable(vocab)
 
+  /** Id of the vocabulary word equal to `w`, or −1. */
   def wordId(w: String): Int = {
-    var h = w.hashCode & (cap - 1)
-    while (true) {
-      val k = keys(h)
-      if (k == null) return -1
-      if (k == w || k.equals(w)) return vals(h)
-      h = (h + 1) & (cap - 1)
-    }
-    -1
+    val id = words.find(w, 0, w.length)
+    // find lowers per char: a `w` with a char it changes is no lowercase word
+    if (id >= 0 && vocab(id) == w) id else -1
   }
 
   def hasBigram(w1: Int, w2: Int): Boolean = {
@@ -76,9 +60,8 @@ final class PerplexityModel(
 
   /** `wordId(normToken(text.substring(from, until)))`, read straight from
     * the text, or [[PerplexityModel.NoToken]] when the trim leaves nothing.
-    * The trimmed range is hashed lowercased per char (the `String.hashCode`
-    * formula) into the `keys` table and compared char by char. Per-char
-    * lowering equals `toLowerCase(Locale.ROOT)` except on `İ` (two chars),
+    * The trimmed range is looked up in the word table lowered per char,
+    * which equals `toLowerCase(Locale.ROOT)` except on `İ` (two chars),
     * `Σ` (final sigma depends on context) and surrogates (lowered by code
     * point); a range holding any of these takes `normToken` + `wordId`.
     */
@@ -88,28 +71,14 @@ final class PerplexityModel(
     while (a < b && !isLetter(text.charAt(a))) a += 1
     while (b > a && !isLetter(text.charAt(b - 1))) b -= 1
     if (a == b) return PerplexityModel.NoToken
-    var h = 0
     var i = a
     while (i < b) {
       val c = text.charAt(i)
       if (c == '\u0130' || c == '\u03A3' || Character.isSurrogate(c))
         return wordId(normToken(text.substring(from, until)))
-      h = 31 * h + toLowerCase(c)
       i += 1
     }
-    val len = b - a
-    var slot = h & (cap - 1)
-    while (true) {
-      val k = keys(slot)
-      if (k == null) return -1
-      if (k.length == len) {
-        var j = 0
-        while (j < len && k.charAt(j) == toLowerCase(text.charAt(a + j))) j += 1
-        if (j == len) return vals(slot)
-      }
-      slot = (slot + 1) & (cap - 1)
-    }
-    -1
+    words.find(text, a, b)
   }
 
   /** Perplexity over the first [[PerplexityModel.MaxTokens]] whitespace

@@ -63,6 +63,25 @@ object Corpus {
   val toxicLexicon: Array[String] =
     Array("prostule", "idiotule", "cretinule", "tâmpitule", "imbecilule")
 
+  private val cnpWeights: Array[Int] = "279146358279".map(_ - '0').toArray
+
+  /** CNP (Romanian personal numeric code) check digit of `s[from, from +
+    * 12)`: weighted digit sum mod 11, 10 mapped to 1; −1 on a char that is
+    * not an ASCII digit. The generator writes it, the scrub checks it.
+    */
+  def checkDigit(s: CharSequence, from: Int): Int = {
+    var sum = 0
+    var i = 0
+    while (i < 12) {
+      val d = s.charAt(from + i) - '0'
+      if (d < 0 || d > 9) return -1
+      sum += d * cnpWeights(i)
+      i += 1
+    }
+    val r = sum % 11
+    if (r == 10) 1 else r
+  }
+
   /** Deterministic bigram chain: the B allowed successors of word i.
     * Committed structure — both the generator and the LM derive from it.
     */

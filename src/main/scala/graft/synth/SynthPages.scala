@@ -35,14 +35,6 @@ object SynthPages {
     Array(1727740800L, 1736899200L, 1743465600L, 1749945600L)
 
   // --- CNP (Romanian personal numeric code) --------------------------------
-  private val cnpWeights = "279146358279".map(_ - '0').toArray
-  def cnpChecksum(d12: String): Int = {
-    var s = 0
-    var i = 0
-    while (i < 12) { s += (d12.charAt(i) - '0') * cnpWeights(i); i += 1 }
-    val r = s % 11
-    if (r == 10) 1 else r
-  }
   /** Deterministic 13-digit CNP; valid checksum iff `valid`. */
   def makeCnp(seed: Long, id: Long, valid: Boolean): String = {
     val g = 1 + Det.nextInt(seed, id, "cnp_g", 6) // sex/century 1-6
@@ -54,7 +46,7 @@ object SynthPages {
     // Locale.ROOT: a default locale such as ar-EG prints non-ASCII digits
     val d12 = "%d%02d%02d%02d%02d%03d"
       .formatLocal(Locale.ROOT, g, yy, mm, dd, county, seq)
-    val ck = cnpChecksum(d12)
+    val ck = checkDigit(d12, 0)
     val ckOut = if (valid) ck else (ck + 1) % 10
     d12 + ckOut.toString
   }

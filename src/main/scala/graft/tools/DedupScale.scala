@@ -467,12 +467,15 @@ object DedupScale {
       // broadcast disabled on BOTH the static and the AQE-runtime knobs:
       // a 1000-row dim would otherwise (correctly) broadcast and the skew
       // path would never run — this phase validates the skew machinery,
-      // not the best plan for this join
+      // not the best plan for this join. The skew threshold and the
+      // advisory split size scale with the corpus (32 MB and 16 MB at 2M
+      // docs), so the head host's partition crosses them at every size.
+      def scaledBytes(mb: Long): String = math.max(1L, (mb << 20) * nDocs / 2000000L).toString
       val confs = Seq(
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32m",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m")
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> scaledBytes(32),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> scaledBytes(16))
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         val big = corpus.select(col("doc_id"), col("host"), col("text"))

@@ -74,6 +74,13 @@ class DecontaminateSpec extends AnyFunSuite {
     assert(survivors3 == Seq(2L, 3L, 4L, 5L))
   }
 
+  test("grams of tokens with one String.hashCode are distinct grams") {
+    assert("Aa".hashCode == "BB".hashCode)
+    val hits = Decontaminate.gramHits(df(1L -> "Aa Aa Aa"), df(100L -> "BB BB BB"),
+      "doc_id", "text", n = 3)
+    assert(hits.count() == 0L, hits.collect().mkString(", "))
+  }
+
   test("empty eval set: no hits, decontaminate is the identity") {
     val empty = df()
     assert(Decontaminate.gramHits(corpus, empty, "doc_id", "text", n = 3)

@@ -48,7 +48,7 @@ class MultimodalSpec extends AnyFunSuite {
     val rows = mimeCases.zipWithIndex.map { case ((p, _), i) => (f"u$i%02d", p) }
       .toDS().repartition(3)
     val scalarSide = mimeCases.map { case (p, _) => Multimodal.sniffMimeScalar(p) }
-    val featSide = Multimodal.extractFeatures(rows, dim = 16).toDF()
+    val featSide = Multimodal.extractFeatures(rows).toDF()
       .orderBy("url").select("mime").collect().map(_.getString(0)).toSeq
     val resizeSide = Multimodal.resizeImages(rows, maxDim = 8).toDF()
       .orderBy("url").select("mime").collect().map(_.getString(0)).toSeq
@@ -59,8 +59,7 @@ class MultimodalSpec extends AnyFunSuite {
   test("batched feature extraction: stable schema, deterministic features") {
     import spark.implicits._
     val pages = SynthPages.pages(spark, 100L)
-    val feats = Multimodal.extractFeatures(pages.map(p => (p.url, p.html)),
-      dim = 16)
+    val feats = Multimodal.extractFeatures(pages.map(p => (p.url, p.html)))
     val df = feats.toDF()
     assert(df.schema.fieldNames.sameElements(
       Array("url", "mime", "n_bytes", "decoded", "features")))
@@ -71,8 +70,8 @@ class MultimodalSpec extends AnyFunSuite {
     assert(rows.forall(!_.getBoolean(3)), "html must take the stub path")
     // determinism across partition counts
     val again = Multimodal.extractFeatures(
-      SynthPages.pages(spark, 100L, partitions = 7).map(p => (p.url, p.html)),
-      dim = 16).toDF().orderBy("url").collect()
+      SynthPages.pages(spark, 100L, partitions = 7).map(p => (p.url, p.html)))
+      .toDF().orderBy("url").collect()
     assert(rows.map(_.getSeq[Float](4).toList).toList ==
       again.map(_.getSeq[Float](4).toList).toList)
   }
