@@ -80,12 +80,12 @@ object GraftFunctions {
       })
   )
 
-  /** Registers everything on an already-running session. */
-  def registerAll(spark: SparkSession): Unit = {
+  /** Registers [[all]], the functions the extension injects, on an
+    * already-running session.
+    */
+  def registerAll(spark: SparkSession): Unit =
     all.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
-    graft.functions.Annotations.registerSql(spark)
-  }
 }

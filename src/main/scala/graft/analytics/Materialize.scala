@@ -83,7 +83,9 @@ object Materialize {
     new java.util.HashMap[org.apache.spark.sql.SparkSession, AqeSave]()
 
   /** Runs `body` with AQE disabled on `spark`, restoring the prior flag
-    * afterwards. REENTRANT per session (depth-counted under a lock): with
+    * afterwards: an explicit setting is set back, an unset flag is unset
+    * again (`getOption` would read the default and leave it set
+    * explicitly). REENTRANT per session (depth-counted under a lock): with
     * a naive save/set/restore, two overlapping calls interleave as
     * A-saves-true, B-saves-false, A-restores-true, B-restores-false — and
     * AQE stays off for the rest of the session. Here only the FIRST enter
@@ -99,7 +101,7 @@ object Materialize {
     aqeSaves.synchronized {
       aqeSaves.get(spark) match {
         case null =>
-          aqeSaves.put(spark, AqeSave(spark.conf.getOption(key), 1))
+          aqeSaves.put(spark, AqeSave(spark.conf.getAll.get(key), 1))
           spark.conf.set(key, "false")
         case s => aqeSaves.put(spark, s.copy(depth = s.depth + 1))
       }

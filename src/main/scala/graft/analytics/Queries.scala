@@ -913,13 +913,13 @@ object Queries {
 
   // --- X1 full parser over constructed noisy outputs (rows-only) -----------
   register("q_x1_parse_full", null) { (s, dir) =>
-    graft.functions.Annotations.registerSql(s)
     t(s, dir, "documents")
       .withColumn("output",
         concat(lit("** Topic: "), col("lang"), lit("\n"),
           lit("Subtopic: "), col("source"), lit("\n"),
           lit("* Valoare educațională: "), (col("n_chars") % 6).cast("string")))
-      .selectExpr("doc_id", "parse_annotation(output) AS ann")
+      .select(col("doc_id"),
+        graft.functions.Annotations.parse_annotation(col("output")).as("ann"))
       .select(col("doc_id"), col("ann.topic"), col("ann.int_score"),
         col("ann.problem"))
       .orderBy("doc_id")
@@ -1043,12 +1043,13 @@ object Queries {
       |       count(*) AS n
       |FROM documents GROUP BY GROUPING SETS ((lang), (source))
       |ORDER BY lang_g, source_g""".stripMargin) { (s, dir) =>
-    t(s, dir, "documents").createOrReplaceTempView("documents_gs")
-    s.sql(
-      """SELECT coalesce(lang, 'ALL') AS lang_g,
-        |       coalesce(source, 'ALL') AS source_g, count(*) AS n
-        |FROM documents_gs GROUP BY GROUPING SETS ((lang), (source))
-        |ORDER BY lang_g, source_g""".stripMargin)
+    t(s, dir, "documents")
+      .groupingSets(Seq(Seq(col("lang")), Seq(col("source"))),
+        col("lang"), col("source"))
+      .agg(count(lit(1)).as("n"))
+      .select(coalesce(col("lang"), lit("ALL")).as("lang_g"),
+        coalesce(col("source"), lit("ALL")).as("source_g"), col("n"))
+      .orderBy("lang_g", "source_g")
   }
 
   // --- X2: prompt assembly (big_inference.py:131-137,171-207) — one common

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** X1 — structured-output annotation parser, semantics mirroring the
@@ -85,13 +85,9 @@ object Annotations {
 
   /** Column wrapper (one deterministic scalar UDF; used where the full
     * *-stripping/ERROR semantics are required — the declarative subset is
-    * covered by regexp_extract in the analytics queries).
+    * covered by regexp_extract in the analytics queries). Column-only: it
+    * is not part of the SQL surface ([[graft.GraftFunctions.all]]).
     */
-  def parseUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((s: String) => parse(s))
-
-  def registerSql(spark: SparkSession): Unit =
-    spark.udf.register("parse_annotation", parseUdf)
-
-  def parse_annotation(c: Column): Column = parseUdf(c)
+  def parse_annotation(c: Column): Column =
+    udf((s: String) => parse(s)).apply(c)
 }

@@ -7,9 +7,9 @@ import graft.synth.Det
   * [[TaskScorer.scoreDoc]]): lowercase per char
   * (`Character.toLowerCase(char)`, read from [[CharTable]]), fold \n\t to
   * space, cap at maxChars, pad with one space on each side, then visit
-  * every n-gram for n = minN..maxN. One definition — the scorers cannot
-  * desynchronize their tokenization (each applies its own hash salt and
-  * bucket mask to the visited spans).
+  * every n-gram for n = [[MinN]]..[[MaxN]]. One definition — the scorers
+  * cannot desynchronize their tokenization (each applies its own hash salt
+  * and bucket mask to the visited spans).
   *
   * r6 hot-path shape (bit-identical buckets, identical VISIT ORDER — the
   * per-doc Float accumulation order of the scorers must not move):
@@ -23,6 +23,10 @@ import graft.synth.Det
   *    n-major visit order of the original loop preserved exactly.
   */
 object Grams {
+  /** The n-gram range every hashed-feature scorer uses. */
+  final val MinN = 2
+  final val MaxN = 4
+
   // reused per-thread buffers — executor task threads each get their own;
   // sized for the largest cap in use (LangIdModel.MaxChars = 4000) and
   // grown on demand
@@ -41,12 +45,12 @@ object Grams {
   /** Visits the hashed bucket of every n-gram of the normalized text.
     * Returns the gram count. `f` receives `(hash(span) & mask).toInt`.
     * Buckets and visit order are identical to hashing each span of the
-    * normalized, padded buffer with [[Det.hashString]] for n = minN..maxN
+    * normalized, padded buffer with [[Det.hashString]] for n = MinN..MaxN
     * in n-major order (GramsSpec pins it against that buffer built with a
     * `StringBuilder`).
     */
-  def foreachBucket(text: String, maxChars: Int, minN: Int, maxN: Int,
-      salt: Long, mask: Long)(f: Int => Unit): Int = {
+  def foreachBucket(text: String, maxChars: Int, salt: Long, mask: Long)(
+      f: Int => Unit): Int = {
     if (text == null || text.isEmpty) return 0
     val len = math.min(text.length, maxChars)
     val L = len + 2
@@ -63,20 +67,20 @@ object Grams {
     val seed0 = Det.hashStringSeed(salt)
     val states = grow(stateBuf, stateBuf.get(), L)(new Array[Long](_))
     var count = 0
-    // n = minN pass: hash each span from scratch, remember its end state
+    // n = MinN pass: hash each span from scratch, remember its end state
     var j = 0
-    while (j + minN <= L) {
+    while (j + MinN <= L) {
       var h = seed0
       var t = 0
-      while (t < minN) { h = Det.mix64(h ^ buf(j + t).toLong); t += 1 }
+      while (t < MinN) { h = Det.mix64(h ^ buf(j + t).toLong); t += 1 }
       states(j) = h
       f((h & mask).toInt)
       count += 1
       j += 1
     }
     // each longer n extends position j's state by ONE trailing char
-    var n = minN + 1
-    while (n <= maxN) {
+    var n = MinN + 1
+    while (n <= MaxN) {
       j = 0
       while (j + n <= L) {
         val h = Det.mix64(states(j) ^ buf(j + n - 1).toLong)

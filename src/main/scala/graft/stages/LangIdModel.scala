@@ -23,8 +23,6 @@ object LangIdModel extends Serializable {
   val Bits = 18
   val NumBuckets: Int = 1 << Bits
   private val Mask = NumBuckets - 1
-  val MinN = 2
-  val MaxN = 4
   /** Quantization step for weights — scores become partition-invariant. */
   private val Q = 1.0f / 64.0f
   private val HashSalt = 0x9e3779b97f4a7c15L
@@ -57,8 +55,8 @@ object LangIdModel extends Serializable {
 
   private def addNgrams(w: Array[Float], s: String, delta: Float): Unit = {
     val padded = s
-    var n = MinN
-    while (n <= MaxN) {
+    var n = Grams.MinN
+    while (n <= Grams.MaxN) {
       var i = 0
       while (i + n <= padded.length) {
         w(bucket(padded, i, i + n)) += delta
@@ -96,8 +94,8 @@ object LangIdModel extends Serializable {
     */
   def rawScore(text: String, w: Array[Float]): Float = {
     var sum = 0.0f
-    val count = Grams.foreachBucket(text, MaxChars, MinN, MaxN, HashSalt,
-      Mask.toLong)(b => sum += w(b))
+    val count =
+      Grams.foreachBucket(text, MaxChars, HashSalt, Mask.toLong)(sum += w(_))
     if (count == 0) 0.0f else sum / count
   }
 
@@ -131,8 +129,7 @@ object LangIdModel extends Serializable {
   def topLangs(text: String,
       lw: Array[Array[Float]] = multiWeights): Seq[(String, Double)] = {
     val sums = new Array[Double](lw.length)
-    val count = Grams.foreachBucket(text, MaxChars, MinN, MaxN, HashSalt,
-      Mask.toLong) { b =>
+    val count = Grams.foreachBucket(text, MaxChars, HashSalt, Mask.toLong) { b =>
       var l = 0
       while (l < lw.length) { sums(l) += lw(l)(b); l += 1 }
     }

@@ -46,8 +46,6 @@ object TaskScorer extends Serializable {
   val Bits = 14
   val NumBuckets: Int = 1 << Bits
   private val Mask = NumBuckets - 1
-  val MinN = 2
-  val MaxN = 4
 
   /** Context cap, mirroring the reference's 512-token truncation
     * (`small_model_inference.py:46`, tokenizer max_length).
@@ -122,8 +120,7 @@ object TaskScorer extends Serializable {
     // score and prob is bit-identical to a head-by-head sum
     val rows = w.rows
     val acc = new Array[Double](Width)
-    val n = Grams.foreachBucket(text, MaxChars, MinN, MaxN, HashSalt,
-        Mask.toLong) { b =>
+    val n = Grams.foreachBucket(text, MaxChars, HashSalt, Mask.toLong) { b =>
       val base = b * Width
       var k = 0
       while (k < Width) { acc(k) += rows(base + k); k += 1 }

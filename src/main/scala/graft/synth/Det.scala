@@ -23,16 +23,13 @@ object Det {
     h
   }
 
-  /** [[hash]] hoisted for per-(id, field) draw streams (r6 hot-path):
-    * generators drawing many [[streamInt]] values for one (id, field)
-    * re-hashed the field name per draw; hoist the base once and use
-    * [[streamIntFrom]] — identical values by construction.
-    */
-  def streamBase(seed: Long, id: Long, field: String): Long =
-    hash(seed, id, field)
+  /** Stateful-but-deterministic stream: k-th draw for one (id, field). */
+  def streamInt(seed: Long, id: Long, field: String, k: Int, n: Int): Int =
+    streamIntFrom(hash(seed, id, field), k, n)
 
-  /** k-th draw from a hoisted [[streamBase]] — equals
-    * `streamInt(seed, id, field, k, n)` exactly.
+  /** k-th draw from a hoisted `base = hash(seed, id, field)` (r6 hot-path:
+    * a generator drawing many [[streamInt]] values for one (id, field)
+    * hashes the field name once).
     */
   def streamIntFrom(base: Long, k: Int, n: Int): Int =
     (java.lang.Long.remainderUnsigned(
@@ -67,12 +64,6 @@ object Det {
     val i = java.util.Arrays.binarySearch(cdf, u)
     if (i >= 0) i else math.min(-i - 1, cdf.length - 1)
   }
-
-  /** Stateful-but-deterministic stream: k-th draw for one (id, field). */
-  def streamInt(seed: Long, id: Long, field: String, k: Int, n: Int): Int =
-    (java.lang.Long.remainderUnsigned(
-      mix64(hash(seed, id, field) ^ (k.toLong * 0xd1b54a32d192ed03L)),
-      n.toLong)).toInt
 
   /** The state [[hashString]] starts from before folding any chars —
     * shared with [[graft.stages.Grams]]'s prefix-extension hashing so the

@@ -124,11 +124,11 @@ object ScaleCorpus {
   }
 
   /** Distributed deterministic corpus of n docs. */
-  def docs(spark: SparkSession, n: Long, seed: Long = 7L,
+  def docs(spark: SparkSession, n: Long,
       partitions: Int = 0): Dataset[ScaleDoc] = {
     import spark.implicits._
     val rng = if (partitions > 0) spark.range(0, n, 1, partitions)
       else spark.range(n)
-    rng.as[Long].map(id => gen(id, seed))
+    rng.as[Long].map(id => gen(id))
   }
 }

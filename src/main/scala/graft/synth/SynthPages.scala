@@ -60,9 +60,9 @@ object SynthPages {
   def fluentRo(seed: Long, id: Long, nWords: Int, nLines: Int): String = {
     val sb = new StringBuilder
     var w = Det.nextInt(seed, id, "w0", V)
-    val jumpB = Det.streamBase(seed, id, "jump")
-    val succB = Det.streamBase(seed, id, "succ")
-    val uniB = Det.streamBase(seed, id, "uni")
+    val jumpB = Det.hash(seed, id, "jump")
+    val succB = Det.hash(seed, id, "succ")
+    val uniB = Det.hash(seed, id, "uni")
     val perLine = math.max(1, nWords / math.max(1, nLines))
     var k = 0
     while (k < nWords) {
@@ -81,7 +81,7 @@ object SynthPages {
   def wordsFrom(vocab: Array[String], seed: Long, id: Long, field: String,
       nWords: Int, nLines: Int): String = {
     val sb = new StringBuilder
-    val base = Det.streamBase(seed, id, field)
+    val base = Det.hash(seed, id, field)
     val perLine = math.max(1, nWords / math.max(1, nLines))
     var k = 0
     while (k < nWords) {
@@ -128,8 +128,8 @@ object SynthPages {
       case 5 => fluentRo(seed, id, 5 + Det.nextInt(seed, id, "slen", 15), 1)
       case 6 =>
         val sb = new StringBuilder
-        val wB = Det.streamBase(seed, id, "sym_w")
-        val sB = Det.streamBase(seed, id, "sym_s")
+        val wB = Det.hash(seed, id, "sym_w")
+        val sB = Det.hash(seed, id, "sym_s")
         var k = 0
         while (k < nWords) {
           if (k > 0) sb.append(' ')
@@ -201,11 +201,11 @@ object SynthPages {
   }
 
   /** Distributed deterministic corpus of n pages. */
-  def pages(spark: SparkSession, n: Long, seed: Long = DefaultSeed,
+  def pages(spark: SparkSession, n: Long,
       partitions: Int = 0): Dataset[Page] = {
     import spark.implicits._
     val rng = if (partitions > 0) spark.range(0, n, 1, partitions)
       else spark.range(n)
-    rng.as[Long].map(id => gen(id, seed))
+    rng.as[Long].map(id => gen(id))
   }
 }

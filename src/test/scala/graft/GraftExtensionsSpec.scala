@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.graftshim.Injected
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.synth.SynthPages
@@ -82,16 +86,18 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("extension class injects the same functions at session build") {
-    // same-JVM sessions share the context; newSession gives a fresh
-    // function registry to exercise the injection path
-    val ext = new GraftExtensions()
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val injected = Injected.functions(ext)
     val fresh = spark.newSession()
-    // inject manually through the public builder hook equivalent
-    GraftFunctions.all.foreach { case (name, _, builder) =>
-      fresh.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
-    assert(fresh.sql("SELECT count_cnp('no digits') AS c").head().getInt(0) == 0)
-    assert(ext != null)
+    val builtin = fresh.sessionState.functionRegistry.listFunction().toSet
+    GraftFunctions.registerAll(fresh)
+    val registered =
+      fresh.sessionState.functionRegistry.listFunction().toSet -- builtin
+    assert(injected.listFunction().toSet == registered)
+    assert(registered.map(_.funcName) == GraftFunctions.all.map(_._1).toSet)
+    val countCnp = injected.lookupFunction(FunctionIdentifier("count_cnp"),
+      Seq(Literal("no digits")))
+    assert(countCnp.eval() == 0)
   }
 }

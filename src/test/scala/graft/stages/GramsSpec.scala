@@ -56,7 +56,7 @@ class GramsSpec extends AnyFunSuite {
         "ă î â ș ț diacritice", "x" * 5000 /* over the cap */)
     for (salt <- salts; t <- texts) {
       val got = Seq.newBuilder[Int]
-      val cnt = Grams.foreachBucket(t, 4000, 2, 4, salt, (1 << 18) - 1)(
+      val cnt = Grams.foreachBucket(t, 4000, salt, (1 << 18) - 1)(
         got += _)
       val want = naive(t, 4000, 2, 4, salt, (1 << 18) - 1)
       val g = got.result()

@@ -9,6 +9,9 @@ import graft.synth.SynthPages
 /** Heuristics and perplexity read words straight from the text: after
   * warm-up, scoring a `SynthPages` doc allocates less than 1 KiB on the
   * scoring thread (the returned `Metrics` and a boxed result included).
+  * The scrub allocates more per doc (span arrays, region matchers, the
+  * scrubbed copies); its bound pins today's figure so a change that
+  * lowers it has a number to move.
   */
 class ScorerAllocationSpec extends AnyFunSuite {
   private val bean =
@@ -34,5 +37,11 @@ class ScorerAllocationSpec extends AnyFunSuite {
     val b = bytesPerDoc(lm.perplexity(_))
     info(f"perplexity: $b%.1f B/doc")
     assert(b < 1024, f"$b%.1f B/doc")
+  }
+
+  test("ScrubScalar.apply allocates < 4 KiB per doc after warm-up") {
+    val b = bytesPerDoc(ScrubScalar.apply)
+    info(f"scrub: $b%.1f B/doc")
+    assert(b < 4096, f"$b%.1f B/doc")
   }
 }
