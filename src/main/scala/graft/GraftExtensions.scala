@@ -22,7 +22,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftFunctions {
   private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
+    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "")
 
   /** Splits the arguments of a SQL call to `name` into its `children`
     * leading expressions and the values of its trailing int constants

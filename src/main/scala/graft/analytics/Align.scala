@@ -10,12 +10,13 @@ import org.apache.spark.sql.functions._
   * `row_number() OVER (ORDER BY …)` with no PARTITION BY collapses the
   * whole dataset into ONE task — fine on a fixture, fatal at 10^12 rows.
   * This operator produces the identical contiguous 1-based numbering
-  * distributed: range-repartition by the sort key (non-overlapping key
-  * ranges per partition), rank WITHIN each partition (a distributed
-  * window keyed by partition id and tag), then add each partition's
-  * cumulative per-tag row offset via a broadcast of the tiny count
-  * manifest (`numPartitions` × tags rows). Two passes over the data, no
-  * single-partition stage anywhere.
+  * distributed: range-repartition by the sort key into the session's
+  * `spark.sql.shuffle.partitions` (non-overlapping key ranges per
+  * partition), rank WITHIN each partition (a distributed window keyed by
+  * partition id and tag), then add each partition's cumulative per-tag
+  * row offset via a broadcast of the tiny count manifest (partitions ×
+  * tags rows). Two passes over the data, no single-partition stage
+  * anywhere.
   *
   * Determinism: like any row_number, the numbering is deterministic iff
   * `sortCols` is a total order (ties land in one partition — the
@@ -47,9 +48,8 @@ object Align {
     * branching on it lazily) still pays the full materialization.
     */
   def withGlobalRowNumberByTag(df: DataFrame, tagCol: String,
-      sortCols: Seq[Column], out: String, numPartitions: Int = 0): DataFrame = {
-    val n = if (numPartitions > 0) numPartitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
+      sortCols: Seq[Column], out: String): DataFrame = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
     // The range exchange samples sort-key boundaries per execution: if the
     // census and the ranking each planned their OWN exchange (column pruning
     // makes the two subtrees non-identical, so ReusedExchange does not fire),

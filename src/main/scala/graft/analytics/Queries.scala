@@ -743,7 +743,7 @@ object Queries {
     val planted = d.unionByName(
       d.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L))
-    graft.dedup.Dedup.simhashNearDups(planted, "doc_id", "text", maxHamming = 3)
+    graft.dedup.Dedup.simhashNearDups(planted, "doc_id", "text")
       .pairs.orderBy("id_a", "id_b")
   }
 

@@ -78,7 +78,7 @@ object UrlOps {
     */
   def keepLatestPerUrl(df: DataFrame, urlCol: String, tsCol: String): DataFrame = {
     val withC = df.withColumn("_canon_url", canonicalizeUrl(col(urlCol)))
-    val dataCols = withC.columns.filter(_ != "_canon_url")
+    val dataCols = withC.columns.toSeq.filter(_ != "_canon_url")
     withC.groupBy(col("_canon_url"))
       .agg(max_by(struct(dataCols.map(col): _*), col(tsCol)).as("_row"))
       .select(dataCols.map(c => col(s"_row.$c").as(c)) :+

@@ -56,7 +56,7 @@ object Dedup {
     * id is the total order in both shapes).
     */
   def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val cols = df.columns
+    val cols = df.columns.toSeq
     df.groupBy(md5(col(textCol)).as("__md5"))
       .agg(min_by(struct(cols.map(col): _*), col(idCol)).as("__row"))
       .select(cols.map(c => col(s"__row.$c").as(c)): _*)
@@ -66,6 +66,10 @@ object Dedup {
   val NumHashes = 32
   val Bands = 8
   val RowsPerBand = NumHashes / Bands // r = 4
+
+  /** SimHash near-dup radius: four 16-bit bands over the 64-bit signature. */
+  val SimhashMaxHamming = 3
+  private final val SimhashBands = SimhashMaxHamming + 1
 
   /** Words per shingle. */
   private final val ShingleN = 3
@@ -328,20 +332,12 @@ object Dedup {
   }
 
   // ---- SimHash ----------------------------------------------------------
-  /** SimHash near-dup pairs: `maxHamming + 1` near-even-width band buckets
-    * over the 64 signature bits (pigeonhole — a pair within Hamming
-    * distance ≤ maxHamming differs in at most maxHamming bits, so at least
-    * one of the maxHamming + 1 bands is bit-identical and the pair shares
-    * a bucket), then exact Hamming verification via bit_count. At the
-    * default maxHamming = 3 this is the classic 4 × 16-bit split; the band
-    * count FOLLOWS the threshold so a caller asking for Hamming ≤ 5 gets
-    * the full candidate guarantee instead of the silent recall loss a
-    * fixed 4-band scheme gives every threshold above 3 (a hamming-4 pair
-    * whose flipped bits land in four different 16-bit quarters collides in
-    * NO fixed band). The honest trade is candidate volume: more bands
-    * means narrower bands, coarser buckets, and a recall=1 candidate set
-    * that grows with the threshold — the inherent Hamming-LSH dial, now
-    * priced by the caller's own `maxHamming` instead of silently wrong.
+  /** SimHash near-dup pairs within Hamming distance [[SimhashMaxHamming]]
+    * (the 64-bit, Hamming-3 setting of Manku et al., WWW 2007): four
+    * 16-bit band buckets over the signature, then exact Hamming
+    * verification via bit_count. Pigeonhole: three differing bits leave at
+    * least one of the four 16-bit bands equal, so every such pair shares a
+    * bucket.
     *
     * `bucketCap` is the same OPT-IN mega-bucket skew guard as
     * [[minhashNearDups]]: a band bucket larger than the cap is not
@@ -357,10 +353,9 @@ object Dedup {
     * the structural fix, exactly as for minhash.)
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, bucketCap: Int = Int.MaxValue): NearDups = {
+      bucketCap: Int = Int.MaxValue): NearDups = {
     import org.apache.spark.sql.expressions.Window
-    val banded = simhashBanded(df, idCol, textCol,
-      simhashBandCount(maxHamming))
+    val banded = simhashBanded(df, idCol, textCol)
     val small = banded.filter(col("bsz") <= bucketCap)
     val allPairs = small.as("x").join(small.as("y").hint("merge"),
         col("x.band") === col("y.band") && col("x.bits") === col("y.bits") &&
@@ -383,20 +378,8 @@ object Dedup {
         hamming(col("prev_sim"), col("sim")).as("hamming"))
     new NearDups(allPairs.unionByName(starPairs).unionByName(chainPairs)
         .distinct() // hamming is deterministic per pair — multi-band safe
-        .filter(col("hamming") <= maxHamming),
+        .filter(col("hamming") <= SimhashMaxHamming),
       "simhashNearDups", bucketCap, banded)
-  }
-
-  /** Pigeonhole band count for a Hamming threshold. 63 is the honest
-    * ceiling: maxHamming = 64 would mean "any pair of 64-bit words", for
-    * which banding cannot help (and 64 one-bit bands already admit every
-    * pair differing in ≤ 63 bits) — a threshold that high is a dial typo,
-    * not a similarity request.
-    */
-  private def simhashBandCount(maxHamming: Int): Int = {
-    require(maxHamming >= 0 && maxHamming <= 63,
-      s"maxHamming = $maxHamming must be in [0, 63]")
-    maxHamming + 1
   }
 
   /** The banded SimHash frame, materialized once, partitioned+sorted on
@@ -408,30 +391,16 @@ object Dedup {
     * 8 B/row — lets the star branch verify inline without a join back).
     */
   private def simhashBanded(df: DataFrame, idCol: String,
-      textCol: String, nBands: Int): DataFrame = {
+      textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // 64 bits split into nBands contiguous bands, widths as even as
-    // possible (the wider-by-one bands first): offsets(b) .. offsets(b+1).
-    // For the default 4 bands this is exactly the historic 16/16/16/16
-    // split — same bucket keys, byte-identical output.
-    val base = 64 / nBands
-    val rem = 64 % nBands
-    val offsets = (0 until nBands).scanLeft(0)((o, b) =>
-      o + base + (if (b < rem) 1 else 0))
-    def bandBits(b: Int): Column = {
-      val width = offsets(b + 1) - offsets(b)
-      // (1L << 64) wraps to 1 (JVM shifts are mod 64): the one full-width
-      // band (maxHamming = 0 ⇒ exact-signature buckets) takes sim whole
-      if (width == 64) col("sim")
-      else shiftright(col("sim"), offsets(b))
-        .bitwiseAND(lit((1L << width) - 1))
-    }
     graft.analytics.Materialize.partitioned(withBucketStats(
       df.select(col(idCol).as("id"),
           simhash64(norm_tokens(col(textCol))).as("sim"))
         .select(col("id"), col("sim"),
-          explode(array((0 until nBands).map(b =>
-            struct(lit(b).as("band"), bandBits(b).as("bits"))
+          explode(array((0 until SimhashBands).map(b =>
+            struct(lit(b).as("band"),
+              shiftright(col("sim"), 16 * b).bitwiseAND(lit(0xffffL))
+                .as("bits"))
           ): _*)).as("bk"))
         .select(col("id"), col("sim"), col("bk.band"), col("bk.bits"))
         .repartition(col("band"), col("bits")),

@@ -51,7 +51,7 @@ object Annotations {
     var problem = false
     if (output != null) {
       output.split("\n", -1).foreach { raw =>
-        var line = stripStars(raw.trim)
+        val line = stripStars(raw.trim)
         if (line.nonEmpty && line.contains(":")) {
           val Array(k0, v0) = line.split(":", 2)
           val key = stripStars(k0.trim)

@@ -145,6 +145,4 @@ object LangIdModel extends Serializable {
   def topLangsJson(tl: Seq[(String, Double)]): String =
     tl.map { case (l, p) => "\"%s_score\": %.4f".formatLocal(Locale.ROOT, l, p) }
       .mkString("{", ", ", "}")
-
-  def topLangsJson(text: String): String = topLangsJson(topLangs(text))
 }

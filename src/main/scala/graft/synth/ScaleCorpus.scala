@@ -15,7 +15,7 @@ final case class ScaleDoc(
 )
 
 /** Deterministic web-scale dedup corpus for the DEDUP_SCALE evidence run
-  * (`graft.tools.DedupScale`): every row is a pure function of (seed, id),
+  * (`graft.tools.DedupScale`): every row is a pure function of its id,
   * so the corpus is identical across partition counts and reruns.
   *
   * Structure mirrors what makes web dedup hard (reference analogue: the
@@ -48,6 +48,7 @@ object ScaleCorpus {
   val ClusterFrac = 0.30
   val Vocab = 50000
   val EmbDim = 64
+  private final val Seed = 7L
 
   // zipf CDFs, built once per JVM
   private lazy val clusterCdf = Det.zipfCdf(NClusters, 1.0)
@@ -56,15 +57,15 @@ object ScaleCorpus {
   /** Template token list for a cluster (or a unique doc when cluster < 0):
     * zipf-head words mixed with rare tokens owned by the template.
     */
-  private def templateTokens(seed: Long, key: Long, rareTag: String,
+  private def templateTokens(key: Long, rareTag: String,
       nTok: Int): Array[String] = {
     val out = new Array[String](nTok)
     var k = 0
     while (k < nTok) {
       out(k) =
-        if (Det.streamInt(seed, key, rareTag + "_mix", k, 100) < 70)
+        if (Det.streamInt(Seed, key, rareTag + "_mix", k, 100) < 70)
           "w" + Det.zipfRank(vocabCdf,
-            (Det.streamInt(seed, key, rareTag + "_w", k, 1 << 30).toDouble
+            (Det.streamInt(Seed, key, rareTag + "_w", k, 1 << 30).toDouble
               / (1 << 30)))
         else rareTag + key + "x" + k
       k += 1
@@ -72,16 +73,16 @@ object ScaleCorpus {
     out
   }
 
-  private def embeddingFor(seed: Long, key: Long, tag: String,
+  private def embeddingFor(key: Long, tag: String,
       noiseKey: Long): Array[Double] = {
     val v = new Array[Double](EmbDim)
     var d = 0
     while (d < EmbDim) {
-      val base = (Det.mix64(Det.hash(seed, key, tag) ^ d.toLong)
+      val base = (Det.mix64(Det.hash(Seed, key, tag) ^ d.toLong)
         % 1000L).toDouble / 1000.0
       val noise =
         if (noiseKey < 0) 0.0
-        else ((Det.mix64(Det.hash(seed, noiseKey, "emb_noise") ^ d.toLong)
+        else ((Det.mix64(Det.hash(Seed, noiseKey, "emb_noise") ^ d.toLong)
           % 100L).toDouble / 100.0) * 0.01
       v(d) = base + noise
       d += 1
@@ -90,17 +91,17 @@ object ScaleCorpus {
   }
 
   /** The full deterministic row for a doc id. */
-  def gen(id: Long, seed: Long = 7L): ScaleDoc = {
-    val clustered = Det.nextDouble(seed, id, "clustered") < ClusterFrac
+  def gen(id: Long): ScaleDoc = {
+    val clustered = Det.nextDouble(Seed, id, "clustered") < ClusterFrac
     val cluster =
       if (!clustered) -1L
-      else Det.zipfRank(clusterCdf, Det.nextDouble(seed, id, "cluster")).toLong
-    val host = SynthPages.zipfHost(Det.nextDouble(seed, id, "host"))
+      else Det.zipfRank(clusterCdf, Det.nextDouble(Seed, id, "cluster")).toLong
+    val host = SynthPages.zipfHost(Det.nextDouble(Seed, id, "host"))
     if (cluster < 0) {
-      val nTok = 60 + Det.nextInt(seed, id, "len", 60)
+      val nTok = 60 + Det.nextInt(Seed, id, "len", 60)
       ScaleDoc(id, host, -1L, 0,
-        templateTokens(seed, id, "u", nTok).mkString(" "),
-        embeddingFor(seed, id, "emb_u", -1L))
+        templateTokens(id, "u", nTok).mkString(" "),
+        embeddingFor(id, "emb_u", -1L))
     } else {
       // template is a pure function of the CLUSTER id: every member sees
       // the same base text without any cross-row communication. Templates
@@ -109,17 +110,17 @@ object ScaleCorpus {
       // J ≥ (118−12)/(118+12) ≈ 0.815 — every planted pair genuinely
       // clears the 0.8 verify bar, and recovery shortfall measures the
       // LSH S-curve alone, not fixture noise
-      val nTok = 120 + Det.nextInt(seed, cluster, "clen", 60)
-      val toks = templateTokens(seed, cluster, "c", nTok)
-      val nEdits = Det.nextInt(seed, id, "edits", 3) // 0..2, 1/3 pristine
+      val nTok = 120 + Det.nextInt(Seed, cluster, "clen", 60)
+      val toks = templateTokens(cluster, "c", nTok)
+      val nEdits = Det.nextInt(Seed, id, "edits", 3) // 0..2, 1/3 pristine
       var e = 0
       while (e < nEdits) {
-        val pos = Det.streamInt(seed, id, "editpos", e, nTok)
+        val pos = Det.streamInt(Seed, id, "editpos", e, nTok)
         toks(pos) = "e" + id + "x" + e
         e += 1
       }
       ScaleDoc(id, host, cluster, nEdits, toks.mkString(" "),
-        embeddingFor(seed, cluster, "emb_c", id))
+        embeddingFor(cluster, "emb_c", id))
     }
   }
 

@@ -291,13 +291,12 @@ object DedupScale {
       // value is all-pairs BY CONSTRUCTION, so (same
       // rationale as the exact jaccard phase) the mega mass belongs to the
       // capped LSH path and this phase runs the bounded-cluster slice.
-      // 16-bit bands are the 64-bit/hamming≤3 pigeonhole split; at larger
-      // corpora the band count/width widens with the signature.
+      // 16-bit bands are the 64-bit/hamming≤3 pigeonhole split.
       val slice = corpus
         .filter(bounded && col("doc_id") < math.min(nDocs, 1000000L))
       val sliceN = slice.count()
       val (pairs, nPairsSim) = counted(
-        Dedup.simhashNearDups(slice, "doc_id", "text", maxHamming = 3).pairs)
+        Dedup.simhashNearDups(slice, "doc_id", "text").pairs)
       // recovery oracle: pristine members (n_edits = 0) of one cluster are
       // byte-identical texts → identical simhash → hamming 0 → guaranteed
       // band collision. Every planted pristine pair MUST be recovered;
@@ -312,7 +311,7 @@ object DedupScale {
       val recSame = tagged.count()
       val recPristine = tagged
         .filter(col("n_edits_a") === 0 && col("n_edits_b") === 0).count()
-      Seq("slice_docs" -> sliceN, "max_hamming" -> 3,
+      Seq("slice_docs" -> sliceN, "max_hamming" -> Dedup.SimhashMaxHamming,
         "pairs" -> nPairsSim,
         "planted_pristine_pairs" -> plantedPristine,
         "recovered_pristine_pairs" -> recPristine,
@@ -329,8 +328,7 @@ object DedupScale {
       // C(s,2) candidates uncapped, and the checkpoint-rooted self-join
       // is not AQE-skew-splittable, so the cap is the structural bound
       cappedMega(corpus.filter(col("doc_id") < math.min(nDocs, 1000000L)))(
-        Dedup.simhashNearDups(_, "doc_id", "text", maxHamming = 3,
-          bucketCap = bucketCap))
+        Dedup.simhashNearDups(_, "doc_id", "text", bucketCap = bucketCap))
     }
 
     // ---- embedding near-dup over the bounded-cluster slice ----------------
@@ -511,7 +509,7 @@ object DedupScale {
       "generated_by" -> "graft.tools.DedupScale",
       "docs" -> nDocs,
       "cores" -> cpus,
-      "heap" -> (Runtime.getRuntime.maxMemory / (1 << 20) + "MB"),
+      "heap" -> s"${Runtime.getRuntime.maxMemory / (1 << 20)}MB",
       "phases" -> phases.toSeq)
     val json = renderJson(out)
     // non-default scales get their own artifact file — a 5M/10M regen must

@@ -49,7 +49,7 @@ object PlanEvidence {
       "repartition) — the ONLY shuffle; scoring is embarrassingly parallel.")(
       graft.pipeline.QualityPipeline.saltedExchange(
         graft.pipeline.QualityPipeline.annotate(
-          graft.synth.SynthPages.pages(spark, 1000L)).toDF(), 8))
+          graft.synth.SynthPages.pages(spark, 1000L)).toDF()))
 
     section("MinHash LSH — bucket join, no cross join, ONE band-key " +
       "shuffle (q_dedup_minhash_lsh)",
@@ -129,7 +129,7 @@ object PlanEvidence {
     graft.pipeline.QualityPipeline.writeAnnotated(
       graft.pipeline.QualityPipeline.annotate(
         graft.synth.SynthPages.pages(spark, 1000L)),
-      pruneDir, saltBuckets = 4)
+      pruneDir)
     section("Snapshot partition pruning — the 100× read path " +
       "(writeAnnotated → snapshot predicate)",
       "`writeAnnotated` partitions by `crawl_snapshot` (reference analogue: " +

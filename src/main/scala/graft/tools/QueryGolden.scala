@@ -22,7 +22,7 @@ object QueryCanon {
   }
 
   def canonical(df: DataFrame): Seq[String] = {
-    val cols = df.columns.sorted
+    val cols = df.columns.toSeq.sorted
     df.select(cols.head, cols.tail: _*).collect()
       .map(r => (0 until r.length).map(i => cell(r.get(i))).mkString("|"))
       .sorted.toSeq

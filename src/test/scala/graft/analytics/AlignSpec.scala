@@ -1,5 +1,6 @@
 package graft.analytics
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -9,53 +10,61 @@ class AlignSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import org.apache.spark.sql.functions._
 
+  /** A session whose shuffle partition count — the count Align ranges
+    * into — is `parts`; frames built on it number with that count.
+    */
+  private def withParts(parts: Int): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", parts.toLong)
+    s
+  }
+
   /** One-tag numbering: a constant tag makes the tagged operator number
     * the whole frame.
     */
-  private def globalRowNumber(df: org.apache.spark.sql.DataFrame,
-      parts: Int): org.apache.spark.sql.DataFrame =
+  private def globalRowNumber(df: DataFrame): DataFrame =
     Align.withGlobalRowNumberByTag(df.withColumn("tag", lit("all")), "tag",
-      Seq(col("k")), "rn", numPartitions = parts).drop("tag")
+      Seq(col("k")), "rn").drop("tag")
 
   test("one-tag numbering equals the unpartitioned window, any partitioning") {
-    import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val df = (0 until 5000)
+    val rows = (0 until 5000)
       .map(i => ((i * 2654435761L) % 100003L, s"v$i"))
-      .toDF("k", "v")
+    val df = spark.createDataFrame(rows).toDF("k", "v")
     val naive = df.withColumn("rn",
         row_number().over(Window.orderBy("k")).cast("long"))
       .select("k", "rn").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (parts <- Seq(1, 3, 16)) {
-      val got = globalRowNumber(df.repartition(7), parts)
+      val got = globalRowNumber(
+          withParts(parts).createDataFrame(rows).toDF("k", "v").repartition(7))
         .select("k", "rn").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got.size == naive.size)
-      assert(got == naive, s"numbering diverges at numPartitions=$parts")
+      assert(got == naive, s"numbering diverges at $parts shuffle partitions")
     }
   }
 
   test("reliable-materialization conf matches the in-memory numbering") {
-    import spark.implicits._
+    val s = withParts(8)
+    import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-align-ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
-    spark.conf.set(Materialize.ReliableConfKey, "true")
-    try {
-      val df = (0 until 2000)
-        .map(i => ((i * 40503L) % 65521L, s"v$i")).toDF("k", "v")
-      val got = globalRowNumber(df.repartition(5), 8)
-        .select("k", "rn").collect().map(r => r.getLong(0) -> r.getLong(1))
-        .toMap
-      val expect = df.orderBy("k").collect().map(_.getLong(0))
-        .zipWithIndex.map { case (k, i) => k -> (i + 1).toLong }.toMap
-      assert(got == expect)
-    } finally spark.conf.unset(Materialize.ReliableConfKey)
+    s.conf.set(Materialize.ReliableConfKey, "true")
+    val df = (0 until 2000)
+      .map(i => ((i * 40503L) % 65521L, s"v$i")).toDF("k", "v")
+    val got = globalRowNumber(df.repartition(5))
+      .select("k", "rn").collect().map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+    val expect = df.orderBy("k").collect().map(_.getLong(0))
+      .zipWithIndex.map { case (k, i) => k -> (i + 1).toLong }.toMap
+    assert(got == expect)
   }
 
   test("numbering is contiguous 1..n and no stage sees all rows") {
-    import spark.implicits._
+    val s = withParts(8)
+    import s.implicits._
     val ks: Seq[Int] = (1 to 997).map(i => i * 13)
     val df = ks.toDF("k")
-    val out = globalRowNumber(df, 8)
+    val out = globalRowNumber(df)
     val rns = out.select("rn").collect().map(_.getLong(0)).sorted
     val expect: Array[Long] = Array.tabulate(997)(i => (i + 1).toLong)
     assert(rns.sameElements(expect))
@@ -66,7 +75,8 @@ class AlignSpec extends AnyFunSuite {
   }
 
   test("census and ranking read ONE materialized range exchange (plan shape)") {
-    import spark.implicits._
+    val s = withParts(8)
+    import s.implicits._
     // The scale hazard: two independently-planned range exchanges can
     // sample different partition boundaries, so offsets computed against
     // one partitioning get added to ranks computed against another. The
@@ -76,7 +86,7 @@ class AlignSpec extends AnyFunSuite {
     // happened before the checkpoint and is frozen in the blocks — with
     // the offsets coming from a driver-computed LocalTableScan broadcast.
     val df = (0 until 2000).map(i => ((i * 48271) % 65537, i)).toDF("k", "v")
-    val out = globalRowNumber(df, 8)
+    val out = globalRowNumber(df)
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("ExistingRDD"),
       "ranked side must read the one materialized range partitioning")
@@ -90,22 +100,23 @@ class AlignSpec extends AnyFunSuite {
 
   test("withGlobalRowNumberByTag ≡ row_number() partitioned by tag " +
       "(r6 one-pass)") {
-    import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     // 3 tags, interleaved keys, skewed tag sizes, a tag missing from some
     // key ranges — the numbering must equal numbering each tag's slice
     // independently
-    val df = (0 until 3000).map { i =>
+    val rows = (0 until 3000).map { i =>
       val tag = if (i % 7 == 0) "C" else if (i % 2 == 0) "A" else "B"
       (((i * 48271) % 65537).toLong, tag, i)
-    }.toDF("k", "tag", "v")
+    }
+    val df = spark.createDataFrame(rows).toDF("k", "tag", "v")
     val want = df.withColumn("rn", row_number()
         .over(Window.partitionBy("tag").orderBy("k")).cast("long"))
       .select("tag", "k", "rn").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     for (parts <- Seq(1, 4, 16)) {
-      val got = Align.withGlobalRowNumberByTag(df, "tag", Seq(col("k")),
-          "rn", numPartitions = parts)
+      val got = Align.withGlobalRowNumberByTag(
+          withParts(parts).createDataFrame(rows).toDF("k", "tag", "v"),
+          "tag", Seq(col("k")), "rn")
         .select("tag", "k", "rn").collect()
         .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       assert(got == want, s"tagged numbering diverges at parts=$parts")
@@ -114,11 +125,11 @@ class AlignSpec extends AnyFunSuite {
 
   test("withGlobalRowNumberByTag plans ONE materialized range exchange " +
       "and a driver-manifest offsets join") {
-    import spark.implicits._
+    val s = withParts(4)
+    import s.implicits._
     val df = (0 until 500).map(i => (i.toLong, if (i % 2 == 0) "x" else "y"))
       .toDF("k", "tag")
-    val out = Align.withGlobalRowNumberByTag(df, "tag", Seq(col("k")), "rn",
-      numPartitions = 4)
+    val out = Align.withGlobalRowNumberByTag(df, "tag", Seq(col("k")), "rn")
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("ExistingRDD"),
       "ranked side must read the one materialized range partitioning")

@@ -224,13 +224,13 @@ class DedupSpec extends AnyFunSuite {
   test("simhashNearDups bucket join finds planted pairs") {
     val base = "unu doi trei patru cinci șase șapte opt nouă zece " * 8
     val df = docs(1L -> base, 2L -> base, 3L -> ("x " + base))
-    val pairs = Dedup.simhashNearDups(df, "doc_id", "text", maxHamming = 3)
+    val pairs = Dedup.simhashNearDups(df, "doc_id", "text")
       .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
   }
 
-  test("simhash banding follows maxHamming (pigeonhole): pairs ≡ brute " +
-      "force at hamming ≤ 4, incl. a pair the fixed 4×16 split would lose") {
+  test("simhash 4×16 bands (pigeonhole): pairs ≡ brute force at " +
+      "hamming ≤ 3, incl. pairs whose bits differ in three quarters") {
     import spark.implicits._
     // seeded near-dup pool: one base text and single-token substitutions
     // at every position × several replacement tokens — deterministic
@@ -250,32 +250,26 @@ class DedupSpec extends AnyFunSuite {
     val ids = sigs.keys.toSeq.sorted
     def ham(a: Long, b: Long): Int =
       NativeRef.hammingDistance(sigs(a), sigs(b))
-    val want = (for (a <- ids; b <- ids if a < b && ham(a, b) <= 4)
+    val want = (for (a <- ids; b <- ids if a < b && ham(a, b) <= 3)
       yield (a, b)).toSet
-    val got = Dedup.simhashNearDups(df, "doc_id", "text", maxHamming = 4)
+    val got = Dedup.simhashNearDups(df, "doc_id", "text")
       .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want,
       s"missing=${(want -- got).take(5)} spurious=${(got -- want).take(5)}")
-    // the motivating case: a wanted pair whose differing bits span all
-    // four 16-bit quarters — under the old fixed 4-band scheme it shares
-    // NO band, so it could only have been found by luck (star/chain)
-    val crossQuarter = want.filter { case (a, b) =>
+    // the pool must exercise every radius up to 3, and the hardest shape
+    // the pigeonhole covers: differing bits in three of the four quarters
+    val dists = want.toSeq.map { case (a, b) => ham(a, b) }
+    assert(Set(1, 2, 3).subsetOf(dists.toSet),
+      s"fixture regression: hamming distances ${dists.toSet} — reseed edits")
+    val threeQuarter = want.filter { case (a, b) =>
       val x = sigs(a) ^ sigs(b)
-      (0 until 4).count(q => ((x >>> (q * 16)) & 0xffffL) != 0L) == 4
+      (0 until 4).count(q => ((x >>> (q * 16)) & 0xffffL) != 0L) == 3
     }
-    assert(crossQuarter.nonEmpty,
-      "fixture regression: no cross-quarter hamming≤4 pair — reseed edits")
-    // maxHamming = 0 is exact-signature bucketing (one full-width band):
-    // the planted byte-identical pair and any hash-identical variants
-    val exact = Dedup.simhashNearDups(df, "doc_id", "text", maxHamming = 0)
-      .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val wantExact = (for (a <- ids; b <- ids if a < b && ham(a, b) == 0)
-      yield (a, b)).toSet
-    assert(exact == wantExact && exact.contains((0L, 1L)))
-    // a threshold no banding can serve fails loudly at call time
-    intercept[IllegalArgumentException] {
-      Dedup.simhashNearDups(df, "doc_id", "text", maxHamming = 64)
-    }
+    info(s"${want.size} pairs at hamming ≤ 3 (" +
+      (0 to 3).map(d => s"$d: ${dists.count(_ == d)}").mkString(", ") +
+      s"), ${threeQuarter.size} spanning three quarters")
+    assert(threeQuarter.nonEmpty,
+      "fixture regression: no three-quarter hamming≤3 pair — reseed edits")
   }
 
   test("simhash mega-bucket cap: pairs stay linear, the template cluster " +
@@ -286,7 +280,7 @@ class DedupSpec extends AnyFunSuite {
     val rows = (1L to 600L).map(i => i -> template) ++ Seq(
       2001L -> ("conținut complet diferit despre altceva " * 6))
     val nd = Dedup.simhashNearDups(
-      docs(rows: _*), "doc_id", "text", maxHamming = 3, bucketCap = 100)
+      docs(rows: _*), "doc_id", "text", bucketCap = 100)
     val (pairsDf, stats) = (nd.pairs, nd.stats)
     val pairs = pairsDf.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.length < 5000, s"pair explosion: ${pairs.length}")

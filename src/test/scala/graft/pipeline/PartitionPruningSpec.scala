@@ -14,7 +14,7 @@ import graft.synth.SynthPages
   * snapshot name, `fineweb/fineweb2_download.py:19`); a snapshot predicate
   * on the read side must prune PARTITION DIRECTORIES — touching only the
   * matching snapshot's files — not scan-then-filter the whole corpus. The
-  * write salts each snapshot across `saltBuckets` writers because the
+  * write salts each snapshot across several writers because the
   * synthetic corpus is host-skewed (FIXTURES.md `skew` family), and the
   * snapshot label is the same in every session time zone.
   */
@@ -49,7 +49,7 @@ class PartitionPruningSpec extends AnyFunSuite {
       "fewer files than the full corpus") {
     val dir = Files.createTempDirectory("graft_prune").toString
     val annotated = QualityPipeline.annotate(SynthPages.pages(spark, 1500L))
-    QualityPipeline.writeAnnotated(annotated, dir, saltBuckets = 4)
+    QualityPipeline.writeAnnotated(annotated, dir)
 
     // the synthetic corpus spans 4 crawl snapshots → 4 partition dirs
     val partDirs = Option(new java.io.File(dir).listFiles).get
@@ -85,6 +85,29 @@ class PartitionPruningSpec extends AnyFunSuite {
     // one snapshot out of ≥2: at most half the data's files
     assert(prunedFiles <= totalFiles / 2 + 1,
       s"pruning too weak: $prunedFiles of $totalFiles")
+  }
+
+  test("the salt spreads the zipf head host's snapshot across writers") {
+    val dir = Files.createTempDirectory("graft_salt").toString
+    QualityPipeline.writeAnnotated(
+      QualityPipeline.annotate(SynthPages.pages(spark, 1500L)), dir)
+    val rows = spark.read.parquet(dir).select(
+      regexp_extract(col("url"), "https://([^/]+)/", 1).as("host"),
+      col("crawl_snapshot"), col("_metadata.file_path").as("file"))
+    val host = rows.groupBy("host").count()
+      .orderBy(col("count").desc).head().getString(0)
+    val snap = rows.filter(col("host") === host)
+      .groupBy("crawl_snapshot").count()
+      .orderBy(col("count").desc).head().getString(0)
+    val perFile = rows
+      .filter(col("host") === host && col("crawl_snapshot") === snap)
+      .groupBy("file").count().collect().map(_.getLong(1))
+    val n = perFile.sum
+    info(s"$host in $snap: $n rows over ${perFile.length} files, " +
+      s"at most ${perFile.max} in one")
+    assert(perFile.length >= 8, s"hot host in ${perFile.length} files only")
+    assert(perFile.max * 4 <= n,
+      s"one writer holds ${perFile.max} of the hot host's $n rows")
   }
 
   test("run writes annotate's rows, each under its own snapshot directory") {

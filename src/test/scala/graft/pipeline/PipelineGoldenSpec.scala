@@ -144,11 +144,14 @@ class PipelineGoldenSpec extends AnyFunSuite {
   test("filter monotonicity: stricter ppl threshold keeps a subset") {
     val loose = Thresholds.default.copy(maxPpl = 1000.0)
     val strict = Thresholds.default.copy(maxPpl = 50.0)
-    val pages = SynthPages.pages(spark, 600L)
-    val keptLoose = QualityPipeline.annotate(pages, loose)
-      .filter(_.keep).collect().map(_.url).toSet
-    val keptStrict = QualityPipeline.annotate(pages, strict)
-      .filter(_.keep).collect().map(_.url).toSet
+    val ann = QualityPipeline.annotate(SynthPages.pages(spark, 600L)).collect()
+    def kept(th: Thresholds): Set[String] = ann.filter(a =>
+      QualityPipeline.decide(th, a.lang_pred, a.lang_conf, a.ppl,
+        a.doc_len_words, a.mean_word_len, a.symbol_word_ratio,
+        a.stopword_frac, a.dup_line_frac, a.n_slurs)).map(_.url).toSet
+    assert(kept(Thresholds.default) == ann.filter(_.keep).map(_.url).toSet)
+    val keptLoose = kept(loose)
+    val keptStrict = kept(strict)
     assert(keptStrict.subsetOf(keptLoose))
     assert(keptStrict.size < keptLoose.size)
   }
