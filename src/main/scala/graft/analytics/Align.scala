@@ -99,8 +99,12 @@ object Align {
           org.apache.spark.sql.types.LongType))))
     val local = Window.partitionBy(col("__pid"), col(tagCol))
       .orderBy(sortCols: _*)
-    ranged.join(broadcast(offsetsDf), Seq(tagCol, "__pid"))
+    // null-safe on the tag: a null tag is a tag like any other
+    val manifest = broadcast(offsetsDf)
+    ranged.join(manifest, ranged(tagCol) <=> manifest(tagCol) &&
+        ranged("__pid") === manifest("__pid"))
+      .drop(manifest(tagCol)).drop(manifest("__pid"))
       .withColumn(out, row_number().over(local) + col("__off"))
-      .drop("__pid")
+      .drop("__pid", "__off")
   }
 }

@@ -85,8 +85,7 @@ object Annotations {
 
   /** Column wrapper (one deterministic scalar UDF; used where the full
     * *-stripping/ERROR semantics are required — the declarative subset is
-    * covered by regexp_extract in the analytics queries). Column-only: it
-    * is not part of the SQL surface ([[graft.GraftFunctions.all]]).
+    * covered by regexp_extract in the analytics queries).
     */
   def parse_annotation(c: Column): Column =
     udf((s: String) => parse(s)).apply(c)

@@ -21,7 +21,8 @@ import org.apache.spark.sql.types.DataType
   * in `owner`/`method` or a result type that does not match the method's
   * return type fails at class initialization, not on the first row.
   *
-  * @param name    SQL/pretty name, e.g. `minhash_signature`
+  * @param name    pretty name, e.g. `minhash_signature`; plans print it
+  *                and analysis errors name the function by it
   * @param owner   fully qualified object whose static forwarder is called
   * @param input   the one accepted input type (array element nullability
   *                is ignored); anything else fails analysis

@@ -81,7 +81,7 @@ object VectorFunctions {
 }
 
 /** Both expressions REQUIRE array<double> inputs, enforced at analysis time
-  * by `checkInputDataTypes` (without it, SQL callers passing array<int> or
+  * by `checkInputDataTypes` (without it, callers passing array<int> or
   * array<float> would have ArrayData.getDouble silently misread the buffer
   * and return garbage — callers cast explicitly, which keeps the cast
   * visible in the plan), and return NULL on array-length mismatch, matching

@@ -2,10 +2,6 @@ package graft.stages
 
 import scala.collection.mutable.ArrayBuilder
 
-import org.apache.spark.sql.types.{IntegerType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
-
-import graft.functions.NativeFn
 import graft.synth.Corpus
 
 /** Single-pass CNP (Romanian personal-numeric-code) detector/scrubber.
@@ -13,12 +9,9 @@ import graft.synth.Corpus
   * A regex alone cannot express the CNP checksum
   * ([[graft.synth.Corpus.checkDigit]]), and the FIXTURES spec requires
   * invalid-checksum 13-digit lookalikes to pass through byte-identical.
-  * One digit-run scan ([[spans]]) finds the CNPs for both [[count]] and
-  * [[scrub]]; the SQL functions `scrub_cnp` /
-  * `count_cnp` are a [[NativeFn]] pair (one static call per row, so the
-  * stage stays inside whole-stage codegen), O(n)
-  * over the string — cheaper than a regex candidate scan + UDF validation
-  * at 100 TB.
+  * One digit-run scan ([[spans]]), O(n) over the string, finds the CNPs
+  * that [[ScrubScalar]] counts and replaces with [[Token]] — cheaper than
+  * a regex candidate scan + UDF validation at 100 TB.
   */
 object CnpScrubber {
   final val Token = "<CNP>"
@@ -51,24 +44,4 @@ object CnpScrubber {
     }
     sp.result()
   }
-
-  /** `s` with every CNP replaced by [[Token]]; everything else is copied
-    * byte-identically.
-    */
-  def scrub(s: String): String = ScrubScalar.replace(s, spans(s), Token)
-
-  def count(s: String): Int = spans(s).length / 2
-
-  // UTF8String entry points for codegen (static calls keep codegen whole).
-  def scrubU(s: UTF8String): UTF8String = {
-    val str = s.toString
-    val out = scrub(str)
-    if (out eq str) s else UTF8String.fromString(out)
-  }
-  def countU(s: UTF8String): Int = count(s.toString)
-
-  private[graft] val ScrubCnp = NativeFn("scrub_cnp",
-    "graft.stages.CnpScrubber", "scrubU", StringType, Some(StringType))
-  private[graft] val CountCnp = NativeFn("count_cnp",
-    "graft.stages.CnpScrubber", "countU", StringType, Some(IntegerType))
 }

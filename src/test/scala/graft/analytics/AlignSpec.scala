@@ -123,6 +123,24 @@ class AlignSpec extends AnyFunSuite {
     }
   }
 
+  test("withGlobalRowNumberByTag numbers null-tag rows and adds only `out`") {
+    import org.apache.spark.sql.expressions.Window
+    val s = withParts(4)
+    import s.implicits._
+    // every third row has a null tag: the nulls are one more tag
+    val df = (1 to 20).map { k =>
+      (k.toLong, if (k % 3 == 0) null else if (k % 2 == 0) "x" else "y")
+    }.toDF("k", "tag")
+    def rows(f: DataFrame) = f.select("tag", "k", "rn").collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSet
+    val want = rows(df.withColumn("rn", row_number()
+      .over(Window.partitionBy("tag").orderBy("k")).cast("long")))
+    val out = Align.withGlobalRowNumberByTag(df, "tag", Seq(col("k")), "rn")
+    assert(rows(out) == want)
+    assert(want.size == 20)
+    assert(out.columns.toSeq == df.columns.toSeq :+ "rn")
+  }
+
   test("withGlobalRowNumberByTag plans ONE materialized range exchange " +
       "and a driver-manifest offsets join") {
     val s = withParts(4)

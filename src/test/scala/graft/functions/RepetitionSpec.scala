@@ -79,12 +79,9 @@ class RepetitionSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.unsafe.types.UTF8String
-    import graft.stages.CnpScrubber
     val toks = new GenericArrayData(
       "a b a b c".split(" ").map(UTF8String.fromString(_)).toArray[Any])
-    val cnp = graft.synth.SynthPages.makeCnp(42L, 1L, valid = true)
-    val text = UTF8String.fromString(
-      s"- Ana are  Mere...\n  • 12 34\ncnp $cnp aici")
+    val text = UTF8String.fromString("- Ana are  Mere...\n  • 12 34\naici")
     val words = Tokenize.wordsWs(text)
     val shingles = TextFunctions.shingles(words, 2)
     val probs = new GenericArrayData(Array[Any](0.5, -1.0, 0.5))
@@ -111,10 +108,8 @@ class RepetitionSpec extends AnyFunSuite {
       (ArrayMath.SoftmaxArr, probs, Nil, ArrayMath.softmaxArr(probs)),
       (ArrayMath.NegIndexedSorted, probs, Nil,
         ArrayMath.negIndexedSorted(probs)),
-      (ArrayMath.SortByXxHash, words, Nil, ArrayMath.sortByXxHash(words)),
-      (CnpScrubber.ScrubCnp, text, Nil, CnpScrubber.scrubU(text)),
-      (CnpScrubber.CountCnp, text, Nil, CnpScrubber.countU(text)))
-    assert(cases.map(_._1.name).distinct.size == 17)
+      (ArrayMath.SortByXxHash, words, Nil, ArrayMath.sortByXxHash(words)))
+    assert(cases.map(_._1.name).distinct.size == 15)
     cases.foreach { case (fn, in, ints, expected) =>
       val e = fn.expr(BoundReference(0, fn.input, nullable = true), ints)
       val row = InternalRow(in)

@@ -8,7 +8,7 @@ import graft.TestSpark
   * empties-dropped contract TokenizeParitySpec pins) and the BPE-ish
   * pretokenizer variant, pinned against hand-counted expectations (the
   * oracle checks corpus-level aggregates; these pin the per-string
-  * semantics).
+  * semantics); and the analysis-time input checks of the native functions.
   */
 class TextFunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -59,5 +59,36 @@ class TextFunctionsSpec extends AnyFunSuite {
     texts.foreach { t =>
       assert(countBpe(t) >= countWs(t), s"'$t'")
     }
+  }
+
+  test("wrong input types fail analysis with an error naming the function") {
+    import org.apache.spark.sql.AnalysisException
+    import TextFunctions.{doc_fingerprint, minhash_signature, shingle_hashes,
+      simhash64}
+    val typed = spark.range(1).select(lit("a b").as("s"), lit(1).as("i"),
+      array(lit("a"), lit("b"), lit("c")).as("toks"),
+      array(lit(1L), lit(2L)).as("sh"))
+    // wrong input types, and int constants outside the declared range
+    // (minhash k indexes a 64-entry table; an n-gram needs n >= 1)
+    Seq("simhash64" -> simhash64(col("s")),
+        "shingle_hashes" -> shingle_hashes(col("s"), 3),
+        "minhash_signature" -> minhash_signature(col("s"), 16),
+        "doc_fingerprint" -> doc_fingerprint(col("i")),
+        "ngram_strings" -> Repetition.ngram_strings(col("s"), 2),
+        "top_ngram_char_frac" -> Repetition.top_ngram_char_frac(col("s"), 2),
+        "dup_ngram_char_frac" -> Repetition.dup_ngram_char_frac(col("s"), 2),
+        "ngram_strings" -> Repetition.ngram_strings(col("toks"), 0),
+        "shingle_hashes" -> shingle_hashes(col("toks"), 0),
+        "minhash_signature" -> minhash_signature(col("sh"), 65),
+        "minhash_signature" -> minhash_signature(col("sh"), 0),
+        "minhash_signature" ->
+          minhash_signature(shingle_hashes(col("toks"), 2), 65))
+      .foreach { case (name, c) =>
+        val e = intercept[AnalysisException](typed.select(c))
+        assert(e.getMessage.contains(s"$name requires"), e.getMessage)
+      }
+    assert(intercept[AnalysisException](
+        typed.select(minhash_signature(col("sh"), 65)))
+      .getMessage.contains("k in [1, 64], got 65"))
   }
 }

@@ -7,7 +7,8 @@ import graft.synth.SynthPages
 
 /** The declarative (Column) and scalar (mapPartitions) heuristic
   * implementations must agree exactly on the synthetic corpus — the pipeline
-  * uses the scalar one for speed, the SQL surface exposes the Column one.
+  * uses the scalar one for speed; the Column one is its declarative
+  * test-scope reference.
   */
 class HeuristicsParitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

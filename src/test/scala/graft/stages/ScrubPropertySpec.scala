@@ -12,7 +12,8 @@ import graft.synth.{Corpus, SynthPages}
 /** Regex reference for [[ScrubScalar]] (the oracle of ScrubParitySpec and
   * ScrubPropertySpec): the `Scrub` regex strings run over the whole
   * document with `java.util.regex`, three count loops and three
-  * `replaceAll` passes, then [[CnpScrubber]]. It is quadratic on long
+  * `replaceAll` passes, then the CNP pass ([[cnpScrub]], [[cnpCount]]
+  * over [[CnpScrubber.spans]]). It is quadratic on long
   * local-part runs and overflows the stack on long domain-label chains, so
   * it is only fed inputs below those limits.
   */
@@ -28,13 +29,21 @@ object ScrubRegexRef {
     c
   }
 
+  /** `s` with every CNP replaced by [[CnpScrubber.Token]]; everything
+    * else is copied byte-identically.
+    */
+  def cnpScrub(s: String): String =
+    ScrubScalar.replace(s, CnpScrubber.spans(s), CnpScrubber.Token)
+
+  def cnpCount(s: String): Int = CnpScrubber.spans(s).length / 2
+
   def apply(text: String): ScrubScalar.Result = {
     if (text == null || text.isEmpty) return ScrubScalar.Result(text, 0, 0, 0, 0)
     val afterEmail = emailP.matcher(text).replaceAll(Scrub.EmailToken)
     val afterPhone = phoneP.matcher(afterEmail).replaceAll(Scrub.PhoneToken)
     val afterSlur = slurP.matcher(afterPhone).replaceAll(Scrub.SlurToken)
-    ScrubScalar.Result(CnpScrubber.scrub(afterSlur), count(emailP, text),
-      count(phoneP, text), CnpScrubber.count(text), count(slurP, text))
+    ScrubScalar.Result(cnpScrub(afterSlur), count(emailP, text),
+      count(phoneP, text), cnpCount(text), count(slurP, text))
   }
 }
 
